@@ -8792,14 +8792,13 @@ def q_nsw_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector edge list means serving never pays it again — the same
     build/serve split the reference gets from Chroma's persisted HNSW
     (/root/reference/src/chroma.py:81-87). Serving runs the BROADCAST
-    strategy (serve='broadcast'): the persisted graph loads into
-    executor memory once and all hops run in one mapInPandas pass over
-    the query stream — zero shuffles, exactly how Chroma serves its
-    in-RAM HNSW, and bit-identical to the join path (pinned in
-    tests/test_nsw_broadcast.py). nsw_beam_topk keeps the distributed
-    join shape, so the driver gate exercises BOTH physical strategies.
-    Identical parameters and tie rules as nsw_beam_topk -> shares its
-    full value-hash oracle."""
+    strategy (the default serve='auto' picks it at this size): the
+    graph loads into executor memory once and all hops run in one
+    mapInPandas pass over the query stream — zero shuffles, exactly
+    how Chroma serves its in-RAM HNSW, and bit-identical to the join
+    path (pinned in tests/test_nsw_broadcast.py). Identical parameters
+    and tie rules as nsw_beam_topk -> shares its full value-hash
+    oracle."""
     from cs6300_vectordbs_spark.operators.ann import nsw_beam_search
     from cs6300_vectordbs_spark.sources.graph_index import ensure_nsw_graph
 
@@ -8812,7 +8811,7 @@ def q_nsw_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = nsw_beam_search(
         emb, _query_batch(emb), TOPK, edges=edges,
         beam_width=_NSW_BEAM, n_iters=_NSW_HOPS, n_entries=_NSW_ENTRIES,
-        dim=EMB_DIM, exclude_self=True, serve="broadcast",
+        dim=EMB_DIM, exclude_self=True,
     )
     return out.select(
         F.col("query_id").cast("bigint"),
@@ -8928,7 +8927,7 @@ def q_nsw_insert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     serve beam both carry total orders), so the whole pipeline gets a
     FULL value-hash oracle: the insert beam unrolled over the old
     graph, then the serve beam unrolled over the merged edge list.
-    Both beams run serve='broadcast' (one mapInPandas pass each)."""
+    Both beams run the broadcast strategy (one mapInPandas pass each)."""
     from cs6300_vectordbs_spark.operators.ann import (
         nsw_beam_search,
         nsw_insert_edges,
@@ -8949,12 +8948,11 @@ def q_nsw_insert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = nsw_insert_edges(
         old, new, edges=old_edges, k=_NSW_K, beam_width=_NSW_BEAM,
         n_iters=_NSW_HOPS, n_entries=_NSW_ENTRIES, dim=EMB_DIM,
-        serve="broadcast",
     ).localCheckpoint(eager=True)
     out = nsw_beam_search(
         emb, _query_batch(emb), TOPK, edges=merged,
         beam_width=_NSW_BEAM, n_iters=_NSW_HOPS, n_entries=_NSW_ENTRIES,
-        dim=EMB_DIM, exclude_self=True, serve="broadcast",
+        dim=EMB_DIM, exclude_self=True,
     )
     return out.select(
         F.col("query_id").cast("bigint"),
@@ -8987,12 +8985,11 @@ def q_nsw_appended_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = append_nsw_graph(
         spark, old, new, path, k=_NSW_K, beam_width=_NSW_BEAM,
         n_iters=_NSW_HOPS, n_entries=_NSW_ENTRIES, dim=EMB_DIM,
-        serve="broadcast",
     ).localCheckpoint(eager=True)
     out = nsw_beam_search(
         emb, _query_batch(emb), TOPK, edges=merged,
         beam_width=_NSW_BEAM, n_iters=_NSW_HOPS, n_entries=_NSW_ENTRIES,
-        dim=EMB_DIM, exclude_self=True, serve="broadcast",
+        dim=EMB_DIM, exclude_self=True,
     )
     return out.select(
         F.col("query_id").cast("bigint"),
@@ -9198,7 +9195,7 @@ def q_nsw_tombstoned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = nsw_beam_search(
         live, _query_batch(emb), TOPK, edges=live_edges,
         beam_width=_NSW_BEAM, n_iters=_NSW_HOPS, n_entries=_NSW_ENTRIES,
-        dim=EMB_DIM, exclude_self=True, serve="broadcast",
+        dim=EMB_DIM, exclude_self=True,
     )
     return out.select(
         F.col("query_id").cast("bigint"),
@@ -9342,12 +9339,12 @@ def q_nsw_chained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     chained = append_nsw_graph_chain(
         spark, old, batches, path, k=_NSW_K, beam_width=_NSW_BEAM,
         n_iters=_NSW_HOPS, n_entries=_NSW_ENTRIES, dim=EMB_DIM,
-        serve="broadcast", compact_depth=4,
+        compact_depth=4,
     ).localCheckpoint(eager=True)
     out = nsw_beam_search(
         emb, _query_batch(emb), TOPK, edges=chained,
         beam_width=_NSW_BEAM, n_iters=_NSW_HOPS, n_entries=_NSW_ENTRIES,
-        dim=EMB_DIM, exclude_self=True, serve="broadcast",
+        dim=EMB_DIM, exclude_self=True,
     )
     return out.select(
         F.col("query_id").cast("bigint"),
@@ -9605,9 +9602,8 @@ def q_hnsw_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs the BROADCAST strategy: corpus, layer-0 edges, upper layers,
     and levels ship to executors once and the whole descent-and-beam
     runs per query in one mapInPandas pass — zero shuffles,
-    bit-identical to the joins descent (tests/test_hnsw_broadcast.py),
-    so hnsw_topk keeps the distributed shape and the driver gate
-    exercises BOTH physical strategies. Identical parameters and tie
+    bit-identical to the joins descent (tests/test_hnsw_broadcast.py).
+    Identical parameters and tie
     rules as hnsw_topk -> shares its full value-hash oracle."""
     from cs6300_vectordbs_spark.operators.hnsw import hnsw_search
     from cs6300_vectordbs_spark.sources.hnsw_index import ensure_hnsw_graph
@@ -9630,7 +9626,6 @@ def q_hnsw_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         layer_edges=layer_edges, levels=levels, beam_width=_NSW_BEAM,
         n_iters=_NSW_HOPS, descent_beam=_HNSW_DBEAM,
         descent_iters=_HNSW_DITERS, dim=EMB_DIM, exclude_self=True,
-        serve="broadcast",
     )
     return out.select(
         F.col("query_id").cast("bigint"),
@@ -9880,7 +9875,6 @@ def q_hnsw_tombstoned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         layer_edges=layer_edges, levels=levels, beam_width=_NSW_BEAM,
         n_iters=_NSW_HOPS, descent_beam=_HNSW_DBEAM,
         descent_iters=_HNSW_DITERS, dim=EMB_DIM, exclude_self=True,
-        serve="broadcast",
     )
     return out.select(
         F.col("query_id").cast("bigint"),
@@ -9930,7 +9924,6 @@ def q_hnsw_insert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         layer_edges=layer_edges, levels=levels, beam_width=_NSW_BEAM,
         n_iters=_NSW_HOPS, descent_beam=_HNSW_DBEAM,
         descent_iters=_HNSW_DITERS, dim=EMB_DIM, exclude_self=True,
-        serve="broadcast",
     )
     return out.select(
         F.col("query_id").cast("bigint"),
@@ -10250,7 +10243,6 @@ def q_nsw_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, _query_batch(emb), TOPK, edges=_nsw_edges(spark, sf_dir),
         allowed=allowed, beam_width=_NSW_BEAM, n_iters=_NSW_HOPS,
         n_entries=_NSW_ENTRIES, dim=EMB_DIM, exclude_self=True,
-        serve="broadcast",
     )
     return out.select(
         F.col("query_id").cast("bigint"),
@@ -10565,8 +10557,7 @@ def q_auto_ann_topk_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     (IVF-live, NSW-dead) both dispatch outcomes now carry full
     value-hash driver evidence. Serves via the broadcast strategy
     (graph in executor memory, one mapInPandas pass — bit-identical
-    to the join path, tests/test_nsw_broadcast.py); the join shape
-    stays driver-exercised through nsw_beam_topk."""
+    to the join path, tests/test_nsw_broadcast.py)."""
     from cs6300_vectordbs_spark.operators.search import auto_index_search
 
     corpus = _clustered_corpus(spark, sf_dir).localCheckpoint(eager=True)
@@ -10576,7 +10567,6 @@ def q_auto_ann_topk_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_n=_STRUCT_N, cos_threshold=_STRUCT_COS, min_frac=_STRUCT_FRAC,
         beam_width=_NSW_BEAM, n_iters=_NSW_HOPS, n_entries=_NSW_ENTRIES,
         nsw_k=_NSW_K, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
-        serve="broadcast",
     )
     return out.select(
         F.col("query_id").cast("bigint"),

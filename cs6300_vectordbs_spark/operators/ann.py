@@ -1694,7 +1694,7 @@ def nsw_beam_search(
     exclude_self: bool = False,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    serve: str = "joins",
+    serve: str = "auto",
     max_broadcast_nodes: int = 2_000_000,
     max_broadcast_edges: int = 32_000_000,
     entries: DataFrame | None = None,
@@ -1731,7 +1731,9 @@ def nsw_beam_search(
     logical search (results bit-identical; every real ANN system has
     this split):
 
-    - ``"joins"`` (default): each hop is a distributed join as above —
+    - ``"auto"`` (default): ``"broadcast"`` when it can run (budgets,
+      ``dim`` given or inferable, no ``entries``), else ``"joins"``.
+    - ``"joins"``: each hop is a distributed join as above —
       the shape for a graph too large for one machine's memory, and
       the only shape whose plan the SQL oracle mirrors structurally.
       Cost: 2 + n_iters synchronized job barriers regardless of |Q|.
@@ -1763,7 +1765,8 @@ def nsw_beam_search(
 
     CONTRACT — unique query ids: the bit-identity between the two
     strategies holds only when each ``query_id`` appears ONCE in
-    ``queries``. For a duplicated id the join path's row_number window
+    ``queries``, which binds default callers now that ``"auto"`` can
+    pick broadcast. For a duplicated id the join path's row_number window
     pools all of that id's rows into one shared beam/k budget (fewer
     than k result rows per occurrence), while the broadcast kernel
     serves each occurrence independently (k rows each). Neither is
@@ -1785,22 +1788,42 @@ def nsw_beam_search(
     # from the beam, which is capped at beam_width rows per query —
     # a narrower beam than k would silently return short results.
     beam_width = max(beam_width, k)
-    if entries is not None and serve != "joins":
-        # The broadcast kernel derives its hub entries from the
-        # collected adjacency; threading a per-query entry table
-        # through the Arrow batch would change its (qid, qvec)-only
-        # input contract. The HNSW descent that produces per-query
-        # entries is a joins-shaped pipeline anyway.
-        raise ValueError("entries= requires serve='joins'")
-    if serve == "broadcast":
-        return _nsw_beam_broadcast(
-            emb, queries, k, edges=edges, beam_width=beam_width,
-            n_iters=n_iters, n_entries=n_entries, dim=dim,
-            exclude_self=exclude_self, id_col=id_col, vec_col=vec_col,
-            max_nodes=max_broadcast_nodes, max_edges=max_broadcast_edges,
-        )
-    if serve != "joins":
-        raise ValueError(f"serve must be 'joins' or 'broadcast', got {serve!r}")
+    served = _broadcast_or_none(
+        serve, emb, queries, entries=entries, edges=edges, k=k,
+        beam_width=beam_width, n_iters=n_iters, n_entries=n_entries,
+        dim=dim, exclude_self=exclude_self, id_col=id_col,
+        vec_col=vec_col, max_nodes=max_broadcast_nodes,
+        max_edges=max_broadcast_edges,
+    )
+    if served is not None:
+        return served
+    return _nsw_joins(
+        emb, queries, k, edges=edges, beam_width=beam_width,
+        n_iters=n_iters, n_entries=n_entries, dim=dim,
+        exclude_self=exclude_self, id_col=id_col, vec_col=vec_col,
+        entries=entries,
+    )
+
+
+def _nsw_joins(
+    emb: DataFrame,
+    queries: DataFrame,
+    k: int,
+    *,
+    edges: DataFrame,
+    beam_width: int,
+    n_iters: int,
+    n_entries: int,
+    dim: int | None,
+    exclude_self: bool,
+    id_col: str,
+    vec_col: str,
+    entries: DataFrame | None = None,
+    allowed: DataFrame | None = None,
+) -> DataFrame:
+    """The joins serve of nsw_beam_search and, with ``allowed``,
+    nsw_filtered_search: the top-k of the final beam, or of every
+    visited node whose id is in ``allowed``."""
     dirs = edges.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionByName(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
@@ -1822,12 +1845,13 @@ def nsw_beam_search(
             .select(F.col("src").alias("node"))
         )
         beam = q.select("query_id").crossJoin(F.broadcast(hubs))
+    visited = beam
 
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("node").asc()
     )
 
-    def _score_topb(cand: DataFrame) -> DataFrame:
+    def _score(cand: DataFrame) -> DataFrame:
         scored = (
             cand.join(corpus, "node")
             .join(F.broadcast(q), "query_id")
@@ -1835,6 +1859,9 @@ def nsw_beam_search(
         )
         if exclude_self:
             scored = scored.filter(F.col("node") != F.col("query_id"))
+        return scored
+
+    def _topb(scored: DataFrame) -> DataFrame:
         return scored.withColumn("__rn", F.row_number().over(w)).filter(
             F.col("__rn") <= beam_width
         ).select("query_id", "node", "sim")
@@ -1845,13 +1872,20 @@ def nsw_beam_search(
     # per-hop re-plan (runtime partition coalescing over the tiny beam
     # frontier), which costs far more than the per-hop job barrier
     # saves. Measured r09, guide §1.1 empirical loop.
-    beam = _score_topb(beam).localCheckpoint(eager=True)
+    beam = _topb(_score(beam)).localCheckpoint(eager=True)
     for _ in range(n_iters):
         neigh = beam.join(
             dirs, beam["node"] == dirs["src"]
         ).select("query_id", F.col("dst").alias("node"))
         cand = beam.select("query_id", "node").unionByName(neigh).distinct()
-        beam = _score_topb(cand).localCheckpoint(eager=True)
+        if allowed is not None:
+            visited = visited.unionByName(cand).distinct()
+            visited = visited.localCheckpoint(eager=True)
+        beam = _topb(_score(cand)).localCheckpoint(eager=True)
+    if allowed is not None:
+        beam = _score(visited.join(
+            allowed.select(F.col(id_col).alias("node")), "node", "left_semi"
+        ))
 
     return (
         beam.withColumn("rank", F.row_number().over(w))
@@ -1879,7 +1913,7 @@ def nsw_filtered_search(
     exclude_self: bool = False,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    serve: str = "joins",
+    serve: str = "auto",
     max_broadcast_nodes: int = 2_000_000,
     max_broadcast_edges: int = 32_000_000,
 ) -> DataFrame:
@@ -1916,112 +1950,69 @@ def nsw_filtered_search(
     ranks over the whole visited set (hnswlib's candidate queue), not
     just the surviving final beam.
 
-    ``serve`` carries the family's physical split: ``"joins"``
-    (default) is the distributed shape the SQL oracle mirrors;
-    ``"broadcast"`` ships graph + corpus + allow-list once and runs
-    walk-and-filter per query in one mapInPandas pass
-    (nsw_broadcast_server's filtered mode) — bit-identical, pinned in
-    tests/test_nsw_filtered.py, same guarded budgets.
+    ``serve`` carries the family's physical split: ``"joins"`` is the
+    distributed shape the SQL oracle mirrors; ``"broadcast"`` ships
+    graph + corpus + allow-list once and runs walk-and-filter per
+    query in one mapInPandas pass (nsw_broadcast_server's filtered
+    mode) — bit-identical, pinned in tests/test_nsw_filtered.py, same
+    guarded budgets; ``"auto"`` (default) picks as nsw_beam_search does,
+    whose unique-query-id contract applies.
     """
     beam_width = max(beam_width, k)
-    if serve == "broadcast":
-        return nsw_broadcast_server(
-            emb, edges=edges, k=k, beam_width=beam_width,
-            n_iters=n_iters, n_entries=n_entries, dim=dim,
-            exclude_self=exclude_self, id_col=id_col, vec_col=vec_col,
-            max_nodes=max_broadcast_nodes, max_edges=max_broadcast_edges,
-            allowed=allowed.select(F.col(id_col)),
-        )(queries)
-    if serve != "joins":
-        raise ValueError(f"serve must be 'joins' or 'broadcast', got {serve!r}")
-    dirs = edges.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    deg = dirs.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
-    hubs = (
-        deg.orderBy(F.col("degree").desc(), F.col("src").asc())
-        .limit(n_entries)
-        .select(F.col("src").alias("node"))
+    served = _broadcast_or_none(
+        serve, emb, queries, edges=edges, k=k, beam_width=beam_width,
+        n_iters=n_iters, n_entries=n_entries, dim=dim,
+        exclude_self=exclude_self, id_col=id_col, vec_col=vec_col,
+        max_nodes=max_broadcast_nodes, max_edges=max_broadcast_edges,
+        allowed=allowed.select(F.col(id_col)),
     )
-    # Hoisted serving tables + factored-norm sim (see _hop_tables).
-    q, corpus, hop_sim = _hop_tables(
-        emb, queries.select("query_id", "query_vec"), dim,
-        id_col=id_col, vec_col=vec_col,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("node").asc()
-    )
-
-    def _score(cand: DataFrame) -> DataFrame:
-        scored = (
-            cand.join(corpus, "node")
-            .join(F.broadcast(q), "query_id")
-            .select("query_id", "node", hop_sim.alias("sim"))
-        )
-        if exclude_self:
-            scored = scored.filter(F.col("node") != F.col("query_id"))
-        return scored
-
-    def _topb(scored: DataFrame) -> DataFrame:
-        return (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= beam_width)
-            .select("query_id", "node", "sim")
-        )
-
-    seed = q.select("query_id").crossJoin(F.broadcast(hubs))
-    visited = seed
-    beam = _topb(_score(seed)).localCheckpoint(eager=True)
-    for _ in range(n_iters):
-        neigh = beam.join(
-            dirs, beam["node"] == dirs["src"]
-        ).select("query_id", F.col("dst").alias("node"))
-        cand = beam.select("query_id", "node").unionByName(neigh).distinct()
-        visited = (
-            visited.unionByName(cand).distinct().localCheckpoint(eager=True)
-        )
-        beam = _topb(_score(cand)).localCheckpoint(eager=True)
-
-    hits = visited.join(
-        allowed.select(F.col(id_col).alias("node")), "node", "left_semi"
-    )
-    return (
-        _score(hits)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("rank").cast("bigint").alias("rank"),
-            F.col("node").alias("vec_id"),
-            "sim",
-        )
+    if served is not None:
+        return served
+    return _nsw_joins(
+        emb, queries, k, edges=edges, beam_width=beam_width,
+        n_iters=n_iters, n_entries=n_entries, dim=dim,
+        exclude_self=exclude_self, id_col=id_col, vec_col=vec_col,
+        allowed=allowed,
     )
 
 
-def _nsw_beam_broadcast(
+class _NoBroadcast(ValueError):
+    """The broadcast serve cannot run (budget, dim or duplicate id):
+    ``serve='broadcast'`` raises it, ``serve='auto'`` runs joins."""
+
+
+def _broadcast_or_none(
+    serve: str,
     emb: DataFrame,
     queries: DataFrame,
-    k: int,
     *,
-    edges: DataFrame,
-    beam_width: int,
-    n_iters: int,
-    n_entries: int,
-    dim: int | None,
-    exclude_self: bool,
-    id_col: str,
-    vec_col: str,
-    max_nodes: int,
-    max_edges: int,
-) -> DataFrame:
-    """One-shot facade over nsw_broadcast_server: build the broadcast
-    graph and serve a single query DataFrame."""
-    return nsw_broadcast_server(
-        emb, edges=edges, k=k, beam_width=beam_width, n_iters=n_iters,
-        n_entries=n_entries, dim=dim, exclude_self=exclude_self,
-        id_col=id_col, vec_col=vec_col, max_nodes=max_nodes,
-        max_edges=max_edges,
-    )(queries)
+    entries: DataFrame | None = None,
+    **server_kw,
+) -> DataFrame | None:
+    """Resolve ``serve`` for nsw_beam_search, nsw_filtered_search and
+    hnsw.hnsw_search: the broadcast result, or None to run joins.
+    ``"auto"`` falls back to joins on _NoBroadcast, whose budget checks
+    are the server's bounded collects (no extra count job). ``entries``
+    means joins: the kernel takes only (qid, qvec) per query."""
+    if serve not in ("auto", "joins", "broadcast"):
+        raise ValueError(
+            f"serve must be 'auto', 'joins' or 'broadcast', got {serve!r}"
+        )
+    if serve == "broadcast" and server_kw["dim"] is None:
+        raise ValueError(
+            "serve='broadcast' needs an explicit dim; pass dim=, or use "
+            "serve='auto' (infers it) or serve='joins'"
+        )
+    if entries is not None and serve == "broadcast":
+        raise ValueError("entries= requires serve='joins' or 'auto'")
+    if serve == "joins" or entries is not None:
+        return None
+    try:
+        return nsw_broadcast_server(emb, **server_kw)(queries)
+    except _NoBroadcast:
+        if serve == "broadcast":
+            raise
+        return None
 
 
 def nsw_broadcast_server(
@@ -2084,6 +2075,11 @@ def nsw_broadcast_server(
     JVM switches to the HOF fold whose length semantics differ, and
     this kernel refuses rather than silently diverge.
 
+    ``dim=None`` (serve='auto' only) infers d when every non-NULL
+    corpus vector has one length d <= UNROLL_MAX_DIM, and mirrors the
+    HOF cosine_sim: a query of another length has a NULL dot, so its
+    sim is NULL, or 0.0 where the full-array norms' product is 0.
+
     Per-query sims are memoized across hops (the join path recomputes
     them; both are deterministic so results agree), and the whole
     search is one mapInPandas stage: at 1000 executors the graph
@@ -2126,26 +2122,36 @@ def nsw_broadcast_server(
     from ..functions.vector import UNROLL_MAX_DIM
 
     beam_width = max(beam_width, k)  # ef >= k, as in nsw_beam_search
-    if dim is None or dim > UNROLL_MAX_DIM:
-        raise ValueError(
-            "serve='broadcast' needs an explicit dim <= "
-            f"{UNROLL_MAX_DIM} (got {dim!r}) so the kernel can mirror "
-            "the unrolled JVM sim semantics; use serve='joins' above it"
+    if dim is not None and dim > UNROLL_MAX_DIM:
+        raise _NoBroadcast(
+            f"serve='broadcast' needs dim <= {UNROLL_MAX_DIM} (got "
+            f"{dim!r}) so the kernel can mirror the unrolled JVM sim "
+            "semantics; use serve='joins' above it"
         )
 
-    crows = emb.select(id_col, vec_col).limit(max_nodes + 1).collect()
-    if len(crows) > max_nodes:
-        raise ValueError(
-            f"corpus exceeds max_broadcast_nodes={max_nodes}; the graph "
-            "no longer fits the broadcast-serving regime — use "
-            "serve='joins' (distributed per-hop joins) instead"
-        )
-    erows = edges.select("a", "b").limit(max_edges + 1).collect()
-    if len(erows) > max_edges:
-        raise ValueError(
-            f"edge list exceeds max_broadcast_edges={max_edges}; use "
-            "serve='joins' instead"
-        )
+    def _load(df: DataFrame, what: str, kind: str) -> list:
+        # The bounded collect is the budget check: no extra count job.
+        cap = max_nodes if kind == "nodes" else max_edges
+        rows = df.limit(cap + 1).collect()
+        if len(rows) > cap:
+            raise _NoBroadcast(
+                f"{what} exceeds max_broadcast_{kind}={cap}; the graph no "
+                "longer fits the broadcast-serving regime — use "
+                "serve='joins' (distributed per-hop joins) instead"
+            )
+        return rows
+
+    crows = _load(emb.select(id_col, vec_col), "corpus", "nodes")
+    hof = dim is None
+    if hof:
+        lens = {len(row[1]) for row in crows if row[1] is not None}
+        dim = lens.pop() if len(lens) == 1 else 0
+        if not 1 <= dim <= UNROLL_MAX_DIM:
+            raise _NoBroadcast(
+                "dim=None and the corpus vectors do not share one length "
+                f"in 1..{UNROLL_MAX_DIM}; use serve='joins'"
+            )
+    erows = _load(edges.select("a", "b"), "edge list", "edges")
 
     n = len(crows)
     cidx: dict = {}
@@ -2165,7 +2171,7 @@ def nsw_broadcast_server(
             # the index so both paths ignore it identically.
             continue
         if node in cidx:
-            raise ValueError(
+            raise _NoBroadcast(
                 f"duplicate corpus id {node!r}: broadcast serving "
                 "requires unique ids (the persisted-index invariant); "
                 "serve='joins' would emit duplicate beam rows instead"
@@ -2235,22 +2241,12 @@ def nsw_broadcast_server(
         )
     allow_set = None
     if allowed is not None:
-        arows = allowed.limit(max_nodes + 1).collect()
-        if len(arows) > max_nodes:
-            raise ValueError(
-                f"allow-list exceeds max_broadcast_nodes={max_nodes}; "
-                "use nsw_filtered_search (distributed joins) instead"
-            )
+        arows = _load(allowed, "allow-list", "nodes")
         allow_set = {r[0] for r in arows if r[0] is not None}
     lentry = None
     layer_adjs: list = []
     if layered:
-        lv_rows = levels.select("node", "lvl").limit(max_nodes + 1).collect()
-        if len(lv_rows) > max_nodes:
-            raise ValueError(
-                f"levels exceed max_broadcast_nodes={max_nodes}; use "
-                "serve='joins' instead"
-            )
+        lv_rows = _load(levels.select("node", "lvl"), "levels", "nodes")
         promoted = [
             (r[1], r[0])
             for r in lv_rows
@@ -2263,17 +2259,10 @@ def nsw_broadcast_server(
             nodes_all = [r[0] for r in lv_rows if r[0] is not None]
             lentry = min(nodes_all) if nodes_all else None
         for lay in sorted(layer_edges, reverse=True):
-            lrows = (
-                layer_edges[lay].select("a", "b")
-                .limit(max_edges + 1)
-                .collect()
+            lrows = _load(
+                layer_edges[lay].select("a", "b"),
+                f"layer-{lay} edge list", "edges",
             )
-            if len(lrows) > max_edges:
-                raise ValueError(
-                    f"layer-{lay} edge list exceeds "
-                    f"max_broadcast_edges={max_edges}; use "
-                    "serve='joins' instead"
-                )
             la: dict = {}
             for row in lrows:
                 a, b = row[0], row[1]
@@ -2321,16 +2310,19 @@ def nsw_broadcast_server(
             # query that never reaches a scoreable candidate (empty
             # graph, hubs absent from the corpus) returns zero rows
             # there, so mirror that instead of raising up front.
-            qpoison = not qbad and len(qvec) < d
+            qpoison = not hof and not qbad and len(qvec) < d
+            # Inferred-dim (HOF) mode: a query of another length has a
+            # NULL dot, so only its full-array norm matters.
+            mism = hof and not qbad and len(qvec) != d
             qv = None
             qnorm = 0.0
             if not qbad and not qpoison:
-                qv = np.asarray(qvec[:d], dtype=np.float64)
+                qv = np.asarray(qvec if mism else qvec[:d], dtype=np.float64)
                 if np.isnan(qv).any():  # NULL element -> NaN (see above)
                     qbad = True
             if not qbad and not qpoison:
-                qsq = qv[0] * qv[0]
-                for j in range(1, d):
+                qsq = 0.0
+                for j in range(len(qv)):
                     qsq = qsq + qv[j] * qv[j]
                 qnorm = float(np.sqrt(qsq))
             sims: dict = {}
@@ -2364,16 +2356,21 @@ def nsw_broadcast_server(
                             (cidx[c] for c in new), dtype=np.int64,
                             count=len(new),
                         )
-                        Vc = V[idx]
-                        dots = qv[0] * Vc[:, 0]
-                        for j in range(1, d):
-                            dots = dots + qv[j] * Vc[:, j]
                         denom = qnorm * cnorm[idx]
                         zero = denom == 0.0
-                        vals = np.where(
-                            zero, 0.0, dots / np.where(zero, 1.0, denom)
-                        )
                         bad = cbad[idx]
+                        if mism:
+                            # NULL dot: 0.0 on a zero denominator only
+                            vals = np.zeros(len(new))
+                            bad = bad | ~zero
+                        else:
+                            Vc = V[idx]
+                            dots = qv[0] * Vc[:, 0]
+                            for j in range(1, d):
+                                dots = dots + qv[j] * Vc[:, j]
+                            vals = np.where(
+                                zero, 0.0, dots / np.where(zero, 1.0, denom)
+                            )
                         for c, s, b in zip(new, vals, bad):
                             sims[c] = None if b else float(s)
                 scored = [
@@ -2481,7 +2478,7 @@ def nsw_insert_edges(
     dim: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    serve: str = "joins",
+    serve: str = "auto",
     check_disjoint: bool = True,
 ) -> DataFrame:
     """Incremental NSW graph maintenance: HNSW-style INSERT of a batch
@@ -2513,13 +2510,14 @@ def nsw_insert_edges(
     come from a split of one table on disjoint predicates). Scale
     shape: the insert costs
     O(|new| x n_iters x beam x degree) score evaluations —
-    independent of |old|, while a rebuild pays O(|old|²/B) — and with
-    ``serve='broadcast'`` the whole batch is one mapInPandas pass
-    over the new vectors. A graph grown by many insert batches drifts
-    from the exact-kNN graph (inserted nodes only link through what
-    beam search FOUND, the HNSW tradeoff); re-running the full build
-    re-canonicalizes — same compaction discipline as the LSM upsert
-    path.
+    independent of |old|, while a rebuild pays O(|old|²/B) — and on
+    the broadcast serve (the ``"auto"`` default under budget) the
+    whole batch is one mapInPandas pass over the new vectors, whose
+    ids must then be unique (nsw_beam_search's query-id contract). A
+    graph grown by many insert batches drifts from the exact-kNN graph
+    (inserted nodes only link through what beam search FOUND, the HNSW
+    tradeoff); re-running the full build re-canonicalizes — same
+    compaction discipline as the LSM upsert path.
     """
     if check_disjoint:
         collided = (

@@ -156,7 +156,7 @@ def hnsw_search(
     exclude_self: bool = False,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    serve: str = "joins",
+    serve: str = "auto",
     max_broadcast_nodes: int = 2_000_000,
     max_broadcast_edges: int = 32_000_000,
 ) -> DataFrame:
@@ -166,15 +166,15 @@ def hnsw_search(
     nodes the descent found.
 
     ``serve`` carries the same physical split as nsw_beam_search:
-    ``"joins"`` (default) runs every descent hop and beam hop as
-    distributed joins — the shape for a graph too big for one
-    machine, and the one the SQL oracle mirrors structurally;
-    ``"broadcast"`` ships corpus + layer-0 edges + upper layers +
-    levels to executors once and runs the whole descent-and-beam per
-    query inside one mapInPandas pass (ann.nsw_broadcast_server's
-    layered mode) — zero shuffles, bit-identical results (pinned in
-    tests/test_hnsw_broadcast.py), guarded by the same node/edge
-    budgets with errors naming serve='joins' as the fallback.
+    ``"joins"`` runs every descent hop and beam hop as distributed
+    joins — the shape for a graph too big for one machine, and the
+    one the SQL oracle mirrors structurally; ``"broadcast"`` ships
+    corpus + layer-0 edges + upper layers + levels to executors once
+    and runs the whole descent-and-beam per query inside one
+    mapInPandas pass (ann.nsw_broadcast_server's layered mode) — zero
+    shuffles, bit-identical results (tests/test_hnsw_broadcast.py),
+    guarded by the same node/edge budgets; ``"auto"`` (default) picks
+    as nsw_beam_search does, whose unique-query-id contract applies.
 
     Entry point: the min-id node of the highest POPULATED layer (the
     deterministic stand-in for HNSW's "first node ever promoted");
@@ -195,19 +195,18 @@ def hnsw_search(
     the descent carries multiple candidates and the corner is
     unreachable.
     """
-    from .ann import nsw_beam_search, nsw_broadcast_server
+    from .ann import _broadcast_or_none, nsw_beam_search
 
-    if serve == "broadcast":
-        return nsw_broadcast_server(
-            emb, edges=edges0, k=k, beam_width=beam_width,
-            n_iters=n_iters, dim=dim, exclude_self=exclude_self,
-            id_col=id_col, vec_col=vec_col,
-            max_nodes=max_broadcast_nodes, max_edges=max_broadcast_edges,
-            layer_edges=layer_edges, levels=levels,
-            descent_beam=descent_beam, descent_iters=descent_iters,
-        )(queries)
-    if serve != "joins":
-        raise ValueError(f"serve must be 'joins' or 'broadcast', got {serve!r}")
+    served = _broadcast_or_none(
+        serve, emb, queries, edges=edges0, k=k, beam_width=beam_width,
+        n_iters=n_iters, dim=dim, exclude_self=exclude_self,
+        id_col=id_col, vec_col=vec_col,
+        max_nodes=max_broadcast_nodes, max_edges=max_broadcast_edges,
+        layer_edges=layer_edges, levels=levels,
+        descent_beam=descent_beam, descent_iters=descent_iters,
+    )
+    if served is not None:
+        return served
 
     q = queries.select("query_id", "query_vec")
     beam, _ = _descend(

@@ -303,7 +303,7 @@ def auto_index_search(
     nsw_k: int = 12,
     n_cells: int = 16,
     n_probe: int = 4,
-    serve: str = "joins",
+    serve: str = "auto",
 ) -> DataFrame:
     """ANN serving with automatic INDEX-FAMILY dispatch: run the
     structure probe, then serve through the NSW graph (structured

@@ -249,7 +249,7 @@ def append_nsw_graph_chain(
     dim: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    serve: str = "broadcast",
+    serve: str = "auto",
     compact_depth: int = 4,
 ) -> DataFrame:
     """Multi-batch incrementally maintained persisted graph — the
@@ -300,7 +300,7 @@ def append_nsw_graph_chain(
             raise ValueError(
                 "append_nsw_graph_chain with serve='broadcast' needs an "
                 f"explicit dim <= {UNROLL_MAX_DIM} (got {dim!r}); pass "
-                "dim= or serve='joins'"
+                "dim= or serve='auto' (the default) or 'joins'"
             )
     if compact_depth < 1:
         raise ValueError(f"compact_depth must be >= 1, got {compact_depth}")
@@ -375,7 +375,7 @@ def append_nsw_graph(
     dim: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    serve: str = "broadcast",
+    serve: str = "auto",
 ) -> DataFrame:
     """Incrementally maintained persisted graph: the stored form of
     operators/ann.nsw_insert_edges, for the daily-ingest shape where
@@ -409,7 +409,7 @@ def append_nsw_graph(
             raise ValueError(
                 "append_nsw_graph with serve='broadcast' needs an "
                 f"explicit dim <= {UNROLL_MAX_DIM} (got {dim!r}); pass "
-                "dim= or serve='joins'"
+                "dim= or serve='auto' (the default) or 'joins'"
             )
     base = ensure_nsw_graph(
         spark, corpus, f"{path}/base", k=k, salt=salt,

@@ -52,8 +52,7 @@ def _edges0(corpus, k=6):
     )
 
 
-def _both(spark, corpus, q, k=4, branch=2, max_level=2, **kw):
-    edges0 = _edges0(corpus)
+def _graph(corpus, branch=2, max_level=2):
     levels = hnsw_levels(
         corpus, branch=branch, max_level=max_level
     ).localCheckpoint(eager=True)
@@ -63,15 +62,29 @@ def _both(spark, corpus, q, k=4, branch=2, max_level=2, **kw):
         ).localCheckpoint(eager=True)
         for lay in range(1, max_level + 1)
     }
-    base = dict(
-        edges0=edges0, layer_edges=layer_edges, levels=levels,
+    return dict(
+        edges0=_edges0(corpus), layer_edges=layer_edges, levels=levels,
         beam_width=10, n_iters=3, descent_beam=3, descent_iters=2,
         dim=8, exclude_self=True,
     )
+
+
+def _rows(corpus, q, k, serve="auto", **kw):
+    out = hnsw_search(corpus, q, k, serve=serve, **kw)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    return sorted(map(tuple, out.collect())), "MapInPandas" in plan
+
+
+def _both(spark, corpus, q, k=4, branch=2, max_level=2, **kw):
+    """joins and broadcast rows; the default serve='auto' must return
+    the joins rows (on broadcast unless a budget is overrun)."""
+    base = _graph(corpus, branch, max_level)
     base.update(kw)
-    j = hnsw_search(corpus, q, k, serve="joins", **base).collect()
-    b = hnsw_search(corpus, q, k, serve="broadcast", **base).collect()
-    return sorted(map(tuple, j)), sorted(map(tuple, b))
+    j, _ = _rows(corpus, q, k, serve="joins", **base)
+    on_budget = "max_broadcast_edges" not in kw
+    assert _rows(corpus, q, k, **base) == (j, on_budget)
+    b, _ = _rows(corpus, q, k, serve="broadcast", **base)
+    return j, b
 
 
 def _q(corpus, lo=0, hi=6):
@@ -121,3 +134,26 @@ def test_broadcast_guard_names_fallback(spark):
 
     with pytest.raises(ValueError, match="joins"):
         _both(spark, corpus, _q(corpus), max_broadcast_edges=2)
+
+
+def test_auto_dim_none_matches_joins(spark):
+    """The benchmark's call shape (dim=None): 'auto' infers d on a
+    uniform corpus and takes broadcast, mirroring the HOF sims for
+    queries shorter and longer than d; a mixed-length corpus takes
+    joins. Rows equal the joins path's in both cases."""
+    corpus = _corpus(spark, nulls=3, zeros=3)
+    odd = spark.createDataFrame(
+        [(200, [0.5] * 3), (201, [0.25] * 12)],
+        "query_id bigint, query_vec array<double>",
+    )
+    q = _q(corpus, 0, 8).unionByName(odd)
+    kw = {**_graph(corpus), "dim": None, "n_iters": 2, "descent_iters": 1}
+    j, _ = _rows(corpus, q, 4, serve="joins", **kw)
+    assert j and _rows(corpus, q, 4, **kw) == (j, True)
+    mixed = corpus.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") == 50, F.slice("embedding", 1, 6))
+        .otherwise(F.col("embedding")),
+    )
+    j, _ = _rows(mixed, q, 4, serve="joins", **kw)
+    assert _rows(mixed, q, 4, **kw) == (j, False)

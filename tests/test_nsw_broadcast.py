@@ -70,15 +70,23 @@ def _queries_from(corpus, n=10):
     )
 
 
+def _rows(corpus, queries, edges, k=5, dim=8, serve="auto", **kw):
+    out = nsw_beam_search(
+        corpus, queries, k, edges=edges, dim=dim, serve=serve, **kw
+    )
+    return sorted(map(tuple, out.collect())), _on_broadcast(out)
+
+
+def _on_broadcast(df):
+    return "MapInPandas" in df._jdf.queryExecution().executedPlan().toString()
+
+
 def _run_both(corpus, queries, edges, k=5, dim=8, **kw):
-    a = nsw_beam_search(
-        corpus, queries, k, edges=edges, dim=dim, serve="joins", **kw
-    ).collect()
-    b = nsw_beam_search(
-        corpus, queries, k, edges=edges, dim=dim, serve="broadcast", **kw
-    ).collect()
-    ta = sorted((r.query_id, r.rank, r.vec_id, r.sim) for r in a)
-    tb = sorted((r.query_id, r.rank, r.vec_id, r.sim) for r in b)
+    """joins and broadcast rows; the default serve='auto' must take
+    broadcast here and return the joins rows."""
+    ta, _ = _rows(corpus, queries, edges, k, dim, serve="joins", **kw)
+    tb, _ = _rows(corpus, queries, edges, k, dim, serve="broadcast", **kw)
+    assert _rows(corpus, queries, edges, k, dim, **kw) == (ta, True)
     return ta, tb
 
 
@@ -356,6 +364,9 @@ def test_broadcast_guards(spark):
             corpus, q, 3, edges=edges, dim=8, serve="broadcast",
             max_broadcast_edges=2,
         ).collect()
+    # over budget, the default serve='auto' returns the joins rows
+    joins, _ = _rows(corpus, q, edges, 3, serve="joins")
+    assert _rows(corpus, q, edges, 3, max_broadcast_edges=2) == (joins, False)
     with pytest.raises(ValueError, match="dim"):
         nsw_beam_search(
             corpus, q, 3, edges=edges, dim=None, serve="broadcast"
@@ -436,3 +447,37 @@ def test_broadcast_plan_is_one_stage(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "MapInPandas" in plan
+
+
+def test_auto_infers_dim_and_mirrors_hof_sims(spark):
+    """dim=None on a uniform corpus: 'auto' infers d from the collected
+    corpus and matches the joins path's HOF cosine_sim, including
+    queries shorter and longer than d (NULL sim, or 0.0 where a norm
+    is zero) and the empty query."""
+    corpus = _corpus(spark, n=50, nulls=2, zeros=2)
+    edges = _edges_for(spark, corpus)
+    odd = spark.createDataFrame(
+        [(100, [0.5] * 5), (101, [0.5] * 11), (102, [0.0] * 3), (103, [])],
+        "query_id bigint, query_vec array<double>",
+    )
+    q = _queries_from(corpus, n=6).unionByName(odd)
+    kw = dict(k=4, dim=None, exclude_self=True, beam_width=6, n_iters=2)
+    joins, _ = _rows(corpus, q, edges, serve="joins", **kw)
+    assert _rows(corpus, q, edges, **kw) == (joins, True)
+    assert {r[3] for r in joins if r[0] in (102, 103)} == {0.0}
+    assert None in {r[3] for r in joins if r[0] in (100, 101)}
+
+
+def test_auto_takes_joins_on_mixed_lengths_and_entries(spark):
+    """A mixed-length corpus under dim=None, and any entries= table,
+    send 'auto' to joins (same rows, no mapInPandas)."""
+    corpus = _corpus(spark, n=40, short=3)
+    edges = _edges_for(spark, corpus.filter(F.size("embedding") == 8))
+    q = _queries_from(corpus.filter(F.col("vec_id") >= 3), n=8)
+    kw = dict(n_iters=2, dim=None)
+    joins = _rows(corpus, q, edges, serve="joins", **kw)[0]
+    assert _rows(corpus, q, edges, **kw) == (joins, False)
+    ent = q.select("query_id", F.lit(5).cast("bigint").alias("node"))
+    kw = dict(n_iters=2, entries=ent)
+    joins = _rows(corpus, q, edges, serve="joins", **kw)[0]
+    assert _rows(corpus, q, edges, **kw) == (joins, False)

@@ -51,6 +51,21 @@ def _q(corpus, n=5):
     )
 
 
+def _rows(corpus, q, k, serve="auto", **kw):
+    out = nsw_filtered_search(corpus, q, k, serve=serve, **kw)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    return sorted(map(tuple, out.collect())), "MapInPandas" in plan
+
+
+def _three(corpus, q, k, **kw):
+    """joins rows; broadcast and the default serve='auto' (which must
+    take broadcast) return exactly them."""
+    j, _ = _rows(corpus, q, k, serve="joins", **kw)
+    assert _rows(corpus, q, k, serve="broadcast", **kw)[0] == j
+    assert _rows(corpus, q, k, **kw) == (j, True)
+    return j
+
+
 def test_results_pass_filter_and_are_deterministic(spark):
     corpus = _corpus(spark)
     edges = _edges(corpus)
@@ -118,10 +133,7 @@ def test_broadcast_filtered_bit_identity(spark):
         edges=edges, allowed=allowed, beam_width=10, n_iters=3,
         n_entries=4, dim=8, exclude_self=True,
     )
-    q = _q(corpus, 7)
-    j = nsw_filtered_search(corpus, q, 4, serve="joins", **kw).collect()
-    b = nsw_filtered_search(corpus, q, 4, serve="broadcast", **kw).collect()
-    assert sorted(map(tuple, j)) == sorted(map(tuple, b)) and len(j) == 28
+    assert len(_three(corpus, _q(corpus, 7), 4, **kw)) == 28
 
 
 def test_broadcast_filtered_null_vectors_bit_identity(spark):
@@ -141,10 +153,7 @@ def test_broadcast_filtered_null_vectors_bit_identity(spark):
         edges=edges, allowed=allowed, beam_width=8, n_iters=3,
         n_entries=4, dim=8, exclude_self=True,
     )
-    q = _q(corpus, 6)  # includes NULL-vector queries
-    j = nsw_filtered_search(corpus, q, 3, serve="joins", **kw).collect()
-    b = nsw_filtered_search(corpus, q, 3, serve="broadcast", **kw).collect()
-    assert sorted(map(tuple, j)) == sorted(map(tuple, b))
+    _three(corpus, _q(corpus, 6), 3, **kw)  # includes NULL-vector queries
 
 
 def test_layered_plus_allowed_fails_loud(spark):
@@ -163,3 +172,20 @@ def test_layered_plus_allowed_fails_loud(spark):
             corpus, edges=edges, k=3, dim=8,
             layer_edges={1: edges}, levels=levels, allowed=allowed,
         )
+
+
+def test_auto_dim_none_matches_joins(spark):
+    """dim=None with queries of other lengths: 'auto' infers d, takes
+    broadcast and returns the joins rows."""
+    corpus = _corpus(spark, n=90)
+    odd = spark.createDataFrame(
+        [(300, [0.5] * 4), (301, [0.5] * 9)],
+        "query_id bigint, query_vec array<double>",
+    )
+    q = _q(corpus, 4).unionByName(odd)
+    kw = dict(
+        edges=_edges(corpus), allowed=corpus.filter(F.col("label") < 3),
+        beam_width=8, n_iters=2, n_entries=4, dim=None, exclude_self=True,
+    )
+    j, _ = _rows(corpus, q, 3, serve="joins", **kw)
+    assert _rows(corpus, q, 3, **kw) == (j, True)
