@@ -27,6 +27,7 @@ tests assert recall of the LSH path against it.
 from __future__ import annotations
 
 import random
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -1732,7 +1733,11 @@ def nsw_beam_search(
     this split):
 
     - ``"auto"`` (default): ``"broadcast"`` when it can run (budgets,
-      ``dim`` given or inferable, no ``entries``), else ``"joins"``.
+      ``dim`` given or inferable, no ``entries``) and the corpus holds
+      at most AUTO_BROADCAST_ELEMENTS vector elements (the measured
+      break-even), else ``"joins"``. The budgets are decided from
+      vector lengths and id-only tables, so a fallback never moves a
+      vector to the driver.
     - ``"joins"``: each hop is a distributed join as above —
       the shape for a graph too large for one machine's memory, and
       the only shape whose plan the SQL oracle mirrors structurally.
@@ -1981,6 +1986,13 @@ class _NoBroadcast(ValueError):
     ``serve='broadcast'`` raises it, ``serve='auto'`` runs joins."""
 
 
+# serve='auto' takes broadcast up to this many corpus vector elements:
+# the measured hnsw_search break-even with joins (SCALING.md, about
+# 100k 64-d vectors on 4 local cores). Above it the driver-side load
+# of the vectors costs more than the per-hop joins it saves.
+AUTO_BROADCAST_ELEMENTS = 6_400_000
+
+
 def _broadcast_or_none(
     serve: str,
     emb: DataFrame,
@@ -1991,9 +2003,10 @@ def _broadcast_or_none(
 ) -> DataFrame | None:
     """Resolve ``serve`` for nsw_beam_search, nsw_filtered_search and
     hnsw.hnsw_search: the broadcast result, or None to run joins.
-    ``"auto"`` falls back to joins on _NoBroadcast, whose budget checks
-    are the server's bounded collects (no extra count job). ``entries``
-    means joins: the kernel takes only (qid, qvec) per query."""
+    ``"auto"`` falls back to joins on _NoBroadcast, which the server
+    raises from bounded length- and id-only collects before any vector
+    reaches the driver. ``entries`` means joins: the kernel takes only
+    (qid, qvec) per query."""
     if serve not in ("auto", "joins", "broadcast"):
         raise ValueError(
             f"serve must be 'auto', 'joins' or 'broadcast', got {serve!r}"
@@ -2007,6 +2020,8 @@ def _broadcast_or_none(
         raise ValueError("entries= requires serve='joins' or 'auto'")
     if serve == "joins" or entries is not None:
         return None
+    if serve == "auto":
+        server_kw["max_elements"] = AUTO_BROADCAST_ELEMENTS
     try:
         return nsw_broadcast_server(emb, **server_kw)(queries)
     except _NoBroadcast:
@@ -2034,6 +2049,7 @@ def nsw_broadcast_server(
     descent_beam: int = 4,
     descent_iters: int = 2,
     allowed: DataFrame | None = None,
+    max_elements: int | None = None,
 ):
     """Broadcast-graph beam serving: the in-memory half of
     nsw_beam_search's ``serve`` switch (see its docstring for the
@@ -2075,10 +2091,18 @@ def nsw_broadcast_server(
     JVM switches to the HOF fold whose length semantics differ, and
     this kernel refuses rather than silently diverge.
 
+    Budgets: the corpus vector LENGTHS (one bounded collect) and the
+    id-only tables (edges, allow-list, levels, upper layers) load
+    first; the vectors collect last, and only when every count is
+    within ``max_nodes``/``max_edges`` and their ~8 bytes per element
+    fit half of ``spark.driver.maxResultSize``. Any overrun raises
+    _NoBroadcast before a vector moves.
+
     ``dim=None`` (serve='auto' only) infers d when every non-NULL
     corpus vector has one length d <= UNROLL_MAX_DIM, and mirrors the
-    HOF cosine_sim: a query of another length has a NULL dot, so its
-    sim is NULL, or 0.0 where the full-array norms' product is 0.
+    HOF cosine_sim: the dot folds from 0.0 (a -0.0 dot scores 0.0),
+    and a query of another length has a NULL dot, so its sim is NULL,
+    or 0.0 where the full-array norms' product is 0.
 
     Per-query sims are memoized across hops (the join path recomputes
     them; both are deterministic so results agree), and the whole
@@ -2129,10 +2153,18 @@ def nsw_broadcast_server(
             "semantics; use serve='joins' above it"
         )
 
-    def _load(df: DataFrame, what: str, kind: str) -> list:
+    layered = layer_edges is not None
+    if layered and allowed is not None:
+        raise ValueError(
+            "layered + allowed is not supported: the filtered joins "
+            "twin (nsw_filtered_search) routes from hubs; compose "
+            "the filter with the flat graph or serve='joins'"
+        )
+
+    def _load(df: DataFrame, what: str, kind: str, fetch=DataFrame.collect):
         # The bounded collect is the budget check: no extra count job.
         cap = max_nodes if kind == "nodes" else max_edges
-        rows = df.limit(cap + 1).collect()
+        rows = fetch(df.limit(cap + 1))
         if len(rows) > cap:
             raise _NoBroadcast(
                 f"{what} exceeds max_broadcast_{kind}={cap}; the graph no "
@@ -2141,17 +2173,57 @@ def nsw_broadcast_server(
             )
         return rows
 
-    crows = _load(emb.select(id_col, vec_col), "corpus", "nodes")
+    # Every budget and d are decided from vector LENGTHS and id-only
+    # tables before any vector moves: a corpus that cannot broadcast
+    # is never collected just to be dropped.
+    lens = _load(
+        emb.select(F.coalesce(F.size(vec_col), F.lit(-1))), "corpus", "nodes",
+        lambda df: df.toArrow().column(0).to_numpy(),
+    )
+    lens = lens[lens >= 0].astype(np.int64)  # -1: NULL vector
     hof = dim is None
     if hof:
-        lens = {len(row[1]) for row in crows if row[1] is not None}
-        dim = lens.pop() if len(lens) == 1 else 0
+        dims = np.unique(lens)
+        dim = int(dims[0]) if len(dims) == 1 else 0
         if not 1 <= dim <= UNROLL_MAX_DIM:
             raise _NoBroadcast(
                 "dim=None and the corpus vectors do not share one length "
                 f"in 1..{UNROLL_MAX_DIM}; use serve='joins'"
             )
+    sc = emb.sparkSession.sparkContext
+    max_result = sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        sc.getConf().get("spark.driver.maxResultSize", "1g")
+    )
+    # At 8 bytes an element the vectors must fit half the driver's
+    # result cap (0 = unlimited), or a default serve would fail where
+    # joins returns rows.
+    cap = max_result // 16 if max_result else float("inf")
+    if max_elements is not None:
+        cap = min(cap, max_elements)
+    elements = int(lens.sum())
+    if elements > cap:
+        raise _NoBroadcast(
+            f"corpus vectors hold {elements} elements, over the broadcast "
+            f"budget of {cap} (half of spark.driver.maxResultSize at 8 "
+            "bytes each, or max_elements); use serve='joins' instead"
+        )
     erows = _load(edges.select("a", "b"), "edge list", "edges")
+    arows = None if allowed is None else _load(allowed, "allow-list", "nodes")
+    if layered:
+        lv_rows = _load(levels.select("node", "lvl"), "levels", "nodes")
+        # The upper layers are geometric fractions of layer 0: one
+        # collect under one edge budget, tagged by layer.
+        urows = _load(
+            reduce(
+                DataFrame.unionByName,
+                [
+                    layer_edges[lay].select(F.lit(lay).alias("lay"), "a", "b")
+                    for lay in sorted(layer_edges)
+                ],
+            ),
+            "upper-layer edge lists", "edges",
+        ) if layer_edges else []
+    crows = _load(emb.select(id_col, vec_col), "corpus", "nodes")
 
     n = len(crows)
     cidx: dict = {}
@@ -2220,7 +2292,6 @@ def nsw_broadcast_server(
     # min id of the highest populated layer, corpus-min fallback,
     # NULL nodes ignored (Spark min() skips NULLs), entry None when
     # levels is all-NULL (the joins path's empty-join => zero rows).
-    layered = layer_edges is not None
     if layered:
         # The hierarchy IS the entry mechanism — skip the corpus-wide
         # degree sort entirely (it can be max_nodes entries).
@@ -2233,20 +2304,12 @@ def nsw_broadcast_server(
                 key=lambda kv: (-kv[1], kv[0] is not None, kv[0]),
             )[:n_entries]
         ]
-    if layered and allowed is not None:
-        raise ValueError(
-            "layered + allowed is not supported: the filtered joins "
-            "twin (nsw_filtered_search) routes from hubs; compose "
-            "the filter with the flat graph or serve='joins'"
-        )
     allow_set = None
-    if allowed is not None:
-        arows = _load(allowed, "allow-list", "nodes")
+    if arows is not None:
         allow_set = {r[0] for r in arows if r[0] is not None}
     lentry = None
     layer_adjs: list = []
     if layered:
-        lv_rows = _load(levels.select("node", "lvl"), "levels", "nodes")
         promoted = [
             (r[1], r[0])
             for r in lv_rows
@@ -2258,27 +2321,21 @@ def nsw_broadcast_server(
         else:
             nodes_all = [r[0] for r in lv_rows if r[0] is not None]
             lentry = min(nodes_all) if nodes_all else None
-        for lay in sorted(layer_edges, reverse=True):
-            lrows = _load(
-                layer_edges[lay].select("a", "b"),
-                f"layer-{lay} edge list", "edges",
-            )
-            la: dict = {}
-            for row in lrows:
-                a, b = row[0], row[1]
-                if a is not None and b is not None:
-                    la.setdefault(a, set()).add(b)
-                    la.setdefault(b, set()).add(a)
+        las: dict = {lay: {} for lay in layer_edges}
+        for lay, a, b in urows:
+            if a is not None and b is not None:
+                las[lay].setdefault(a, set()).add(b)
+                las[lay].setdefault(b, set()).add(a)
+        for lay in sorted(las, reverse=True):
             layer_adjs.append(
-                {node: tuple(sorted(nb)) for node, nb in la.items()}
+                {node: tuple(sorted(nb)) for node, nb in las[lay].items()}
             )
 
-    spark = emb.sparkSession
     # Released by Spark's ContextCleaner once the serving DataFrame
     # (whose closure holds it) is garbage-collected — the standard
     # broadcast lifecycle. A long-lived server should build this plan
     # ONCE and reuse it across query batches, not rebuild per call.
-    bc = spark.sparkContext.broadcast(
+    bc = sc.broadcast(
         {"cidx": cidx, "V": V, "cbad": cbad, "cnorm": cnorm,
          "cpoison": cpoison, "adj": adj, "hubs": hubs,
          "lentry": lentry, "layer_adjs": layer_adjs,
@@ -2366,6 +2423,8 @@ def nsw_broadcast_server(
                         else:
                             Vc = V[idx]
                             dots = qv[0] * Vc[:, 0]
+                            if hof:  # the HOF fold starts at 0.0: -0.0 -> 0.0
+                                dots = 0.0 + dots
                             for j in range(1, d):
                                 dots = dots + qv[j] * Vc[:, j]
                             vals = np.where(

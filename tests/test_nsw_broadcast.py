@@ -481,3 +481,54 @@ def test_auto_takes_joins_on_mixed_lengths_and_entries(spark):
     kw = dict(n_iters=2, entries=ent)
     joins = _rows(corpus, q, edges, serve="joins", **kw)[0]
     assert _rows(corpus, q, edges, **kw) == (joins, False)
+
+
+def test_auto_dim_none_keeps_the_hof_zero_sign(spark):
+    """Every product -0.0: the unrolled chain (dim given) scores -0.0,
+    the HOF fold (dim=None) starts at 0.0 and scores 0.0. 'auto' must
+    match joins in both modes; repr tells the signs apart, == cannot."""
+    corpus = _df(
+        spark,
+        [(0, [-0.0, -1.0, -1.0]), (1, [1.0, 1.0, 1.0]), (2, [0.5, -1.0, 2.0])],
+        "vec_id bigint, embedding array<double>",
+    )
+    edges = _df(spark, [(0, 1), (1, 2), (0, 2)], "a bigint, b bigint")
+    q = _df(spark, [(10, [1.0, 0.0, 0.0])], "query_id bigint, query_vec array<double>")
+    for dim, zero in ((3, "-0.0"), (None, "0.0")):
+        kw = dict(k=3, dim=dim, n_iters=1)
+        joins, _ = _rows(corpus, q, edges, serve="joins", **kw)
+        auto, on_broadcast = _rows(corpus, q, edges, **kw)
+        signed = [(r[:3], repr(r[3])) for r in auto]
+        assert on_broadcast and signed == [(r[:3], repr(r[3])) for r in joins]
+        assert [s for (_, _, node), s in signed if node == 0] == [zero]
+
+
+def test_auto_falls_back_before_collecting_vectors(spark, monkeypatch):
+    """Over the node, edge or element budget, or on a mixed-length corpus
+    under dim=None, 'auto' decides joins from lengths and ids only: no
+    vector reaches the driver."""
+    from pyspark.sql.types import ArrayType
+
+    from cs6300_vectordbs_spark.operators import ann
+
+    corpus = _corpus(spark, n=20, short=2)
+    edges = _edges_for(spark, corpus.filter(F.size("embedding") == 8))
+    q = _queries_from(corpus.filter(F.col("vec_id") >= 2), n=2)
+    cls, vectors = type(corpus), []
+    collect = cls.collect
+
+    def spy(df):
+        vectors.append(any(isinstance(f.dataType, ArrayType) for f in df.schema))
+        return collect(df)
+
+    monkeypatch.setattr(cls, "collect", spy)
+    for kw in ({"max_broadcast_nodes": 5}, {"max_broadcast_edges": 2}, {"dim": None}):
+        out = nsw_beam_search(corpus, q, 3, edges=edges, **{"dim": 8, **kw})
+        assert not _on_broadcast(out) and not any(vectors)
+    clean = corpus.filter(F.col("vec_id") >= 2)  # 18 vectors, 144 elements
+    monkeypatch.setattr(ann, "AUTO_BROADCAST_ELEMENTS", 143)
+    assert not _on_broadcast(nsw_beam_search(clean, q, 3, edges=edges, dim=8))
+    assert not any(vectors)
+    monkeypatch.setattr(ann, "AUTO_BROADCAST_ELEMENTS", 144)
+    assert _on_broadcast(nsw_beam_search(clean, q, 3, edges=edges, dim=8))
+    assert any(vectors)  # in budget, the vectors do collect
