@@ -52,9 +52,12 @@ from ..operators.twostage import (
 from ..operators.util import spread
 from .index_common import (
     build_lock,
+    clear_marker,
     corpus_fingerprint,
+    has_marker,
     invalidate_fingerprint,
     read_fingerprint,
+    set_marker,
     write_fingerprint,
 )
 
@@ -90,28 +93,8 @@ def build_bq_index(
         F.lit(0).cast("bigint").alias("gen"),
     )
     words.write.mode("overwrite").parquet(f"{path}/words")
-    _clear_marker(path, "HAS_UPSERTS")
+    clear_marker(path, "HAS_UPSERTS")
     _clear_tombstones(path)
-
-
-def _marker(path: str, name: str) -> str:
-    return f"{path}/{name}"
-
-
-def _set_marker(path: str, name: str) -> None:
-    with open(_marker(path, name), "w", encoding="utf-8") as f:
-        f.write("1")
-
-
-def _has_marker(path: str, name: str) -> bool:
-    return os.path.exists(_marker(path, name))
-
-
-def _clear_marker(path: str, name: str) -> None:
-    try:
-        os.remove(_marker(path, name))
-    except FileNotFoundError:
-        pass
 
 
 def _tombstones_path(path: str) -> str:
@@ -146,6 +129,9 @@ def upsert_bq_index(
     rebuilds from scratch (content-addressed), while explicit
     maintenance callers use this path."""
     new_vectors = new_vectors.filter(F.col(corpus_vec).isNotNull())
+    # Marker BEFORE the append: a crash after the files land must still
+    # leave the serve deduplicating (index_common STATE MARKERS).
+    set_marker(path, "HAS_UPSERTS")
     words = new_vectors.select(
         F.col(corpus_id).alias("id"),
         *[
@@ -155,7 +141,6 @@ def upsert_bq_index(
         F.lit(gen).cast("bigint").alias("gen"),
     )
     words.write.mode("append").parquet(f"{path}/words")
-    _set_marker(path, "HAS_UPSERTS")
 
 
 def delete_from_bq_index(
@@ -205,7 +190,7 @@ def compact_bq_index(spark: SparkSession, path: str) -> None:
     os.rename(tmp, f"{path}/words")
     shutil.rmtree(old, ignore_errors=True)
     _clear_tombstones(path)
-    _clear_marker(path, "HAS_UPSERTS")
+    clear_marker(path, "HAS_UPSERTS")
 
 
 def bq_index_exists(path: str) -> bool:
@@ -290,7 +275,7 @@ def search_bq_index(
     """
     n_words = n_words_for(dim)
     raw = spark.read.parquet(f"{path}/words")
-    if _has_marker(path, "HAS_UPSERTS"):
+    if has_marker(path, "HAS_UPSERTS"):
         # Latest-wins per id across upsert generations. Paid ONLY
         # while generations exist (one shuffle keyed id over the
         # 16-byte packed rows); compact_bq_index restores the

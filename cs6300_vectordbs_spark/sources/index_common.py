@@ -33,6 +33,14 @@ OS releases the lock on process death, so a crashed builder never
 wedges the path (and the invalidate-first protocol above makes its
 partial build invisible). Concurrent READERS of a completed index
 are unrestricted and never take the lock.
+
+STATE MARKERS (``set_marker`` / ``has_marker`` / ``clear_marker``):
+one-byte files beside the tables that record maintenance state a
+serve must honor, e.g. ``HAS_UPSERTS`` while appended generations need
+a latest-wins dedup. A marker is SET before the mutation it announces
+and CLEARED only after the write that resolves it, so a crash between
+the two leaves the marker behind and the serve pays an unneeded dedup,
+never skips a needed one.
 """
 
 from __future__ import annotations
@@ -113,3 +121,19 @@ def write_fingerprint(path: str, fp: str) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, f"{path}/FINGERPRINT")
+
+
+def set_marker(path: str, name: str) -> None:
+    with open(f"{path}/{name}", "w", encoding="utf-8") as f:
+        f.write("1")
+
+
+def has_marker(path: str, name: str) -> bool:
+    return os.path.exists(f"{path}/{name}")
+
+
+def clear_marker(path: str, name: str) -> None:
+    try:
+        os.remove(f"{path}/{name}")
+    except FileNotFoundError:
+        pass

@@ -11,12 +11,22 @@ it). This module is the Spark-native equivalent of that lifecycle:
                      partitioned BY CELL, plus the tiny centroid table.
   ensure_ivf_index   create-if-absent (S9): reuse a complete index on
                      disk, (re)build otherwise.
-  search_ivf_index   serve top-k from the STORED index: probe cells per
-                     query, scan ONLY the probed cell partitions
-                     (directory-level partition pruning — the probed
-                     cell ids are literal filters, so at 100 TB a
-                     16-of-4096-cell probe reads 0.4% of the index),
-                     exact cosine re-rank inside.
+  search_ivf_index   serve top-k from the STORED index: pick the probe
+                     cells per query ON THE DRIVER (the query batch and
+                     the n_cells-row centroid table are the only
+                     collects, both bounded by the broadcast-sized
+                     query-batch contract), scan ONLY the probed cell
+                     partitions (directory-level partition pruning —
+                     the probed cell ids are literal filters, so at
+                     100 TB a 16-of-4096-cell probe reads 0.4% of the
+                     index), exact cosine re-rank inside.
+  upsert_ivf_index   append re-assigned vectors at a higher generation;
+  compact_ivf_index  resolve the generations back to one row per id.
+
+Upsert state is the ``HAS_UPSERTS`` marker (index_common STATE
+MARKERS): upsert sets it before appending, build and compaction clear
+it after their write, and the serve pays the latest-wins dedup window
+only while it exists.
 
 Algorithmic parity with operators/ann.ivf_topk (same sampled centroids,
 same argmax assignment, same tie rules) — so the stored-index serving
@@ -32,13 +42,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.vector import cosine_from_parts, dot, l2_norm
+from ..functions.vector import UNROLL_MAX_DIM, cosine_from_parts, dot, l2_norm
+from ..operators.similarity import _col_norms, _sims_matrix
 from ..operators.util import spread
 from .index_common import (
     build_lock,
+    clear_marker,
     corpus_fingerprint,
+    has_marker,
     invalidate_fingerprint,
     read_fingerprint,
+    set_marker,
     write_fingerprint,
 )
 
@@ -104,6 +118,7 @@ def build_ivf_index(
     assigned.write.mode("overwrite").partitionBy("cell").parquet(
         f"{path}/cells"
     )
+    clear_marker(path, "HAS_UPSERTS")
 
 
 def ivf_index_exists(path: str) -> bool:
@@ -152,6 +167,122 @@ def ensure_ivf_index(
         write_fingerprint(path, fp)
 
 
+def _dense(vecs: list, dim: int, fixed: bool):
+    """Arrow-loaded vectors as a zero-padded float64 matrix for the
+    shared kernel, plus each row's used length and NULL flag.
+
+    ``fixed`` mirrors the unrolled chain: the first ``dim`` elements,
+    and a shorter vector raises as ANSI ``INVALID_ARRAY_INDEX`` does.
+    Otherwise whole arrays are used (the HOF forms). A NULL vector or
+    a NULL used element makes the row NULL (NULL norm, NULL sims);
+    NaN stays NaN. Zero padding keeps the folds exact: ``x + 0.0`` is
+    ``x``, except that a -0.0 dot becomes 0.0, which ranks the same."""
+    import numpy as np
+
+    used = [
+        None if v is None else (v[:dim] if fixed else v) for v in vecs
+    ]
+    for v in used:
+        if fixed and v is not None and len(v) < dim:
+            raise ValueError(
+                f"[INVALID_ARRAY_INDEX] a vector has {len(v)} elements, "
+                f"fewer than dim={dim}; the unrolled Spark chain raises "
+                "the same ANSI error"
+            )
+    lens = np.array([0 if v is None else len(v) for v in used], dtype=np.int64)
+    null = np.array([v is None or None in v for v in used], dtype=bool)
+    M = np.zeros((len(used), max(lens, default=0)), dtype=np.float64)
+    for i, v in enumerate(used):
+        if not null[i]:
+            M[i, : lens[i]] = v
+    return M, lens, null
+
+
+def _probe_rows(
+    spark: SparkSession,
+    path: str,
+    queries: DataFrame,
+    *,
+    dim: int,
+    n_probe: int,
+    query_id: str,
+    query_vec: str,
+) -> tuple[DataFrame, list]:
+    """The probe rows ``(__qid, __qvec, __qn, cell)`` — each query's
+    top ``n_probe`` cells — and the sorted probed cell ids, picked on
+    the driver from one Arrow fetch of the query batch and one of the
+    centroid table and scored by the shared sequential-fold kernel
+    (similarity._sims_matrix). Bit-for-bit the probe plan of
+    operators/ann.ivf_topk: per ``__qid`` group (NULL ids pool into one
+    group, duplicate ids pool together) order by (sim desc NULLS LAST,
+    cid asc) with NaN greatest and -0.0 tying 0.0; a zero norm product
+    scores 0.0; a query of another length than a centroid (HOF forms
+    only) has a NULL dot."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    q = queries.select(
+        F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qvec")
+    )
+    cent = spark.read.parquet(f"{path}/centroids").select("cid", "cvec")
+    qt, ct = q.toArrow(), cent.toArrow()
+    fixed = dim <= UNROLL_MAX_DIM
+    Q, qlen, qnull = _dense(qt.column("__qvec").to_pylist(), dim, fixed)
+    C, clen, cnull = _dense(ct.column("cvec").to_pylist(), dim, fixed)
+    # At least one column: all-empty arrays fold to 0.0 like the HOFs.
+    width = max(Q.shape[1], C.shape[1], 1)
+    Q = np.pad(Q, ((0, 0), (0, width - Q.shape[1])))
+    C = np.pad(C, ((0, 0), (0, width - C.shape[1])))
+    n_q, n_c = len(Q), len(C)
+    qn, cn = _col_norms(Q.T), _col_norms(C.T)
+    sims = _sims_matrix(Q, np.ascontiguousarray(C.T), cn)
+    null = qnull[:, None] | cnull[None, :]
+    # Another length (HOF only): NULL dot, so 0.0 on a zero norm
+    # product (already the kernel's value there) and NULL elsewhere.
+    null |= (qlen[:, None] != clen[None, :]) & (
+        qn[:, None] * cn[None, :] != 0.0
+    )
+
+    # cid asc with NULLS FIRST, for any id type.
+    cids = ct.column("cid").to_pylist()
+    crank = np.empty(n_c, dtype=np.int64)
+    crank[sorted(
+        range(n_c), key=lambda i: (0,) if cids[i] is None else (1, cids[i])
+    )] = np.arange(n_c)
+    groups: dict = {}
+    grp = np.array(
+        [groups.setdefault(v, len(groups))
+         for v in qt.column("__qid").to_pylist()],
+        dtype=np.int64,
+    )
+    rows = np.repeat(np.arange(n_q), n_c)
+    cols = np.tile(np.arange(n_c), n_q)
+    # NULL sims all tie (NULLS LAST), NaN sims all tie ahead of numbers.
+    fnull = null.ravel()
+    nan = np.isnan(sims.ravel()) & ~fnull
+    key = -np.where(nan | fnull, 0.0, sims.ravel())
+    order = np.lexsort((rows, crank[cols], key, ~nan, fnull, grp[rows]))
+    g = grp[rows][order]
+    first = np.searchsorted(g, g)  # start of each sorted group
+    keep = order[np.arange(len(order)) - first < n_probe]
+    r, c = rows[keep], cols[keep]
+
+    probes = pa.table({
+        "__qid": qt.column("__qid").take(r),
+        "__qvec": qt.column("__qvec").take(r),
+        "__qn": pa.array(qn[r], mask=qnull[r]),
+        "cell": ct.column("cid").take(c),
+    })
+    schema = StructType(
+        list(q.schema.fields)
+        + [StructField("__qn", DoubleType()),
+           StructField("cell", cent.schema["cid"].dataType)]
+    )
+    cells = sorted({cids[i] for i in c if cids[i] is not None})
+    return spark.createDataFrame(probes, schema), cells
+
+
 def search_ivf_index(
     spark: SparkSession,
     path: str,
@@ -164,51 +295,42 @@ def search_ivf_index(
     query_vec: str = "query_vec",
     exclude_self: bool = False,
 ) -> DataFrame:
-    """Top-k cosine from the stored index. The probed cell set is
-    collected driver-side (n_queries x n_probe SMALL ints — the same
-    contract as broadcasting the query batch) and applied as a literal
-    IN filter, which prunes cell directories at the file listing level:
-    the scan never touches unprobed partitions."""
-    # Norms factored under the joins (r09): the centroid and query
-    # norms are computed once per row before the probe cross join, and
-    # the stored-cell norm once per candidate ROW below the candidate
-    # join — per-pair work is the dot alone. Bit-identical
-    # (cosine_from_parts); every row of a probed cell was already
-    # scored, so error/NULL semantics are unchanged.
-    cent = F.broadcast(
-        spark.read.parquet(f"{path}/centroids")
-        .select("cid", "cvec", l2_norm("cvec", dim).alias("__cn"))
-    )
-    qsim = cosine_from_parts(
-        dot("__qvec", "cvec", dim), F.col("__qn"), F.col("__cn")
-    )
-    qw = Window.partitionBy("__qid").orderBy(qsim.desc(), F.col("cid").asc())
-    probes = (
-        queries.select(
-            F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qvec")
-        )
-        .select("__qid", "__qvec", l2_norm("__qvec", dim).alias("__qn"))
-        .crossJoin(cent)
-        .withColumn("__rn", F.row_number().over(qw))
-        .filter(F.col("__rn") <= n_probe)
-        .select("__qid", "__qvec", "__qn", F.col("cid").alias("cell"))
-    )
-    probed_cells = sorted(
-        {r.cell for r in probes.select("cell").distinct().collect()}
+    """Top-k cosine from the stored index.
+
+    The probe step runs on the driver (``_probe_rows``): the query
+    batch and the ``n_cells``-row centroid table are each collected
+    once through Arrow — bounded by the same contract as broadcasting
+    the query batch — and the resulting ``n_queries x n_probe`` probe
+    rows are broadcast into the candidate join. The probed cell ids
+    are applied as a literal IN filter, which prunes cell directories
+    at the file listing level: the scan never touches unprobed
+    partitions, and nothing of the cells side is collected.
+
+    The latest-wins dedup window over upsert generations runs only
+    while the ``HAS_UPSERTS`` marker exists (set by upsert_ivf_index,
+    cleared by build_ivf_index and compact_ivf_index)."""
+    probes, probed_cells = _probe_rows(
+        spark, path, queries, dim=dim, n_probe=n_probe,
+        query_id=query_id, query_vec=query_vec,
     )
     cells = spark.read.parquet(f"{path}/cells").filter(
         F.col("cell").isin(probed_cells)
     )
-    # Latest-wins dedup for upserted ids (gen from upsert_ivf_index).
-    # Within a cell this resolves re-upserts exactly; a vector whose
-    # NEW version moved to a different cell is only shadowed once
-    # compact_ivf_index runs — the standard LSM-style contract.
-    dw = Window.partitionBy("id").orderBy(F.col("gen").desc())
-    cells = (
-        cells.withColumn("__rn", F.row_number().over(dw))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    if has_marker(path, "HAS_UPSERTS"):
+        # Latest-wins dedup for upserted ids (gen from upsert_ivf_index).
+        # Within a cell this resolves re-upserts exactly; a vector whose
+        # NEW version moved to a different cell is only shadowed once
+        # compact_ivf_index runs — the standard LSM-style contract.
+        dw = Window.partitionBy("id").orderBy(F.col("gen").desc())
+        cells = (
+            cells.withColumn("__rn", F.row_number().over(dw))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
+    # The stored-cell norm once per candidate ROW below the candidate
+    # join (r09): per-pair work is the dot alone. Bit-identical
+    # (cosine_from_parts); every row of a probed cell was already
+    # scored, so error/NULL semantics are unchanged.
     cells = cells.select("*", l2_norm("vec", dim).alias("__vn"))
     cand = cells.join(F.broadcast(probes), on="cell")
     if exclude_self:
@@ -249,9 +371,11 @@ def upsert_ivf_index(
     touch of unaffected cells. Re-upserted ids are resolved at read
     time by ``search_ivf_index``'s latest-wins dedup (the plain-parquet
     MERGE pattern of operators/upsert.py; on Delta/Iceberg this maps to
-    MERGE INTO + dynamic partition overwrite). At 100 TB this is the
-    difference between a nightly full rebuild and a streaming-rate
-    index feed."""
+    MERGE INTO + dynamic partition overwrite). The ``HAS_UPSERTS``
+    marker is set BEFORE the append, so a crash after the files land
+    still leaves the serve deduplicating; compaction clears it. At
+    100 TB this is the difference between a nightly full rebuild and a
+    streaming-rate index feed."""
     cent = F.broadcast(
         spark.read.parquet(f"{path}/centroids")
         .select("cid", "cvec", l2_norm("cvec", dim).alias("__cn"))
@@ -281,6 +405,7 @@ def upsert_ivf_index(
             F.lit(gen).alias("gen"),
         )
     )
+    set_marker(path, "HAS_UPSERTS")
     assigned.write.mode("append").partitionBy("cell").parquet(f"{path}/cells")
 
 
@@ -289,8 +414,9 @@ def compact_ivf_index(spark: SparkSession, path: str) -> None:
     impossible — generations are caller-ordered), rewrite the cell
     partitions, reset gen to 0. Restores the one-row-per-id invariant
     that makes probed serving exact even for vectors whose newest
-    version changed cells. At scale: a periodic partition-parallel
-    rewrite, the LSM compaction of the index."""
+    version changed cells, and clears the ``HAS_UPSERTS`` marker after
+    the swap, so the serve drops its dedup window. At scale: a periodic
+    partition-parallel rewrite, the LSM compaction of the index."""
     cells = spark.read.parquet(f"{path}/cells")
     dw = Window.partitionBy("id").orderBy(F.col("gen").desc())
     latest = (
@@ -314,3 +440,4 @@ def compact_ivf_index(spark: SparkSession, path: str) -> None:
     os.rename(f"{path}/cells", old)
     os.rename(tmp, f"{path}/cells")
     shutil.rmtree(old, ignore_errors=True)
+    clear_marker(path, "HAS_UPSERTS")

@@ -250,3 +250,33 @@ def test_compact_resolves_generations_and_clears_marker(spark, emb, tmp_path):
     want = {(r.query_id, r.rank, r.vec_id, r.hamming, r.sim)
             for r in direct.collect()}
     assert got == want
+
+
+def test_upsert_sets_marker_before_append(spark, emb, tmp_path, monkeypatch):
+    """A crash after the appended words land must leave HAS_UPSERTS, or
+    search_bq_index would skip the latest-wins dedup and serve stale
+    duplicates."""
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from cs6300_vectordbs_spark.sources.bq_index import (
+        build_bq_index,
+        upsert_bq_index,
+    )
+
+    path = str(tmp_path / "bq")
+    build_bq_index(emb, path, dim=64)
+    assert not os.path.exists(f"{path}/HAS_UPSERTS")
+    write = DataFrameWriter.parquet
+
+    def land_then_crash(self, *a, **kw):
+        write(self, *a, **kw)
+        raise RuntimeError("crash after the append landed")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", land_then_crash)
+    with pytest.raises(RuntimeError, match="append landed"):
+        upsert_bq_index(
+            spark, _flip_first_coord(emb, F.col("vec_id") % 10 == 7), path,
+            dim=64, gen=1,
+        )
+    assert os.path.exists(f"{path}/HAS_UPSERTS")

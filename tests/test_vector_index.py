@@ -2,6 +2,7 @@
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from cs6300_vectordbs_spark.operators.ann import ivf_topk
@@ -19,19 +20,123 @@ def _queries(emb, n=10):
     )
 
 
-def test_persisted_search_equals_in_memory_ivf(spark, emb, tmp_path):
-    path = str(tmp_path / "ivf")
+@pytest.fixture(scope="module")
+def ivf16(spark, emb, tmp_path_factory):
+    """The sf0.001 corpus indexed once at 16 cells (dim 64)."""
+    path = str(tmp_path_factory.mktemp("ivf16") / "ivf")
     ensure_ivf_index(spark, emb, path, dim=64, n_cells=16)
+    return path
+
+
+def _rows(df, id_col):
+    """Result rows as sorted reprs: sims and dists compared bit for bit,
+    NULL query ids included."""
+    return sorted(
+        repr((r.query_id, r.rank, r[id_col], r.sim, r.dist))
+        for r in df.collect()
+    )
+
+
+def _assert_parity(spark, corpus, path, queries, *, dim, n_cells, n_probe,
+                   exclude_self=False):
     stored = search_ivf_index(
-        spark, path, _queries(emb), 5, dim=64, n_probe=4, exclude_self=True
+        spark, path, queries, 5, dim=dim, n_probe=n_probe,
+        exclude_self=exclude_self,
     )
     direct = ivf_topk(
-        emb, _queries(emb), 5, dim=64, n_cells=16, n_probe=4,
+        corpus, queries, 5, dim=dim, n_cells=n_cells, n_probe=n_probe,
+        exclude_self=exclude_self,
+    )
+    got, want = _rows(stored, "id"), _rows(direct, "vec_id")
+    assert got == want
+    return got
+
+
+_QSCHEMA = "query_id bigint, query_vec array<float>"
+
+
+def test_persisted_search_equals_in_memory_ivf(spark, emb, ivf16):
+    got = _assert_parity(
+        spark, emb, ivf16, _queries(emb), dim=64, n_cells=16, n_probe=4,
         exclude_self=True,
     )
-    got = {(r.query_id, r.rank, r.id, r.sim) for r in stored.collect()}
-    want = {(r.query_id, r.rank, r.vec_id, r.sim) for r in direct.collect()}
-    assert got == want and len(want) > 0
+    assert len(got) == 50
+
+
+def _vec(emb, vid):
+    return emb.filter(F.col("vec_id") == vid).first().embedding
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["null_vector", "zero_norm", "null_qid", "duplicate_qid", "longer",
+     "full_probe", "empty"],
+)
+def test_persisted_search_equals_in_memory_ivf_cases(spark, emb, ivf16, case):
+    """The driver-side probe step against ivf_topk's Spark probe plan
+    on the rows where NULL, NaN, zero-norm, grouping and length rules
+    decide the probed cells."""
+    v3, v6 = _vec(emb, 3), _vec(emb, 6)
+    extra = {
+        # Each pooled with a clean row of the same id, so NULLS LAST
+        # and NaN-greatest decide which row's cells are probed.
+        "null_vector": [(900, None), (900, v3),
+                        (901, v3[:10] + [None] + v3[11:]), (901, v6),
+                        (902, v6[:5] + [float("nan")] + v6[6:]), (902, v3)],
+        "zero_norm": [(900, [0.0] * 64), (901, [-0.0] * 64)],
+        "null_qid": [(None, v3), (None, v6)],
+        "duplicate_qid": [(5, v6), (5, v3)],
+        "longer": [(900, v3 + [0.5] * 8), (901, v6 + [None, 1e30])],
+        "full_probe": [],
+        "empty": [],
+    }[case]
+    if case == "empty":
+        queries = spark.createDataFrame([], _QSCHEMA)
+    else:
+        queries = _queries(emb, 4).unionByName(
+            spark.createDataFrame(extra, _QSCHEMA)
+        )
+    got = _assert_parity(
+        spark, emb, ivf16, queries, dim=64, n_cells=16,
+        n_probe=20 if case == "full_probe" else 4,
+    )
+    assert (len(got) == 0) == (case == "empty")
+
+
+def test_shorter_query_raises_on_both_paths(spark, emb, ivf16):
+    queries = spark.createDataFrame([(900, _vec(emb, 3)[:40])], _QSCHEMA)
+    with pytest.raises(Exception, match="INVALID_ARRAY_INDEX"):
+        search_ivf_index(spark, ivf16, queries, 5, dim=64).collect()
+    with pytest.raises(Exception, match="INVALID_ARRAY_INDEX"):
+        ivf_topk(emb, queries, 5, dim=64, n_cells=16).collect()
+
+
+def test_persisted_search_hof_dim_with_other_length_queries(spark, tmp_path):
+    """Above UNROLL_MAX_DIM both paths take the HOF forms: whole arrays,
+    and a query of another length has a NULL dot (sim NULL, or 0.0 on a
+    zero norm product)."""
+    import numpy as np
+
+    from cs6300_vectordbs_spark.functions.vector import UNROLL_MAX_DIM
+
+    d = UNROLL_MAX_DIM + 4
+    rng = np.random.default_rng(7)
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(d)]) for i in range(40)],
+        "vec_id bigint, embedding array<float>",
+    )
+    vecs = {r.vec_id: r.embedding for r in corpus.collect()}
+    queries = spark.createDataFrame(
+        [(0, vecs[0]), (1, vecs[1][: d - 6]), (2, vecs[2] + [0.25]),
+         (3, [0.0] * (d - 1)), (4, [])],
+        _QSCHEMA,
+    )
+    path = str(tmp_path / "ivf")
+    ensure_ivf_index(spark, corpus, path, dim=d, n_cells=4)
+    got = _assert_parity(
+        spark, corpus, path, queries, dim=d, n_cells=4, n_probe=2
+    )
+    assert any("None, None)" in r for r in got)  # NULL sims served
 
 
 def test_ensure_index_is_create_if_absent(spark, emb, tmp_path):
@@ -95,3 +200,84 @@ def test_incremental_upsert_then_search_and_compact(spark, emb, tmp_path):
     # the compacted row for id 20 is the gen-2 sentinel
     v = after.filter(F.col("id") == 20).select("vec").first()[0]
     assert abs(v[0] - 0.5) < 1e-6
+
+
+def _has_id_window(spark, path, queries):
+    """Does the serve plan carry the latest-wins window keyed by id?"""
+    import re
+
+    from tests.test_plans import plan_of
+
+    out = search_ivf_index(spark, path, queries, 5, dim=64)
+    return re.search(r"windowspecdefinition\(id#", plan_of(out)) is not None
+
+
+def test_serve_jobs_collects_and_dedup_window_follow_the_marker(
+    spark, emb, tmp_path, monkeypatch
+):
+    """A fresh index serves in at most 7 jobs, no eager collect reads a
+    cells file, and the id-keyed dedup window exists only while upsert
+    generations do (after upsert, not after build or compaction)."""
+    from cs6300_vectordbs_spark.sources.vector_index import (
+        build_ivf_index,
+        compact_ivf_index,
+        upsert_ivf_index,
+    )
+
+    path = str(tmp_path / "ivf")
+    build_ivf_index(emb, path, dim=64)
+    queries = _queries(emb, 4)
+
+    cls, collected = type(emb), []
+    for name in ("collect", "toArrow", "toPandas"):
+        def spy(self, *a, _orig=getattr(cls, name), **kw):
+            collected.extend(self.inputFiles())
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(cls, name, spy)
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf-serve-jobs", "search_ivf_index on a fresh index")
+    try:
+        out = search_ivf_index(spark, path, queries, 5, dim=64)
+        monkeypatch.undo()
+        assert len(out.collect()) == 20
+    finally:
+        sc.setJobGroup("", "")
+    assert collected, "the probe step collects the query batch"
+    assert not [f for f in collected if "/cells/" in f], collected
+    assert len(sc.statusTracker().getJobIdsForGroup("ivf-serve-jobs")) <= 7
+
+    assert not _has_id_window(spark, path, queries)
+    upsert_ivf_index(
+        spark, emb.filter(F.col("vec_id") < 3), path, dim=64, gen=1
+    )
+    assert _has_id_window(spark, path, queries)
+    compact_ivf_index(spark, path)
+    assert not _has_id_window(spark, path, queries)
+
+
+def test_upsert_sets_marker_before_append(spark, emb, tmp_path, monkeypatch):
+    """A crash after the appended files land must leave HAS_UPSERTS, or
+    the serve would skip the latest-wins dedup over stale rows."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from cs6300_vectordbs_spark.sources.vector_index import (
+        build_ivf_index,
+        upsert_ivf_index,
+    )
+
+    path = str(tmp_path / "ivf")
+    build_ivf_index(emb, path, dim=64)
+    assert not os.path.exists(f"{path}/HAS_UPSERTS")
+    write = DataFrameWriter.parquet
+
+    def land_then_crash(self, *a, **kw):
+        write(self, *a, **kw)
+        raise RuntimeError("crash after the append landed")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", land_then_crash)
+    with pytest.raises(RuntimeError, match="append landed"):
+        upsert_ivf_index(
+            spark, emb.filter(F.col("vec_id") < 3), path, dim=64, gen=1
+        )
+    assert os.path.exists(f"{path}/HAS_UPSERTS")
