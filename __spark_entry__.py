@@ -150,11 +150,12 @@ def q_auto_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The one-call search facade with automatic strategy dispatch
     (operators/search.py — SURVEY §4.3 item 2, 'the library does the
     planning' like the reference's collection.query). At every test
-    scale the counts land in the exact-JVM regime, so the result — and
-    the oracle — are identical to topk_cosine_exact; the dispatch rule
-    itself (exact vs blocked vs grid vs ivf by corpus/query counts)
-    and the bit-equality of the exact strategies are pinned in
-    tests/test_plans.py."""
+    scale the counts land in the blocked regime (the vectorized Arrow
+    kernel), whose rows are bit-identical to the JVM plan's, so the
+    result — and the oracle — are identical to topk_cosine_exact; the
+    dispatch rule itself (blocked vs grid vs ivf by corpus/query
+    counts) and the bit-equality of the exact strategies are pinned in
+    tests/test_plans.py and tests/test_similarity.py."""
     from cs6300_vectordbs_spark.operators.search import search
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -7249,9 +7250,9 @@ GROUP BY 1
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
     Routed through the auto-dispatch search() facade — identical rows
-    to q_topk_cosine_exact (the exact strategies are bit-identical and
-    the dispatch lands on 'exact' at this scale), so the smoke test
-    exercises the engine's one-call entry point end-to-end."""
+    to q_topk_cosine_exact (the dispatch lands on the blocked kernel
+    at this scale, and the exact strategies are bit-identical), so the
+    smoke test exercises the engine's one-call entry point end-to-end."""
     return q_auto_search(spark, "/root/testdata/sf0.001")
 
 

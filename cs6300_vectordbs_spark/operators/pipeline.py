@@ -12,8 +12,9 @@ for LLM query generation, and the similarity-threshold judge
 exist on each of those modules; swapping them in changes no plan shape.
 
 Plan shape at scale: one corpus scan (embed is a map), the query side
-is a small sampled batch (broadcast), the search is the
-similarity_topk broadcast-join + WindowGroupLimit top-k, and the
+is a small sampled batch (broadcast), the search is the blocked
+Arrow kernel (similarity_topk_blocked: per-partition local top-k, one
+merge window), and the
 metric aggregations run over the tiny (queries x k) result table,
 materialized once so the report's aggregate branches don't recompute
 the search.

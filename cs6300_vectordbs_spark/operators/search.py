@@ -7,38 +7,40 @@ equivalent "the library does the planning" entry point (SURVEY.md §4.3
 item 2): the caller says WHAT (corpus, queries, k, optional filter);
 the facade picks HOW from corpus/query row counts:
 
-  exact    JVM codegen plan (operators/similarity.similarity_topk):
-           broadcast query batch, norms factored under the join,
-           WindowGroupLimit top-k. Best while |corpus| x |queries|
-           stays in a single-stage flop budget.
-  blocked  Arrow/numpy kernel (similarity_topk_blocked), bit-identical
-           output: per-partition BLAS local top-k, one merge window.
-           Takes over when the pair count makes JVM expression
-           evaluation the bottleneck but the query batch still fits
-           in a broadcast.
-  grid     both-sides-sharded kernel (similarity_topk_grid), exact,
-           no driver-held query matrix — the only correct choice when
-           the QUERY side is itself corpus-sized (kNN-graph builds),
-           where a broadcast/collect of queries is the thing that
-           dies at 100x.
-  ivf      approximate cell-probed search (operators/ann.ivf_topk)
-           when the exact pair count is out of budget: scans only
-           n_probe/n_cells of the corpus, exact re-rank inside probed
-           cells. (The IVF probe join broadcasts the query batch, so
-           the huge-corpus x huge-queries corner instead falls back
-           to grid — exact and slower, but correct; callers who need
-           ANN at that shape pick the persisted-IVF/LSH paths
-           explicitly.)
+  grid     the query batch is over BROADCAST_MAX_QUERIES rows:
+           both-sides-sharded kernel (similarity_topk_grid), exact, no
+           driver-held query matrix — the only correct choice when the
+           QUERY side is itself corpus-sized (kNN-graph builds).
+  blocked  |corpus| x |queries| <= BLOCKED_MAX_PAIRS: the vectorized
+           Arrow kernel (similarity_topk_blocked) over the broadcast
+           query batch — per-block local top-k, one merge window.
+  ivf      beyond that: approximate cell-probed search
+           (operators/ann.ivf_topk) scanning only n_probe/n_cells of
+           the corpus, exact re-rank inside probed cells.
 
-Counts come from caller hints when available (``corpus_count`` /
-``query_count`` — a serving tier knows its index size) and are
-measured with ``.count()`` otherwise; on parquet sources that is a
-row-group-metadata scan, not a data read.
+No size picks the JVM plan (similarity_topk). Its scoring stage — the
+cross join, the pushed ``sim IS NOT NULL`` condition and the
+projection — codegens into one method of ~51k bytecodes that HotSpot
+marks not-compilable at both tiers (C1 "out of virtual registers",
+C2 "too many nodes"), so it runs in the bytecode interpreter at about
+75 us per pair even with -XX:-DontCompileHugeMethods, and its cost
+grows linearly in pairs (2M pairs: 155 s of CPU against 0.12 s for
+the Arrow kernel). It stays as the forced ``strategy="exact"`` and as
+the parity reference the blocked kernel is tested against.
+
+The query batch is loaded once, bounded: ``limit(BROADCAST_MAX_QUERIES
++ 1)`` through Arrow. Its row count is the query count, and the loaded
+table goes to the blocked kernel, so the batch is collected once; a
+batch over the bound goes to grid and nothing more of it is collected.
+The corpus count comes from the ``corpus_count`` hint or ``.count()``
+(on parquet sources a row-group-metadata scan). A ``query_count`` hint
+skips the load.
 
 Every strategy returns the same (query_id, rank, <corpus_id>, sim,
-dist) schema, and the three exact strategies are BIT-identical (same
-IEEE fold order, same (sim desc, id asc) total order) — asserted in
-tests/test_plans.py — so dispatch never changes answers, only plans.
+dist) schema, and the three exact strategies return the same rows
+(same IEEE fold order, same (sim desc, id asc) total order) — asserted
+in tests/test_plans.py and tests/test_similarity.py — so dispatch
+never changes answers, only plans.
 """
 
 from __future__ import annotations
@@ -47,27 +49,26 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Dispatch thresholds (tests/test_plans.py pins these semantics):
-# EXACT_MAX_PAIRS    largest |corpus| x |queries| for the pure-JVM plan
-#                    (~64-dim double dots; 5e7 pairs is seconds).
 # BLOCKED_MAX_PAIRS  largest exact pair count worth brute-forcing at
 #                    BLAS speed before switching to an ANN index.
 # BROADCAST_MAX_QUERIES  largest query batch we will collect/broadcast
-#                    (exact + blocked both hold the batch per executor;
+#                    (the blocked kernel holds the batch per executor;
 #                    1e5 x 64 doubles ~ 50 MB).
-EXACT_MAX_PAIRS = 50_000_000
 BLOCKED_MAX_PAIRS = 5_000_000_000
 BROADCAST_MAX_QUERIES = 100_000
 
 
 def choose_strategy(corpus_count: int, query_count: int) -> str:
-    """Pure dispatch rule: counts -> 'exact' | 'blocked' | 'grid' | 'ivf'."""
-    pairs = corpus_count * query_count
+    """Pure dispatch rule: counts -> 'blocked' | 'grid' | 'ivf'.
+
+    grid when the query batch is over BROADCAST_MAX_QUERIES, blocked
+    while corpus x queries <= BLOCKED_MAX_PAIRS, ivf beyond that. No
+    size picks 'exact': the JVM plan's scoring method is too large for
+    either JIT tier and runs interpreted (module docstring)."""
     if query_count > BROADCAST_MAX_QUERIES:
         # Query side too big to hold per-executor: shard both sides.
         return "grid"
-    if pairs <= EXACT_MAX_PAIRS:
-        return "exact"
-    if pairs <= BLOCKED_MAX_PAIRS:
+    if corpus_count * query_count <= BLOCKED_MAX_PAIRS:
         return "blocked"
     return "ivf"
 
@@ -126,10 +127,18 @@ def search(
     q_in = queries.filter(F.col(query_vec).isNotNull())
     if filter_expr is not None:
         c = c.filter(filter_expr)
+    qt = None
     if strategy == "auto":
+        if query_count is None:
+            # One bounded load: its row count is nq, and the blocked
+            # kernel takes the table instead of collecting again.
+            qt = q_in.select(
+                F.col(query_id).alias("__qid"),
+                F.col(query_vec).alias("__qvec"),
+            ).limit(BROADCAST_MAX_QUERIES + 1).toArrow()
+            query_count = qt.num_rows
         nc = corpus_count if corpus_count is not None else c.count()
-        nq = query_count if query_count is not None else q_in.count()
-        strategy = choose_strategy(nc, nq)
+        strategy = choose_strategy(nc, query_count)
 
     if diversify not in (None, "mmr"):
         raise ValueError(f"unknown diversify mode: {diversify!r}")
@@ -150,7 +159,9 @@ def search(
     if strategy == "exact":
         out = similarity_topk(c, q_in, k1, dim=dim, **common)
     elif strategy == "blocked":
-        out = similarity_topk_blocked(c, q_in, k1, **common)
+        out = similarity_topk_blocked(
+            c, q_in, k1, dim=dim, query_table=qt, **common
+        )
     elif strategy == "grid":
         out = similarity_topk_grid(c, q_in, k1, **common)
     elif strategy == "ivf":

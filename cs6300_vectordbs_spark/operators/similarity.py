@@ -19,6 +19,12 @@ Spark-first design (exact path):
   - ties break by id ascending so results are deterministic and match
     the SQL oracle.
 
+similarity_topk_blocked returns the same rows, bit for bit, from one
+vectorized Arrow pass over the corpus; operators/search.search
+dispatches to it, and this JVM plan is its parity reference (the JVM
+scoring method is too large for HotSpot's compilers and runs
+interpreted — see operators/search.py).
+
 The approximate/ANN path (LSH-bucketed) lives in operators/ann.py; this
 exact operator is its correctness oracle, same relationship as
 brute-force vs HNSW in the reference stores.
@@ -44,7 +50,7 @@ def _col_norms(T):
     return np.sqrt(sq)
 
 
-def _sims_matrix(L, RT, rnorm):
+def _sims_matrix(L, RT, rnorm, fold0=False):
     """(n_l, n_r) cosine matrix between row matrix ``L`` (n_l, d) and
     transposed matrix ``RT`` (d, n_r) with precomputed right norms.
 
@@ -54,19 +60,76 @@ def _sims_matrix(L, RT, rnorm):
     dimension-sequentially (vectorized across pairs, sequential across
     dims — the exact IEEE-754 addition order of the unrolled JVM
     expression and DuckDB's list fold), and zero-norm denominators
-    yield sim 0.0, matching functions/vector.cosine_sim."""
+    yield sim 0.0, matching functions/vector.cosine_sim. ``fold0``
+    starts the dot at 0.0 like the HOF ``aggregate`` form, which only
+    turns a -0.0 dot into 0.0."""
     import numpy as np
 
     d = RT.shape[0]
     dots = L[:, [0]] * RT[[0], :]
     for j in range(1, d):
         dots += L[:, [j]] * RT[[j], :]
+    if fold0:
+        dots += 0.0
     lsq = L[:, 0] * L[:, 0]
     for j in range(1, d):
         lsq = lsq + L[:, j] * L[:, j]
     denom = np.sqrt(lsq)[:, None] * rnorm[None, :]
     zeros = denom == 0.0
     return np.where(zeros, 0.0, dots / np.where(zeros, 1.0, denom))
+
+
+def _dense(arr, dim, fixed: bool):
+    """An Arrow list column of vectors as a zero-padded float64 matrix
+    for the shared kernel, plus each row's used length and NULL flag.
+
+    ``fixed`` mirrors the unrolled chain: the first ``dim`` elements,
+    and a shorter vector raises as ANSI ``INVALID_ARRAY_INDEX`` does.
+    Otherwise whole arrays are used (the HOF forms). A NULL vector or
+    a NULL used element makes the row NULL (NULL norm, NULL sims);
+    NaN stays NaN. Zero padding keeps the folds exact: ``x + 0.0`` is
+    ``x``, except that a -0.0 dot becomes 0.0, which ranks the same.
+
+    A batch without NULLs whose vectors share one length loads with one
+    ``flatten()`` and a reshape; only other batches go row by row."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    n = len(arr)
+    lens = pc.list_value_length(arr).fill_null(0).to_numpy(
+        zero_copy_only=False
+    ).astype(np.int64)
+    flat = arr.flatten()
+    if n and arr.null_count == 0 and flat.null_count == 0 and (
+        lens == lens[0]
+    ).all() and not (fixed and lens[0] < dim):
+        M = flat.to_numpy(zero_copy_only=False).astype(np.float64)
+        M = M.reshape(n, int(lens[0]))
+        if fixed:
+            M, lens = np.ascontiguousarray(M[:, :dim]), np.full(n, dim)
+        return M, lens, np.zeros(n, dtype=bool)
+
+    used = [
+        None if v is None else (v[:dim] if fixed else v)
+        for v in arr.to_pylist()
+    ]
+    for v in used:
+        if fixed and v is not None and len(v) < dim:
+            raise ValueError(
+                f"[INVALID_ARRAY_INDEX] a vector has {len(v)} elements, "
+                f"fewer than dim={dim}; the unrolled Spark chain raises "
+                "the same ANSI error"
+            )
+    lens = np.array([0 if v is None else len(v) for v in used], dtype=np.int64)
+    null = np.array([v is None or None in v for v in used], dtype=bool)
+    M = np.zeros((n, max(lens, default=0)), dtype=np.float64)
+    for i, v in enumerate(used):
+        if not null[i]:
+            M[i, : lens[i]] = v
+    return M, lens, null
 
 
 def _topk_order(col, lids):
@@ -76,8 +139,8 @@ def _topk_order(col, lids):
     LAST and silently drop such rows from the local candidate set.
 
     Honest scope note: a NaN sim (only possible from non-finite vector
-    ELEMENTS — zero norms map to 0.0) cannot survive the Arrow
-    boundary as NaN: pandas uses NaN as its null sentinel, so the
+    ELEMENTS — zero norms map to 0.0) cannot survive the grid kernel's
+    pandas boundary as NaN: pandas uses NaN as its null sentinel, so the
     emitted row reaches the final JVM window as sim NULL and ranks
     LAST there, while the all-JVM path ranks the same row FIRST
     (NaN-is-greatest). The bit-identity contract between the kernel
@@ -232,91 +295,133 @@ def similarity_topk_blocked(
     query_vec: str = "query_vec",
     filter_expr: Column | str | None = None,
     exclude_self: bool = False,
+    dim: int | None = None,
     block_rows: int = 4096,
+    query_table=None,
 ) -> DataFrame:
-    """Exact top-k cosine search via an Arrow-batched vectorized kernel —
-    the measured-fast form of :func:`similarity_topk`, bit-identical
-    output for FINITE vector elements (same dot/norm IEEE addition
-    order via the shared _sims_matrix kernel, same (sim desc, id asc)
-    total order, and the same NULL-vector quarantine the JVM path's
-    isNotNull sim filter gives). Non-finite elements are out of the
-    bit-identity contract — see _topk_order for why NaN sims can't
-    cross the Arrow boundary intact.
+    """Exact top-k cosine search on one vectorized Arrow kernel: the
+    same rows as :func:`similarity_topk` (the JVM plan), bit for bit.
 
-    Two-phase top-k, the same shape WindowGroupLimit gives the JVM path:
-    each corpus partition emits its LOCAL top-k per query under the full
-    (sim desc, id asc) order — any global top-k row is necessarily in
-    its partition's local top-k — then one exact row_number window ranks
-    the O(partitions x queries x k) candidates. The query batch is
-    collected and broadcast (it is small by contract); corpus partitions
-    stream once, no corpus shuffle.
+    Contract, rule for rule the JVM plan's:
+      - ``dim <= UNROLL_MAX_DIM`` scores the first ``dim`` elements,
+        and a shorter vector raises ``INVALID_ARRAY_INDEX``; with
+        ``dim=None`` or above the cap whole arrays are scored (the HOF
+        forms: the dot folds from 0.0, and a query whose length
+        differs from the corpus vector's gets a NULL sim, or 0.0 where
+        the norm product is 0).
+      - A NULL vector or a NULL used element makes the pair unscorable:
+        no row (the JVM's ``sim IS NOT NULL`` filter). A zero norm
+        product scores 0.0. A NaN sim is carried as NaN (mapInArrow
+        keeps it apart from NULL) and ranks first; -0.0 ties 0.0.
+      - Ids of any type pass through from the input Arrow arrays. NULL
+        corpus ids stay NULL and sort first among ties; NULL and
+        duplicate query ids pool in the final window exactly as
+        ``partitionBy("query_id")`` pools them; ``exclude_self`` drops
+        a pair when the ids are equal or either is NULL (SQL ``!=``).
+
+    Plan: the query batch is loaded once through Arrow (or taken from
+    ``query_table``, a ``(query_id, query_vec)`` table the caller has
+    already loaded — :func:`.search.search` passes its bounded load)
+    and broadcast; corpus partitions stream once through mapInArrow
+    (no corpus shuffle), each block of rows scored by the shared
+    sequential-fold kernel (_sims_matrix). Each block emits every
+    query row's LOCAL top-k under the full (NaN first, sim desc,
+    corpus id asc NULLS FIRST) order — any global top-k row is in its
+    block's local top-k — and one row_number window ranks the
+    O(blocks x queries x k) candidates. Blocks hold at most
+    ``block_rows`` corpus rows and about 4M sims.
     """
     import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
+    from ..functions.vector import UNROLL_MAX_DIM
     from .util import spread
 
-    spark = corpus.sparkSession
-    # NULL query vectors can never score (the JVM path's null sim is
-    # filtered before ranking, so such a query returns no rows there);
-    # dropping them here gives the same result instead of a numpy
-    # object-array TypeError.
-    qrows = [
-        r
-        for r in queries.select(
-            F.col(query_id).alias("id"), F.col(query_vec).alias("v")
-        ).collect()
-        if r.v is not None
-    ]
-    qids = np.array([r.id for r in qrows], dtype=np.int64)
-    Q = np.array([r.v for r in qrows], dtype=np.float64)
-    bc = spark.sparkContext.broadcast((qids, Q))
+    fixed = dim is not None and dim <= UNROLL_MAX_DIM
+    q = queries.select(
+        F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qvec")
+    )
+    qt = q.toArrow() if query_table is None else query_table
+    Q, qlen, qnull = _dense(qt.column(1), dim, fixed)
+    qids = qt.column(0).combine_chunks()
+    # An unscorable query emits no row; under exclude_self neither does
+    # a NULL id, which SQL != pairs with nothing.
+    scorable = ~qnull
+    if exclude_self:
+        scorable &= qids.is_valid().to_numpy(zero_copy_only=False)
+    keep = np.flatnonzero(scorable)
+    qids = qids.take(keep)
+    # At least one column: all-empty arrays fold to 0.0 like the HOFs.
+    Q = np.pad(Q[keep], ((0, 0), (0, max(0, 1 - Q.shape[1]))))
+    QT, qlen = np.ascontiguousarray(Q.T), qlen[keep]
+    qn = _col_norms(QT)
+    # exclude_self compares dense codes of the query ids.
+    codes: dict = {}
+    qcode = np.array(
+        [codes.setdefault(v, len(codes)) for v in qids.to_pylist()]
+        if exclude_self else [], dtype=np.int64,
+    )
+    bc = corpus.sparkSession.sparkContext.broadcast(
+        (qids, QT, qn, qlen, codes, qcode)
+    )
 
     c = corpus
     if filter_expr is not None:
         c = c.filter(filter_expr)
-
-    def gen(batches):
-        import pandas as pd
-
-        qids_b, Q_b = bc.value
-        QT = np.ascontiguousarray(Q_b.T)  # (d, nq)
-        qnorm = _col_norms(QT)
-        nq = len(qids_b)
-        for pdf in batches:
-            for s in range(0, len(pdf), block_rows):
-                blk = pdf.iloc[s : s + block_rows]
-                lids = blk["id"].to_numpy(dtype=np.int64)
-                L = np.array(list(blk["v"]), dtype=np.float64)
-                sims = _sims_matrix(L, QT, qnorm)
-                out_q, out_id, out_sim = [], [], []
-                for qi in range(nq):
-                    col = sims[:, qi]
-                    # full (sim desc, id asc) order so boundary ties keep
-                    # the id-ascending winner, exactly like the window
-                    order = _topk_order(col, lids)
-                    if exclude_self:
-                        order = order[lids[order] != qids_b[qi]]
-                    top = order[:k]
-                    out_q.append(np.full(len(top), qids_b[qi], dtype=np.int64))
-                    out_id.append(lids[top])
-                    out_sim.append(col[top])
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "cid": np.concatenate(out_id),
-                        "sim": np.concatenate(out_sim),
-                    }
-                )
-
     # spread BEFORE the projection: if corpus_vec is a computed column
     # (e.g. an embedding expression), projecting first would evaluate it
-    # on the unspread input's few partitions. NULL corpus vectors are
-    # quarantined exactly like the JVM path's isNotNull sim filter.
+    # on the unspread input's few partitions. A NULL vector never scores.
     src = spread(c).select(
         F.col(corpus_id).alias("id"), F.col(corpus_vec).alias("v")
     ).filter(F.col("v").isNotNull())
-    cand = src.mapInPandas(gen, schema="query_id bigint, cid bigint, sim double")
+    if exclude_self:
+        src = src.filter(F.col("id").isNotNull())
+    schema = StructType([
+        StructField("query_id", q.schema["__qid"].dataType),
+        StructField("cid", src.schema["id"].dataType),
+        StructField("sim", DoubleType()),
+    ])
 
+    def kernel(batches):
+        qids_b, QT_b, qn_b, qlen_b, codes_b, qcode_b = bc.value
+        nq = QT_b.shape[1]
+        rows = max(1, min(block_rows, (1 << 22) // max(nq, 1)))
+        for batch in batches:
+            for s in range(0, batch.num_rows if nq else 0, rows):
+                blk = batch.slice(s, rows)
+                cids = blk.column(0)
+                C, clen, cnull = _dense(blk.column(1), dim, fixed)
+                # One width for both sides (zero padding is exact).
+                width = max(C.shape[1], QT_b.shape[0])
+                if C.shape[1] < width:
+                    C = np.pad(C, ((0, 0), (0, width - C.shape[1])))
+                QTw = QT_b if QT_b.shape[0] == width else np.pad(
+                    QT_b, ((0, width - QT_b.shape[0]), (0, 0))
+                )
+                sims = _sims_matrix(C, QTw, qn_b, fold0=not fixed)
+                ok = np.repeat(~cnull[:, None], nq, axis=1)
+                if not fixed:
+                    # HOF zip_with over arrays of different lengths:
+                    # NULL dot, so NULL sim unless the norm product is 0.
+                    other = clen[:, None] != qlen_b[None, :]
+                    if other.any():
+                        cn = _col_norms(C.T)
+                        ok &= ~(other & (cn[:, None] * qn_b[None, :] != 0.0))
+                if exclude_self:
+                    ccode = np.array(
+                        [codes_b.get(v, -1) for v in cids.to_pylist()],
+                        dtype=np.int64,
+                    )
+                    ok &= ccode[:, None] != qcode_b[None, :]
+                r, col = _local_topk(sims, ok, cids, k)
+                yield pa.RecordBatch.from_arrays(
+                    [qids_b.take(col), cids.take(r),
+                     pa.array(sims[r, col], type=pa.float64())],
+                    names=["query_id", "cid", "sim"],
+                )
+
+    cand = src.mapInArrow(kernel, schema)
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("cid").asc()
     )
@@ -331,6 +436,33 @@ def similarity_topk_blocked(
             (F.lit(1.0) - F.col("sim")).alias("dist"),
         )
     )
+
+
+def _local_topk(sims, ok, cids, k):
+    """(row, column) indices of each column's ``k`` best scorable
+    entries of ``sims`` under (NaN first, sim desc, corpus id asc NULLS
+    FIRST) — Spark's window order, with ties on the k-th sim resolved
+    by the Arrow id order. One partial sort per column finds the k-th
+    key; only the entries at or above it are sorted."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    n = sims.shape[0]
+    nan = np.isnan(sims)
+    key = np.where(ok, np.where(nan, -np.inf, -sims), np.inf)
+    kk = min(k, n) - 1
+    kth = np.partition(key, kk, axis=0)[kk]
+    r, c = np.nonzero(ok & (key <= kth[None, :]))
+    crank = np.empty(n, dtype=np.int64)
+    crank[
+        pc.array_sort_indices(cids, null_placement="at_start").to_numpy()
+    ] = np.arange(n)
+    s = sims[r, c]
+    isnan = np.isnan(s)
+    o = np.lexsort((crank[r], -np.where(isnan, 0.0, s), ~isnan, c))
+    cs = c[o]
+    o = o[np.arange(len(o)) - np.searchsorted(cs, cs) < k]
+    return r[o], c[o]
 
 
 def pairwise_similarity(

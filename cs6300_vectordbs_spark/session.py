@@ -67,6 +67,15 @@ def get_spark(
         # so it stays on; SPARK_GRAFT_JIT_HUGE_METHODS=0 reproduces the
         # A/B's off arm.
         #
+        # The flag lifts only that 8,000-bytecode cap. A method can
+        # still be too big for the compilers themselves: the exact JVM
+        # top-k's scoring method (~51k bytecodes: cross join, pushed
+        # `sim IS NOT NULL`, projection) bails out of C1 ("out of
+        # virtual registers in LIR generator") and C2 ("too many nodes
+        # matching instructions"), is marked not-compilable at both
+        # tiers and stays interpreted — why operators/search.py no
+        # longer picks that plan by size.
+        #
         # DEPLOYMENT CAVEAT (r09 ADVICE): driver.extraJavaOptions set
         # through SparkConf only takes effect when PySpark itself
         # launches the JVM (this in-process builder). Under

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vector import UNROLL_MAX_DIM, cosine_from_parts, dot, l2_norm
-from ..operators.similarity import _col_norms, _sims_matrix
+from ..operators.similarity import _col_norms, _dense, _sims_matrix
 from ..operators.util import spread
 from .index_common import (
     build_lock,
@@ -167,37 +167,6 @@ def ensure_ivf_index(
         write_fingerprint(path, fp)
 
 
-def _dense(vecs: list, dim: int, fixed: bool):
-    """Arrow-loaded vectors as a zero-padded float64 matrix for the
-    shared kernel, plus each row's used length and NULL flag.
-
-    ``fixed`` mirrors the unrolled chain: the first ``dim`` elements,
-    and a shorter vector raises as ANSI ``INVALID_ARRAY_INDEX`` does.
-    Otherwise whole arrays are used (the HOF forms). A NULL vector or
-    a NULL used element makes the row NULL (NULL norm, NULL sims);
-    NaN stays NaN. Zero padding keeps the folds exact: ``x + 0.0`` is
-    ``x``, except that a -0.0 dot becomes 0.0, which ranks the same."""
-    import numpy as np
-
-    used = [
-        None if v is None else (v[:dim] if fixed else v) for v in vecs
-    ]
-    for v in used:
-        if fixed and v is not None and len(v) < dim:
-            raise ValueError(
-                f"[INVALID_ARRAY_INDEX] a vector has {len(v)} elements, "
-                f"fewer than dim={dim}; the unrolled Spark chain raises "
-                "the same ANSI error"
-            )
-    lens = np.array([0 if v is None else len(v) for v in used], dtype=np.int64)
-    null = np.array([v is None or None in v for v in used], dtype=bool)
-    M = np.zeros((len(used), max(lens, default=0)), dtype=np.float64)
-    for i, v in enumerate(used):
-        if not null[i]:
-            M[i, : lens[i]] = v
-    return M, lens, null
-
-
 def _probe_rows(
     spark: SparkSession,
     path: str,
@@ -228,8 +197,8 @@ def _probe_rows(
     cent = spark.read.parquet(f"{path}/centroids").select("cid", "cvec")
     qt, ct = q.toArrow(), cent.toArrow()
     fixed = dim <= UNROLL_MAX_DIM
-    Q, qlen, qnull = _dense(qt.column("__qvec").to_pylist(), dim, fixed)
-    C, clen, cnull = _dense(ct.column("cvec").to_pylist(), dim, fixed)
+    Q, qlen, qnull = _dense(qt.column("__qvec"), dim, fixed)
+    C, clen, cnull = _dense(ct.column("cvec"), dim, fixed)
     # At least one column: all-empty arrays fold to 0.0 like the HOFs.
     width = max(Q.shape[1], C.shape[1], 1)
     Q = np.pad(Q, ((0, 0), (0, width - Q.shape[1])))

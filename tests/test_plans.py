@@ -569,22 +569,31 @@ def test_ensure_bucketed_table_reuses_then_invalidates(spark, tmp_path):
 
 
 def test_search_dispatch_thresholds():
-    """The auto-strategy rule (operators/search.py): exact while the
-    pair count fits the JVM budget, blocked at BLAS scale, ivf beyond
-    the exact budget, grid whenever the query side outgrows a
-    broadcast — these THRESHOLD SEMANTICS are the contract."""
+    """The auto-strategy rule (operators/search.py): blocked while the
+    pair count fits the BLAS budget, ivf beyond it, grid whenever the
+    query side outgrows a broadcast; no size picks the JVM plan —
+    these THRESHOLD SEMANTICS are the contract."""
+    import importlib
+
+    # operators/__init__ re-exports the search FUNCTION under the
+    # module's name, so fetch the module itself.
+    search_mod = importlib.import_module(
+        "cs6300_vectordbs_spark.operators.search"
+    )
     from cs6300_vectordbs_spark.operators.search import (
         BLOCKED_MAX_PAIRS,
         BROADCAST_MAX_QUERIES,
-        EXACT_MAX_PAIRS,
         choose_strategy,
     )
 
-    assert choose_strategy(4_000, 10) == "exact"
-    assert choose_strategy(EXACT_MAX_PAIRS // 100, 100) == "exact"
-    assert choose_strategy(EXACT_MAX_PAIRS // 100 + 1, 100) == "blocked"
+    assert not hasattr(search_mod, "EXACT_MAX_PAIRS")
+    assert choose_strategy(0, 0) == "blocked"
+    assert choose_strategy(4_000, 10) == "blocked"
     assert choose_strategy(BLOCKED_MAX_PAIRS // 100, 100) == "blocked"
     assert choose_strategy(BLOCKED_MAX_PAIRS // 100 + 1, 100) == "ivf"
+    n = BLOCKED_MAX_PAIRS // BROADCAST_MAX_QUERIES
+    assert choose_strategy(n, BROADCAST_MAX_QUERIES) == "blocked"
+    assert choose_strategy(n + 1, BROADCAST_MAX_QUERIES) == "ivf"
     # Query side too big to broadcast -> both-sides-sharded grid,
     # regardless of corpus size.
     assert choose_strategy(50, BROADCAST_MAX_QUERIES + 1) == "grid"
@@ -592,26 +601,27 @@ def test_search_dispatch_thresholds():
 
 
 def test_search_auto_picks_exact_plan_and_matches_brute_force(spark, emb):
-    """At test scale auto dispatch must land on the exact JVM plan
-    (WindowGroupLimit + broadcast queries), and every forced exact
-    strategy must return BIT-identical rows."""
+    """At test scale auto dispatch must land on the blocked Arrow
+    kernel (MapInArrow over the corpus, no BroadcastNestedLoopJoin),
+    and every forced exact strategy — the JVM plan included — must
+    return BIT-identical rows."""
     from cs6300_vectordbs_spark.operators.search import search
 
     q = _queries(emb)
     auto = search(emb, q, 5, dim=64, exclude_self=True)
     plan = plan_of(auto)
-    assert "WindowGroupLimit" in plan
-    assert "BroadcastNestedLoopJoin" in plan
+    assert "MapInArrow" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
     base = sorted(
         (r.query_id, r.rank, r.vec_id, r.sim) for r in auto.collect()
     )
-    for strat in ("blocked", "grid"):
+    for strat in ("exact", "blocked", "grid"):
         rows = search(
             emb, q, 5, dim=64, exclude_self=True, strategy=strat
         ).collect()
         got = sorted((r.query_id, r.rank, r.vec_id, r.sim) for r in rows)
-        assert got == base, f"strategy {strat} diverged from exact"
+        assert got == base, f"strategy {strat} diverged from auto"
     # ivf is approximate: its hits are a subset-quality check, not
     # bit-equality — every reported sim must still be the exact cosine.
     ivf_rows = search(
@@ -625,6 +635,41 @@ def test_search_auto_picks_exact_plan_and_matches_brute_force(spark, emb):
     }
     for r in ivf_rows:
         assert exact_sims[(r.query_id, r.vec_id)] == r.sim
+
+
+def test_search_over_broadcast_bound_takes_grid_after_bounded_load(
+    spark, emb, monkeypatch
+):
+    """A query batch over BROADCAST_MAX_QUERIES goes to grid: auto
+    loads at most BROADCAST_MAX_QUERIES + 1 rows to count it, and
+    nothing more of the batch is collected."""
+    import importlib
+
+    # operators/__init__ re-exports the search FUNCTION under the
+    # module's name, so fetch the module itself.
+    search_mod = importlib.import_module(
+        "cs6300_vectordbs_spark.operators.search"
+    )
+
+    monkeypatch.setattr(search_mod, "BROADCAST_MAX_QUERIES", 3)
+    cls, loads = type(emb), []
+    for name in ("collect", "toArrow", "toPandas"):
+        def spy(self, *a, _orig=getattr(cls, name), **kw):
+            out = _orig(self, *a, **kw)
+            loads.append(len(out))  # rows, for a list or a table
+            return out
+
+        monkeypatch.setattr(cls, name, spy)
+    q = _queries(emb, 10)
+    out = search_mod.search(emb, q, 5, dim=64, corpus_count=500)
+    assert loads == [4]
+    plan = plan_of(out)
+    assert "FlatMapGroupsInPandas" in plan and "MapInArrow" not in plan
+    monkeypatch.undo()
+    want = search_mod.search(emb, q, 5, dim=64, strategy="exact")
+    assert sorted(map(repr, out.collect())) == sorted(
+        map(repr, want.collect())
+    )
 
 
 def test_search_filter_applies_to_every_strategy(spark, emb):

@@ -370,3 +370,132 @@ def test_band_count_validation(spark):
     with pytest.raises(ValueError, match="must divide"):
         _band_keys_from_vec("v", 4, 16, 20, 42)
     _band_keys_from_vec("v", 4, 16, 4, 42)  # divides: fine
+
+
+_CSCHEMA = "vec_id bigint, embedding array<float>"
+_QSCHEMA = "query_id bigint, query_vec array<float>"
+
+
+def _vec(emb, vid):
+    return emb.filter(F.col("vec_id") == vid).first().embedding
+
+
+def _search_case(spark, emb, case):
+    """(corpus, queries, dim) for one hostile parity case: a clean
+    200-row slice of the sf0.001 corpus and 4 of its rows as queries,
+    plus the rows the case is about."""
+    base = emb.filter(F.col("vec_id") < 200).select("vec_id", "embedding")
+    qs = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    v3, v6 = _vec(emb, 3), _vec(emb, 6)
+    nan, c_rows, q_rows = float("nan"), [], []
+    if case == "null_element":
+        c_rows = [(900, v3[:10] + [None] + v3[11:]), (901, None)]
+        q_rows = [(910, v6[:5] + [None] + v6[6:]), (911, v6)]
+    elif case == "nan_element":
+        c_rows = [(900, v3[:7] + [nan] + v3[8:])]
+        q_rows = [(910, v6[:5] + [nan] + v6[6:])]
+    elif case == "zero_norm":
+        # A 5-row corpus, so every sim is in the top 5, and
+        # [1, -0.0, ...] . [-0.0, 1, ...] sums -0.0 products only.
+        base = base.filter(F.col("vec_id").isin(3, 6))
+        c_rows = [(900, [0.0] * 64), (901, [-0.0] * 64),
+                  (902, [-0.0] + [1.0] * 63)]
+        q_rows = [(910, [0.0] * 64), (911, [1.0] + [-0.0] * 63)]
+    elif case == "longer":
+        c_rows = [(900, v3 + [0.5] * 8), (901, v6 + [None, 1e30])]
+        q_rows = [(910, v3 + [None]), (911, v6 + [2.0] * 3)]
+    elif case == "query_ids":
+        q_rows = [(2, v6), (None, v3), (None, v6), (911, v3), (911, v3)]
+    elif case in ("id_ties", "null_corpus_ids"):
+        # 49 ties on query 3's top sim over 8 spread partitions: kernel
+        # blocks hold more than k of them, so the id order decides the cut.
+        c_rows = [(900 + i, v3) for i in range(48)] + [(901, v3)]
+        if case == "null_corpus_ids":
+            c_rows += [(None, v3)] * 3 + [(None, v6), (None, None)]
+            q_rows = [(None, v3)]
+    elif case == "empty":
+        qs = qs.limit(0)
+    # One input partition: spread() then deals the rows round-robin,
+    # so the case's rows share a kernel block with clean rows and the
+    # local top-k cut decides whether they survive.
+    corpus = base.unionByName(
+        spark.createDataFrame(c_rows, _CSCHEMA)
+    ).coalesce(1)
+    queries = qs.unionByName(spark.createDataFrame(q_rows, _QSCHEMA))
+    if case == "string_ids":
+        corpus = corpus.withColumn("vec_id", F.concat(F.lit("v"), "vec_id"))
+        queries = queries.withColumn(
+            "query_id", F.concat(F.lit("v"), "query_id")
+        )
+    dim = 64
+    if case.startswith("hof"):
+        import numpy as np
+
+        dim = 300
+        rng = np.random.default_rng(7)
+        vecs = [[float(x) for x in rng.standard_normal(dim)] for _ in range(7)]
+        vecs[5] = [1.0] + [-0.0] * (dim - 1)
+        vecs[6] = [-0.0] + [1.0] * (dim - 1)
+        # 5 corpus rows: every scorable sim is in the top 5, so the
+        # HOF fold's 0.0 for the all -0.0 products of 5 . 6 shows
+        # (unless a longer query pads them with a 0.0 product).
+        corpus = spark.createDataFrame(
+            [(i, vecs[i]) for i in (0, 1, 2, 5, 6)], _CSCHEMA
+        )
+        q_rows = [(0, vecs[0]), (5, vecs[5]), (6, vecs[6])]
+        if case == "hof_other_length":
+            q_rows += [(1, vecs[1][: dim - 6]), (2, vecs[2] + [0.25]),
+                       (3, [0.0] * (dim - 1)), (4, [])]
+        queries = spark.createDataFrame(q_rows, _QSCHEMA)
+    return corpus, queries, dim
+
+
+@pytest.mark.parametrize("exclude_self", [False, True])
+@pytest.mark.parametrize(
+    "case",
+    ["clean", "null_element", "nan_element", "zero_norm", "longer",
+     "query_ids", "null_corpus_ids", "id_ties", "string_ids", "empty",
+     "hof_zero_sign", "hof_other_length"],
+)
+def test_search_strategies_return_identical_rows(spark, emb, case, exclude_self):
+    """auto (the blocked kernel), a forced 'blocked' and the JVM plan
+    ('exact') return repr-identical rows — sims and dists bit for bit —
+    on the NULL, NaN, zero-norm, length, id and empty cases."""
+    from cs6300_vectordbs_spark.operators.search import search
+
+    corpus, queries, dim = _search_case(spark, emb, case)
+    got = {
+        strat: sorted(
+            repr((r.query_id, r.rank, r.vec_id, r.sim, r.dist))
+            for r in search(
+                corpus, queries, 5, dim=dim, strategy=strat,
+                exclude_self=exclude_self,
+            ).collect()
+        )
+        for strat in ("auto", "blocked", "exact")
+    }
+    assert got["auto"] == got["exact"]
+    assert got["blocked"] == got["exact"]
+    assert (len(got["exact"]) == 0) == (case == "empty")
+
+
+def test_search_short_vector_raises_on_both_paths(spark, emb):
+    """A vector shorter than dim (<= UNROLL_MAX_DIM) raises the ANSI
+    INVALID_ARRAY_INDEX on the JVM plan and on the blocked kernel, as
+    a query and as a corpus row."""
+    from cs6300_vectordbs_spark.operators.search import search
+
+    corpus = emb.select("vec_id", "embedding")
+    short_q = spark.createDataFrame([(900, _vec(emb, 3)[:40])], _QSCHEMA)
+    short_c = corpus.unionByName(
+        spark.createDataFrame([(900, _vec(emb, 3)[:40])], _CSCHEMA)
+    )
+    q = emb.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    for c, qs in ((corpus, short_q), (short_c, q)):
+        for strat in ("blocked", "exact"):
+            with pytest.raises(Exception, match="INVALID_ARRAY_INDEX"):
+                search(c, qs, 5, dim=64, strategy=strat).collect()

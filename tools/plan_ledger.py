@@ -16,7 +16,8 @@ Fingerprint per query (counts in the formatted physical plan):
     smj              SortMergeJoin
     bhj              BroadcastHashJoin
     cartesian        CartesianProduct (always 0)
-    arrow_python     ArrowEvalPython + MapInPandas + FlatMapGroupsInPandas
+    arrow_python     ArrowEvalPython + MapInPandas + MapInArrow +
+                     FlatMapGroupsInPandas
     row_python       BatchEvalPython (always 0)
     wsc              WholeStageCodegen spans (more = wider codegen)
     scans            Scan parquet/orc/csv/text/json
@@ -29,8 +30,10 @@ Usage:
 more shuffles, more Python stages, a cartesian/single-partition/row-
 Python appearing, or a broadcast join lost to sort-merge. Improvements
 and new/removed queries are reported informationally (re-run `record`
-to accept them). WholeStageCodegen/scan counts are informational only:
-they move with Spark-version codegen splits, not with our plan intent.
+to accept them), and so is every move of an ungated counter
+(broadcasts, bhj, wsc, scans): those never fail the check — WSC and
+scan counts move with Spark-version codegen splits, not with our plan
+intent — but a plan change shows up in the output.
 """
 
 from __future__ import annotations
@@ -75,6 +78,7 @@ def fingerprint(plan: str) -> dict[str, int]:
         "arrow_python": (
             plan.count("ArrowEvalPython")
             + plan.count("MapInPandas")
+            + plan.count("MapInArrow")
             + plan.count("FlatMapGroupsInPandas")
         ),
         "row_python": plan.count("BatchEvalPython"),
@@ -135,6 +139,12 @@ def main(mode: str) -> int:
             infos.append(
                 f"improved {name}: "
                 + ", ".join(f"{k} {b[k]}->{l[k]}" for k in sorted(better))
+            )
+        moved = {k for k in l if k not in GATED and l[k] != b.get(k)}
+        if moved:
+            infos.append(
+                f"moved {name}: "
+                + ", ".join(f"{k} {b.get(k)}->{l[k]}" for k in sorted(moved))
             )
     for line in infos:
         print(f"  [info] {line}")
