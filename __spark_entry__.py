@@ -98,7 +98,6 @@ from cs6300_vectordbs_spark.operators.timeseries import (
 from cs6300_vectordbs_spark.operators.text_search import bm25_topk, rrf_fuse
 from cs6300_vectordbs_spark.operators.similarity import (
     label_centroids,
-    pairwise_similarity_blocked,
     similarity_topk_blocked,
     similarity_topk,
 )
@@ -1357,7 +1356,7 @@ def q_knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # All-vectors-as-queries: the grid plan (inside _knn_edges) shards
     # BOTH sides (the query side is corpus-sized here, so broadcasting/
     # collecting it is exactly the thing that dies at 100x) — per-cell
-    # local top-k, one exact window over O(c_blocks * k) candidates
+    # local top-k, one exact window over O(GRID_BLOCKS * k) candidates
     # per query.
     edges = _knn_edges(spark, sf_dir)
     deg = (
@@ -1396,23 +1395,10 @@ def q_knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _knn_edges(spark: SparkSession, sf_dir: str):
     """Symmetric exact-top-3 kNN edges (a < b) — shared by the graph
     analytics and PageRank queries."""
-    from cs6300_vectordbs_spark.operators.similarity import (
-        similarity_topk_grid,
-    )
+    from cs6300_vectordbs_spark.operators.similarity import knn_edges
 
     emb = _t(spark, sf_dir, "embeddings")
-    allq = emb.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    knn = similarity_topk_grid(emb, allq, 3, exclude_self=True)
-    return (
-        knn.select(
-            F.least("query_id", "vec_id").alias("a"),
-            F.greatest("query_id", "vec_id").alias("b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    return knn_edges(emb, 3).localCheckpoint(eager=True)
 
 
 def q_pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8732,25 +8718,10 @@ def _nsw_edges(spark: SparkSession, sf_dir: str):
     """Symmetric exact 12-NN edges + deterministic hash shortcut
     links (a < b) — the NSW graph for beam search; a persisted
     artifact at scale (build = the grid top-k plan, one-off)."""
-    from cs6300_vectordbs_spark.operators.ann import nsw_shortcut_edges
-    from cs6300_vectordbs_spark.operators.similarity import (
-        similarity_topk_grid,
-    )
+    from cs6300_vectordbs_spark.operators.ann import nsw_edges
 
     emb = _t(spark, sf_dir, "embeddings")
-    allq = emb.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    knn = similarity_topk_grid(emb, allq, _NSW_K, exclude_self=True)
-    short = knn.select(
-        F.least("query_id", "vec_id").alias("a"),
-        F.greatest("query_id", "vec_id").alias("b"),
-    )
-    return (
-        short.unionByName(nsw_shortcut_edges(emb))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    return nsw_edges(emb, _NSW_K).localCheckpoint(eager=True)
 
 
 def q_nsw_beam_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

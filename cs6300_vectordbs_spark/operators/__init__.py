@@ -2,9 +2,10 @@ from .similarity import (  # noqa: F401
     similarity_topk,
     similarity_topk_blocked,
     pairwise_similarity,
-    pairwise_similarity_blocked,
 )
-from .search import choose_strategy, search  # noqa: F401
+# Not the search function: it would shadow its submodule,
+# cs6300_vectordbs_spark.operators.search.
+from .search import choose_strategy  # noqa: F401
 from .metrics_ir import (  # noqa: F401
     latency_percentiles,
     latency_summary,

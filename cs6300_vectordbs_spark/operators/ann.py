@@ -2652,3 +2652,23 @@ def nsw_shortcut_edges(
         )
         .distinct()
     )
+
+
+def nsw_edges(
+    corpus: DataFrame,
+    k: int,
+    *,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    salt: int = 17,
+) -> DataFrame:
+    """The NSW graph as an (a, b) edge list with a < b: the symmetric
+    exact k-NN edges (:func:`.similarity.knn_edges`) plus the
+    deterministic hash shortcuts of :func:`nsw_shortcut_edges`."""
+    from .similarity import _knn_pairs
+
+    return (
+        _knn_pairs(corpus, k, id_col, vec_col)
+        .unionByName(nsw_shortcut_edges(corpus, id_col=id_col, salt=salt))
+        .distinct()
+    )

@@ -99,45 +99,21 @@ def hnsw_layer_edges(
     k_upper: int = 6,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    blocks: int | None = None,
 ) -> DataFrame:
     """Symmetric exact k-NN edge list (a < b) over the nodes promoted
-    to ``layer`` (lvl >= layer — HNSW layers nest). The grid kernel
-    keeps the build distributed; layer L holds ~N/branch^L nodes so
-    this is cheap next to the layer-0 build it sits on top of.
+    to ``layer`` (lvl >= layer — HNSW layers nest): the grid build of
+    :func:`.similarity.knn_edges` on that subset, so it stays
+    distributed. Layer L holds ~N/branch^L nodes, so this is cheap
+    next to the layer-0 build it sits on top of."""
+    from .similarity import knn_edges
 
-    ``blocks`` sizes the grid kernel's q/c blocking. Default scales
-    DOWN with the layer (8 >> layer, floor 2): each layer is ~1/branch
-    of the one below, and a grid sized for the full corpus would give
-    a top layer of a few dozen rows 64 near-empty cells of pure task
-    overhead. At real scale pass the block count that matches THAT
-    layer's row count — the result is block-count-independent (the
-    grid is a physical strategy; same bit-exact top-k)."""
-    from .similarity import similarity_topk_grid
-
-    if blocks is None:
-        blocks = max(2, 8 >> layer)
     sub = corpus.join(
         levels.filter(F.col("lvl") >= layer).select(
             F.col("node").alias(id_col)
         ),
         id_col,
     )
-    allq = sub.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-    )
-    knn = similarity_topk_grid(
-        sub, allq, k_upper, exclude_self=True,
-        corpus_id=id_col, corpus_vec=vec_col,
-        q_blocks=blocks, c_blocks=blocks,
-    )
-    return (
-        knn.select(
-            F.least("query_id", F.col(id_col)).alias("a"),
-            F.greatest("query_id", F.col(id_col)).alias("b"),
-        )
-        .distinct()
-    )
+    return knn_edges(sub, k_upper, id_col=id_col, vec_col=vec_col)
 
 
 def hnsw_search(

@@ -8,9 +8,9 @@ item 2): the caller says WHAT (corpus, queries, k, optional filter);
 the facade picks HOW from corpus/query row counts:
 
   grid     the query batch is over BROADCAST_MAX_QUERIES rows:
-           both-sides-sharded kernel (similarity_topk_grid), exact, no
-           driver-held query matrix — the only correct choice when the
-           QUERY side is itself corpus-sized (kNN-graph builds).
+           similarity_topk_grid, exact, no driver-held query matrix —
+           both sides hash into grid cells, each scored in a grouped
+           applyInArrow by the blocked kernel's own Arrow code.
   blocked  |corpus| x |queries| <= BLOCKED_MAX_PAIRS: the vectorized
            Arrow kernel (similarity_topk_blocked) over the broadcast
            query batch — per-block local top-k, one merge window.
@@ -163,7 +163,7 @@ def search(
             c, q_in, k1, dim=dim, query_table=qt, **common
         )
     elif strategy == "grid":
-        out = similarity_topk_grid(c, q_in, k1, **common)
+        out = similarity_topk_grid(c, q_in, k1, dim=dim, **common)
     elif strategy == "ivf":
         out = ivf_topk(
             c, q_in, k1, dim=dim, n_cells=n_cells, n_probe=n_probe, **common
@@ -349,28 +349,10 @@ def auto_index_search(
             F.col(query_vec).alias("query_vec"),
         )
         if edges is None:
-            from .ann import nsw_shortcut_edges
-            from .similarity import similarity_topk_grid
+            from .ann import nsw_edges
 
-            allq = corpus.select(
-                F.col(corpus_id).alias("query_id"),
-                F.col(corpus_vec).alias("query_vec"),
-            )
-            knn = similarity_topk_grid(
-                corpus, allq, nsw_k, exclude_self=True,
-                corpus_id=corpus_id, corpus_vec=corpus_vec,
-            )
-            edges = (
-                knn.select(
-                    F.least("query_id", F.col(corpus_id)).alias("a"),
-                    F.greatest("query_id", F.col(corpus_id)).alias("b"),
-                )
-                .unionByName(
-                    nsw_shortcut_edges(corpus, id_col=corpus_id).select(
-                        "a", "b"
-                    )
-                )
-                .distinct()
+            edges = nsw_edges(
+                corpus, nsw_k, id_col=corpus_id, vec_col=corpus_vec
             )
         out = nsw_beam_search(
             corpus, q_nsw, k, edges=edges, beam_width=beam_width,

@@ -19,11 +19,21 @@ Spark-first design (exact path):
   - ties break by id ascending so results are deterministic and match
     the SQL oracle.
 
-similarity_topk_blocked returns the same rows, bit for bit, from one
-vectorized Arrow pass over the corpus; operators/search.search
-dispatches to it, and this JVM plan is its parity reference (the JVM
-scoring method is too large for HotSpot's compilers and runs
-interpreted — see operators/search.py).
+Every vectorized kernel shares one scoring core, bit for bit the JVM
+plan's: :func:`_query_side` prepares the side rows are scored against,
+:func:`_scored_blocks` scores blocks of rows against it, and
+:func:`_topk_batches` keeps each block's local top-k for one merge
+window (REPOSE's shape: a partition-local top-k, then a global merge).
+Three plan shapes run that core:
+  - similarity_topk_blocked broadcasts the query batch and streams the
+    corpus through mapInArrow; operators/search.search dispatches to it.
+  - similarity_topk_grid and pairwise_similarity_grid hash both sides
+    into a grid and score each cell in a grouped applyInArrow, with no
+    driver collect: the path for corpus-sized query sides (knn_edges,
+    the kNN-graph builds) and for all-pairs sweeps.
+  - similarity_topk and pairwise_similarity, the JVM plans, are the
+    parity references (the JVM scoring method is too large for
+    HotSpot's compilers and runs interpreted — see operators/search.py).
 
 The approximate/ANN path (LSH-bucketed) lives in operators/ann.py; this
 exact operator is its correctness oracle, same relationship as
@@ -133,21 +143,15 @@ def _dense(arr, dim, fixed: bool):
 
 
 def _topk_order(col, lids):
-    """Candidate index order for the kernel-local top-k:
-    (sim DESC, id ASC) with NaN treated as greatest (Spark's in-plan
-    convention) — np.lexsort on the raw negated column would sort NaN
-    LAST and silently drop such rows from the local candidate set.
+    """Index order (score DESC, id ASC) with NaN treated as greatest
+    (Spark's in-plan convention) — np.lexsort on the raw negated column
+    would sort NaN LAST and silently drop such rows from a top-k.
 
-    Honest scope note: a NaN sim (only possible from non-finite vector
-    ELEMENTS — zero norms map to 0.0) cannot survive the grid kernel's
-    pandas boundary as NaN: pandas uses NaN as its null sentinel, so the
-    emitted row reaches the final JVM window as sim NULL and ranks
-    LAST there, while the all-JVM path ranks the same row FIRST
-    (NaN-is-greatest). The bit-identity contract between the kernel
-    and JVM paths therefore covers finite vector elements; non-finite
-    elements are out of contract (quarantine-at-ingest), and this
-    ordering merely guarantees the row is carried, never silently
-    dropped."""
+    Scope: only rerank.mmr_rerank uses it now, and that kernel crosses
+    the pandas boundary, where NaN is pandas' NULL sentinel: a NaN
+    score (only possible from non-finite vector ELEMENTS) is carried,
+    never silently dropped, but reaches Spark as NULL. The Arrow top-k
+    kernels order candidates in :func:`_local_topk` instead."""
     import numpy as np
 
     key = np.where(np.isnan(col), np.inf, col)
@@ -284,144 +288,126 @@ def similarity_topk(
     )
 
 
-def similarity_topk_blocked(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    *,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    filter_expr: Column | str | None = None,
-    exclude_self: bool = False,
-    dim: int | None = None,
-    block_rows: int = 4096,
-    query_table=None,
-) -> DataFrame:
-    """Exact top-k cosine search on one vectorized Arrow kernel: the
-    same rows as :func:`similarity_topk` (the JVM plan), bit for bit.
+# Physical sizing of the Arrow kernels (results never depend on it):
+# a scored block holds at most _BLOCK_ROWS rows and about _BLOCK_SIMS
+# sims; each side of a grid kernel hashes into GRID_BLOCKS buckets.
+_BLOCK_ROWS = 4096
+_BLOCK_SIMS = 1 << 22
+GRID_BLOCKS = 8
+
+
+def _fixed(dim) -> bool:
+    """Whether ``dim`` selects the unrolled chain's rule (the first
+    ``dim`` elements) rather than the HOF forms' (whole arrays)."""
+    from ..functions.vector import UNROLL_MAX_DIM
+
+    return dim is not None and dim <= UNROLL_MAX_DIM
+
+
+def _query_side(ids, vecs, dim, exclude_self):
+    """The side every row is scored against — the broadcast query
+    batch, or a grid cell's queries: ``(ids, QT, norms, lengths, codes,
+    id codes)`` of its scorable rows. A NULL vector or used element
+    makes a row unscorable, so it is dropped; under ``exclude_self`` so
+    is a NULL id, which SQL ``!=`` pairs with nothing, and ``codes``
+    maps each id to the dense code the scorer compares."""
+    import numpy as np
+    import pyarrow as pa
+
+    Q, qlen, qnull = _dense(vecs, dim, _fixed(dim))
+    if isinstance(ids, pa.ChunkedArray):
+        ids = ids.combine_chunks()
+    scorable = ~qnull
+    if exclude_self:
+        scorable &= ids.is_valid().to_numpy(zero_copy_only=False)
+    keep = np.flatnonzero(scorable)
+    ids = ids.take(keep)
+    # At least one column: all-empty arrays fold to 0.0 like the HOFs.
+    Q = np.pad(Q[keep], ((0, 0), (0, max(0, 1 - Q.shape[1]))))
+    QT = np.ascontiguousarray(Q.T)
+    codes: dict = {}
+    qcode = np.array(
+        [codes.setdefault(v, len(codes)) for v in ids.to_pylist()]
+        if exclude_self else [], dtype=np.int64,
+    )
+    return ids, QT, _col_norms(QT), qlen[keep], codes, qcode
+
+
+def _scored_blocks(ids, vecs, side, dim, exclude_self):
+    """Score rows ``(ids, vecs)`` against a :func:`_query_side`, one
+    block of rows at a time: yields ``(block ids, sims, ok)`` where
+    ``sims`` is the (rows, side) cosine matrix and ``ok`` marks the
+    pairs the JVM plan scores (its ``sim IS NOT NULL`` rows, less the
+    ``exclude_self`` pairs).
 
     Contract, rule for rule the JVM plan's:
       - ``dim <= UNROLL_MAX_DIM`` scores the first ``dim`` elements,
         and a shorter vector raises ``INVALID_ARRAY_INDEX``; with
         ``dim=None`` or above the cap whole arrays are scored (the HOF
-        forms: the dot folds from 0.0, and a query whose length
-        differs from the corpus vector's gets a NULL sim, or 0.0 where
-        the norm product is 0).
-      - A NULL vector or a NULL used element makes the pair unscorable:
-        no row (the JVM's ``sim IS NOT NULL`` filter). A zero norm
-        product scores 0.0. A NaN sim is carried as NaN (mapInArrow
-        keeps it apart from NULL) and ranks first; -0.0 ties 0.0.
-      - Ids of any type pass through from the input Arrow arrays. NULL
-        corpus ids stay NULL and sort first among ties; NULL and
-        duplicate query ids pool in the final window exactly as
-        ``partitionBy("query_id")`` pools them; ``exclude_self`` drops
-        a pair when the ids are equal or either is NULL (SQL ``!=``).
-
-    Plan: the query batch is loaded once through Arrow (or taken from
-    ``query_table``, a ``(query_id, query_vec)`` table the caller has
-    already loaded — :func:`.search.search` passes its bounded load)
-    and broadcast; corpus partitions stream once through mapInArrow
-    (no corpus shuffle), each block of rows scored by the shared
-    sequential-fold kernel (_sims_matrix). Each block emits every
-    query row's LOCAL top-k under the full (NaN first, sim desc,
-    corpus id asc NULLS FIRST) order — any global top-k row is in its
-    block's local top-k — and one row_number window ranks the
-    O(blocks x queries x k) candidates. Blocks hold at most
-    ``block_rows`` corpus rows and about 4M sims.
-    """
+        forms: the dot folds from 0.0, and vectors of different
+        lengths get a NULL sim, or 0.0 where the norm product is 0).
+      - A NULL vector or a NULL used element makes the pair unscorable.
+        A zero norm product scores 0.0. A NaN sim stays NaN.
+      - ``exclude_self`` drops a pair when the ids are equal or either
+        is NULL (SQL ``!=``)."""
     import numpy as np
     import pyarrow as pa
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    from ..functions.vector import UNROLL_MAX_DIM
-    from .util import spread
+    fixed = _fixed(dim)
+    _, QT, qn, qlen, codes, qcode = side
+    nq = QT.shape[1]
+    if isinstance(ids, pa.ChunkedArray):
+        ids, vecs = ids.combine_chunks(), vecs.combine_chunks()
+    rows = max(1, min(_BLOCK_ROWS, _BLOCK_SIMS // max(nq, 1)))
+    for s in range(0, len(ids) if nq else 0, rows):
+        cids = ids.slice(s, rows)
+        C, clen, cnull = _dense(vecs.slice(s, rows), dim, fixed)
+        # One width for both sides (zero padding is exact).
+        width = max(C.shape[1], QT.shape[0])
+        if C.shape[1] < width:
+            C = np.pad(C, ((0, 0), (0, width - C.shape[1])))
+        QTw = QT if QT.shape[0] == width else np.pad(
+            QT, ((0, width - QT.shape[0]), (0, 0))
+        )
+        sims = _sims_matrix(C, QTw, qn, fold0=not fixed)
+        ok = np.repeat(~cnull[:, None], nq, axis=1)
+        if not fixed:
+            # HOF zip_with over arrays of different lengths:
+            # NULL dot, so NULL sim unless the norm product is 0.
+            other = clen[:, None] != qlen[None, :]
+            if other.any():
+                cn = _col_norms(C.T)
+                ok &= ~(other & (cn[:, None] * qn[None, :] != 0.0))
+        if exclude_self:
+            ccode = np.array(
+                [codes.get(v, -1) for v in cids.to_pylist()], dtype=np.int64
+            )
+            ok &= ccode[:, None] != qcode[None, :]
+            ok &= cids.is_valid().to_numpy(zero_copy_only=False)[:, None]
+        yield cids, sims, ok
 
-    fixed = dim is not None and dim <= UNROLL_MAX_DIM
-    q = queries.select(
-        F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qvec")
-    )
-    qt = q.toArrow() if query_table is None else query_table
-    Q, qlen, qnull = _dense(qt.column(1), dim, fixed)
-    qids = qt.column(0).combine_chunks()
-    # An unscorable query emits no row; under exclude_self neither does
-    # a NULL id, which SQL != pairs with nothing.
-    scorable = ~qnull
-    if exclude_self:
-        scorable &= qids.is_valid().to_numpy(zero_copy_only=False)
-    keep = np.flatnonzero(scorable)
-    qids = qids.take(keep)
-    # At least one column: all-empty arrays fold to 0.0 like the HOFs.
-    Q = np.pad(Q[keep], ((0, 0), (0, max(0, 1 - Q.shape[1]))))
-    QT, qlen = np.ascontiguousarray(Q.T), qlen[keep]
-    qn = _col_norms(QT)
-    # exclude_self compares dense codes of the query ids.
-    codes: dict = {}
-    qcode = np.array(
-        [codes.setdefault(v, len(codes)) for v in qids.to_pylist()]
-        if exclude_self else [], dtype=np.int64,
-    )
-    bc = corpus.sparkSession.sparkContext.broadcast(
-        (qids, QT, qn, qlen, codes, qcode)
-    )
 
-    c = corpus
-    if filter_expr is not None:
-        c = c.filter(filter_expr)
-    # spread BEFORE the projection: if corpus_vec is a computed column
-    # (e.g. an embedding expression), projecting first would evaluate it
-    # on the unspread input's few partitions. A NULL vector never scores.
-    src = spread(c).select(
-        F.col(corpus_id).alias("id"), F.col(corpus_vec).alias("v")
-    ).filter(F.col("v").isNotNull())
-    if exclude_self:
-        src = src.filter(F.col("id").isNotNull())
-    schema = StructType([
-        StructField("query_id", q.schema["__qid"].dataType),
-        StructField("cid", src.schema["id"].dataType),
-        StructField("sim", DoubleType()),
-    ])
+def _topk_batches(ids, vecs, side, k, dim, exclude_self):
+    """Each side row's LOCAL top-k over each scored block of ``(ids,
+    vecs)``, as (query_id, cid, sim) batches: any global top-k row is
+    in its block's local top-k, so one window over these candidates
+    (:func:`_rank_candidates`) is exact."""
+    import pyarrow as pa
 
-    def kernel(batches):
-        qids_b, QT_b, qn_b, qlen_b, codes_b, qcode_b = bc.value
-        nq = QT_b.shape[1]
-        rows = max(1, min(block_rows, (1 << 22) // max(nq, 1)))
-        for batch in batches:
-            for s in range(0, batch.num_rows if nq else 0, rows):
-                blk = batch.slice(s, rows)
-                cids = blk.column(0)
-                C, clen, cnull = _dense(blk.column(1), dim, fixed)
-                # One width for both sides (zero padding is exact).
-                width = max(C.shape[1], QT_b.shape[0])
-                if C.shape[1] < width:
-                    C = np.pad(C, ((0, 0), (0, width - C.shape[1])))
-                QTw = QT_b if QT_b.shape[0] == width else np.pad(
-                    QT_b, ((0, width - QT_b.shape[0]), (0, 0))
-                )
-                sims = _sims_matrix(C, QTw, qn_b, fold0=not fixed)
-                ok = np.repeat(~cnull[:, None], nq, axis=1)
-                if not fixed:
-                    # HOF zip_with over arrays of different lengths:
-                    # NULL dot, so NULL sim unless the norm product is 0.
-                    other = clen[:, None] != qlen_b[None, :]
-                    if other.any():
-                        cn = _col_norms(C.T)
-                        ok &= ~(other & (cn[:, None] * qn_b[None, :] != 0.0))
-                if exclude_self:
-                    ccode = np.array(
-                        [codes_b.get(v, -1) for v in cids.to_pylist()],
-                        dtype=np.int64,
-                    )
-                    ok &= ccode[:, None] != qcode_b[None, :]
-                r, col = _local_topk(sims, ok, cids, k)
-                yield pa.RecordBatch.from_arrays(
-                    [qids_b.take(col), cids.take(r),
-                     pa.array(sims[r, col], type=pa.float64())],
-                    names=["query_id", "cid", "sim"],
-                )
+    qids = side[0]
+    for cids, sims, ok in _scored_blocks(ids, vecs, side, dim, exclude_self):
+        r, col = _local_topk(sims, ok, cids, k)
+        yield pa.RecordBatch.from_arrays(
+            [qids.take(col), cids.take(r),
+             pa.array(sims[r, col], type=pa.float64())],
+            names=["query_id", "cid", "sim"],
+        )
 
-    cand = src.mapInArrow(kernel, schema)
+
+def _rank_candidates(cand: DataFrame, k: int, corpus_id: str) -> DataFrame:
+    """The one merge window over (query_id, cid, sim) candidates: NULL
+    and duplicate query ids pool exactly as the JVM plan's
+    ``partitionBy("query_id")`` pools them."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("cid").asc()
     )
@@ -436,6 +422,75 @@ def similarity_topk_blocked(
             (F.lit(1.0) - F.col("sim")).alias("dist"),
         )
     )
+
+
+def similarity_topk_blocked(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    *,
+    corpus_id: str = "vec_id",
+    corpus_vec: str = "embedding",
+    query_id: str = "query_id",
+    query_vec: str = "query_vec",
+    filter_expr: Column | str | None = None,
+    exclude_self: bool = False,
+    dim: int | None = None,
+    query_table=None,
+) -> DataFrame:
+    """Exact top-k cosine search on one vectorized Arrow kernel: the
+    same rows as :func:`similarity_topk` (the JVM plan), bit for bit.
+
+    Scoring follows :func:`_scored_blocks`' contract. A NaN sim is
+    carried as NaN (Arrow keeps it apart from NULL) and ranks first;
+    -0.0 ties 0.0. Ids of any type pass through from the input Arrow
+    arrays: NULL corpus ids stay NULL and sort first among ties, and
+    NULL and duplicate query ids pool in the final window.
+
+    Plan: the query batch is loaded once through Arrow (or taken from
+    ``query_table``, a ``(query_id, query_vec)`` table the caller has
+    already loaded — :func:`.search.search` passes its bounded load)
+    and broadcast; corpus partitions stream once through mapInArrow
+    (no corpus shuffle), each block of rows emitting every query's
+    LOCAL top-k under the full (NaN first, sim desc, corpus id asc
+    NULLS FIRST) order, and one row_number window ranks the
+    O(blocks x queries x k) candidates.
+    """
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    from .util import spread
+
+    q = queries.select(
+        F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qvec")
+    )
+    qt = q.toArrow() if query_table is None else query_table
+    bc = corpus.sparkSession.sparkContext.broadcast(
+        _query_side(qt.column(0), qt.column(1), dim, exclude_self)
+    )
+
+    c = corpus
+    if filter_expr is not None:
+        c = c.filter(filter_expr)
+    # spread BEFORE the projection: if corpus_vec is a computed column
+    # (e.g. an embedding expression), projecting first would evaluate it
+    # on the unspread input's few partitions. A NULL vector never scores.
+    src = spread(c).select(
+        F.col(corpus_id).alias("id"), F.col(corpus_vec).alias("v")
+    ).filter(F.col("v").isNotNull())
+    schema = StructType([
+        StructField("query_id", q.schema["__qid"].dataType),
+        StructField("cid", src.schema["id"].dataType),
+        StructField("sim", DoubleType()),
+    ])
+
+    def kernel(batches):
+        side = bc.value
+        for batch in batches:
+            yield from _topk_batches(
+                batch.column(0), batch.column(1), side, k, dim, exclude_self
+            )
+
+    return _rank_candidates(src.mapInArrow(kernel, schema), k, corpus_id)
 
 
 def _local_topk(sims, ok, cids, k):
@@ -512,118 +567,68 @@ def pairwise_similarity(
     return out
 
 
-def pairwise_similarity_blocked(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    left_id: str = "vec_id",
-    right_id: str = "vec_id",
-    vec_col: str = "embedding",
-    min_sim: float | None = None,
-    upper_triangle: bool = True,
-    block_rows: int = 1024,
-) -> DataFrame:
-    """All-pairs cosine via an Arrow-batched vectorized kernel — the
-    measured-fast form of :func:`pairwise_similarity` (12x at sf0.1).
-
-    Same semantics and BIT-IDENTICAL results: the kernel accumulates the
-    dot product and norms dimension-by-dimension (vectorized across
-    pairs, sequential across dims), which reproduces the exact IEEE-754
-    addition order of the unrolled JVM expression and of DuckDB's
-    list_dot_product — so this path keeps the full value-hash oracle.
-
-    Plan shape: the right side is collected and broadcast (the same
-    constraint the exact JVM path's BroadcastNestedLoopJoin has — the
-    build side must fit in memory); left partitions stream through
-    mapInPandas. For inputs where neither side fits, use the LSH or IVF
-    paths — all-pairs is the wrong algorithm there regardless of kernel.
-    """
-    import numpy as np
-
-    from .util import spread
+def _grid(left, lid, lvec, right, rid, rvec, cell, schema) -> DataFrame:
+    """Run ``cell(lids, lvecs, rids, rvecs)``, a generator of Arrow
+    batches, on every (left block, right block) cell of a hash grid.
+    Each side hashes its ids into GRID_BLOCKS buckets and is replicated
+    across the other side's buckets (one narrow explode), so every
+    left/right pair meets in exactly one cell and neither side is ever
+    collected to the driver. A NULL vector never scores, so it stays
+    out of the grid."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     spark = left.sparkSession
-    # NULL vectors are quarantined on both sides: the JVM path's null
-    # sim fails every threshold anyway, and the numpy kernel would
-    # otherwise TypeError on the object array.
-    rrows = [
-        r
-        for r in right.select(
-            F.col(right_id).alias("id"), F.col(vec_col).alias("v")
-        ).collect()
-        if r.v is not None
-    ]
-    rids = np.array([r.id for r in rrows], dtype=np.int64)
-    R = np.array([r.v for r in rrows], dtype=np.float64)
-    bc = spark.sparkContext.broadcast((rids, R))
 
-    want_min = min_sim
-    want_upper = upper_triangle
-
-    def gen(batches):
-        import pandas as pd
-
-        rids_b, R_b = bc.value
-        RT = np.ascontiguousarray(R_b.T)  # (d, m)
-        rnorm = _col_norms(RT)
-        for pdf in batches:
-            n = len(pdf)
-            for s in range(0, n, block_rows):
-                blk = pdf.iloc[s : s + block_rows]
-                lids = blk["id"].to_numpy(dtype=np.int64)
-                L = np.array(list(blk["v"]), dtype=np.float64)  # (b, d)
-                sims = _sims_matrix(L, RT, rnorm)
-                mask = (
-                    sims >= want_min
-                    if want_min is not None
-                    else np.ones(sims.shape, dtype=bool)
-                )
-                if want_upper:
-                    mask &= lids[:, None] < rids_b[None, :]
-                ia, ib = np.nonzero(mask)
-                yield pd.DataFrame(
-                    {"id_a": lids[ia], "id_b": rids_b[ib], "sim": sims[ia, ib]}
-                )
-
-    src = spread(left).select(
-        F.col(left_id).alias("id"), F.col(vec_col).alias("v")
-    ).filter(F.col("v").isNotNull())
-    return src.mapInPandas(gen, schema="id_a bigint, id_b bigint, sim double")
-
-
-def _grid_replicate(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    *,
-    own_blocks: int,
-    other_blocks: int,
-    own_name: str,
-    other_name: str,
-    side: str,
-) -> DataFrame:
-    """Tag each row with its own hash-block and replicate it across all
-    blocks of the OTHER side: row i of side L lands in every grid cell
-    (block(i), *). One narrow explode — no driver round-trip. NULL
-    vectors are quarantined here (both grid kernels would TypeError on
-    a numpy object array; the JVM twin's null sims never pass a
-    threshold or enter a ranking either)."""
-    spark = df.sparkSession
-    other = F.broadcast(
-        spark.range(other_blocks).select(F.col("id").cast("int").alias(other_name))
-    )
-    return (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(own_blocks))
-            .cast("int")
-            .alias(own_name),
+    def tag(df, id_col, vec_col, side, own, other):
+        blocks = spark.range(GRID_BLOCKS).select(
+            F.col("id").cast("int").alias(other)
         )
-        .filter(F.col("v").isNotNull())
-        .join(other, how="cross")
-        .withColumn("side", F.lit(side))
+        return df.select(
+            F.pmod(F.xxhash64(F.col(id_col)), F.lit(GRID_BLOCKS))
+            .cast("int").alias(own),
+            F.col(id_col).alias(f"{side}id"),
+            F.col(vec_col).alias(f"{side}v"),
+        ).filter(F.col(f"{side}v").isNotNull()).join(
+            F.broadcast(blocks), how="cross"
+        )
+
+    # Each side keeps its own id and vector types; the union fills the
+    # other side's columns with NULLs.
+    both = tag(left, lid, lvec, "l", "lb", "rb").unionByName(
+        tag(right, rid, rvec, "r", "rb", "lb"), allowMissingColumns=True
     )
+    empty = to_arrow_schema(schema).empty_table()
+
+    def run(t):
+        isl = t.column("lv").is_valid()
+        lt, rt = t.filter(isl), t.filter(pc.invert(isl))
+        batches = list(cell(lt.column("lid"), lt.column("lv"),
+                            rt.column("rid"), rt.column("rv")))
+        return pa.Table.from_batches(batches) if batches else empty
+
+    return both.groupBy("lb", "rb").applyInArrow(run, schema)
+
+
+def _id_less(a, b):
+    """The (len(a), len(b)) mask of SQL ``a < b`` over two Arrow id
+    arrays of any orderable type; a NULL id compares false."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    both = pa.concat_arrays([a, b.cast(a.type)])
+    rank = pc.rank(both, tiebreaker="dense").to_numpy()
+    valid = both.is_valid().to_numpy(zero_copy_only=False)
+    n = len(a)
+    return (
+        (rank[:n, None] < rank[None, n:])
+        & valid[:n, None] & valid[None, n:]
+    )
+
+
+def _col_type(df: DataFrame, col: str):
+    return df.select(F.col(col)).schema[0].dataType
 
 
 def pairwise_similarity_grid(
@@ -635,77 +640,50 @@ def pairwise_similarity_grid(
     vec_col: str = "embedding",
     min_sim: float | None = None,
     upper_triangle: bool = True,
-    blocks: int = 8,
 ) -> DataFrame:
-    """All-pairs cosine via a GRID-BLOCKED shuffle — fully distributed:
-    neither side is ever collected to the driver (the scale limit of
-    :func:`pairwise_similarity_blocked`, whose build side must fit in
-    one process). Both sides hash into ``blocks`` buckets; every
-    (left-bucket, right-bucket) grid cell is one shuffle group scored by
-    the same Arrow/numpy kernel with the same dimension-sequential
-    accumulation order — so results stay BIT-IDENTICAL to the broadcast
-    kernel, the JVM expression, and the DuckDB oracle.
+    """All-pairs cosine on a hash grid — fully distributed, neither
+    side is ever collected to the driver. Every (left, right) cell of
+    the grid scores its left rows against its right rows with the
+    shared Arrow kernel (:func:`_scored_blocks`, whole arrays), so the
+    rows equal :func:`pairwise_similarity`'s without ``dim`` (the JVM
+    plan) bit for bit, except that an unscorable pair (a NULL vector
+    or element, or vectors of different lengths) emits no row instead
+    of a NULL sim, which no ``min_sim`` threshold passes anyway. A NaN
+    sim passes every threshold, as in Spark's ordering; ids of any
+    type pass through.
 
-    Communication: each side is replicated ``blocks`` times (O(n * B)
-    shuffle for B^2-way parallelism) — the classic distributed
-    all-pairs trade; pick B ~ sqrt(cluster cores), keep per-cell data
-    (2 * n/B rows) inside executor memory. At 100 TB all-pairs is the
-    wrong algorithm regardless — use the LSH/IVF candidate paths — but
-    when an exact O(n^2) sweep is the job, this shape is the one that
-    runs: per-cell work is embarrassingly parallel and the driver holds
-    nothing.
+    Communication: each side is replicated GRID_BLOCKS times (O(n * B)
+    shuffle for B^2-way parallelism), the classic distributed all-pairs
+    trade. At 100 TB all-pairs is the wrong algorithm regardless — use
+    the LSH/IVF candidate paths — but when an exact O(n^2) sweep is
+    the job, this shape runs with the driver holding nothing.
     """
     import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    lrep = _grid_replicate(
-        left, left_id, vec_col,
-        own_blocks=blocks, other_blocks=blocks,
-        own_name="lb", other_name="rb", side="L",
-    )
-    rrep = _grid_replicate(
-        right, right_id, vec_col,
-        own_blocks=blocks, other_blocks=blocks,
-        own_name="rb", other_name="lb", side="R",
-    )
-    both = lrep.select("lb", "rb", "side", "id", "v").unionByName(
-        rrep.select("lb", "rb", "side", "id", "v")
-    )
+    schema = StructType([
+        StructField("id_a", _col_type(left, left_id)),
+        StructField("id_b", _col_type(right, right_id)),
+        StructField("sim", DoubleType()),
+    ])
 
-    want_min = min_sim
-    want_upper = upper_triangle
-
-    def cell(pdf):
-        import pandas as pd
-
-        lmask = pdf["side"].to_numpy() == "L"
-        lpdf, rpdf = pdf[lmask], pdf[~lmask]
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return pd.DataFrame(
-                {"id_a": np.array([], dtype=np.int64),
-                 "id_b": np.array([], dtype=np.int64),
-                 "sim": np.array([], dtype=np.float64)}
+    def cell(lids, lvecs, rids, rvecs):
+        side = _query_side(rids, rvecs, None, False)
+        for ids, sims, ok in _scored_blocks(lids, lvecs, side, None, False):
+            if min_sim is not None:
+                ok &= (sims >= min_sim) | np.isnan(sims)
+            if upper_triangle:
+                ok &= _id_less(ids, side[0])
+            ia, ib = np.nonzero(ok)
+            yield pa.RecordBatch.from_arrays(
+                [ids.take(ia), side[0].take(ib),
+                 pa.array(sims[ia, ib], type=pa.float64())],
+                names=["id_a", "id_b", "sim"],
             )
-        rids = rpdf["id"].to_numpy(dtype=np.int64)
-        R = np.array(list(rpdf["v"]), dtype=np.float64)
-        RT = np.ascontiguousarray(R.T)
-        rnorm = _col_norms(RT)
-        lids = lpdf["id"].to_numpy(dtype=np.int64)
-        L = np.array(list(lpdf["v"]), dtype=np.float64)
-        sims = _sims_matrix(L, RT, rnorm)
-        mask = (
-            sims >= want_min
-            if want_min is not None
-            else np.ones(sims.shape, dtype=bool)
-        )
-        if want_upper:
-            mask &= lids[:, None] < rids[None, :]
-        ia, ib = np.nonzero(mask)
-        return pd.DataFrame(
-            {"id_a": lids[ia], "id_b": rids[ib], "sim": sims[ia, ib]}
-        )
 
-    return both.groupBy("lb", "rb").applyInPandas(
-        cell, schema="id_a bigint, id_b bigint, sim double"
+    return _grid(
+        left, left_id, vec_col, right, right_id, vec_col, cell, schema
     )
 
 
@@ -719,92 +697,67 @@ def similarity_topk_grid(
     query_id: str = "query_id",
     query_vec: str = "query_vec",
     exclude_self: bool = False,
-    q_blocks: int = 8,
-    c_blocks: int = 8,
+    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine when the QUERY side is itself corpus-sized
     (kNN-graph builds: every vector is a query) — fully distributed,
-    no driver collect. Queries hash into ``q_blocks`` buckets, corpus
-    into ``c_blocks``; each grid cell emits its LOCAL top-k per query
-    under the full (sim desc, id asc) order (any global winner is in
-    its cell's local top-k), then one exact window ranks the
-    O(c_blocks * k) candidates per query. Kernel arithmetic matches
-    :func:`similarity_topk_blocked` accumulation-for-accumulation, so
-    the result is bit-identical to the broadcast and JVM paths.
+    no driver collect. The same rows as :func:`similarity_topk_blocked`
+    and the JVM plan, bit for bit: each cell of the hash grid emits
+    its queries' local top-k over its corpus rows with the blocked
+    kernel's code (:func:`_topk_batches`), and the same window ranks
+    the O(GRID_BLOCKS * k) candidates per query.
 
-    Shuffle: corpus replicated q_blocks times, queries c_blocks times —
-    O(n_c * B_q + n_q * B_c) instead of a driver-held query matrix; the
-    candidate shuffle into the final window is O(n_q * B_c * k).
+    Shuffle: corpus and queries are each replicated GRID_BLOCKS times,
+    O((n_c + n_q) * B) instead of a driver-held query matrix; the
+    candidate shuffle into the final window is O(n_q * B * k).
     """
-    import numpy as np
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    qrep = _grid_replicate(
-        queries, query_id, query_vec,
-        own_blocks=q_blocks, other_blocks=c_blocks,
-        own_name="qb", other_name="cb", side="Q",
+    schema = StructType([
+        StructField("query_id", _col_type(queries, query_id)),
+        StructField("cid", _col_type(corpus, corpus_id)),
+        StructField("sim", DoubleType()),
+    ])
+
+    def cell(cids, cvecs, qids, qvecs):
+        side = _query_side(qids, qvecs, dim, exclude_self)
+        return _topk_batches(cids, cvecs, side, k, dim, exclude_self)
+
+    cand = _grid(
+        corpus, corpus_id, corpus_vec, queries, query_id, query_vec,
+        cell, schema,
     )
-    crep = _grid_replicate(
-        corpus, corpus_id, corpus_vec,
-        own_blocks=c_blocks, other_blocks=q_blocks,
-        own_name="cb", other_name="qb", side="C",
+    return _rank_candidates(cand, k, corpus_id)
+
+
+def _knn_pairs(corpus: DataFrame, k: int, id_col: str, vec_col: str):
+    """Each vector's exact k nearest other vectors as (a, b), a < b,
+    before deduplication."""
+    allq = corpus.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
     )
-    both = qrep.select("qb", "cb", "side", "id", "v").unionByName(
-        crep.select("qb", "cb", "side", "id", "v")
+    knn = similarity_topk_grid(
+        corpus, allq, k, exclude_self=True,
+        corpus_id=id_col, corpus_vec=vec_col,
+    )
+    return knn.select(
+        F.least("query_id", F.col(id_col)).alias("a"),
+        F.greatest("query_id", F.col(id_col)).alias("b"),
     )
 
-    def cell(pdf):
-        import pandas as pd
 
-        qmask = pdf["side"].to_numpy() == "Q"
-        qpdf, cpdf = pdf[qmask], pdf[~qmask]
-        if len(qpdf) == 0 or len(cpdf) == 0:
-            return pd.DataFrame(
-                {"query_id": np.array([], dtype=np.int64),
-                 "cid": np.array([], dtype=np.int64),
-                 "sim": np.array([], dtype=np.float64)}
-            )
-        qids = qpdf["id"].to_numpy(dtype=np.int64)
-        Q = np.array(list(qpdf["v"]), dtype=np.float64)
-        QT = np.ascontiguousarray(Q.T)  # (d, nq)
-        qnorm = _col_norms(QT)
-        lids = cpdf["id"].to_numpy(dtype=np.int64)
-        L = np.array(list(cpdf["v"]), dtype=np.float64)
-        sims = _sims_matrix(L, QT, qnorm)
-        out_q, out_id, out_sim = [], [], []
-        for qi in range(len(qids)):
-            col = sims[:, qi]
-            order = _topk_order(col, lids)
-            if exclude_self:
-                order = order[lids[order] != qids[qi]]
-            top = order[:k]
-            out_q.append(np.full(len(top), qids[qi], dtype=np.int64))
-            out_id.append(lids[top])
-            out_sim.append(col[top])
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "cid": np.concatenate(out_id),
-                "sim": np.concatenate(out_sim),
-            }
-        )
-
-    cand = both.groupBy("qb", "cb").applyInPandas(
-        cell, schema="query_id bigint, cid bigint, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("cid").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "rank",
-            F.col("cid").alias(corpus_id),
-            F.col("sim"),
-            (F.lit(1.0) - F.col("sim")).alias("dist"),
-        )
-    )
+def knn_edges(
+    corpus: DataFrame,
+    k: int,
+    *,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The symmetric exact k-NN graph of ``corpus`` as an (a, b) edge
+    list with a < b: every vector's k nearest other vectors (cosine,
+    ties by id), on the grid kernel, so the build never collects the
+    corpus-sized query side to the driver."""
+    return _knn_pairs(corpus, k, id_col, vec_col).distinct()
 
 
 def centroid_outliers(

@@ -45,32 +45,15 @@ def build_nsw_graph(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Exact symmetric k-NN edges (grid kernel — both sides blocked,
-    never a driver matrix) + deterministic hash shortcuts, written as
-    one parquet edge list with a < b."""
-    from ..operators.ann import nsw_shortcut_edges
-    from ..operators.similarity import similarity_topk_grid
+    """Write the NSW graph (:func:`..operators.ann.nsw_edges`: exact
+    symmetric k-NN edges on the grid kernel, never a driver matrix,
+    plus deterministic hash shortcuts) as one parquet edge list with
+    a < b."""
+    from ..operators.ann import nsw_edges
 
-    allq = corpus.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-    )
-    knn = similarity_topk_grid(
-        corpus, allq, k, exclude_self=True,
-        corpus_id=id_col, corpus_vec=vec_col,
-    )
-    edges = (
-        knn.select(
-            F.least("query_id", F.col(id_col)).alias("a"),
-            F.greatest("query_id", F.col(id_col)).alias("b"),
-        )
-        .unionByName(
-            nsw_shortcut_edges(corpus, id_col=id_col, salt=salt).select(
-                "a", "b"
-            )
-        )
-        .distinct()
-    )
-    edges.write.mode("overwrite").parquet(f"{path}/edges")
+    nsw_edges(
+        corpus, k, id_col=id_col, vec_col=vec_col, salt=salt
+    ).write.mode("overwrite").parquet(f"{path}/edges")
 
 
 def ensure_nsw_graph(

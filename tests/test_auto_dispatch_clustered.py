@@ -15,11 +15,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
-import importlib
-
-search_mod = importlib.import_module(
-    "cs6300_vectordbs_spark.operators.search"
-)
+import cs6300_vectordbs_spark.operators.search as search_mod
 from cs6300_vectordbs_spark.operators.search import (
     auto_index_search,
     choose_index_strategy,
@@ -77,29 +73,9 @@ def test_probe_runs_exactly_once_and_nsw_branch_serves(
     assert len(rows) == 50  # 10 queries x top-5
 
     # the dispatched result IS the pure NSW result (branch proof)
-    from cs6300_vectordbs_spark.operators.ann import (
-        nsw_beam_search,
-        nsw_shortcut_edges,
-    )
-    from cs6300_vectordbs_spark.operators.similarity import (
-        similarity_topk_grid,
-    )
+    from cs6300_vectordbs_spark.operators.ann import nsw_beam_search, nsw_edges
 
-    allq = clustered.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    knn = similarity_topk_grid(
-        clustered, allq, entry._NSW_K, exclude_self=True
-    )
-    edges = (
-        knn.select(
-            F.least("query_id", "vec_id").alias("a"),
-            F.greatest("query_id", "vec_id").alias("b"),
-        )
-        .unionByName(nsw_shortcut_edges(clustered).select("a", "b"))
-        .distinct()
-    )
+    edges = nsw_edges(clustered, entry._NSW_K)
     want = nsw_beam_search(
         clustered, queries, 5, edges=edges, beam_width=entry._NSW_BEAM,
         n_iters=entry._NSW_HOPS, n_entries=entry._NSW_ENTRIES,

@@ -13,17 +13,14 @@ from pyspark.sql import functions as F
 
 from cs6300_vectordbs_spark.operators.ann import (
     nsw_beam_search,
-    nsw_shortcut_edges,
+    nsw_edges,
 )
 from cs6300_vectordbs_spark.operators.hnsw import (
     hnsw_layer_edges,
     hnsw_levels,
     hnsw_search,
 )
-from cs6300_vectordbs_spark.operators.similarity import (
-    similarity_topk_blocked,
-    similarity_topk_grid,
-)
+from cs6300_vectordbs_spark.operators.similarity import similarity_topk_blocked
 
 
 def _corpus(spark, n=80, dim=8, seed=3):
@@ -37,20 +34,7 @@ def _corpus(spark, n=80, dim=8, seed=3):
 
 
 def _edges0(corpus, k=6):
-    allq = corpus.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    knn = similarity_topk_grid(corpus, allq, k, exclude_self=True)
-    return (
-        knn.select(
-            F.least("query_id", "vec_id").alias("a"),
-            F.greatest("query_id", "vec_id").alias("b"),
-        )
-        .unionByName(nsw_shortcut_edges(corpus).select("a", "b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    return nsw_edges(corpus, k).localCheckpoint(eager=True)
 
 
 def _search_args(spark, corpus, branch=2, max_level=3):

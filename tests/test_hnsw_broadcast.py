@@ -15,7 +15,6 @@ from cs6300_vectordbs_spark.operators.hnsw import (
     hnsw_levels,
     hnsw_search,
 )
-from cs6300_vectordbs_spark.operators.similarity import similarity_topk_grid
 
 
 def _corpus(spark, n=90, dim=8, seed=5, nulls=0, zeros=0):
@@ -34,22 +33,9 @@ def _corpus(spark, n=90, dim=8, seed=5, nulls=0, zeros=0):
 
 
 def _edges0(corpus, k=6):
-    from cs6300_vectordbs_spark.operators.ann import nsw_shortcut_edges
+    from cs6300_vectordbs_spark.operators.ann import nsw_edges
 
-    allq = corpus.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    knn = similarity_topk_grid(corpus, allq, k, exclude_self=True)
-    return (
-        knn.select(
-            F.least("query_id", "vec_id").alias("a"),
-            F.greatest("query_id", "vec_id").alias("b"),
-        )
-        .unionByName(nsw_shortcut_edges(corpus).select("a", "b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    return nsw_edges(corpus, k).localCheckpoint(eager=True)
 
 
 def _graph(corpus, branch=2, max_level=2):

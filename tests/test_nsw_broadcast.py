@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from cs6300_vectordbs_spark.operators.ann import (
     nsw_beam_search,
-    nsw_shortcut_edges,
+    nsw_edges,
 )
 
 
@@ -40,24 +40,7 @@ def _corpus(spark, n=60, dim=8, seed=7, nulls=0, zeros=0, short=0):
 
 
 def _edges_for(spark, corpus, k=4, dim=8):
-    from cs6300_vectordbs_spark.operators.similarity import (
-        similarity_topk_grid,
-    )
-
-    allq = corpus.filter(F.col("embedding").isNotNull()).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    knn = similarity_topk_grid(corpus, allq, k, exclude_self=True)
-    return (
-        knn.select(
-            F.least("query_id", "vec_id").alias("a"),
-            F.greatest("query_id", "vec_id").alias("b"),
-        )
-        .unionByName(nsw_shortcut_edges(corpus).select("a", "b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    return nsw_edges(corpus, k).localCheckpoint(eager=True)
 
 
 def _queries_from(corpus, n=10):

@@ -10,10 +10,9 @@ from pyspark.sql import functions as F
 
 from cs6300_vectordbs_spark.operators.ann import (
     nsw_beam_search,
+    nsw_edges,
     nsw_filtered_search,
-    nsw_shortcut_edges,
 )
-from cs6300_vectordbs_spark.operators.similarity import similarity_topk_grid
 
 
 def _corpus(spark, n=100, dim=8, seed=11):
@@ -28,20 +27,7 @@ def _corpus(spark, n=100, dim=8, seed=11):
 
 
 def _edges(corpus, k=8):
-    allq = corpus.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    knn = similarity_topk_grid(corpus, allq, k, exclude_self=True)
-    return (
-        knn.select(
-            F.least("query_id", "vec_id").alias("a"),
-            F.greatest("query_id", "vec_id").alias("b"),
-        )
-        .unionByName(nsw_shortcut_edges(corpus).select("a", "b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    return nsw_edges(corpus, k).localCheckpoint(eager=True)
 
 
 def _q(corpus, n=5):

@@ -10,6 +10,7 @@ test scale and only explode on a cluster.
 """
 
 import contextlib
+import inspect
 import io
 
 import pytest
@@ -195,27 +196,22 @@ def test_pair_queries_are_fully_distributed(spark):
     """cosine_pairs / embedding_neardup / knn_graph_stats must never
     collect a corpus-sized side to the driver: building the plan runs
     ZERO Spark jobs (an eager collect would run one), and the physical
-    plan is the grid applyInPandas shape with no broadcast nested-loop
+    plan is the grid applyInArrow shape with no broadcast nested-loop
     join carrying the corpus."""
     import __spark_entry__ as m
     from tests.conftest import SF_DIR
 
     tracker = spark.sparkContext.statusTracker()
 
-    from cs6300_vectordbs_spark.operators.similarity import (
-        similarity_topk_grid,
-    )
+    from cs6300_vectordbs_spark.operators.similarity import knn_edges
 
     def knn_core(spark, sf_dir):
         # q_knn_graph_stats localCheckpoints its edge table (so the
         # registered query's visible plan is post-checkpoint); the grid
         # shape is asserted on the operator it builds the edges with.
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        allq = emb.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("query_vec"),
+        return knn_edges(
+            spark.read.parquet(f"{sf_dir}/embeddings.parquet"), 3
         )
-        return similarity_topk_grid(emb, allq, 3, exclude_self=True)
 
     for builder in (m.q_cosine_pairs, m.q_embedding_neardup, knn_core):
         group = f"plan-build-{builder.__name__}"
@@ -235,7 +231,7 @@ def test_pair_queries_are_fully_distributed(spark):
                     f"{builder.__name__} collected to the driver during "
                     f"plan construction: stage {sinfo.name!r}"
                 )
-        assert "FlatMapGroupsInPandas" in plan
+        assert "FlatMapGroupsInArrow" in plan
         # The only nested-loop join allowed is the block-replication
         # cross join, whose broadcast side is the B-row Range of block
         # ids — never a parquet-backed (corpus) relation.
@@ -573,19 +569,15 @@ def test_search_dispatch_thresholds():
     pair count fits the BLAS budget, ivf beyond it, grid whenever the
     query side outgrows a broadcast; no size picks the JVM plan —
     these THRESHOLD SEMANTICS are the contract."""
-    import importlib
-
-    # operators/__init__ re-exports the search FUNCTION under the
-    # module's name, so fetch the module itself.
-    search_mod = importlib.import_module(
-        "cs6300_vectordbs_spark.operators.search"
-    )
+    import cs6300_vectordbs_spark.operators.search as search_mod
     from cs6300_vectordbs_spark.operators.search import (
         BLOCKED_MAX_PAIRS,
         BROADCAST_MAX_QUERIES,
         choose_strategy,
     )
 
+    # The package does not shadow its submodule with the function.
+    assert inspect.ismodule(search_mod)
     assert not hasattr(search_mod, "EXACT_MAX_PAIRS")
     assert choose_strategy(0, 0) == "blocked"
     assert choose_strategy(4_000, 10) == "blocked"
@@ -643,13 +635,7 @@ def test_search_over_broadcast_bound_takes_grid_after_bounded_load(
     """A query batch over BROADCAST_MAX_QUERIES goes to grid: auto
     loads at most BROADCAST_MAX_QUERIES + 1 rows to count it, and
     nothing more of the batch is collected."""
-    import importlib
-
-    # operators/__init__ re-exports the search FUNCTION under the
-    # module's name, so fetch the module itself.
-    search_mod = importlib.import_module(
-        "cs6300_vectordbs_spark.operators.search"
-    )
+    import cs6300_vectordbs_spark.operators.search as search_mod
 
     monkeypatch.setattr(search_mod, "BROADCAST_MAX_QUERIES", 3)
     cls, loads = type(emb), []
@@ -664,7 +650,7 @@ def test_search_over_broadcast_bound_takes_grid_after_bounded_load(
     out = search_mod.search(emb, q, 5, dim=64, corpus_count=500)
     assert loads == [4]
     plan = plan_of(out)
-    assert "FlatMapGroupsInPandas" in plan and "MapInArrow" not in plan
+    assert "FlatMapGroupsInArrow" in plan and "MapInArrow" not in plan
     monkeypatch.undo()
     want = search_mod.search(emb, q, 5, dim=64, strategy="exact")
     assert sorted(map(repr, out.collect())) == sorted(
@@ -812,15 +798,12 @@ def test_structure_probe_separates_iid_from_clustered(spark):
     from cs6300_vectordbs_spark.operators.ann import (
         ivf_topk,
         nsw_beam_search,
-        nsw_shortcut_edges,
+        nsw_edges,
     )
     from cs6300_vectordbs_spark.operators.search import (
         auto_index_search,
         choose_index_strategy,
         pair_structure_stat,
-    )
-    from cs6300_vectordbs_spark.operators.similarity import (
-        similarity_topk_grid,
     )
     from pyspark.sql import functions as F
 
@@ -868,20 +851,8 @@ def test_structure_probe_separates_iid_from_clustered(spark):
     assert got == want
 
     # clustered -> NSW branch, row-identical to beam search over the
-    # same graph recipe (exact 12-NN + hash shortcuts)
-    allq = clu_df.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    knn = similarity_topk_grid(clu_df, allq, 12, exclude_self=True)
-    edges = (
-        knn.select(
-            F.least("query_id", F.col("vec_id")).alias("a"),
-            F.greatest("query_id", F.col("vec_id")).alias("b"),
-        )
-        .unionByName(nsw_shortcut_edges(clu_df).select("a", "b"))
-        .distinct()
-    )
+    # same graph (exact 12-NN + hash shortcuts)
+    edges = nsw_edges(clu_df, 12)
     got = sorted(
         (r.query_id, r.rank, r.vec_id, r.sim)
         for r in auto_index_search(clu_df, q(clu_df), 5, **common).collect()

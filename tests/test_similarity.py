@@ -131,19 +131,24 @@ def test_brp_lsh_sims_match_exact_cosine(spark, emb):
         assert r.sim == pytest.approx(dot / (na * nb), abs=1e-6)
 
 
-def test_blocked_pairwise_bit_identical_to_jvm(emb):
+def test_grid_pairwise_bit_identical_to_jvm(emb):
     from cs6300_vectordbs_spark.operators.similarity import (
-        pairwise_similarity_blocked,
+        pairwise_similarity_grid,
     )
 
     dim = len(emb.first().embedding)
-    jvm = pairwise_similarity(emb, emb, min_sim=0.3, dim=dim).collect()
-    blk = pairwise_similarity_blocked(emb, emb, min_sim=0.3).collect()
-    a = sorted((r.id_a, r.id_b, r.sim) for r in jvm)
-    b = sorted((r.id_a, r.id_b, r.sim) for r in blk)
+    grid = sorted(
+        repr(tuple(r))
+        for r in pairwise_similarity_grid(emb, emb, min_sim=0.3).collect()
+    )
     # not approx-equal: the kernel reproduces the JVM expression's exact
-    # IEEE addition order, so the doubles must be IDENTICAL
-    assert a == b
+    # IEEE addition order, so the doubles must be IDENTICAL, to the HOF
+    # form and (above the threshold, where no -0.0 dot shows) to the
+    # unrolled one
+    for d in (None, dim):
+        jvm = pairwise_similarity(emb, emb, min_sim=0.3, dim=d).collect()
+        assert sorted(repr(tuple(r)) for r in jvm) == grid
+    assert grid
 
 
 def test_l2_norm(spark):
@@ -313,10 +318,10 @@ def test_kernel_paths_quarantine_null_and_zero_vectors(spark):
     """r08 kernel review: NULL vectors used to TypeError the numpy
     kernels (object array) while the JVM path filtered them; zero-NORM
     vectors score 0.0 on every path (they are scorable by contract).
-    All three top-k paths and both pairwise kernels must now agree on
-    a corpus containing NULL, zero, and negative-sim vectors."""
+    All three top-k paths, and the pairwise grid against the JVM
+    pairwise plan, must agree on a corpus containing NULL, zero,
+    negative-sim and NULL-element vectors, string ids and a NULL id."""
     from cs6300_vectordbs_spark.operators.similarity import (
-        pairwise_similarity_blocked,
         pairwise_similarity_grid,
         similarity_topk,
         similarity_topk_blocked,
@@ -347,7 +352,7 @@ def test_kernel_paths_quarantine_null_and_zero_vectors(spark):
     assert {r[0] for r in a} == {10}
     assert any(r[2] == 5 and r[3] == 0.0 for r in a)
     p1 = sorted(
-        map(tuple, pairwise_similarity_blocked(corpus, corpus, min_sim=-1.0).collect())
+        map(tuple, pairwise_similarity(corpus, corpus, min_sim=-1.0).collect())
     )
     p2 = sorted(
         map(tuple, pairwise_similarity_grid(corpus, corpus, min_sim=-1.0).collect())
@@ -355,6 +360,21 @@ def test_kernel_paths_quarantine_null_and_zero_vectors(spark):
     assert p1 == p2
     # 4 scorable vectors -> C(4,2) upper-triangle pairs
     assert len(p1) == 6
+    # String ids, a NULL id (no upper-triangle pair, and with
+    # upper_triangle=False every pair) and a NULL element (no pair).
+    hostile = spark.createDataFrame(
+        [("a", [1.0, 0.0]), ("b", [0.9, 0.1]), ("c", [None, 1.0]),
+         ("d", [0.0, 0.0]), (None, [-0.5, 0.2])],
+        "vec_id string, embedding array<double>",
+    )
+    for upper in (True, False):
+        p1, p2 = (
+            sorted(map(repr, f(
+                hostile, hostile, min_sim=-1.0, upper_triangle=upper
+            ).collect()))
+            for f in (pairwise_similarity, pairwise_similarity_grid)
+        )
+        assert p1 == p2 and len(p1) == (3 if upper else 16)
 
 
 def test_band_count_validation(spark):
@@ -460,9 +480,9 @@ def _search_case(spark, emb, case):
      "hof_zero_sign", "hof_other_length"],
 )
 def test_search_strategies_return_identical_rows(spark, emb, case, exclude_self):
-    """auto (the blocked kernel), a forced 'blocked' and the JVM plan
-    ('exact') return repr-identical rows — sims and dists bit for bit —
-    on the NULL, NaN, zero-norm, length, id and empty cases."""
+    """auto (the blocked kernel), a forced 'blocked', the grid and the
+    JVM plan ('exact') return repr-identical rows — sims and dists bit
+    for bit — on the NULL, NaN, zero-norm, length, id and empty cases."""
     from cs6300_vectordbs_spark.operators.search import search
 
     corpus, queries, dim = _search_case(spark, emb, case)
@@ -474,11 +494,40 @@ def test_search_strategies_return_identical_rows(spark, emb, case, exclude_self)
                 exclude_self=exclude_self,
             ).collect()
         )
-        for strat in ("auto", "blocked", "exact")
+        for strat in ("auto", "blocked", "grid", "exact")
     }
     assert got["auto"] == got["exact"]
     assert got["blocked"] == got["exact"]
+    assert got["grid"] == got["exact"]
     assert (len(got["exact"]) == 0) == (case == "empty")
+
+
+def test_knn_and_nsw_edges_match_the_recipe(spark, emb):
+    """knn_edges and nsw_edges return the edges of the hand-built
+    recipe they replace: each vector's exact top-k with exclude_self
+    (here from the JVM plan), folded to (least, greatest), plus the
+    hash shortcuts for NSW, deduplicated — on a corpus of 49 tied
+    vectors and a duplicate id."""
+    from cs6300_vectordbs_spark.operators.ann import (
+        nsw_edges,
+        nsw_shortcut_edges,
+    )
+    from cs6300_vectordbs_spark.operators.similarity import knn_edges
+
+    corpus, _, _ = _search_case(spark, emb, "id_ties")
+    allq = corpus.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    knn = similarity_topk(corpus, allq, 6, exclude_self=True, dim=64).select(
+        F.least("query_id", "vec_id").alias("a"),
+        F.greatest("query_id", "vec_id").alias("b"),
+    )
+    nsw = knn.unionByName(nsw_shortcut_edges(corpus))
+    want = [sorted(map(tuple, e.distinct().collect())) for e in (knn, nsw)]
+    got = [sorted(map(tuple, e.collect()))
+           for e in (knn_edges(corpus, 6), nsw_edges(corpus, 6))]
+    assert got == want
+    assert len(want[1]) > len(want[0]) > 0
 
 
 def test_search_short_vector_raises_on_both_paths(spark, emb):

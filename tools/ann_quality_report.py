@@ -169,29 +169,10 @@ def recall_vs_exact(spark, corpus, dim, label, lines):
     # NSW graph beam search — the HNSW-shaped serving path (the
     # reference's actual index structure, single-layer): 12-NN graph
     # + deterministic hash shortcut long links, hub entries.
-    from cs6300_vectordbs_spark.operators.ann import (
-        nsw_beam_search,
-        nsw_shortcut_edges,
-    )
-    from cs6300_vectordbs_spark.operators.similarity import (
-        similarity_topk_grid,
-    )
+    from cs6300_vectordbs_spark.operators.ann import nsw_beam_search, nsw_edges
 
     t0 = time.time()
-    allq = corpus.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    knn = similarity_topk_grid(corpus, allq, 12, exclude_self=True)
-    edges = (
-        knn.select(
-            F.least("query_id", "vec_id").alias("a"),
-            F.greatest("query_id", "vec_id").alias("b"),
-        )
-        .unionByName(nsw_shortcut_edges(corpus))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = nsw_edges(corpus, 12).localCheckpoint(eager=True)
     lines.append(
         f"| NSW graph | build: 12-NN + hash shortcuts | — | {time.time() - t0:.1f} |"
     )

@@ -150,20 +150,21 @@ map-side onto ~25 groups.""",
 Load-bearing properties: FULLY DISTRIBUTED all-pairs — no driver
 collect anywhere (r02 used a collect+broadcast kernel; the broadcast
 nested-loop joins below carry only the B-row Range of block ids).
-Both sides hash into B buckets and replicate across the other side's
-B buckets (O(nB) shuffle for B^2-way parallelism); every grid cell is
-one FlatMapGroupsInPandas group scored by the Arrow kernel with the
-JVM/DuckDB-identical accumulation order. Per-cell memory is 2n/B rows
-— pick B ~ sqrt(cores), nothing corpus-sized sits in one process.""",
+Both sides hash into B = GRID_BLOCKS buckets (a constant of
+operators/similarity.py) and replicate across the other side's B
+buckets (O(nB) shuffle for B^2-way parallelism); every grid cell is
+one FlatMapGroupsInArrow group scored by the shared Arrow kernel with
+the JVM/DuckDB-identical accumulation order. Per-cell memory is 2n/B
+rows — nothing corpus-sized sits in one process.""",
     "knn_graph_stats": """\
 Load-bearing properties: the kNN edge build is the grid top-k plan —
 the query side here is the WHOLE corpus, so the r02 collect-the-
 queries approach was the scale killer; now both sides shard into grid
 cells, each cell emits its local top-k per query (any global winner is
-in some cell's local top-k), and one exact window ranks O(c_blocks*k)
-candidates per query. Edges materialize once (checkpoint) before the
-degree union and the a<b<c triangle equi-join chain — three joins on
-an O(N*k) edge table, never on vectors.""",
+in some cell's local top-k), and one exact window ranks
+O(GRID_BLOCKS*k) candidates per query. Edges materialize once
+(checkpoint) before the degree union and the a<b<c triangle equi-join
+chain — three joins on an O(N*k) edge table, never on vectors.""",
     "quality_deciles": """\
 Load-bearing properties: NO Exchange SinglePartition anywhere — the
 global-window ntile form serializes the entire corpus through one

@@ -17,7 +17,7 @@ Fingerprint per query (counts in the formatted physical plan):
     bhj              BroadcastHashJoin
     cartesian        CartesianProduct (always 0)
     arrow_python     ArrowEvalPython + MapInPandas + MapInArrow +
-                     FlatMapGroupsInPandas
+                     FlatMapGroupsInPandas + FlatMapGroupsInArrow
     row_python       BatchEvalPython (always 0)
     wsc              WholeStageCodegen spans (more = wider codegen)
     scans            Scan parquet/orc/csv/text/json
@@ -80,6 +80,7 @@ def fingerprint(plan: str) -> dict[str, int]:
             + plan.count("MapInPandas")
             + plan.count("MapInArrow")
             + plan.count("FlatMapGroupsInPandas")
+            + plan.count("FlatMapGroupsInArrow")
         ),
         "row_python": plan.count("BatchEvalPython"),
         "wsc": len(re.findall(r"WholeStageCodegen \(\d+\)", plan)),
