@@ -120,6 +120,16 @@ def _query_batch(emb: DataFrame, n: int = N_QUERIES) -> DataFrame:
     )
 
 
+def _topk_rows(out: DataFrame) -> DataFrame:
+    """The (query_id, rank, vec_id, sim) result rows of a top-k search."""
+    return out.select(
+        F.col("query_id").cast("bigint"),
+        F.col("rank").cast("bigint"),
+        F.col("vec_id").cast("bigint"),
+        "sim",
+    )
+
+
 # ---------------------------------------------------------------------------
 # V2/V3/T1 — similarity search
 # ---------------------------------------------------------------------------
@@ -1268,18 +1278,7 @@ def q_embedding_neardup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle_neardup_ivf() -> str:
     return f"""
-WITH cent AS (
-  SELECT vec_id AS cid, embedding AS cvec FROM embeddings
-  ORDER BY vec_id LIMIT {_IVF_CELLS}
-),
-assign AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY {_sql_cos('e.embedding', 'c.cvec')} DESC, c.cid ASC) AS rn
-  FROM embeddings e CROSS JOIN cent c
-),
-cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rn = 1)
+WITH {_sql_ivf_cells()}
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        {_sql_cos('a.embedding', 'b.embedding')} AS sim
 FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
@@ -5420,13 +5419,14 @@ def _sql_cos(a: str, b: str) -> str:
     )
 
 
-# IVF is deterministic end-to-end (sampled centroids, id tie-breaks), so
-# unlike the LSH paths it gets a full value-hash oracle. ``src`` lets
-# the auto-dispatch twins re-run the identical plan over a derived
-# corpus CTE (the clustered fixture) instead of the embeddings table.
-def _oracle_ivf(src: str = "embeddings") -> str:
-    return f"""
-WITH cent AS (
+def _sql_ivf_cells(
+    src: str = "embeddings", corpus: str = "", probes: bool = False
+) -> str:
+    """The IVF CTEs over ``src``: ``cent`` (its first _IVF_CELLS vectors
+    as centroids) and ``cells`` (each vector of ``corpus``, default
+    ``src``, in its nearest centroid's cell, ties to the lower id); with
+    ``probes``, each query's cells ranked by centroid cosine (rn)."""
+    ctes = f"""cent AS (
   SELECT vec_id AS cid, embedding AS cvec FROM {src}
   ORDER BY vec_id LIMIT {_IVF_CELLS}
 ),
@@ -5435,16 +5435,28 @@ assign AS (
          row_number() OVER (
            PARTITION BY e.vec_id
            ORDER BY {_sql_cos('e.embedding', 'c.cvec')} DESC, c.cid ASC) AS rn
-  FROM {src} e CROSS JOIN cent c
+  FROM {corpus or src} e CROSS JOIN cent c
 ),
-cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rn = 1),
+cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rn = 1)"""
+    if probes:
+        ctes += f""",
 probes AS (
   SELECT q.vec_id AS query_id, q.embedding AS qvec, c.cid AS cell,
          row_number() OVER (
            PARTITION BY q.vec_id
            ORDER BY {_sql_cos('q.embedding', 'c.cvec')} DESC, c.cid ASC) AS rn
   FROM {src} q CROSS JOIN cent c WHERE q.vec_id < {N_QUERIES}
-),
+)"""
+    return ctes
+
+
+# IVF is deterministic end-to-end (sampled centroids, id tie-breaks), so
+# unlike the LSH paths it gets a full value-hash oracle. ``src`` lets
+# the auto-dispatch twins re-run the identical plan over a derived
+# corpus CTE (the clustered fixture) instead of the embeddings table.
+def _oracle_ivf(src: str = "embeddings") -> str:
+    return f"""
+WITH {_sql_ivf_cells(src, probes=True)},
 cand AS (
   SELECT p.query_id, p.qvec, e.vec_id, e.embedding
   FROM (SELECT query_id, qvec, cell FROM probes WHERE rn <= {_IVF_PROBE}) p
@@ -5612,25 +5624,7 @@ def q_ann_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _oracle_ann_tuning() -> str:
     probes_sql = ", ".join(str(p) for p in _TUNE_PROBES)
     return f"""
-WITH cent AS (
-  SELECT vec_id AS cid, embedding AS cvec FROM embeddings
-  ORDER BY vec_id LIMIT {_IVF_CELLS}
-),
-assign AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY {_sql_cos('e.embedding', 'c.cvec')} DESC, c.cid ASC) AS rn
-  FROM embeddings e CROSS JOIN cent c
-),
-cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rn = 1),
-probes AS (
-  SELECT q.vec_id AS query_id, q.embedding AS qvec, c.cid AS cell,
-         row_number() OVER (
-           PARTITION BY q.vec_id
-           ORDER BY {_sql_cos('q.embedding', 'c.cvec')} DESC, c.cid ASC) AS rn
-  FROM embeddings q CROSS JOIN cent c WHERE q.vec_id < {N_QUERIES}
-),
+WITH {_sql_ivf_cells(probes=True)},
 exact AS (
   SELECT query_id, vec_id FROM (
     SELECT q.vec_id AS query_id, e.vec_id AS vec_id,
@@ -6118,20 +6112,8 @@ def q_ivf_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _ORACLE_IVF_CELLS = f"""
-WITH cent AS (
-  SELECT vec_id AS cid, embedding AS cvec FROM embeddings
-  ORDER BY vec_id LIMIT {_IVF_CELLS}
-),
-assign AS (
-  SELECT e.vec_id, c.cid,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY {_sql_cos('e.embedding', 'c.cvec')} DESC, c.cid ASC) AS rn
-  FROM embeddings e CROSS JOIN cent c
-),
-per_cell AS (
-  SELECT cid, count(*) AS n_vecs FROM assign WHERE rn = 1 GROUP BY cid
-)
+WITH {_sql_ivf_cells()},
+per_cell AS (SELECT cell, count(*) AS n_vecs FROM cells GROUP BY cell)
 SELECT count(*)::BIGINT AS n_cells,
        min(n_vecs)::BIGINT AS min_cell,
        max(n_vecs)::BIGINT AS max_cell,
@@ -6194,32 +6176,14 @@ def q_ivf_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _ORACLE_IVF_UPSERT = f"""
-WITH cent AS (
-  SELECT vec_id AS cid, embedding AS cvec FROM embeddings
-  ORDER BY vec_id LIMIT {_IVF_CELLS}
-),
-mod AS (
+WITH mod AS (
   SELECT vec_id,
          CASE WHEN vec_id % 10 = 7
               THEN list_concat([(-embedding[1])::FLOAT], embedding[2:])
               ELSE embedding END AS embedding
   FROM embeddings
 ),
-assign AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY {_sql_cos('e.embedding', 'c.cvec')} DESC, c.cid ASC) AS rn
-  FROM mod e CROSS JOIN cent c
-),
-cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rn = 1),
-probes AS (
-  SELECT q.vec_id AS query_id, q.embedding AS qvec, c.cid AS cell,
-         row_number() OVER (
-           PARTITION BY q.vec_id
-           ORDER BY {_sql_cos('q.embedding', 'c.cvec')} DESC, c.cid ASC) AS rn
-  FROM embeddings q CROSS JOIN cent c WHERE q.vec_id < {N_QUERIES}
-),
+{_sql_ivf_cells(corpus="mod", probes=True)},
 cand AS (
   SELECT p.query_id, p.qvec, e.vec_id, e.embedding
   FROM (SELECT query_id, qvec, cell FROM probes WHERE rn <= {_IVF_PROBE}) p
@@ -7120,12 +7084,7 @@ def q_nsw_search_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim=EMB_DIM, beam_width=_NSW_BEAM, n_iters=_NSW_HOPS,
         n_entries=_NSW_ENTRIES, exclude_self=True,
     )
-    return out.select(
-        F.col("query_id").cast("bigint"),
-        F.col("rank").cast("bigint"),
-        F.col("vec_id").cast("bigint"),
-        "sim",
-    )
+    return _topk_rows(out)
 
 
 def q_hnsw_search_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7159,12 +7118,7 @@ def q_hnsw_search_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_level=_HNSW_MAXLVL, descent_beam=_HNSW_DBEAM,
         descent_iters=_HNSW_DITERS, exclude_self=True,
     )
-    return out.select(
-        F.col("query_id").cast("bigint"),
-        F.col("rank").cast("bigint"),
-        F.col("vec_id").cast("bigint"),
-        "sim",
-    )
+    return _topk_rows(out)
 
 
 def q_bm25_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8747,12 +8701,7 @@ def q_nsw_beam_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         beam_width=_NSW_BEAM, n_iters=_NSW_HOPS, n_entries=_NSW_ENTRIES,
         dim=EMB_DIM, exclude_self=True,
     )
-    return out.select(
-        F.col("query_id").cast("bigint"),
-        F.col("rank").cast("bigint"),
-        F.col("vec_id").cast("bigint"),
-        "sim",
-    )
+    return _topk_rows(out)
 
 
 def q_nsw_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8785,96 +8734,178 @@ def q_nsw_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         beam_width=_NSW_BEAM, n_iters=_NSW_HOPS, n_entries=_NSW_ENTRIES,
         dim=EMB_DIM, exclude_self=True,
     )
-    return out.select(
-        F.col("query_id").cast("bigint"),
-        F.col("rank").cast("bigint"),
-        F.col("vec_id").cast("bigint"),
-        "sim",
-    )
+    return _topk_rows(out)
+
+
+# Graph-serve oracle generators. Each NSW / HNSW twin below is a short
+# composition of these CTE functions. They emit SQL text only (nothing
+# from the engine), so the oracles stay an independent reference, and
+# every CTE is MATERIALIZED: DuckDB computes each O(N^2) kNN build once
+# instead of once per reference. A "norms" CTE is (vec_id, embedding,
+# nrm); a beam is (query_id, node, sim) ranked by cosine to the query,
+# ties to the lower node id — the engine's total order.
+_SQL_GRAPH_SIM = (
+    "list_dot_product(q.embedding::DOUBLE[], n.embedding::DOUBLE[])"
+    " / (q.nrm * n.nrm)"
+)
+
+
+def _sql_with(ctes: list[str], select: str) -> str:
+    return "WITH " + ",\n".join(ctes) + "\n" + select
+
+
+def _sql_norms(name: str, src: str) -> str:
+    """Norms CTE over ``src``: a table or CTE, optionally with a WHERE."""
+    return f"""{name} AS MATERIALIZED (
+  SELECT vec_id, embedding,
+         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
+           AS nrm
+  FROM {src}
+)"""
+
+
+def _sql_knn_edges(
+    p: str, nv: str, k: int, shortcuts: bool = True
+) -> list[str]:
+    """``{p}edges`` (a < b): the undirected exact k-NN graph of the norms
+    CTE ``nv``, self excluded; with ``shortcuts``, plus one md5('s17|id')
+    long link per node — the NSW layer-0 recipe of ann.nsw_edges."""
+    ctes = [f"""{p}knn AS MATERIALIZED (
+  SELECT query_id, node FROM (
+    SELECT q.vec_id AS query_id, n.vec_id AS node, {_SQL_GRAPH_SIM} AS sim
+    FROM {nv} q JOIN {nv} n ON n.vec_id != q.vec_id)
+  QUALIFY row_number() OVER (
+    PARTITION BY query_id ORDER BY sim DESC, node ASC) <= {k}
+)"""]
+    links = f"SELECT query_id, node FROM {p}knn"
+    if shortcuts:
+        ctes.append(f"""{p}short AS MATERIALIZED (
+  SELECT e.vec_id AS query_id, d.vec_id AS node
+  FROM {nv} e JOIN {nv} d
+    ON d.vec_id = (('0x' || substr(md5('s17|' || e.vec_id::VARCHAR), 1, 15))::BIGINT
+                   % (SELECT count(*) FROM {nv}))
+  WHERE e.vec_id != d.vec_id
+)""")
+        links += f" UNION ALL SELECT query_id, node FROM {p}short"
+    ctes.append(f"""{p}edges AS MATERIALIZED (
+  SELECT DISTINCT least(query_id, node) AS a, greatest(query_id, node) AS b
+  FROM ({links})
+)""")
+    return ctes
+
+
+def _sql_dir(name: str, edges: str) -> str:
+    return f"""{name} AS MATERIALIZED (
+  SELECT a AS src, b AS dst FROM {edges} UNION ALL SELECT b, a FROM {edges}
+)"""
+
+
+def _sql_graph(p: str, edges: str) -> list[str]:
+    """``{p}dir``, both directions of ``edges``, and ``{p}hubs``, its
+    _NSW_ENTRIES highest-degree nodes (ties to the lower id)."""
+    return [_sql_dir(f"{p}dir", edges), f"""{p}hubs AS MATERIALIZED (
+  SELECT src AS node FROM {p}dir GROUP BY src
+  ORDER BY count(*) DESC, src ASC LIMIT {_NSW_ENTRIES}
+)"""]
+
+
+def _sql_tomb() -> str:
+    return f"""tomb AS MATERIALIZED (
+  SELECT vec_id FROM embeddings WHERE vec_id % {_TOMB_MOD} = {_TOMB_REM}
+)"""
+
+
+def _sql_live(name: str, src: str, *cols: str) -> str:
+    """The rows of ``src`` with no id column in ``tomb``: the soft-delete
+    view of a corpus, a level table or an edge list (either endpoint)."""
+    live = " AND ".join(f"{c} NOT IN (SELECT vec_id FROM tomb)" for c in cols)
+    return f"{name} AS MATERIALIZED (SELECT * FROM {src} WHERE {live})"
+
+
+def _sql_link(
+    name: str, edges: str, beam: str, k: int, where: str = "TRUE"
+) -> str:
+    """``edges`` plus a link from each query of ``beam`` that passes
+    ``where`` to its ``k`` best nodes: an insert's edge merge."""
+    return f"""{name} AS MATERIALIZED (
+  SELECT DISTINCT a, b FROM (
+    SELECT a, b FROM {edges}
+    UNION ALL
+    (SELECT least(query_id, node), greatest(query_id, node) FROM {beam}
+     WHERE {where}
+     QUALIFY row_number() OVER (
+       PARTITION BY query_id ORDER BY sim DESC, node ASC) <= {k}))
+)"""
+
+
+def _sql_beam(
+    p: str, seed: str, dirs: list[str], corpus: str, queries: str,
+    width: int = _NSW_BEAM, exclude_self: bool = True,
+) -> list[str]:
+    """Beam search unrolled as CTEs. ``{p}0`` keeps the ``width`` best
+    (query_id, node) pairs of ``seed``, scoring nodes from the norms CTE
+    ``corpus`` against queries from ``queries``; hop i adds the
+    neighbours of ``{p}{i-1}`` along ``dirs[i-1]`` (candidates
+    ``{p}c{i}``) and keeps the ``width`` best again. The final beam is
+    ``{p}{len(dirs)}``."""
+    where = "\n    WHERE c.node != c.query_id" if exclude_self else ""
+
+    def keep(name: str, cand: str) -> str:
+        return f"""{name} AS MATERIALIZED (
+  SELECT * FROM (
+    SELECT c.query_id, c.node, {_SQL_GRAPH_SIM} AS sim
+    FROM {cand} c JOIN {corpus} n ON n.vec_id = c.node
+    JOIN {queries} q ON q.vec_id = c.query_id{where})
+  QUALIFY row_number() OVER (
+    PARTITION BY query_id ORDER BY sim DESC, node ASC) <= {width}
+)"""
+
+    ctes = [keep(f"{p}0", seed)]
+    for i, d in enumerate(dirs, 1):
+        ctes += [f"""{p}c{i} AS MATERIALIZED (
+  SELECT DISTINCT query_id, node FROM (
+    SELECT query_id, node FROM {p}{i - 1}
+    UNION ALL
+    SELECT b.query_id, d.dst FROM {p}{i - 1} b JOIN {d} d ON d.src = b.node)
+)""", keep(f"{p}{i}", f"{p}c{i}")]
+    return ctes
+
+
+def _sql_nsw_search(
+    p: str, graph: str, corpus: str, queries: str
+) -> list[str]:
+    """The NSW serve: every query seeds ``{p}seed`` from ``{graph}hubs``,
+    then walks ``{graph}dir`` for _NSW_HOPS hops."""
+    seed = f"""{p}seed AS MATERIALIZED (
+  SELECT q.vec_id AS query_id, h.node FROM {queries} q CROSS JOIN {graph}hubs h
+)"""
+    dirs = [f"{graph}dir"] * _NSW_HOPS
+    return [seed, *_sql_beam(p, f"{p}seed", dirs, corpus, queries)]
+
+
+def _sql_topk(beam: str) -> str:
+    return f"""SELECT query_id, rank::BIGINT AS rank, node AS vec_id, sim FROM (
+  SELECT query_id, node, sim, row_number() OVER (
+    PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rank
+  FROM {beam}
+) WHERE rank <= {TOPK}"""
+
+
+def _sql_nsw_serve(src: str) -> list[str]:
+    """nsw_beam_topk's CTEs over ``src``: graph, hubs, beams ``b0``.."""
+    return [
+        _sql_norms("nv", src),
+        *_sql_knn_edges("", "nv", _NSW_K),
+        *_sql_graph("", "edges"),
+        _sql_norms("qb", f"{src} WHERE vec_id < {N_QUERIES}"),
+        *_sql_nsw_search("b", "", "nv", "qb"),
+    ]
 
 
 def _oracle_nsw_beam(src: str = "embeddings") -> str:
     # ``src`` lets the auto-dispatch twins re-run the identical beam
     # over a derived corpus CTE (the clustered fixture).
-    sim = (
-        "list_dot_product(q.embedding::DOUBLE[], n.embedding::DOUBLE[])"
-        " / (q.nrm * n.nrm)"
-    )
-    ctes = [f"""nv AS (
-  SELECT vec_id, embedding,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-           AS nrm
-  FROM {src}
-),
-sims12 AS (
-  SELECT q.vec_id AS query_id, e.vec_id,
-         list_dot_product(q.embedding::DOUBLE[], e.embedding::DOUBLE[])
-           / (q.nrm * e.nrm) AS sim
-  FROM nv q JOIN nv e ON e.vec_id != q.vec_id
-),
-knn12 AS (
-  SELECT query_id, vec_id FROM sims12
-  QUALIFY row_number() OVER (
-    PARTITION BY query_id ORDER BY sim DESC, vec_id ASC) <= {_NSW_K}
-),
-ncnt AS (SELECT count(*) AS n FROM {src}),
-sc AS (
-  SELECT e.vec_id AS src, d.vec_id AS dst
-  FROM {src} e JOIN {src} d
-    ON d.vec_id = (('0x' || substr(md5('s17|' || e.vec_id::VARCHAR), 1, 15))::BIGINT
-                   % (SELECT n FROM ncnt))
-  WHERE e.vec_id != d.vec_id
-),
-edges AS (
-  SELECT DISTINCT a, b FROM (
-    SELECT least(query_id, vec_id) AS a, greatest(query_id, vec_id) AS b
-    FROM knn12
-    UNION ALL
-    SELECT least(src, dst) AS a, greatest(src, dst) AS b FROM sc)
-),
-dir AS (SELECT a AS src, b AS dst FROM edges
-        UNION ALL SELECT b, a FROM edges),
-deg AS (SELECT src, count(*) AS degree FROM dir GROUP BY src),
-hubs AS (SELECT src AS node FROM deg
-         ORDER BY degree DESC, src ASC LIMIT {_NSW_ENTRIES}),
-qb AS (SELECT vec_id AS query_id, embedding, nrm FROM nv
-       WHERE vec_id < {N_QUERIES}),
-b0 AS (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT q.query_id, h.node, {sim} AS sim
-          FROM qb q CROSS JOIN hubs h JOIN nv n ON n.vec_id = h.node
-          WHERE h.node != q.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)"""]
-    for i in range(1, _NSW_HOPS + 1):
-        ctes.append(f"""c{i} AS (
-  SELECT DISTINCT query_id, node FROM (
-    SELECT query_id, node FROM b{i - 1}
-    UNION ALL
-    SELECT b.query_id, d.dst AS node
-    FROM b{i - 1} b JOIN dir d ON d.src = b.node)
-),
-b{i} AS (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT c.query_id, c.node, {sim} AS sim
-          FROM c{i} c JOIN nv n ON n.vec_id = c.node
-          JOIN nv q ON q.vec_id = c.query_id
-          WHERE c.node != c.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)""")
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"""
-SELECT query_id, rank::BIGINT AS rank, node AS vec_id, sim FROM (
-  SELECT query_id, node, sim, row_number() OVER (
-    PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rank
-  FROM b{_NSW_HOPS}
-) WHERE rank <= {TOPK}"""
-    )
+    return _sql_with(_sql_nsw_serve(src), _sql_topk(f"b{_NSW_HOPS}"))
 
 
 # Incremental-insert split: ids with vec_id % _INS_MOD == _INS_REM are
@@ -8926,12 +8957,7 @@ def q_nsw_insert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         beam_width=_NSW_BEAM, n_iters=_NSW_HOPS, n_entries=_NSW_ENTRIES,
         dim=EMB_DIM, exclude_self=True,
     )
-    return out.select(
-        F.col("query_id").cast("bigint"),
-        F.col("rank").cast("bigint"),
-        F.col("vec_id").cast("bigint"),
-        "sim",
-    )
+    return _topk_rows(out)
 
 
 def q_nsw_appended_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8963,166 +8989,45 @@ def q_nsw_appended_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         beam_width=_NSW_BEAM, n_iters=_NSW_HOPS, n_entries=_NSW_ENTRIES,
         dim=EMB_DIM, exclude_self=True,
     )
-    return out.select(
-        F.col("query_id").cast("bigint"),
-        F.col("rank").cast("bigint"),
-        F.col("vec_id").cast("bigint"),
-        "sim",
-    )
+    return _topk_rows(out)
+
+
+def _sql_nsw_inserts(rems: tuple[int, ...]) -> str:
+    """Build the NSW graph over the ids whose vec_id % _INS_MOD is not in
+    ``rems``, insert one batch per residue in order, then serve. Batch j
+    is inserted like ann.nsw_insert_edges: its vectors beam-search the
+    graph so far over the corpus so far (``cnv{j-1}``) and link to their
+    _NSW_K best. The serve walks the final graph over the full corpus."""
+    by_rem = f"embeddings WHERE vec_id % {_INS_MOD}"
+    ctes = [
+        _sql_norms("cnv0", f"{by_rem} NOT IN ({', '.join(map(str, rems))})"),
+        *_sql_knn_edges("", "cnv0", _NSW_K),
+    ]
+    edges = "edges"
+    for j, r in enumerate(rems, 1):
+        ctes += [
+            *_sql_graph(f"g{j}", edges),
+            _sql_norms(f"q{j}", f"{by_rem} = {r} AND embedding IS NOT NULL"),
+            *_sql_nsw_search(f"i{j}_", f"g{j}", f"cnv{j - 1}", f"q{j}"),
+            _sql_link(f"edges{j}", edges, f"i{j}_{_NSW_HOPS}", _NSW_K),
+            f"cnv{j} AS MATERIALIZED "
+            f"(SELECT * FROM cnv{j - 1} UNION ALL SELECT * FROM q{j})",
+        ]
+        edges = f"edges{j}"
+    return _sql_with([
+        *ctes,
+        *_sql_graph("s", edges),
+        _sql_norms("nva", "embeddings"),
+        _sql_norms("qb", f"embeddings WHERE vec_id < {N_QUERIES}"),
+        *_sql_nsw_search("s", "s", "nva", "qb"),
+    ], _sql_topk(f"s{_NSW_HOPS}"))
 
 
 def _oracle_nsw_insert() -> str:
-    """The insert pipeline's twin: build the OLD graph in SQL (same
-    kNN + shortcut recipe as _oracle_nsw_beam, over the 6/7 split),
-    unroll the INSERT beam for the new batch over it, merge the found
-    links into the edge list, then unroll the standard SERVE beam over
-    the merged graph — two stacked copies of the verified beam CTE
-    pattern."""
-    sim = (
-        "list_dot_product(q.embedding::DOUBLE[], n.embedding::DOUBLE[])"
-        " / (q.nrm * n.nrm)"
-    )
-    ctes = [f"""old_c AS MATERIALIZED (
-  SELECT vec_id, embedding FROM embeddings
-  WHERE vec_id % {_INS_MOD} != {_INS_REM}
-),
-new_c AS MATERIALIZED (
-  SELECT vec_id, embedding FROM embeddings
-  WHERE vec_id % {_INS_MOD} = {_INS_REM} AND embedding IS NOT NULL
-),
-nvo AS MATERIALIZED (
-  SELECT vec_id, embedding,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-           AS nrm
-  FROM old_c
-),
-simsk AS MATERIALIZED (
-  SELECT q.vec_id AS query_id, e.vec_id,
-         list_dot_product(q.embedding::DOUBLE[], e.embedding::DOUBLE[])
-           / (q.nrm * e.nrm) AS sim
-  FROM nvo q JOIN nvo e ON e.vec_id != q.vec_id
-),
-knnk AS MATERIALIZED (
-  SELECT query_id, vec_id FROM simsk
-  QUALIFY row_number() OVER (
-    PARTITION BY query_id ORDER BY sim DESC, vec_id ASC) <= {_NSW_K}
-),
-ncnt AS MATERIALIZED (SELECT count(*) AS n FROM old_c),
-sc AS MATERIALIZED (
-  SELECT e.vec_id AS src, d.vec_id AS dst
-  FROM old_c e JOIN old_c d
-    ON d.vec_id = (('0x' || substr(md5('s17|' || e.vec_id::VARCHAR), 1, 15))::BIGINT
-                   % (SELECT n FROM ncnt))
-  WHERE e.vec_id != d.vec_id
-),
-edges0 AS MATERIALIZED (
-  SELECT DISTINCT a, b FROM (
-    SELECT least(query_id, vec_id) AS a, greatest(query_id, vec_id) AS b
-    FROM knnk
-    UNION ALL
-    SELECT least(src, dst) AS a, greatest(src, dst) AS b FROM sc)
-),
-dir0 AS MATERIALIZED (SELECT a AS src, b AS dst FROM edges0
-         UNION ALL SELECT b, a FROM edges0),
-deg0 AS MATERIALIZED (SELECT src, count(*) AS degree FROM dir0 GROUP BY src),
-hubs0 AS MATERIALIZED (SELECT src AS node FROM deg0
-          ORDER BY degree DESC, src ASC LIMIT {_NSW_ENTRIES}),
-qi AS MATERIALIZED (
-  SELECT vec_id AS query_id, embedding,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-           AS nrm
-  FROM new_c
-),
-i0 AS MATERIALIZED (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT q.query_id, h.node, {sim} AS sim
-          FROM qi q CROSS JOIN hubs0 h JOIN nvo n ON n.vec_id = h.node
-          WHERE h.node != q.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)"""]
-    for i in range(1, _NSW_HOPS + 1):
-        ctes.append(f"""ci{i} AS MATERIALIZED (
-  SELECT DISTINCT query_id, node FROM (
-    SELECT query_id, node FROM i{i - 1}
-    UNION ALL
-    SELECT b.query_id, d.dst AS node
-    FROM i{i - 1} b JOIN dir0 d ON d.src = b.node)
-),
-i{i} AS MATERIALIZED (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT c.query_id, c.node, {sim} AS sim
-          FROM ci{i} c JOIN nvo n ON n.vec_id = c.node
-          JOIN qi q ON q.query_id = c.query_id
-          WHERE c.node != c.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)""")
-    ctes.append(f"""ins AS MATERIALIZED (
-  SELECT query_id, node FROM (
-    SELECT query_id, node, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM i{_NSW_HOPS}
-  ) WHERE rn <= {_NSW_K}
-),
-edges1 AS MATERIALIZED (
-  SELECT DISTINCT a, b FROM (
-    SELECT a, b FROM edges0
-    UNION ALL
-    SELECT least(query_id, node) AS a, greatest(query_id, node) AS b
-    FROM ins)
-),
-dir1 AS MATERIALIZED (SELECT a AS src, b AS dst FROM edges1
-         UNION ALL SELECT b, a FROM edges1),
-deg1 AS MATERIALIZED (SELECT src, count(*) AS degree FROM dir1 GROUP BY src),
-hubs1 AS MATERIALIZED (SELECT src AS node FROM deg1
-          ORDER BY degree DESC, src ASC LIMIT {_NSW_ENTRIES}),
-nva AS MATERIALIZED (
-  SELECT vec_id, embedding,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-           AS nrm
-  FROM embeddings
-),
-qb AS MATERIALIZED (SELECT vec_id AS query_id, embedding, nrm FROM nva
-       WHERE vec_id < {N_QUERIES}),
-s0 AS MATERIALIZED (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT q.query_id, h.node, {sim} AS sim
-          FROM qb q CROSS JOIN hubs1 h JOIN nva n ON n.vec_id = h.node
-          WHERE h.node != q.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)""")
-    for i in range(1, _NSW_HOPS + 1):
-        ctes.append(f"""cs{i} AS MATERIALIZED (
-  SELECT DISTINCT query_id, node FROM (
-    SELECT query_id, node FROM s{i - 1}
-    UNION ALL
-    SELECT b.query_id, d.dst AS node
-    FROM s{i - 1} b JOIN dir1 d ON d.src = b.node)
-),
-s{i} AS MATERIALIZED (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT c.query_id, c.node, {sim} AS sim
-          FROM cs{i} c JOIN nva n ON n.vec_id = c.node
-          JOIN nva q ON q.vec_id = c.query_id
-          WHERE c.node != c.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)""")
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"""
-SELECT query_id, rank::BIGINT AS rank, node AS vec_id, sim FROM (
-  SELECT query_id, node, sim, row_number() OVER (
-    PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rank
-  FROM s{_NSW_HOPS}
-) WHERE rank <= {TOPK}"""
-    )
+    """The insert pipeline's twin: the old graph over the 6/7 split, one
+    insert batch (the 1/7 with vec_id % 7 == 3), then the serve over the
+    merged graph."""
+    return _sql_nsw_inserts((_INS_REM,))
 
 
 # Multi-batch chain split: two ingest batches (residues 3 and 5 mod 7,
@@ -9169,113 +9074,25 @@ def q_nsw_tombstoned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         beam_width=_NSW_BEAM, n_iters=_NSW_HOPS, n_entries=_NSW_ENTRIES,
         dim=EMB_DIM, exclude_self=True,
     )
-    return out.select(
-        F.col("query_id").cast("bigint"),
-        F.col("rank").cast("bigint"),
-        F.col("vec_id").cast("bigint"),
-        "sim",
-    )
+    return _topk_rows(out)
 
 
 def _oracle_nsw_tomb() -> str:
-    """The tombstoned serve's twin: the full-corpus graph build
-    (identical to _oracle_nsw_beam's CTEs — the edge list was built
-    BEFORE the deletes), the tombstone set, endpoint filters on the
-    edge list + a survivor filter on the scoring corpus, then the
-    standard serve beam over the filtered view (hubs recomputed from
-    the filtered degree, exactly like the engine)."""
-    sim = (
-        "list_dot_product(q.embedding::DOUBLE[], n.embedding::DOUBLE[])"
-        " / (q.nrm * n.nrm)"
-    )
-    ctes = [f"""nv AS MATERIALIZED (
-  SELECT vec_id, embedding,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-           AS nrm
-  FROM embeddings
-),
-sims12 AS MATERIALIZED (
-  SELECT q.vec_id AS query_id, e.vec_id,
-         list_dot_product(q.embedding::DOUBLE[], e.embedding::DOUBLE[])
-           / (q.nrm * e.nrm) AS sim
-  FROM nv q JOIN nv e ON e.vec_id != q.vec_id
-),
-knn12 AS MATERIALIZED (
-  SELECT query_id, vec_id FROM sims12
-  QUALIFY row_number() OVER (
-    PARTITION BY query_id ORDER BY sim DESC, vec_id ASC) <= {_NSW_K}
-),
-ncnt AS MATERIALIZED (SELECT count(*) AS n FROM embeddings),
-sc AS MATERIALIZED (
-  SELECT e.vec_id AS src, d.vec_id AS dst
-  FROM embeddings e JOIN embeddings d
-    ON d.vec_id = (('0x' || substr(md5('s17|' || e.vec_id::VARCHAR), 1, 15))::BIGINT
-                   % (SELECT n FROM ncnt))
-  WHERE e.vec_id != d.vec_id
-),
-alledges AS MATERIALIZED (
-  SELECT DISTINCT a, b FROM (
-    SELECT least(query_id, vec_id) AS a, greatest(query_id, vec_id) AS b
-    FROM knn12
-    UNION ALL
-    SELECT least(src, dst) AS a, greatest(src, dst) AS b FROM sc)
-),
-tomb AS MATERIALIZED (
-  SELECT vec_id FROM embeddings
-  WHERE vec_id % {_TOMB_MOD} = {_TOMB_REM}
-),
-edges AS MATERIALIZED (
-  SELECT a, b FROM alledges
-  WHERE a NOT IN (SELECT vec_id FROM tomb)
-    AND b NOT IN (SELECT vec_id FROM tomb)
-),
-nvl AS MATERIALIZED (
-  SELECT vec_id, embedding, nrm FROM nv
-  WHERE vec_id NOT IN (SELECT vec_id FROM tomb)
-),
-dir AS MATERIALIZED (SELECT a AS src, b AS dst FROM edges
-        UNION ALL SELECT b, a FROM edges),
-deg AS MATERIALIZED (SELECT src, count(*) AS degree FROM dir GROUP BY src),
-hubs AS MATERIALIZED (SELECT src AS node FROM deg
-         ORDER BY degree DESC, src ASC LIMIT {_NSW_ENTRIES}),
-qb AS MATERIALIZED (SELECT vec_id AS query_id, embedding, nrm FROM nv
-       WHERE vec_id < {N_QUERIES}),
-b0 AS MATERIALIZED (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT q.query_id, h.node, {sim} AS sim
-          FROM qb q CROSS JOIN hubs h JOIN nvl n ON n.vec_id = h.node
-          WHERE h.node != q.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)"""]
-    for i in range(1, _NSW_HOPS + 1):
-        ctes.append(f"""c{i} AS MATERIALIZED (
-  SELECT DISTINCT query_id, node FROM (
-    SELECT query_id, node FROM b{i - 1}
-    UNION ALL
-    SELECT b.query_id, d.dst AS node
-    FROM b{i - 1} b JOIN dir d ON d.src = b.node)
-),
-b{i} AS MATERIALIZED (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT c.query_id, c.node, {sim} AS sim
-          FROM c{i} c JOIN nvl n ON n.vec_id = c.node
-          JOIN nv q ON q.vec_id = c.query_id
-          WHERE c.node != c.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)""")
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"""
-SELECT query_id, rank::BIGINT AS rank, node AS vec_id, sim FROM (
-  SELECT query_id, node, sim, row_number() OVER (
-    PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rank
-  FROM b{_NSW_HOPS}
-) WHERE rank <= {TOPK}"""
-    )
+    """The tombstoned serve's twin: the full-corpus graph build (the
+    edge list was built BEFORE the deletes), the tombstone set, live
+    views of the edge list and of the scoring corpus, then the standard
+    serve over the live graph (hubs from the live degree, exactly like
+    the engine)."""
+    return _sql_with([
+        _sql_norms("nv", "embeddings"),
+        *_sql_knn_edges("", "nv", _NSW_K),
+        _sql_tomb(),
+        _sql_live("live", "edges", "a", "b"),
+        _sql_live("nvl", "nv", "vec_id"),
+        *_sql_graph("", "live"),
+        _sql_norms("qb", f"embeddings WHERE vec_id < {N_QUERIES}"),
+        *_sql_nsw_search("b", "", "nvl", "qb"),
+    ], _sql_topk(f"b{_NSW_HOPS}"))
 
 
 def q_nsw_chained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9318,175 +9135,15 @@ def q_nsw_chained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         beam_width=_NSW_BEAM, n_iters=_NSW_HOPS, n_entries=_NSW_ENTRIES,
         dim=EMB_DIM, exclude_self=True,
     )
-    return out.select(
-        F.col("query_id").cast("bigint"),
-        F.col("rank").cast("bigint"),
-        F.col("vec_id").cast("bigint"),
-        "sim",
-    )
+    return _topk_rows(out)
 
 
 def _oracle_nsw_chain() -> str:
-    """The chain's twin: the old graph in SQL (kNN + shortcuts over
-    the 5/7 split), then ONE UNROLLED INSERT BEAM PER BATCH — batch j
-    scores against the accumulated corpus cnv{j-1} and walks the
-    accumulated edge list dir{j-1}, exactly the engine's layer-j build
-    — then the standard serve beam over the final merged graph. The
-    generator loops over _CHAIN_REMS so the CTE stack is the verified
-    _oracle_nsw_insert pattern applied j times."""
-    sim = (
-        "list_dot_product(q.embedding::DOUBLE[], n.embedding::DOUBLE[])"
-        " / (q.nrm * n.nrm)"
-    )
-    rems = ", ".join(str(r) for r in _CHAIN_REMS)
-    ctes = [f"""old_c AS MATERIALIZED (
-  SELECT vec_id, embedding FROM embeddings
-  WHERE vec_id % {_INS_MOD} NOT IN ({rems})
-),
-cnv0 AS MATERIALIZED (
-  SELECT vec_id, embedding,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-           AS nrm
-  FROM old_c
-),
-simsk AS MATERIALIZED (
-  SELECT q.vec_id AS query_id, e.vec_id,
-         list_dot_product(q.embedding::DOUBLE[], e.embedding::DOUBLE[])
-           / (q.nrm * e.nrm) AS sim
-  FROM cnv0 q JOIN cnv0 e ON e.vec_id != q.vec_id
-),
-knnk AS MATERIALIZED (
-  SELECT query_id, vec_id FROM simsk
-  QUALIFY row_number() OVER (
-    PARTITION BY query_id ORDER BY sim DESC, vec_id ASC) <= {_NSW_K}
-),
-ncnt AS MATERIALIZED (SELECT count(*) AS n FROM old_c),
-sc AS MATERIALIZED (
-  SELECT e.vec_id AS src, d.vec_id AS dst
-  FROM old_c e JOIN old_c d
-    ON d.vec_id = (('0x' || substr(md5('s17|' || e.vec_id::VARCHAR), 1, 15))::BIGINT
-                   % (SELECT n FROM ncnt))
-  WHERE e.vec_id != d.vec_id
-),
-edges0 AS MATERIALIZED (
-  SELECT DISTINCT a, b FROM (
-    SELECT least(query_id, vec_id) AS a, greatest(query_id, vec_id) AS b
-    FROM knnk
-    UNION ALL
-    SELECT least(src, dst) AS a, greatest(src, dst) AS b FROM sc)
-),
-dir0 AS MATERIALIZED (SELECT a AS src, b AS dst FROM edges0
-         UNION ALL SELECT b, a FROM edges0)"""]
-    for j, r in enumerate(_CHAIN_REMS, 1):
-        p = j - 1
-        ctes.append(f"""deg{p} AS MATERIALIZED (
-  SELECT src, count(*) AS degree FROM dir{p} GROUP BY src),
-hubs{p} AS MATERIALIZED (SELECT src AS node FROM deg{p}
-          ORDER BY degree DESC, src ASC LIMIT {_NSW_ENTRIES}),
-q{j} AS MATERIALIZED (
-  SELECT vec_id AS query_id, embedding,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-           AS nrm
-  FROM embeddings
-  WHERE vec_id % {_INS_MOD} = {r} AND embedding IS NOT NULL
-),
-i{j}_0 AS MATERIALIZED (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT q.query_id, h.node, {sim} AS sim
-          FROM q{j} q CROSS JOIN hubs{p} h
-          JOIN cnv{p} n ON n.vec_id = h.node
-          WHERE h.node != q.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)""")
-        for i in range(1, _NSW_HOPS + 1):
-            ctes.append(f"""ci{j}_{i} AS MATERIALIZED (
-  SELECT DISTINCT query_id, node FROM (
-    SELECT query_id, node FROM i{j}_{i - 1}
-    UNION ALL
-    SELECT b.query_id, d.dst AS node
-    FROM i{j}_{i - 1} b JOIN dir{p} d ON d.src = b.node)
-),
-i{j}_{i} AS MATERIALIZED (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT c.query_id, c.node, {sim} AS sim
-          FROM ci{j}_{i} c JOIN cnv{p} n ON n.vec_id = c.node
-          JOIN q{j} q ON q.query_id = c.query_id
-          WHERE c.node != c.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)""")
-        ctes.append(f"""ins{j} AS MATERIALIZED (
-  SELECT query_id, node FROM (
-    SELECT query_id, node, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM i{j}_{_NSW_HOPS}
-  ) WHERE rn <= {_NSW_K}
-),
-edges{j} AS MATERIALIZED (
-  SELECT DISTINCT a, b FROM (
-    SELECT a, b FROM edges{p}
-    UNION ALL
-    SELECT least(query_id, node) AS a, greatest(query_id, node) AS b
-    FROM ins{j})
-),
-dir{j} AS MATERIALIZED (SELECT a AS src, b AS dst FROM edges{j}
-         UNION ALL SELECT b, a FROM edges{j}),
-cnv{j} AS MATERIALIZED (
-  SELECT vec_id, embedding, nrm FROM cnv{p}
-  UNION ALL
-  SELECT query_id AS vec_id, embedding, nrm FROM q{j})""")
-    B = len(_CHAIN_REMS)
-    ctes.append(f"""degf AS MATERIALIZED (
-  SELECT src, count(*) AS degree FROM dir{B} GROUP BY src),
-hubsf AS MATERIALIZED (SELECT src AS node FROM degf
-          ORDER BY degree DESC, src ASC LIMIT {_NSW_ENTRIES}),
-nva AS MATERIALIZED (
-  SELECT vec_id, embedding,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-           AS nrm
-  FROM embeddings
-),
-qb AS MATERIALIZED (SELECT vec_id AS query_id, embedding, nrm FROM nva
-       WHERE vec_id < {N_QUERIES}),
-s0 AS MATERIALIZED (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT q.query_id, h.node, {sim} AS sim
-          FROM qb q CROSS JOIN hubsf h JOIN nva n ON n.vec_id = h.node
-          WHERE h.node != q.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)""")
-    for i in range(1, _NSW_HOPS + 1):
-        ctes.append(f"""cs{i} AS MATERIALIZED (
-  SELECT DISTINCT query_id, node FROM (
-    SELECT query_id, node FROM s{i - 1}
-    UNION ALL
-    SELECT b.query_id, d.dst AS node
-    FROM s{i - 1} b JOIN dir{B} d ON d.src = b.node)
-),
-s{i} AS MATERIALIZED (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT c.query_id, c.node, {sim} AS sim
-          FROM cs{i} c JOIN nva n ON n.vec_id = c.node
-          JOIN nva q ON q.vec_id = c.query_id
-          WHERE c.node != c.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)""")
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"""
-SELECT query_id, rank::BIGINT AS rank, node AS vec_id, sim FROM (
-  SELECT query_id, node, sim, row_number() OVER (
-    PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rank
-  FROM s{_NSW_HOPS}
-) WHERE rank <= {TOPK}"""
-    )
+    """The chain's twin: the old graph over the 5/7 split, one insert
+    per batch of _CHAIN_REMS (batch j searches the accumulated corpus
+    and edge list, exactly the engine's layer-j build), then the serve
+    over the final merged graph."""
+    return _sql_nsw_inserts(_CHAIN_REMS)
 
 
 # HNSW hierarchy parameters: geometric promotion with p = 1/branch
@@ -9554,12 +9211,7 @@ def q_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_iters=_NSW_HOPS, descent_beam=_HNSW_DBEAM,
         descent_iters=_HNSW_DITERS, dim=EMB_DIM, exclude_self=True,
     )
-    return out.select(
-        F.col("query_id").cast("bigint"),
-        F.col("rank").cast("bigint"),
-        F.col("vec_id").cast("bigint"),
-        "sim",
-    )
+    return _topk_rows(out)
 
 
 def q_hnsw_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9599,209 +9251,102 @@ def q_hnsw_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_iters=_NSW_HOPS, descent_beam=_HNSW_DBEAM,
         descent_iters=_HNSW_DITERS, dim=EMB_DIM, exclude_self=True,
     )
-    return out.select(
-        F.col("query_id").cast("bigint"),
-        F.col("rank").cast("bigint"),
-        F.col("vec_id").cast("bigint"),
-        "sim",
-    )
+    return _topk_rows(out)
 
 
-def _oracle_hnsw(tomb: bool = False) -> str:
-    """The layered twin: levels CASE (the portable md5-geometric
-    promotion), the layer-0 graph CTEs (identical to
-    _oracle_nsw_beam's build), one kNN-build CTE block per upper
-    layer, the entry-point scalar (min id of the highest populated
-    layer, corpus-min fallback), every descent hop unrolled
-    top-layer-down, then the standard layer-0 beam seeded from the
-    final descent beam.
-
-    ``tomb`` emits the DELETE variant (hnsw_tombstoned_topk): the
-    graph builds on the FULL corpus (the stored edge lists predate
-    the deletes), then a tombstone CTE filters the level table, the
-    scoring corpus, and every edge list by endpoint — exactly
-    sources/hnsw_index.apply_hnsw_tombstones — before the descent
-    and beam run over the survivor view."""
-    sim = (
-        "list_dot_product(q.embedding::DOUBLE[], n.embedding::DOUBLE[])"
-        " / (q.nrm * n.nrm)"
-    )
-    # Scoring corpus and level table: the live (survivor) views under
-    # tomb, the full tables otherwise. Query vectors always come from
-    # the full corpus (the query batch is not subject to deletion).
-    sn = "hnvl" if tomb else "hnv"
-    lv = "hlvv" if tomb else "hlv"
+def _sql_levels(name: str, src: str) -> str:
+    """(node, lvl): the md5-geometric promotion of hnsw.hnsw_levels."""
     cases = " ".join(
         f"WHEN h % {_HNSW_BRANCH**lay} = 0 THEN {lay}"
         for lay in range(_HNSW_MAXLVL, 0, -1)
     )
-    ctes = [f"""hnv AS MATERIALIZED (
-  SELECT vec_id, embedding,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-           AS nrm
-  FROM embeddings
-),
-hlv AS MATERIALIZED (
+    return f"""{name} AS MATERIALIZED (
   SELECT vec_id AS node, CASE {cases} ELSE 0 END AS lvl
   FROM (SELECT vec_id,
           (('0x' || substr(md5('{_HNSW_LSALT}|' || vec_id::VARCHAR), 1, 15))::BIGINT)
             AS h
-        FROM embeddings)
-),
-hsims AS MATERIALIZED (
-  SELECT q.vec_id AS query_id, e.vec_id,
-         list_dot_product(q.embedding::DOUBLE[], e.embedding::DOUBLE[])
-           / (q.nrm * e.nrm) AS sim
-  FROM hnv q JOIN hnv e ON e.vec_id != q.vec_id
-),
-hknn AS MATERIALIZED (
-  SELECT query_id, vec_id FROM hsims
-  QUALIFY row_number() OVER (
-    PARTITION BY query_id ORDER BY sim DESC, vec_id ASC) <= {_NSW_K}
-),
-hncnt AS (SELECT count(*) AS n FROM embeddings),
-hsc AS MATERIALIZED (
-  SELECT e.vec_id AS src, d.vec_id AS dst
-  FROM embeddings e JOIN embeddings d
-    ON d.vec_id = (('0x' || substr(md5('s17|' || e.vec_id::VARCHAR), 1, 15))::BIGINT
-                   % (SELECT n FROM hncnt))
-  WHERE e.vec_id != d.vec_id
-),
-hedges AS MATERIALIZED (
-  SELECT DISTINCT a, b FROM (
-    SELECT least(query_id, vec_id) AS a, greatest(query_id, vec_id) AS b
-    FROM hknn
-    UNION ALL
-    SELECT least(src, dst) AS a, greatest(src, dst) AS b FROM hsc)
-)"""]
-    if tomb:
-        ctes.append(f"""htomb AS MATERIALIZED (
-  SELECT vec_id FROM embeddings
-  WHERE vec_id % {_TOMB_MOD} = {_TOMB_REM}
-),
-hnvl AS MATERIALIZED (
-  SELECT vec_id, embedding, nrm FROM hnv
-  WHERE vec_id NOT IN (SELECT vec_id FROM htomb)
-),
-hlvv AS MATERIALIZED (
-  SELECT node, lvl FROM hlv
-  WHERE node NOT IN (SELECT vec_id FROM htomb)
-),
-hedgl AS MATERIALIZED (
-  SELECT a, b FROM hedges
-  WHERE a NOT IN (SELECT vec_id FROM htomb)
-    AND b NOT IN (SELECT vec_id FROM htomb)
-),
-hdir0 AS MATERIALIZED (SELECT a AS src, b AS dst FROM hedgl
-          UNION ALL SELECT b, a FROM hedgl)""")
-    else:
-        ctes.append("""hdir0 AS MATERIALIZED (SELECT a AS src, b AS dst FROM hedges
-          UNION ALL SELECT b, a FROM hedges)""")
+        FROM {src})
+)"""
+
+
+def _sql_hnsw_build(p: str, nv: str) -> list[str]:
+    """The layered build over the norms CTE ``nv``: levels ``{p}lv``,
+    layer-0 NSW edges ``{p}edges`` and, for each upper layer L, the
+    exact _HNSW_KUP-NN edges ``{p}u{L}edges`` of the nodes promoted
+    to L."""
+    ctes = [_sql_levels(f"{p}lv", nv), *_sql_knn_edges(p, nv, _NSW_K)]
     for lay in range(1, _HNSW_MAXLVL + 1):
-        ctes.append(f"""hsub{lay} AS MATERIALIZED (
-  SELECT n.vec_id, n.embedding, n.nrm
-  FROM hnv n JOIN hlv l ON l.node = n.vec_id AND l.lvl >= {lay}
-),
-hsimsu{lay} AS MATERIALIZED (
-  SELECT q.vec_id AS query_id, e.vec_id,
-         list_dot_product(q.embedding::DOUBLE[], e.embedding::DOUBLE[])
-           / (q.nrm * e.nrm) AS sim
-  FROM hsub{lay} q JOIN hsub{lay} e ON e.vec_id != q.vec_id
-),
-hknnu{lay} AS MATERIALIZED (
-  SELECT query_id, vec_id FROM hsimsu{lay}
-  QUALIFY row_number() OVER (
-    PARTITION BY query_id ORDER BY sim DESC, vec_id ASC) <= {_HNSW_KUP}
-),
-hedgu{lay} AS MATERIALIZED (
-  SELECT DISTINCT least(query_id, vec_id) AS a,
-         greatest(query_id, vec_id) AS b
-  FROM hknnu{lay}
+        sub = f"{p}sub{lay}"
+        ctes.append(f"""{sub} AS MATERIALIZED (
+  SELECT n.* FROM {nv} n JOIN {p}lv l ON l.node = n.vec_id AND l.lvl >= {lay}
 )""")
-        if tomb:
-            ctes.append(f"""hedgul{lay} AS MATERIALIZED (
-  SELECT a, b FROM hedgu{lay}
-  WHERE a NOT IN (SELECT vec_id FROM htomb)
-    AND b NOT IN (SELECT vec_id FROM htomb)
-),
-hdiru{lay} AS MATERIALIZED (SELECT a AS src, b AS dst FROM hedgul{lay}
-           UNION ALL SELECT b, a FROM hedgul{lay})""")
-        else:
-            ctes.append(f"""hdiru{lay} AS MATERIALIZED (SELECT a AS src, b AS dst FROM hedgu{lay}
-           UNION ALL SELECT b, a FROM hedgu{lay})""")
-    ctes.append(f"""hent AS (
-  SELECT coalesce(
-    (SELECT min(node) FROM {lv} WHERE lvl >= 1
-       AND lvl = (SELECT max(lvl) FROM {lv} WHERE lvl >= 1)),
-    (SELECT min(node) FROM {lv})) AS node
-),
-hqb AS MATERIALIZED (SELECT vec_id AS query_id, embedding, nrm FROM hnv
-        WHERE vec_id < {N_QUERIES}),
-hd0 AS MATERIALIZED (
-  SELECT query_id, node FROM (
-    SELECT query_id, node, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT q.query_id, e.node, {sim} AS sim
-          FROM hqb q CROSS JOIN hent e JOIN {sn} n ON n.vec_id = e.node)
-  ) WHERE rn <= {_HNSW_DBEAM}
-)""")
-    step = 0
-    for lay in range(_HNSW_MAXLVL, 0, -1):
-        for _ in range(_HNSW_DITERS):
-            step += 1
-            ctes.append(f"""hdc{step} AS MATERIALIZED (
-  SELECT DISTINCT query_id, node FROM (
-    SELECT query_id, node FROM hd{step - 1}
-    UNION ALL
-    SELECT b.query_id, d.dst AS node
-    FROM hd{step - 1} b JOIN hdiru{lay} d ON d.src = b.node)
-),
-hd{step} AS MATERIALIZED (
-  SELECT query_id, node FROM (
-    SELECT query_id, node, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT c.query_id, c.node, {sim} AS sim
-          FROM hdc{step} c JOIN {sn} n ON n.vec_id = c.node
-          JOIN hnv q ON q.vec_id = c.query_id)
-  ) WHERE rn <= {_HNSW_DBEAM}
-)""")
-    ctes.append(f"""hb0 AS MATERIALIZED (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT c.query_id, c.node, {sim} AS sim
-          FROM hd{step} c JOIN {sn} n ON n.vec_id = c.node
-          JOIN hnv q ON q.vec_id = c.query_id
-          WHERE c.node != c.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)""")
-    for i in range(1, _NSW_HOPS + 1):
-        ctes.append(f"""hc{i} AS MATERIALIZED (
-  SELECT DISTINCT query_id, node FROM (
-    SELECT query_id, node FROM hb{i - 1}
-    UNION ALL
-    SELECT b.query_id, d.dst AS node
-    FROM hb{i - 1} b JOIN hdir0 d ON d.src = b.node)
-),
-hb{i} AS MATERIALIZED (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT c.query_id, c.node, {sim} AS sim
-          FROM hc{i} c JOIN {sn} n ON n.vec_id = c.node
-          JOIN hnv q ON q.vec_id = c.query_id
-          WHERE c.node != c.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)""")
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"""
-SELECT query_id, rank::BIGINT AS rank, node AS vec_id, sim FROM (
-  SELECT query_id, node, sim, row_number() OVER (
-    PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rank
-  FROM hb{_NSW_HOPS}
-) WHERE rank <= {TOPK}"""
-    )
+        ctes += _sql_knn_edges(f"{p}u{lay}", sub, _HNSW_KUP, shortcuts=False)
+    return ctes
+
+
+def _sql_hnsw_search(
+    p: str, corpus: str, levels: str, dirs: str, queries: str,
+    width: int, iters: int,
+) -> list[str]:
+    """The layered serve: each query enters at the min id of the highest
+    populated upper layer of ``levels`` (corpus-min fallback), descends
+    with a ``width``-wide beam ``{p}d`` (``iters`` hops per layer along
+    ``{dirs}{L}``, the query's own id kept), then runs the layer-0 beam
+    ``{p}b`` along ``{dirs}0`` from the final descent carry."""
+    top = f"(SELECT max(lvl) FROM {levels} WHERE lvl >= 1)"
+    seed = f"""{p}seed AS MATERIALIZED (
+  SELECT q.vec_id AS query_id, coalesce(
+    (SELECT min(node) FROM {levels} WHERE lvl >= 1 AND lvl = {top}),
+    (SELECT min(node) FROM {levels})) AS node
+  FROM {queries} q
+)"""
+    down = [
+        f"{dirs}{lay}"
+        for lay in range(_HNSW_MAXLVL, 0, -1) for _ in range(iters)
+    ]
+    return [
+        seed,
+        *_sql_beam(
+            f"{p}d", f"{p}seed", down, corpus, queries, width,
+            exclude_self=False,
+        ),
+        *_sql_beam(
+            f"{p}b", f"{p}d{len(down)}", [f"{dirs}0"] * _NSW_HOPS, corpus,
+            queries,
+        ),
+    ]
+
+
+def _oracle_hnsw(tomb: bool = False) -> str:
+    """The layered twin: the layered build over the corpus, then the
+    layered serve of the query batch.
+
+    ``tomb`` emits the DELETE variant (hnsw_tombstoned_topk): the
+    graph builds on the FULL corpus (the stored edge lists predate
+    the deletes), then live views filter the level table, the
+    scoring corpus, and every edge list by endpoint — exactly
+    sources/hnsw_index.apply_hnsw_tombstones — before the descent
+    and beam run over the survivor view."""
+    lays = range(1, _HNSW_MAXLVL + 1)
+    lists = ["hedges"] + [f"hu{lay}edges" for lay in lays]
+    ctes = [_sql_norms("hnv", "embeddings"), *_sql_hnsw_build("h", "hnv")]
+    corpus, levels = "hnv", "hlv"
+    if tomb:
+        ctes += [
+            _sql_tomb(),
+            _sql_live("hnvl", "hnv", "vec_id"),
+            _sql_live("hlvl", "hlv", "node"),
+            *(_sql_live(f"{e}l", e, "a", "b") for e in lists),
+        ]
+        corpus, levels, lists = "hnvl", "hlvl", [f"{e}l" for e in lists]
+    return _sql_with([
+        *ctes,
+        *(_sql_dir(f"hdir{lay}", e) for lay, e in enumerate(lists)),
+        _sql_norms("hqb", f"embeddings WHERE vec_id < {N_QUERIES}"),
+        *_sql_hnsw_search(
+            "h", corpus, levels, "hdir", "hqb", _HNSW_DBEAM, _HNSW_DITERS
+        ),
+    ], _sql_topk(f"hb{_NSW_HOPS}"))
 
 
 def q_hnsw_tombstoned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9848,12 +9393,7 @@ def q_hnsw_tombstoned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_iters=_NSW_HOPS, descent_beam=_HNSW_DBEAM,
         descent_iters=_HNSW_DITERS, dim=EMB_DIM, exclude_self=True,
     )
-    return out.select(
-        F.col("query_id").cast("bigint"),
-        F.col("rank").cast("bigint"),
-        F.col("vec_id").cast("bigint"),
-        "sim",
-    )
+    return _topk_rows(out)
 
 
 def q_hnsw_insert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9897,288 +9437,54 @@ def q_hnsw_insert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_iters=_NSW_HOPS, descent_beam=_HNSW_DBEAM,
         descent_iters=_HNSW_DITERS, dim=EMB_DIM, exclude_self=True,
     )
-    return out.select(
-        F.col("query_id").cast("bigint"),
-        F.col("rank").cast("bigint"),
-        F.col("vec_id").cast("bigint"),
-        "sim",
-    )
+    return _topk_rows(out)
 
 
 def _oracle_hnsw_insert() -> str:
-    """The layered insert's twin, five unrolled blocks: (1) the old
-    split's layered build (levels CASE + layer-0 kNN/shortcuts + one
-    kNN block per upper layer), (2) the batch's levels, (3) the
-    insert descent (k_upper-wide, one hop per layer top-down) with a
-    per-layer link CTE gated on the batch node's promotion level,
-    (4) the layer-0 insert beam seeded from the final descent carry
-    (no self-exclusion — ids are disjoint) linking each new node's
-    top-k, (5) the standard layered serve over the merged corpus /
-    levels / edge lists."""
-    sim = (
-        "list_dot_product(q.embedding::DOUBLE[], n.embedding::DOUBLE[])"
-        " / (q.nrm * n.nrm)"
-    )
-    cases = " ".join(
-        f"WHEN h % {_HNSW_BRANCH**lay} = 0 THEN {lay}"
-        for lay in range(_HNSW_MAXLVL, 0, -1)
-    )
-    lvl_cte = (
-        "SELECT vec_id AS node, CASE " + cases + " ELSE 0 END AS lvl\n"
-        "  FROM (SELECT vec_id,\n"
-        f"          (('0x' || substr(md5('{_HNSW_LSALT}|' || vec_id::VARCHAR), 1, 15))::BIGINT)\n"
-        "            AS h\n"
-        "        FROM {src})"
-    )
-    # (1) old layered build
-    ctes = [f"""xoc AS MATERIALIZED (
-  SELECT vec_id, embedding FROM embeddings
-  WHERE vec_id % {_INS_MOD} != {_INS_REM}
-),
-xov AS MATERIALIZED (
-  SELECT vec_id, embedding,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-           AS nrm
-  FROM xoc
-),
-xlvo AS MATERIALIZED (
-  {lvl_cte.format(src="xoc")}
-),
-xsims AS MATERIALIZED (
-  SELECT q.vec_id AS query_id, e.vec_id,
-         list_dot_product(q.embedding::DOUBLE[], e.embedding::DOUBLE[])
-           / (q.nrm * e.nrm) AS sim
-  FROM xov q JOIN xov e ON e.vec_id != q.vec_id
-),
-xknn AS MATERIALIZED (
-  SELECT query_id, vec_id FROM xsims
-  QUALIFY row_number() OVER (
-    PARTITION BY query_id ORDER BY sim DESC, vec_id ASC) <= {_NSW_K}
-),
-xncnt AS MATERIALIZED (SELECT count(*) AS n FROM xoc),
-xsc AS MATERIALIZED (
-  SELECT e.vec_id AS src, d.vec_id AS dst
-  FROM xoc e JOIN xoc d
-    ON d.vec_id = (('0x' || substr(md5('s17|' || e.vec_id::VARCHAR), 1, 15))::BIGINT
-                   % (SELECT n FROM xncnt))
-  WHERE e.vec_id != d.vec_id
-),
-xedges AS MATERIALIZED (
-  SELECT DISTINCT a, b FROM (
-    SELECT least(query_id, vec_id) AS a, greatest(query_id, vec_id) AS b
-    FROM xknn
-    UNION ALL
-    SELECT least(src, dst) AS a, greatest(src, dst) AS b FROM xsc)
-),
-xdir0 AS MATERIALIZED (SELECT a AS src, b AS dst FROM xedges
-          UNION ALL SELECT b, a FROM xedges)"""]
-    for lay in range(1, _HNSW_MAXLVL + 1):
-        ctes.append(f"""xsub{lay} AS MATERIALIZED (
-  SELECT n.vec_id, n.embedding, n.nrm
-  FROM xov n JOIN xlvo l ON l.node = n.vec_id AND l.lvl >= {lay}
-),
-xsimsu{lay} AS MATERIALIZED (
-  SELECT q.vec_id AS query_id, e.vec_id,
-         list_dot_product(q.embedding::DOUBLE[], e.embedding::DOUBLE[])
-           / (q.nrm * e.nrm) AS sim
-  FROM xsub{lay} q JOIN xsub{lay} e ON e.vec_id != q.vec_id
-),
-xknnu{lay} AS MATERIALIZED (
-  SELECT query_id, vec_id FROM xsimsu{lay}
-  QUALIFY row_number() OVER (
-    PARTITION BY query_id ORDER BY sim DESC, vec_id ASC) <= {_HNSW_KUP}
-),
-xedgu{lay} AS MATERIALIZED (
-  SELECT DISTINCT least(query_id, vec_id) AS a,
-         greatest(query_id, vec_id) AS b
-  FROM xknnu{lay}
-),
-xdiru{lay} AS MATERIALIZED (SELECT a AS src, b AS dst FROM xedgu{lay}
-           UNION ALL SELECT b, a FROM xedgu{lay})""")
-    # (2) the batch + its levels, (3) insert descent + links
-    ctes.append(f"""xnc AS MATERIALIZED (
-  SELECT vec_id, embedding FROM embeddings
-  WHERE vec_id % {_INS_MOD} = {_INS_REM} AND embedding IS NOT NULL
-),
-xnv AS MATERIALIZED (
-  SELECT vec_id, embedding,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-           AS nrm
-  FROM xnc
-),
-xlvn AS MATERIALIZED (
-  {lvl_cte.format(src="xnc")}
-),
-xent AS (
-  SELECT coalesce(
-    (SELECT min(node) FROM xlvo WHERE lvl >= 1
-       AND lvl = (SELECT max(lvl) FROM xlvo WHERE lvl >= 1)),
-    (SELECT min(node) FROM xlvo)) AS node
-),
-xd0 AS MATERIALIZED (
-  SELECT query_id, node FROM (
-    SELECT query_id, node, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT q.query_id, e.node, {sim} AS sim
-          FROM (SELECT vec_id AS query_id, embedding, nrm FROM xnv) q
-          CROSS JOIN xent e JOIN xov n ON n.vec_id = e.node)
-  ) WHERE rn <= {_HNSW_KUP}
-)""")
-    step = 0
-    for lay in range(_HNSW_MAXLVL, 0, -1):
-        step += 1
-        ctes.append(f"""xdc{step} AS MATERIALIZED (
-  SELECT DISTINCT query_id, node FROM (
-    SELECT query_id, node FROM xd{step - 1}
-    UNION ALL
-    SELECT b.query_id, d.dst AS node
-    FROM xd{step - 1} b JOIN xdiru{lay} d ON d.src = b.node)
-),
-xd{step} AS MATERIALIZED (
-  SELECT query_id, node FROM (
-    SELECT query_id, node, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT c.query_id, c.node, {sim} AS sim
-          FROM xdc{step} c JOIN xov n ON n.vec_id = c.node
-          JOIN xnv q ON q.vec_id = c.query_id)
-  ) WHERE rn <= {_HNSW_KUP}
-),
-xlnku{lay} AS MATERIALIZED (
-  SELECT DISTINCT least(query_id, node) AS a, greatest(query_id, node) AS b
-  FROM xd{step}
-  WHERE query_id IN (SELECT node FROM xlvn WHERE lvl >= {lay})
-),
-xmedgu{lay} AS MATERIALIZED (
-  SELECT DISTINCT a, b FROM (
-    SELECT a, b FROM xedgu{lay} UNION ALL SELECT a, b FROM xlnku{lay})
-),
-xmdiru{lay} AS MATERIALIZED (SELECT a AS src, b AS dst FROM xmedgu{lay}
-            UNION ALL SELECT b, a FROM xmedgu{lay})""")
-    # (4) layer-0 insert beam from the final descent carry
-    ctes.append(f"""xib0 AS MATERIALIZED (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT c.query_id, c.node, {sim} AS sim
-          FROM xd{step} c JOIN xov n ON n.vec_id = c.node
-          JOIN xnv q ON q.vec_id = c.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)""")
-    for i in range(1, _NSW_HOPS + 1):
-        ctes.append(f"""xic{i} AS MATERIALIZED (
-  SELECT DISTINCT query_id, node FROM (
-    SELECT query_id, node FROM xib{i - 1}
-    UNION ALL
-    SELECT b.query_id, d.dst AS node
-    FROM xib{i - 1} b JOIN xdir0 d ON d.src = b.node)
-),
-xib{i} AS MATERIALIZED (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT c.query_id, c.node, {sim} AS sim
-          FROM xic{i} c JOIN xov n ON n.vec_id = c.node
-          JOIN xnv q ON q.vec_id = c.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)""")
-    # (5) merged structures + the standard layered serve
-    ctes.append(f"""xlnk0 AS MATERIALIZED (
-  SELECT DISTINCT least(query_id, node) AS a, greatest(query_id, node) AS b
-  FROM (SELECT query_id, node, row_number() OVER (
-          PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rnk
-        FROM xib{_NSW_HOPS})
-  WHERE rnk <= {_NSW_K}
-),
-xme AS MATERIALIZED (
-  SELECT DISTINCT a, b FROM (
-    SELECT a, b FROM xedges UNION ALL SELECT a, b FROM xlnk0)
-),
-xmdir0 AS MATERIALIZED (SELECT a AS src, b AS dst FROM xme
-           UNION ALL SELECT b, a FROM xme),
-xmv AS MATERIALIZED (
-  SELECT vec_id, embedding, nrm FROM xov
-  UNION ALL SELECT vec_id, embedding, nrm FROM xnv
-),
-xmlv AS MATERIALIZED (
-  SELECT node, lvl FROM xlvo UNION ALL SELECT node, lvl FROM xlvn
-),
-xsent AS (
-  SELECT coalesce(
-    (SELECT min(node) FROM xmlv WHERE lvl >= 1
-       AND lvl = (SELECT max(lvl) FROM xmlv WHERE lvl >= 1)),
-    (SELECT min(node) FROM xmlv)) AS node
-),
-xqb AS MATERIALIZED (
-  SELECT vec_id AS query_id, embedding,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-           AS nrm
-  FROM embeddings WHERE vec_id < {N_QUERIES}
-),
-xsd0 AS MATERIALIZED (
-  SELECT query_id, node FROM (
-    SELECT query_id, node, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT q.query_id, e.node, {sim} AS sim
-          FROM xqb q CROSS JOIN xsent e JOIN xmv n ON n.vec_id = e.node)
-  ) WHERE rn <= {_HNSW_DBEAM}
-)""")
-    sstep = 0
-    for lay in range(_HNSW_MAXLVL, 0, -1):
-        for _ in range(_HNSW_DITERS):
-            sstep += 1
-            ctes.append(f"""xsdc{sstep} AS MATERIALIZED (
-  SELECT DISTINCT query_id, node FROM (
-    SELECT query_id, node FROM xsd{sstep - 1}
-    UNION ALL
-    SELECT b.query_id, d.dst AS node
-    FROM xsd{sstep - 1} b JOIN xmdiru{lay} d ON d.src = b.node)
-),
-xsd{sstep} AS MATERIALIZED (
-  SELECT query_id, node FROM (
-    SELECT query_id, node, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT c.query_id, c.node, {sim} AS sim
-          FROM xsdc{sstep} c JOIN xmv n ON n.vec_id = c.node
-          JOIN xqb q ON q.query_id = c.query_id)
-  ) WHERE rn <= {_HNSW_DBEAM}
-)""")
-    ctes.append(f"""xsb0 AS MATERIALIZED (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT c.query_id, c.node, {sim} AS sim
-          FROM xsd{sstep} c JOIN xmv n ON n.vec_id = c.node
-          JOIN xqb q ON q.query_id = c.query_id
-          WHERE c.node != c.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)""")
-    for i in range(1, _NSW_HOPS + 1):
-        ctes.append(f"""xsc{i} AS MATERIALIZED (
-  SELECT DISTINCT query_id, node FROM (
-    SELECT query_id, node FROM xsb{i - 1}
-    UNION ALL
-    SELECT b.query_id, d.dst AS node
-    FROM xsb{i - 1} b JOIN xmdir0 d ON d.src = b.node)
-),
-xsb{i} AS MATERIALIZED (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT c.query_id, c.node, {sim} AS sim
-          FROM xsc{i} c JOIN xmv n ON n.vec_id = c.node
-          JOIN xqb q ON q.query_id = c.query_id
-          WHERE c.node != c.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)""")
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"""
-SELECT query_id, rank::BIGINT AS rank, node AS vec_id, sim FROM (
-  SELECT query_id, node, sim, row_number() OVER (
-    PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rank
-  FROM xsb{_NSW_HOPS}
-) WHERE rank <= {TOPK}"""
-    )
+    """The layered insert's twin: the old split's layered build, the
+    batch's levels, the batch's insert search over the old hierarchy
+    (a _HNSW_KUP-wide descent, one hop per layer, then the layer-0
+    beam), links from each new node to its descent carry at every layer
+    it was promoted to and to its _NSW_K best layer-0 nodes, then the
+    standard layered serve over the merged corpus, levels and edges."""
+    lays = range(1, _HNSW_MAXLVL + 1)
+    ctes = [
+        _sql_norms("xov", f"embeddings WHERE vec_id % {_INS_MOD} != {_INS_REM}"),
+        *_sql_hnsw_build("x", "xov"),
+        _sql_dir("xdir0", "xedges"),
+        *(_sql_dir(f"xdir{lay}", f"xu{lay}edges") for lay in lays),
+        _sql_norms(
+            "xnv",
+            f"embeddings WHERE vec_id % {_INS_MOD} = {_INS_REM}"
+            " AND embedding IS NOT NULL",
+        ),
+        _sql_levels("xlvn", "xnv"),
+        *_sql_hnsw_search("xi", "xov", "xlv", "xdir", "xnv", _HNSW_KUP, 1),
+        _sql_link("xm0edges", "xedges", f"xib{_NSW_HOPS}", _NSW_K),
+    ]
+    # With one hop per layer, the descent carry on layer L is beam
+    # xid{_HNSW_MAXLVL - L + 1}; k = _HNSW_KUP, its width, links each
+    # promoted new node to the whole carry.
+    ctes += [
+        _sql_link(
+            f"xm{lay}edges", f"xu{lay}edges", f"xid{_HNSW_MAXLVL - lay + 1}",
+            _HNSW_KUP, f"query_id IN (SELECT node FROM xlvn WHERE lvl >= {lay})",
+        )
+        for lay in lays
+    ]
+    return _sql_with([
+        *ctes,
+        *(
+            _sql_dir(f"xmdir{lay}", f"xm{lay}edges")
+            for lay in range(_HNSW_MAXLVL + 1)
+        ),
+        "xmv AS MATERIALIZED (SELECT * FROM xov UNION ALL SELECT * FROM xnv)",
+        "xmlv AS MATERIALIZED (SELECT * FROM xlv UNION ALL SELECT * FROM xlvn)",
+        _sql_norms("xqb", f"embeddings WHERE vec_id < {N_QUERIES}"),
+        *_sql_hnsw_search(
+            "xs", "xmv", "xmlv", "xmdir", "xqb", _HNSW_DBEAM, _HNSW_DITERS
+        ),
+    ], _sql_topk(f"xsb{_NSW_HOPS}"))
 
 
 # Filtered graph search: ~30% selectivity on the embeddings table's
@@ -10216,121 +9522,27 @@ def q_nsw_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         allowed=allowed, beam_width=_NSW_BEAM, n_iters=_NSW_HOPS,
         n_entries=_NSW_ENTRIES, dim=EMB_DIM, exclude_self=True,
     )
-    return out.select(
-        F.col("query_id").cast("bigint"),
-        F.col("rank").cast("bigint"),
-        F.col("vec_id").cast("bigint"),
-        "sim",
-    )
+    return _topk_rows(out)
 
 
 def _oracle_nsw_filtered() -> str:
-    """nsw_beam's unrolled hop CTEs (identical graph, hubs, beams)
-    plus the filtered-result block: union every hop's candidate set
-    (the visited nodes), keep ids whose label passes, re-score with
-    the self-exclusion, rank top-k."""
-    sim = (
-        "list_dot_product(q.embedding::DOUBLE[], n.embedding::DOUBLE[])"
-        " / (q.nrm * n.nrm)"
-    )
+    """nsw_beam's serve (identical graph, hubs, beams) plus the
+    filtered-result block: every node the walk visited (the seed and
+    each hop's candidates) whose label passes, re-scored with the
+    self-exclusion, top-k."""
     labels = ", ".join(str(x) for x in _FILT_LABELS)
-    ctes = [f"""fnv AS MATERIALIZED (
-  SELECT vec_id, embedding,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-           AS nrm
-  FROM embeddings
-),
-fsims AS MATERIALIZED (
-  SELECT q.vec_id AS query_id, e.vec_id,
-         list_dot_product(q.embedding::DOUBLE[], e.embedding::DOUBLE[])
-           / (q.nrm * e.nrm) AS sim
-  FROM fnv q JOIN fnv e ON e.vec_id != q.vec_id
-),
-fknn AS MATERIALIZED (
-  SELECT query_id, vec_id FROM fsims
-  QUALIFY row_number() OVER (
-    PARTITION BY query_id ORDER BY sim DESC, vec_id ASC) <= {_NSW_K}
-),
-fncnt AS (SELECT count(*) AS n FROM embeddings),
-fsc AS MATERIALIZED (
-  SELECT e.vec_id AS src, d.vec_id AS dst
-  FROM embeddings e JOIN embeddings d
-    ON d.vec_id = (('0x' || substr(md5('s17|' || e.vec_id::VARCHAR), 1, 15))::BIGINT
-                   % (SELECT n FROM fncnt))
-  WHERE e.vec_id != d.vec_id
-),
-fedges AS MATERIALIZED (
-  SELECT DISTINCT a, b FROM (
-    SELECT least(query_id, vec_id) AS a, greatest(query_id, vec_id) AS b
-    FROM fknn
-    UNION ALL
-    SELECT least(src, dst) AS a, greatest(src, dst) AS b FROM fsc)
-),
-fdir AS MATERIALIZED (SELECT a AS src, b AS dst FROM fedges
-         UNION ALL SELECT b, a FROM fedges),
-fdeg AS (SELECT src, count(*) AS degree FROM fdir GROUP BY src),
-fhubs AS MATERIALIZED (SELECT src AS node FROM fdeg
-          ORDER BY degree DESC, src ASC LIMIT {_NSW_ENTRIES}),
-fqb AS MATERIALIZED (SELECT vec_id AS query_id, embedding, nrm FROM fnv
-        WHERE vec_id < {N_QUERIES}),
-fseed AS MATERIALIZED (
-  SELECT q.query_id, h.node FROM fqb q CROSS JOIN fhubs h
-),
-fb0 AS MATERIALIZED (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT q.query_id, s.node, {sim} AS sim
-          FROM fseed s JOIN fqb q ON q.query_id = s.query_id
-          JOIN fnv n ON n.vec_id = s.node
-          WHERE s.node != s.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)"""]
-    for i in range(1, _NSW_HOPS + 1):
-        ctes.append(f"""fc{i} AS MATERIALIZED (
-  SELECT DISTINCT query_id, node FROM (
-    SELECT query_id, node FROM fb{i - 1}
-    UNION ALL
-    SELECT b.query_id, d.dst AS node
-    FROM fb{i - 1} b JOIN fdir d ON d.src = b.node)
-),
-fb{i} AS MATERIALIZED (
-  SELECT query_id, node, sim FROM (
-    SELECT query_id, node, sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rn
-    FROM (SELECT c.query_id, c.node, {sim} AS sim
-          FROM fc{i} c JOIN fnv n ON n.vec_id = c.node
-          JOIN fnv q ON q.vec_id = c.query_id
-          WHERE c.node != c.query_id)
-  ) WHERE rn <= {_NSW_BEAM}
-)""")
-    unions = "\n    UNION ALL\n    ".join(
-        ["SELECT query_id, node FROM fseed"]
-        + [
-            f"SELECT query_id, node FROM fc{i}"
-            for i in range(1, _NSW_HOPS + 1)
-        ]
+    visited = " UNION ALL ".join(
+        ["SELECT query_id, node FROM bseed"]
+        + [f"SELECT query_id, node FROM bc{i}" for i in range(1, _NSW_HOPS + 1)]
     )
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f""",
-fvisited AS (
-  SELECT DISTINCT query_id, node FROM (
-    {unions})
-),
-fhits AS (
-  SELECT query_id, node FROM fvisited
+    return _sql_with([
+        *_sql_nsw_serve("embeddings"),
+        f"""hits AS MATERIALIZED (
+  SELECT DISTINCT query_id, node FROM ({visited})
   WHERE node IN (SELECT vec_id FROM embeddings WHERE label IN ({labels}))
-)
-SELECT query_id, rank::BIGINT AS rank, node AS vec_id, sim FROM (
-  SELECT query_id, node, sim, row_number() OVER (
-    PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rank
-  FROM (SELECT v.query_id, v.node, {sim} AS sim
-        FROM fhits v JOIN fnv n ON n.vec_id = v.node
-        JOIN fnv q ON q.vec_id = v.query_id
-        WHERE v.node != v.query_id)
-) WHERE rank <= {TOPK}"""
-    )
+)""",
+        *_sql_beam("f", "hits", [], "nv", "qb", width=TOPK),
+    ], _sql_topk("f0"))
 
 
 def q_dedup_groups_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10452,12 +9664,7 @@ def q_auto_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         beam_width=_NSW_BEAM, n_iters=_NSW_HOPS, n_entries=_NSW_ENTRIES,
         nsw_k=_NSW_K, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
     )
-    return out.select(
-        F.col("query_id").cast("bigint"),
-        F.col("rank").cast("bigint"),
-        F.col("vec_id").cast("bigint"),
-        "sim",
-    )
+    return _topk_rows(out)
 
 
 def _oracle_auto_ann_topk() -> str:
@@ -10540,12 +9747,7 @@ def q_auto_ann_topk_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         beam_width=_NSW_BEAM, n_iters=_NSW_HOPS, n_entries=_NSW_ENTRIES,
         nsw_k=_NSW_K, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
     )
-    return out.select(
-        F.col("query_id").cast("bigint"),
-        F.col("rank").cast("bigint"),
-        F.col("vec_id").cast("bigint"),
-        "sim",
-    )
+    return _topk_rows(out)
 
 
 def _oracle_auto_ann_clustered() -> str:
@@ -10591,18 +9793,7 @@ def q_semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle_semdedup() -> str:
     return f"""
-WITH RECURSIVE cent AS (
-  SELECT vec_id AS cid, embedding AS cvec FROM embeddings
-  ORDER BY vec_id LIMIT {_IVF_CELLS}
-),
-assign AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY {_sql_cos('e.embedding', 'c.cvec')} DESC, c.cid ASC) AS rn
-  FROM embeddings e CROSS JOIN cent c
-),
-cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rn = 1),
+WITH RECURSIVE {_sql_ivf_cells()},
 pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
   FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id

@@ -302,11 +302,13 @@ def test_short_query_raises_lazily(spark):
 
 
 def test_insert_oracle_degenerates_to_beam_oracle():
-    """Anti-drift pin between the two hand-maintained oracle copies:
-    with an EMPTY insert batch (no id % 7 == 3), _oracle_nsw_insert's
-    graph-build + serve CTEs must produce exactly _oracle_nsw_beam's
-    result on the same corpus — a tie-order fix applied to one copy
-    and not the other breaks this without needing the Spark engine."""
+    """Anti-drift pins for the graph oracle generators: on a corpus with
+    no insert batch (no id % 7 in (3, 5)) and no tombstone (no
+    id % 9 == 4), the insert, chain and tombstone twins must return
+    exactly _oracle_nsw_beam's rows, and the layered insert and
+    tombstone twins exactly _oracle_hnsw()'s — a tie-order or build
+    change that reaches one composition and not the other breaks this
+    without needing the Spark engine."""
     import importlib.util
 
     import duckdb
@@ -317,7 +319,7 @@ def test_insert_oracle_degenerates_to_beam_oracle():
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
     rng = random.Random(11)
-    ids = [i for i in range(40) if i % 7 != 3][:24]
+    ids = [i for i in range(80) if i % 7 not in (3, 5) and i % 9 != 4][:24]
     con = duckdb.connect()
     con.execute(
         "CREATE TABLE embeddings AS SELECT * FROM (VALUES "
@@ -328,9 +330,19 @@ def test_insert_oracle_degenerates_to_beam_oracle():
         )
         + ") t(vec_id, embedding)"
     )
-    a = con.execute(m._oracle_nsw_beam()).fetchall()
-    b = con.execute(m._oracle_nsw_insert()).fetchall()
-    assert sorted(a) == sorted(b) and len(a) > 0
+
+    def rows(sql):
+        return sorted(con.execute(sql).fetchall())
+
+    beam = rows(m._oracle_nsw_beam())
+    assert len(beam) > 0
+    assert rows(m._oracle_nsw_insert()) == beam
+    assert rows(m._oracle_nsw_chain()) == beam
+    assert rows(m._oracle_nsw_tomb()) == beam
+    hnsw = rows(m._oracle_hnsw())
+    assert len(hnsw) > 0
+    assert rows(m._oracle_hnsw(tomb=True)) == hnsw
+    assert rows(m._oracle_hnsw_insert()) == hnsw
 
 
 def test_broadcast_guards(spark):

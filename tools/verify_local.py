@@ -80,6 +80,7 @@ def main() -> None:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     n_pass = n_fail = n_rows_only = 0
+    spark_s = duck_s = 0.0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -97,10 +98,12 @@ def main() -> None:
             n_fail += 1
             continue
         dt = time.time() - t0
+        spark_s += dt
         if name not in oracles:
             print(f"ROWS {name}: {len(rows)} rows (rows-only, {dt:.1f}s)")
             n_rows_only += 1
             continue
+        t0 = time.time()
         try:
             cur = con.execute(oracles[name])
             ocols = [d[0] for d in cur.description]
@@ -109,6 +112,9 @@ def main() -> None:
             print(f"FAIL {name}: duckdb error: {str(e)[:300]}")
             n_fail += 1
             continue
+        ddt = time.time() - t0
+        duck_s += ddt
+        took = f"({dt:.1f}s spark, {ddt:.1f}s duckdb)"
         problems = []
         if len(rows) != len(orows):
             problems.append(f"rows {len(rows)} vs {len(orows)}")
@@ -128,12 +134,15 @@ def main() -> None:
             for x in o_only:
                 print(f"   duck-only:  {x[:220]}")
         if problems:
-            print(f"FAIL {name}: {'; '.join(problems)} ({dt:.1f}s)")
+            print(f"FAIL {name}: {'; '.join(problems)} {took}")
             n_fail += 1
         else:
-            print(f"PASS {name}: {len(rows)} rows ({dt:.1f}s)")
+            print(f"PASS {name}: {len(rows)} rows {took}")
             n_pass += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
+    print(
+        f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only"
+        f" ({spark_s:.0f}s spark, {duck_s:.0f}s duckdb)"
+    )
 
 
 if __name__ == "__main__":
