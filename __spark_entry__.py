@@ -5494,41 +5494,24 @@ def q_ann_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed cells; the recall join is queries x k rows."""
     from pyspark.sql.window import Window
 
-    from cs6300_vectordbs_spark.functions.vector import (
-        cosine_from_parts,
-        dot,
-        l2_norm,
+    from cs6300_vectordbs_spark.functions.vector import cosine_from_parts, dot
+    from cs6300_vectordbs_spark.operators.ann import (
+        assign_cells,
+        ivf_centroids,
+        probe_cells,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
     q = _query_batch(emb)
+    cent = ivf_centroids(emb, _IVF_CELLS)
 
     # Cell assignment and full probe ranking are computed ONCE and
     # sliced per probe depth — the per-arm work is only the probed-cell
     # scan + window (the oracle is structured identically). Re-running
     # ivf_topk per arm would redo the corpus-side argmax three times.
-    # Norms are factored under every join (r09, the similarity_topk /
-    # _ivf_from_centroids discipline): computed once per corpus row /
-    # query row / centroid in the checkpointed tables, so the per-pair
-    # work in the assignment, the probe ranking, AND each arm's
-    # re-rank window is the dot alone. cosine_from_parts is
-    # bit-identical to the inline cosine.
-    cent = (
-        emb.orderBy(F.col("vec_id").asc())
-        .limit(_IVF_CELLS)
-        .select(F.col("vec_id").alias("__cid"), F.col("embedding").alias("__cvec"))
-        .select("*", l2_norm("__cvec", EMB_DIM).alias("__cn"))
-    )
-    sim_to_cent = cosine_from_parts(
-        dot("embedding", "__cvec", EMB_DIM), F.col("__vn"), F.col("__cn")
-    )
-    qsim = cosine_from_parts(
-        dot("query_vec", "__cvec", EMB_DIM), F.col("__qn"), F.col("__cn")
-    )
-    qw = Window.partitionBy("query_id").orderBy(
-        qsim.desc(), F.col("__cid").asc()
-    )
-
+    # Both tables carry their per-row norms, so each arm's re-rank is
+    # one dot per pair.
+    #
     # The three eager inputs (exact arm, cell assignment, probe
     # ranking) are mutually independent, so they are materialized from
     # a small thread pool and Spark overlaps the jobs (guide §2.6) —
@@ -5542,41 +5525,14 @@ def q_ann_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("query_id", "vec_id").localCheckpoint(eager=True)
 
     def _assigned():
-        return (
-            emb.select("*", l2_norm("embedding", EMB_DIM).alias("__vn"))
-            .crossJoin(F.broadcast(cent))
-            .groupBy("vec_id")
-            .agg(
-                F.max_by(
-                    F.struct(
-                        F.col("__cid").alias("cell"),
-                        F.col("embedding").alias("vec"),
-                        F.col("__vn").alias("vn"),
-                    ),
-                    F.struct(sim_to_cent.alias("s"), (-F.col("__cid")).alias("nc")),
-                ).alias("best")
-            )
-            .select(
-                "vec_id",
-                F.col("best.cell").alias("cell"),
-                F.col("best.vec").alias("vec"),
-                F.col("best.vn").alias("__vn"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        return assign_cells(
+            emb, cent, dim=EMB_DIM, carry=("embedding", "__vn")
+        ).localCheckpoint(eager=True)
 
     def _probes():
-        return (
-            q.select("*", l2_norm("query_vec", EMB_DIM).alias("__qn"))
-            .crossJoin(F.broadcast(cent))
-            .withColumn("__rn", F.row_number().over(qw))
-            .filter(F.col("__rn") <= max(_TUNE_PROBES))
-            .select(
-                "query_id", "query_vec", "__qn",
-                F.col("__cid").alias("cell"), "__rn",
-            )
-            .localCheckpoint(eager=True)
-        )
+        return probe_cells(
+            q, cent, dim=EMB_DIM, n_probe=max(_TUNE_PROBES)
+        ).localCheckpoint(eager=True)
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         exact_f = pool.submit(_exact)
@@ -5591,10 +5547,10 @@ def q_ann_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in _TUNE_PROBES:
         cand = assigned.join(
             F.broadcast(probes.filter(F.col("__rn") <= p)), on="cell"
-        ).filter(F.col("vec_id") != F.col("query_id"))
-        rw = Window.partitionBy("query_id").orderBy(
+        ).filter(F.col("vec_id") != F.col("__qid"))
+        rw = Window.partitionBy("__qid").orderBy(
             cosine_from_parts(
-                dot("query_vec", "vec", EMB_DIM),
+                dot("__qvec", "embedding", EMB_DIM),
                 F.col("__qn"),
                 F.col("__vn"),
             ).desc(),
@@ -5603,7 +5559,7 @@ def q_ann_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         approx = (
             cand.withColumn("__r", F.row_number().over(rw))
             .filter(F.col("__r") <= TOPK)
-            .select("query_id", "vec_id")
+            .select(F.col("__qid").alias("query_id"), "vec_id")
         )
         hits = exact.join(approx, on=["query_id", "vec_id"], how="inner")
         parts.append(
@@ -5809,7 +5765,9 @@ def _oracle_lsh_tuning() -> str:
     """Value-hash twin for the band-count sweep: the SAME hyperplane
     literals produce 16 shared bit columns; each arm regroups them
     into band keys, joins candidates, exact-cosine re-ranks, and
-    counts hits against the exact top-k."""
+    counts hits against the exact top-k. The shared ``cbits``,
+    ``qbits`` and ``exact`` CTEs are MATERIALIZED: every band arm reads
+    them, and DuckDB would otherwise recompute them per arm."""
     from cs6300_vectordbs_spark.operators.ann import _hyperplanes
 
     planes = _hyperplanes(EMB_DIM, _SRP_BITS, _SRP_SEED)
@@ -5874,14 +5832,14 @@ hits{bands} AS (
             f" / (SELECT n FROM n_exact), 9) AS recall_at_k"
         )
     return f"""
-WITH cbits AS (
+WITH cbits AS MATERIALIZED (
   SELECT e.vec_id, e.embedding, {cbit_cols} FROM embeddings e
 ),
-qbits AS (
+qbits AS MATERIALIZED (
   SELECT q.vec_id AS query_id, q.embedding AS qvec, {qbit_cols}
   FROM embeddings q WHERE q.vec_id < {N_QUERIES}
 ),
-exact AS (
+exact AS MATERIALIZED (
   SELECT query_id, vec_id FROM (
     SELECT q.vec_id AS query_id, e.vec_id AS vec_id,
            row_number() OVER (
@@ -6058,9 +6016,9 @@ def q_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stored-index serving path: ensure the on-disk IVF index
     exists (create-if-absent, S9 — the reference's PersistentClient /
     count-guard lifecycle), then serve top-k from it with directory-
-    level partition pruning on the probed cells. Same centroids,
-    assignment, and tie rules as ivf_topk -> shares its full
-    value-hash oracle."""
+    level partition pruning on the probed cells. The index is built
+    with ivf_topk's quantizer (ann.ivf_centroids, ann.assign_cells) ->
+    shares its full value-hash oracle."""
     from cs6300_vectordbs_spark.sources.vector_index import (
         ensure_ivf_index,
         search_ivf_index,
@@ -6089,13 +6047,14 @@ def q_ivf_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max/avg plus the imbalance factor (max/avg). A skewed cell
     means one probe scans far more than its share (the latency tail at
     100 TB); the fix is more cells or a trained quantizer. One
-    corpus-side argmax (same assignment plan as ivf_topk) + a 16-row
+    ann.assign_cells argmax (the cells ivf_topk scans) + a 16-row
     aggregate."""
-    from cs6300_vectordbs_spark.operators.ann import assign_cells
+    from cs6300_vectordbs_spark.operators.ann import assign_cells, ivf_centroids
+    from cs6300_vectordbs_spark.operators.util import spread
 
     emb = _t(spark, sf_dir, "embeddings")
     assigned = assign_cells(
-        emb, dim=EMB_DIM, n_cells=_IVF_CELLS,
+        spread(emb), ivf_centroids(emb, _IVF_CELLS), dim=EMB_DIM
     )
     per_cell = assigned.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n_vecs")
@@ -6210,7 +6169,7 @@ def q_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     star: batch-trained indexing): deterministic Lloyd's k-means —
     lowest-id init, a bounded lowest-md5(vec_id) training sample
     (layout-independent AND SQL-reproducible, vs the MLlib variant's
-    RNG sampling), argmax-cosine assignment with lowest-cid ties,
+    RNG sampling), the ann.assign_cells assignment,
     per-iteration centroid means rounded to 9 dp on both engines — so
     the trained index gets a FULL value-hash oracle (_oracle_ivf_kmeans
     unrolls the identical three Lloyd iterations as CTEs). The
@@ -8144,7 +8103,7 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     out = ivfpq_topk(
         emb, _query_batch(emb), TOPK, dim=EMB_DIM,
-        n_cells=16, n_probe=8, m=8, ksub=16,
+        n_cells=_IVF_CELLS, n_probe=8, m=8, ksub=16,
         candidates_per_query=4 * TOPK, exclude_self=True,
     )
     return out.select(
@@ -8157,16 +8116,16 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_ivfpq() -> str:
-    """Full value-hash twin for IVF-PQ: sampled centroids + sampled
-    codebook (both = the 16 lowest-id vectors), argmax-cosine cell
-    assignment, per-subspace argmin-L2 PQ codes, 8-probe candidate
+    """Full value-hash twin for IVF-PQ: the _sql_ivf_cells cells and
+    probe ranking, a sampled codebook (the 16 lowest-id vectors),
+    per-subspace argmin-L2 PQ codes, 8-probe candidate
     generation, ADC scoring (sum of per-subspace codebook dots — the
     engine computes these driver-side with an explicit sequential
     fold, so the left-associated SQL sums here are bit-identical),
     ADC shortlist of 20, exact-cosine re-rank to top-5. Spark array
     indexing in d2/dot slices is 0-based; DuckDB's is 1-based (+1s
     below)."""
-    m, sub, n_cells, n_probe, cand_n = 8, EMB_DIM // 8, 16, 8, 4 * TOPK
+    m, sub, ksub, n_probe, cand_n = 8, EMB_DIM // 8, 16, 8, 4 * TOPK
 
     def d2(mi: int) -> str:
         o = mi * sub
@@ -8203,49 +8162,25 @@ def _oracle_ivfpq() -> str:
         return f"(0.0 + {terms})"
 
     adc = " + ".join(tab(mi) for mi in range(m))
-    code_cols = ", ".join(f"cd.code{mi}" for mi in range(m))
 
     return f"""
-WITH cent AS (
-  SELECT vec_id AS cid, embedding AS cvec FROM embeddings
-  ORDER BY vec_id LIMIT {n_cells}
-),
+WITH {_sql_ivf_cells(probes=True)},
 cb AS (
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
          embedding AS cvec
   FROM (SELECT vec_id, embedding FROM embeddings
-        ORDER BY vec_id LIMIT {n_cells})
-),
-assign AS (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {_sql_cos('e.embedding', 'c.cvec')} DESC,
-                      c.cid ASC) AS rn
-    FROM embeddings e CROSS JOIN cent c) WHERE rn = 1
+        ORDER BY vec_id LIMIT {ksub})
 ),
 {enc_ctes},
 codes AS (
-  SELECT e.vec_id, e.embedding, a.cell,
+  SELECT e.vec_id, e.embedding, e.cell,
          {", ".join(f"enc{mi}.code{mi}" for mi in range(m))}
-  FROM embeddings e
-  JOIN assign a USING (vec_id) {enc_joins}
-),
-probes AS (
-  SELECT query_id, qvec, cell FROM (
-    SELECT q.vec_id AS query_id, q.embedding AS qvec, c.cid AS cell,
-           row_number() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY {_sql_cos('q.embedding', 'c.cvec')} DESC,
-                      c.cid ASC) AS rn
-    FROM embeddings q CROSS JOIN cent c WHERE q.vec_id < {N_QUERIES})
-  WHERE rn <= {n_probe}
+  FROM cells e {enc_joins}
 ),
 cand AS (
   SELECT p.query_id, p.qvec, e.vec_id, e.embedding,
          {", ".join(f"e.code{mi}" for mi in range(m))}
-  FROM probes p
+  FROM (SELECT query_id, qvec, cell FROM probes WHERE rn <= {n_probe}) p
   JOIN codes e ON e.cell = p.cell AND e.vec_id != p.query_id
 ),
 scored AS (

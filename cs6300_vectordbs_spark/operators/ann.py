@@ -304,80 +304,136 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF-Flat approximate top-k cosine search.
 
-    Coarse quantizer: the ``n_cells`` lowest-id corpus vectors serve as
-    centroids (sampled-centroid IVF — no iterative training, so every
-    engine reproduces the exact same partitioning and the operator gets
-    a full value-hash oracle, which no LSH path can have). Each corpus
-    vector is assigned to its most-cosine-similar centroid; each query
-    probes its ``n_probe`` nearest cells and exact-cosine re-ranks only
-    the vectors inside them.
+    Coarse quantizer: :func:`ivf_centroids` (the ``n_cells`` lowest-id
+    vectors — no iterative training, so every engine reproduces the
+    exact same partitioning and the operator gets a full value-hash
+    oracle, which no LSH path can have), :func:`assign_cells` for the
+    corpus and :func:`probe_cells` for the queries; only the vectors
+    inside a query's ``n_probe`` cells are exact-cosine re-ranked.
 
     Plan shape at scale: centroids are tiny -> broadcast to both the
-    assignment cross-join and the probe cross-join; the corpus-side
-    argmax is a groupBy whose map-side partial combine collapses the
-    x n_cells blowup back to one row per vector before the shuffle.
-    Candidate generation joins corpus cells against the BROADCAST query
-    probes, so the only corpus-wide shuffle is the assignment groupBy
-    and shuffle volume downstream is O(candidates), never
-    O(|corpus| x |queries|). For very large n_cells swap the sampled
-    quantizer for a trained one (e.g. MLlib KMeans) — the surrounding
-    plan is unchanged (that variant loses the SQL oracle).
+    assignment and the probe cross join. Candidate generation joins
+    corpus cells against the BROADCAST query probes, so the only
+    corpus-wide shuffle is the assignment groupBy and shuffle volume
+    downstream is O(candidates), never O(|corpus| x |queries|). For
+    very large n_cells swap the sampled quantizer for a trained one
+    (e.g. MLlib KMeans) — the surrounding plan is unchanged (that
+    variant loses the SQL oracle).
 
     Output schema matches similarity_topk: (query_id, rank, <id>, sim, dist).
     """
-    cent = (
+    return _ivf_from_centroids(
+        corpus, queries,
+        ivf_centroids(corpus, n_cells, corpus_id=corpus_id, corpus_vec=corpus_vec),
+        k, dim=dim, n_probe=n_probe, corpus_id=corpus_id,
+        corpus_vec=corpus_vec, query_id=query_id, query_vec=query_vec,
+        exclude_self=exclude_self,
+    )
+
+
+# The IVF coarse quantizer. Every IVF-family operator (ivf_topk and its
+# k-means variants, ivf_neardup_pairs, ivfpq_topk, the stored index in
+# sources/vector_index.py, the driver's tuning sweep) composes these
+# three functions; the SQL twins compose __spark_entry__._sql_ivf_cells.
+
+
+def ivf_centroids(
+    corpus: DataFrame,
+    n_cells: int,
+    *,
+    corpus_id: str = "vec_id",
+    corpus_vec: str = "embedding",
+) -> DataFrame:
+    """The sampled quantizer's centroids: the ``n_cells`` lowest-id
+    corpus vectors as ``(__cid, __cvec)``, the centroid id being the
+    corpus id. No training, so every engine picks the same centroids."""
+    return (
         corpus.orderBy(F.col(corpus_id).asc())
         .limit(n_cells)
         .select(F.col(corpus_id).alias("__cid"), F.col(corpus_vec).alias("__cvec"))
-    )
-    return _ivf_from_centroids(
-        corpus, queries, cent, k,
-        dim=dim, n_probe=n_probe, corpus_id=corpus_id, corpus_vec=corpus_vec,
-        query_id=query_id, query_vec=query_vec, exclude_self=exclude_self,
     )
 
 
 def assign_cells(
-    corpus: DataFrame,
+    rows: DataFrame,
+    cent: DataFrame,
     *,
-    dim: int,
-    n_cells: int = 16,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
+    dim: int | None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Sampled-quantizer cell assignment as a standalone diagnostic:
-    (id, cell) for every corpus vector, using the identical centroid
-    choice (n_cells lowest ids) and argmax tie rule (max cosine, ties
-    to lowest centroid id) as :func:`ivf_topk` — so balance statistics
-    computed from it describe exactly the cells the search path scans.
-    One broadcast cross-join + map-side-combined groupBy."""
-    cent = (
-        corpus.orderBy(F.col(corpus_id).asc())
-        .limit(n_cells)
-        .select(F.col(corpus_id).alias("__cid"), F.col(corpus_vec).alias("__cvec"))
-    )
-    # Norms factored under the cross join (r09) — one chain per row /
-    # per centroid, one dot per pair; bit-identical (cosine_from_parts).
+    """IVF cell assignment: each row of ``rows`` goes to the centroid
+    of ``cent`` ``(__cid, __cvec)`` with the highest cosine, ties to the
+    lowest centroid id. ``max_by`` over ``struct(sim, -cid)`` realizes
+    exactly that order (NaN greatest, NULL least, so a row whose sims
+    are all NULL lands in the lowest id).
+
+    Plan: the centroids are broadcast into a cross join and the argmax
+    is a groupBy on ``id_col`` whose map-side partial combine collapses
+    the x n_cells fan-out to one row per vector before the shuffle.
+    Norms are factored under the join (one per row as ``__vn``, one per
+    centroid), so a pair costs one dot; cosine_from_parts is
+    bit-identical to cosine_sim. ``dim=None`` takes the HOF forms.
+
+    ``carry`` names the columns of ``rows`` (or ``"__vn"``, the row
+    norm) the caller reads after the argmax; they ride through it in
+    the value struct, so nothing is joined back and the shuffle carries
+    nothing else. Returns ``(id_col, cell, *carry)``. Spreading the
+    input is the caller's choice."""
     from ..functions.vector import cosine_from_parts, l2_norm
 
-    cent = cent.select(
-        "__cid", "__cvec", l2_norm("__cvec", dim).alias("__cn")
-    )
-    sim_to_cent = cosine_from_parts(
-        dot(corpus_vec, "__cvec", dim), F.col("__vn"), F.col("__cn")
+    cent = cent.select("__cid", "__cvec", l2_norm("__cvec", dim).alias("__cn"))
+    sim = cosine_from_parts(
+        dot(vec_col, "__cvec", dim), F.col("__vn"), F.col("__cn")
     )
     return (
-        spread(corpus)
-        .select("*", l2_norm(corpus_vec, dim).alias("__vn"))
+        rows.select("*", l2_norm(vec_col, dim).alias("__vn"))
         .crossJoin(F.broadcast(cent))
-        .groupBy(corpus_id)
+        .groupBy(id_col)
         .agg(
             F.max_by(
-                F.col("__cid"),
-                F.struct(sim_to_cent.alias("s"), (-F.col("__cid")).alias("nc")),
-            ).alias("cell")
+                F.struct(F.col("__cid").alias("cell"), *carry),
+                F.struct(sim.alias("s"), (-F.col("__cid")).alias("nc")),
+            ).alias("__best")
         )
-        .select(corpus_id, "cell")
+        .select(id_col, "__best.*")
+    )
+
+
+def probe_cells(
+    queries: DataFrame,
+    cent: DataFrame,
+    *,
+    dim: int,
+    n_probe: int,
+    query_id: str = "query_id",
+    query_vec: str = "query_vec",
+) -> DataFrame:
+    """IVF probe ranking: each query's ``n_probe`` nearest cells by
+    (centroid cosine desc, cid asc), one ``row_number`` window per
+    query over the broadcast centroids. Returns ``(__qid, __qvec, __qn,
+    cell, __rn)``; ``__qn`` is the query norm, computed once per query
+    row so the re-rank after the candidate join is one dot per pair.
+
+    sources/vector_index._probe_rows is the driver-side numpy form of
+    this ranking over a stored index, pinned against it by tests."""
+    from ..functions.vector import cosine_from_parts, l2_norm
+
+    cent = cent.select("__cid", "__cvec", l2_norm("__cvec", dim).alias("__cn"))
+    qsim = cosine_from_parts(
+        dot("__qvec", "__cvec", dim), F.col("__qn"), F.col("__cn")
+    )
+    qw = Window.partitionBy("__qid").orderBy(qsim.desc(), F.col("__cid").asc())
+    return (
+        queries.select(
+            F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qvec")
+        )
+        .select("__qid", "__qvec", l2_norm("__qvec", dim).alias("__qn"))
+        .crossJoin(F.broadcast(cent))
+        .withColumn("__rn", F.row_number().over(qw))
+        .filter(F.col("__rn") <= n_probe)
+        .select("__qid", "__qvec", "__qn", F.col("__cid").alias("cell"), "__rn")
     )
 
 
@@ -475,9 +531,9 @@ def kmeans_centroids_det(
     round_dp: int = 9,
 ) -> DataFrame:
     """Cross-engine-reproducible Lloyd's k-means for the IVF coarse
-    quantizer: deterministic init (the ``n_cells`` lowest-id corpus
-    vectors, dense cids 0..n_cells-1), argmax-cosine assignment with
-    ties to the lowest cid, and per-cell per-dimension means computed
+    quantizer: deterministic init (:func:`ivf_centroids`, renumbered
+    to dense cids 0..n_cells-1), the :func:`assign_cells` assignment,
+    and per-cell per-dimension means computed
     as an EXACT integer sum of 1e-12-quantized coordinates divided by
     the count, ROUNDED to ``round_dp`` decimals after every iteration.
     The integer sum is order-independent, so the mean carries no
@@ -493,32 +549,25 @@ def kmeans_centroids_det(
     is layout-independent AND reproducible in SQL, unlike the MLlib
     variant's RNG). ``train_n=None`` trains on everything.
 
-    Scale shape per iteration: centroids broadcast into the assignment
-    cross-join over the cached sample; corpus-side norms are computed
-    ONCE per sample row (factored under the join, cosine_from_parts),
-    centroid norms once per centroid in plain Python — per-pair work
-    is the dot product alone. The argmax and the per-cell mean are
-    both map-side-combined groupBys; the n_cells x dim mean table is
+    Scale shape per iteration: the assignment is :func:`assign_cells`
+    over the cached sample (centroids broadcast, norms factored under
+    the join, HOF dot); the argmax and the per-cell mean are both
+    map-side-combined groupBys; the n_cells x dim mean table is
     collected driver-side per round (bounded index metadata, the PQ
     codebook license) and re-embedded as a literal frame, keeping the
     serving plan free of the training lineage.
 
     Returns a literal DataFrame ``(__cid int, __cvec array<double>)``.
     """
-    import math
-
-    from ..functions.vector import cosine_from_parts, l2_norm
-
     spark = corpus.sparkSession
-    init_rows = (
-        corpus.orderBy(F.col(corpus_id).asc())
-        .limit(n_cells)
-        .select(corpus_id, corpus_vec)
-        .collect()
+    init_rows = sorted(
+        ivf_centroids(
+            corpus, n_cells, corpus_id=corpus_id, corpus_vec=corpus_vec
+        ).collect(),
+        key=lambda r: r["__cid"],
     )
-    init_rows.sort(key=lambda r: r[corpus_id])
     cents: list[list[float]] = [
-        [float(x) for x in r[corpus_vec]] for r in init_rows
+        [float(x) for x in r["__cvec"]] for r in init_rows
     ]
 
     train = corpus
@@ -537,60 +586,24 @@ def kmeans_centroids_det(
     # per-iteration latency scheduler-light.
     train = (
         train
-        .select(
-            F.col(corpus_id).alias("__tid"),
-            F.col(corpus_vec).alias("vec"),
-            l2_norm(corpus_vec, dim).alias("__vnorm"),
-        )
+        .select(F.col(corpus_id).alias("__tid"), F.col(corpus_vec).alias("vec"))
         .repartition(8)
         .cache()
     )
 
-    def _pynorm(v: list[float]) -> float:
-        acc = 0.0
-        for x in v:  # sequential left fold — matches the SQL twin
-            acc += x * x
-        return math.sqrt(acc)
-
     try:
         for _ in range(n_iters):
             cent = spark.createDataFrame(
-                [(i, c, _pynorm(c)) for i, c in enumerate(cents)],
-                "__cid int, __cvec array<double>, __cnorm double",
+                list(enumerate(cents)), "__cid int, __cvec array<double>"
             )
-            # HOF dot, not the unrolled form: the training loop's pair
-            # count is bounded (sample x n_cells), so interpreted fold
-            # cost is noise, while the unrolled 64-term expression paid
-            # seconds of codegen compile on the first run. Bit-identical
-            # (left fold from 0.0 — functions/vector.py docstring).
-            sim_to_cent = cosine_from_parts(
-                dot("vec", "__cvec"), F.col("__vnorm"), F.col("__cnorm")
-            )
-            assigned = (
-                train.crossJoin(F.broadcast(cent))
-                .select(
-                    F.col("__tid"),
-                    F.col("vec"),
-                    F.col("__cid"),
-                    sim_to_cent.alias("__s"),
-                )
-                .groupBy("__tid")
-                .agg(
-                    F.max_by(
-                        F.struct(
-                            F.col("__cid").alias("cell"),
-                            F.col("vec").alias("v"),
-                        ),
-                        F.struct(
-                            F.col("__s").alias("s"),
-                            (-F.col("__cid")).alias("nc"),
-                        ),
-                    ).alias("best")
-                )
-                .select(
-                    F.col("best.cell").alias("cell"),
-                    F.col("best.v").alias("vec"),
-                )
+            # dim=None, the HOF forms: the training loop's pair count
+            # is bounded (sample x n_cells), so interpreted fold cost is
+            # noise, while the unrolled 64-term expression paid seconds
+            # of codegen compile on the first run. Bit-identical (left
+            # fold from 0.0 — functions/vector.py docstring).
+            assigned = assign_cells(
+                train, cent, dim=None, id_col="__tid", vec_col="vec",
+                carry=("vec",),
             )
             # Order-independent mean (r05): F.avg accumulates doubles,
             # and Spark's partial-aggregate merge order is
@@ -622,12 +635,12 @@ def kmeans_centroids_det(
             # 8.9 cold) for the 3-iteration training loop at sf0.1,
             # centroid hash identical. At scale the narrow shuffle
             # rides map-side partials exactly like label_centroids.
-            # Short-array guard (r09 ADVICE): above UNROLL_MAX_DIM the
-            # HOF l2_norm does not raise for mis-dimensioned rows, and
-            # posexplode would silently emit fewer rows — per-dimension
-            # means over differing counts, or a bare KeyError in the
-            # reassembly below. Fail legibly instead, mirroring the
-            # INVALID_ARRAY_INDEX the unrolled (dim <= cap) path raises.
+            # Short-array guard (r09 ADVICE): the loop's HOF forms do
+            # not raise for mis-dimensioned rows, and posexplode would
+            # silently emit fewer rows — per-dimension means over
+            # differing counts, or a bare KeyError in the reassembly
+            # below. Fail legibly instead, as the unrolled forms'
+            # INVALID_ARRAY_INDEX does on the serving path.
             # NULL vectors keep their r09 behavior (posexplode emits no
             # rows); only genuinely short arrays raise.
             guarded_vec = F.when(
@@ -725,65 +738,25 @@ def _ivf_from_centroids(
     query_vec: str,
     exclude_self: bool,
 ) -> DataFrame:
-    """Shared IVF plan: broadcast centroids -> cell assignment argmax ->
-    broadcast query probes -> exact re-rank inside probed cells.
+    """Shared IVF plan: :func:`assign_cells` for the corpus ->
+    :func:`probe_cells` for the queries, broadcast -> exact re-rank
+    inside the probed cells.
 
-    r09: L2 norms are factored UNDER the joins (the similarity_topk /
-    ivf_neardup_pairs discipline — a Project below a Join survives
-    Catalyst): each side's norm is computed once per ROW instead of
-    once per (row, centroid) / (query, candidate) PAIR, so per-pair
-    work is the dot product alone. cosine_from_parts is bit-identical
-    to cosine_sim (same product, division, zero guard), and every
-    corpus row was already scored eagerly by the assignment argmax, so
-    error/NULL semantics are unchanged: a short array still raises at
-    assignment, a NULL vector still yields NULL sims."""
-    from ..functions.vector import cosine_from_parts, l2_norm
+    Each side's norm is computed once per ROW under the joins and the
+    corpus norm rides through the assignment argmax, so the re-rank is
+    one dot per (query, candidate) pair. Every corpus row was already
+    scored eagerly by the argmax, so error/NULL semantics are those of
+    cosine_sim: a short array raises at assignment, a NULL vector
+    yields NULL sims."""
+    from ..functions.vector import cosine_from_parts
 
-    cent = cent.select(
-        "__cid", "__cvec", l2_norm("__cvec", dim).alias("__cnorm")
+    assigned = assign_cells(
+        spread(corpus), cent, dim=dim, id_col=corpus_id, vec_col=corpus_vec,
+        carry=(corpus_vec, "__vn"),
     )
-    # Cell assignment: argmax_c cos(v, c), ties to the lowest centroid id.
-    # max_by over struct(sim, -cid) realizes exactly that ordering.
-    sim_to_cent = cosine_from_parts(
-        dot(corpus_vec, "__cvec", dim), F.col("__vnorm"), F.col("__cnorm")
-    )
-    assigned = (
-        spread(corpus).select(
-            corpus_id, corpus_vec, l2_norm(corpus_vec, dim).alias("__vnorm")
-        )
-        .crossJoin(F.broadcast(cent))
-        .groupBy(corpus_id)
-        .agg(
-            F.max_by(
-                F.struct(
-                    F.col("__cid").alias("cell"),
-                    F.col(corpus_vec).alias("vec"),
-                    F.col("__vnorm").alias("vnorm"),
-                ),
-                F.struct(sim_to_cent.alias("s"), (-F.col("__cid")).alias("nc")),
-            ).alias("best")
-        )
-        .select(
-            corpus_id,
-            F.col("best.cell").alias("cell"),
-            F.col("best.vec").alias(corpus_vec),
-            F.col("best.vnorm").alias("__vnorm"),
-        )
-    )
-
-    qsim = cosine_from_parts(
-        dot("__qvec", "__cvec", dim), F.col("__qnorm"), F.col("__cnorm")
-    )
-    qw = Window.partitionBy("__qid").orderBy(qsim.desc(), F.col("__cid").asc())
-    probes = (
-        queries.select(
-            F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qvec")
-        )
-        .select("__qid", "__qvec", l2_norm("__qvec", dim).alias("__qnorm"))
-        .crossJoin(F.broadcast(cent))
-        .withColumn("__rn", F.row_number().over(qw))
-        .filter(F.col("__rn") <= n_probe)
-        .select("__qid", "__qvec", "__qnorm", F.col("__cid").alias("cell"))
+    probes = probe_cells(
+        queries, cent, dim=dim, n_probe=n_probe,
+        query_id=query_id, query_vec=query_vec,
     )
 
     # A vector lives in exactly one cell and a query probes distinct
@@ -796,9 +769,7 @@ def _ivf_from_centroids(
         F.col("__qid").alias("query_id"),
         F.col(corpus_id),
         cosine_from_parts(
-            dot("__qvec", corpus_vec, dim),
-            F.col("__qnorm"),
-            F.col("__vnorm"),
+            dot("__qvec", corpus_vec, dim), F.col("__qn"), F.col("__vn")
         ).alias("sim"),
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -824,9 +795,8 @@ def ivf_neardup_pairs(
     the SCALE path for semantic dedup. The all-pairs kernels
     (operators/similarity.pairwise_similarity[_blocked]) compute
     O(N^2) cosines; at 100 TB that is the thing that cannot run. Here
-    the deterministic sampled quantizer (same centroids/ties as
-    :func:`ivf_topk`) blocks the corpus into cells and only SAME-CELL
-    pairs are scored — O(sum_c |cell_c|^2) ~ N^2/n_cells for balanced
+    the sampled quantizer (:func:`ivf_centroids`, :func:`assign_cells`)
+    blocks the corpus into cells and only SAME-CELL pairs are scored — O(sum_c |cell_c|^2) ~ N^2/n_cells for balanced
     cells, with the n_cells knob trading recall for cost exactly like
     MinHash band count does for text near-dup.
 
@@ -843,50 +813,18 @@ def ivf_neardup_pairs(
     cartesian node anywhere. Returns (id_a, id_b, sim) with id_a <
     id_b.
     """
-    # Assignment carries the vector through the argmax (the
-    # _ivf_from_centroids trick) instead of joining it back on — one
-    # groupBy instead of groupBy + id-join.
-    cent = (
-        corpus.orderBy(F.col(corpus_id).asc())
-        .limit(n_cells)
-        .select(F.col(corpus_id).alias("__cid"), F.col(corpus_vec).alias("__cvec"))
-    )
-    # Norms factored UNDER both joins (once per row, not per pair —
-    # the cosine_from_parts discipline). r09: the row norm is computed
-    # BEFORE the assignment cross join and carried through the argmax,
-    # so the centroid fan-out pays one dot per (row, centroid) instead
-    # of a dot plus two norm folds, and the self-join below reuses the
-    # same per-row norm. Bit-identical: same sqrt values, same
-    # dot/(norm_a * norm_b) grouping as the SQL twin's _sql_cos.
-    from ..functions.vector import cosine_from_parts, l2_norm
+    # The vector and its norm ride through the assignment argmax
+    # instead of being joined back on (one groupBy, not groupBy +
+    # id-join), and the self-join below reuses the per-row norm:
+    # cosine_from_parts keeps the dot/(norm_a * norm_b) grouping of
+    # the SQL twin's _sql_cos, so sims are bit-identical.
+    from ..functions.vector import cosine_from_parts
 
-    cent = cent.select(
-        "__cid", "__cvec", l2_norm("__cvec", dim).alias("__cn")
-    )
-    sim_to_cent = cosine_from_parts(
-        dot(corpus_vec, "__cvec", dim), F.col("__n"), F.col("__cn")
-    )
-    cells = (
-        spread(corpus)
-        .select("*", l2_norm(corpus_vec, dim).alias("__n"))
-        .crossJoin(F.broadcast(cent))
-        .groupBy(corpus_id)
-        .agg(
-            F.max_by(
-                F.struct(
-                    F.col("__cid").alias("cell"),
-                    F.col(corpus_vec).alias("vec"),
-                    F.col("__n").alias("n"),
-                ),
-                F.struct(sim_to_cent.alias("s"), (-F.col("__cid")).alias("nc")),
-            ).alias("best")
-        )
-        .select(
-            corpus_id,
-            F.col("best.cell").alias("cell"),
-            F.col("best.vec").alias(corpus_vec),
-            F.col("best.n").alias("__n"),
-        )
+    cells = assign_cells(
+        spread(corpus),
+        ivf_centroids(corpus, n_cells, corpus_id=corpus_id, corpus_vec=corpus_vec),
+        dim=dim, id_col=corpus_id, vec_col=corpus_vec,
+        carry=(corpus_vec, "__vn"),
     )
     # Materialize the assigned+norm table ONCE before the self-join
     # (the minhash-signature checkpoint discipline): without it both
@@ -896,13 +834,13 @@ def ivf_neardup_pairs(
         F.col("cell"),
         F.col(corpus_id).alias("id_a"),
         F.col(corpus_vec).alias("__va"),
-        F.col("__n").alias("__na"),
+        F.col("__vn").alias("__na"),
     )
     b = with_norm.select(
         F.col("cell"),
         F.col(corpus_id).alias("id_b"),
         F.col(corpus_vec).alias("__vb"),
-        F.col("__n").alias("__nb"),
+        F.col("__vn").alias("__nb"),
     )
     sim = cosine_from_parts(
         dot("__va", "__vb", dim), F.col("__na"), F.col("__nb")
@@ -1457,10 +1395,10 @@ def ivfpq_topk(
     index, and the m-byte PQ codes make that remainder ~32x smaller
     than raw float32 — the two savings multiply.
 
-    Fully deterministic (sampled centroids + sampled codebooks, ties
-    to lowest id, fixed sequential fold order everywhere — including
-    the driver-side probe/ADC dots) like its ivf_topk / pq_topk
-    parents; registered with a FULL value-hash SQL oracle plus a
+    Fully deterministic (:func:`ivf_centroids` and :func:`assign_cells`
+    for the cells, sampled codebooks with ties to the lowest code,
+    fixed sequential fold order everywhere — including the driver-side
+    probe/ADC dots) like its ivf_topk / pq_topk parents; registered with a FULL value-hash SQL oracle plus a
     recall-vs-exact invariant test.
 
     Plan shape: centroids AND codebooks broadcast; the corpus pays
@@ -1474,10 +1412,8 @@ def ivfpq_topk(
     sub = dim // m
     cand_n = candidates_per_query or 4 * k
 
-    cent = (
-        corpus.orderBy(F.col(corpus_id).asc())
-        .limit(n_cells)
-        .select(F.col(corpus_id).alias("__cid"), F.col(corpus_vec).alias("__cvec"))
+    cent = ivf_centroids(
+        corpus, n_cells, corpus_id=corpus_id, corpus_vec=corpus_vec
     )
     cb = (
         corpus.orderBy(F.col(corpus_id).asc())
@@ -1493,35 +1429,14 @@ def ivfpq_topk(
     def d2_slice(a: str, b: str, mi: int) -> Column:
         return _pq_d2_slice(a, b, mi, sub)
 
-    # Index build pass 1: coarse cell assignment (argmax cosine, ties
-    # to lowest centroid id). Norms factored under the cross join
-    # (r09): one chain per row / per centroid, one dot per pair;
-    # bit-identical (cosine_from_parts).
+    # Index build pass 1: coarse cell assignment (assign_cells). The
+    # row norm computed for it rides through the argmax, so the exact
+    # re-rank below is one dot per shortlist pair.
     from ..functions.vector import cosine_from_parts, l2_norm
 
-    centn = cent.select(
-        "__cid", "__cvec", l2_norm("__cvec", dim).alias("__cn")
-    )
-    sim_to_cent = cosine_from_parts(
-        dot(corpus_vec, "__cvec", dim), F.col("__vn"), F.col("__cn")
-    )
-    assigned = (
-        spread(corpus)
-        .select("*", l2_norm(corpus_vec, dim).alias("__vn"))
-        .crossJoin(F.broadcast(centn))
-        .groupBy(corpus_id)
-        .agg(
-            F.max_by(
-                F.col("__cid"),
-                F.struct(sim_to_cent.alias("s"), (-F.col("__cid")).alias("nc")),
-            ).alias("cell"),
-            # The row norm is already computed once per row for the
-            # assignment; carry it THROUGH the argmax (constant within
-            # the group) so the exact re-rank below is one dot per
-            # shortlist pair instead of three chains (r10, §1.2 —
-            # same plumbing as ivf_topk's argmax struct).
-            F.first(F.col("__vn")).alias("__nn"),
-        )
+    assigned = assign_cells(
+        spread(corpus), cent, dim=dim, id_col=corpus_id, vec_col=corpus_vec,
+        carry=("__vn",),
     )
     # Index build pass 2: PQ encoding (per-subspace argmin L2, ties to
     # lowest code).
@@ -1580,7 +1495,8 @@ def ivfpq_topk(
         # n_probe boundary would give the engine and its SQL twin
         # different candidate sets. Zero-norm denominators yield NaN,
         # which sorts FIRST under the descending probe order (the SQL
-        # NaN-is-greatest convention).
+        # NaN-is-greatest convention) — unlike probe_cells, whose
+        # zero guard scores them 0.0; the SQL twin encodes the NaN.
         qn = math.sqrt(_seq_dot_full(qv, qv, dim))
         sims = []
         for ci in range(len(cids)):
@@ -1672,7 +1588,7 @@ def ivfpq_topk(
             cosine_from_parts(
                 dot("__qvec", corpus_vec, dim),
                 F.col("__qn"),
-                F.col("__nn"),
+                F.col("__vn"),
             ).alias("sim"),
             F.col("__adc").alias("adc"),
         )

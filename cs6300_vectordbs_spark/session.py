@@ -59,13 +59,13 @@ def get_spark(
         # they land in a Filter/Join consume path, which then runs
         # INTERPRETED. Measured r09 on the IVF near-dup self-join at
         # sf0.1: 4.4 s -> 1.0 s from this flag alone (jstack showed the
-        # hot frame stuck in the un-JIT-ed GeneratedIterator). Applied
-        # to the driver (the only JVM in local mode) and executors (the
-        # same generated code runs there on a cluster). r10 ran the
-        # idle-host full-bench A/B (3 runs each, both estimators —
-        # OPTIMIZATION_r10.md): the flag wins warm and is neutral cold,
-        # so it stays on; SPARK_GRAFT_JIT_HUGE_METHODS=0 reproduces the
-        # A/B's off arm.
+        # hot frame stuck in the un-JIT-ed GeneratedIterator;
+        # OPTIMIZATION_r09.md). Applied to the driver (the only JVM in
+        # local mode) and executors (the same generated code runs there
+        # on a cluster). A full-bench flag-on/flag-off A/B was planned
+        # in r10, but no result of it was recorded, so r09's stage
+        # measurement is the only evidence; SPARK_GRAFT_JIT_HUGE_METHODS=0
+        # builds the off arm of such an A/B.
         #
         # The flag lifts only that 8,000-bytecode cap. A method can
         # still be too big for the compilers themselves: the exact JVM
@@ -95,8 +95,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     if os.environ.get("SPARK_GRAFT_JIT_HUGE_METHODS", "1") == "0":
-        # A/B toggle: build the session WITHOUT the JIT flag (used by
-        # the r10 idle-host flag-on/flag-off bench comparison).
+        # A/B toggle: build the session WITHOUT the JIT flag (the off
+        # arm of a flag-on/flag-off bench comparison).
         builder = builder.config(
             "spark.driver.extraJavaOptions", ""
         ).config("spark.executor.extraJavaOptions", "")

@@ -28,8 +28,9 @@ MARKERS): upsert sets it before appending, build and compaction clear
 it after their write, and the serve pays the latest-wins dedup window
 only while it exists.
 
-Algorithmic parity with operators/ann.ivf_topk (same sampled centroids,
-same argmax assignment, same tie rules) — so the stored-index serving
+Build and upsert assign cells with the coarse quantizer ivf_topk uses
+(operators/ann ivf_centroids, assign_cells), and the driver-side probe
+reproduces ann.probe_cells bit for bit — so the stored-index serving
 path shares ivf's full value-hash oracle. The round-trip through
 parquet float32 is lossless: vectors are stored exactly as read.
 """
@@ -43,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vector import UNROLL_MAX_DIM, cosine_from_parts, dot, l2_norm
+from ..operators.ann import assign_cells, ivf_centroids
 from ..operators.similarity import _col_norms, _dense, _sims_matrix
 from ..operators.util import spread
 from .index_common import (
@@ -57,15 +59,6 @@ from .index_common import (
 )
 
 
-def _centroids(corpus: DataFrame, corpus_id: str, corpus_vec: str,
-               n_cells: int) -> DataFrame:
-    return (
-        corpus.orderBy(F.col(corpus_id).asc())
-        .limit(n_cells)
-        .select(F.col(corpus_id).alias("cid"), F.col(corpus_vec).alias("cvec"))
-    )
-
-
 def build_ivf_index(
     corpus: DataFrame,
     path: str,
@@ -76,45 +69,26 @@ def build_ivf_index(
     corpus_vec: str = "embedding",
 ) -> None:
     """Write the IVF index: ``{path}/centroids`` (n_cells rows) and
-    ``{path}/cells`` partitioned by cell id. The assignment argmax
-    (max cosine, ties to lowest centroid id) matches ann.ivf_topk."""
+    ``{path}/cells`` partitioned by cell id, from the coarse quantizer
+    of operators/ann (ivf_centroids, assign_cells)."""
     # Ingest quarantine: NULL vectors can never be assigned or scored
     # (DuckDB's list math refuses them too); they are dropped here,
     # counted by corpus_null_audit upstream.
     corpus = corpus.filter(F.col(corpus_vec).isNotNull())
-    cent = _centroids(corpus, corpus_id, corpus_vec, n_cells)
-    # Norms factored under the cross join (r09, the similarity_topk
-    # discipline): one norm per row / per centroid instead of three
-    # unrolled chains per (row, centroid) pair. cosine_from_parts is
-    # bit-identical; every row is scored by the argmax anyway, so
-    # error/NULL semantics are unchanged.
-    cent = cent.select("cid", "cvec", l2_norm("cvec", dim).alias("__cn"))
-    sim = cosine_from_parts(
-        dot(corpus_vec, "cvec", dim), F.col("__vn"), F.col("__cn")
+    cent = ivf_centroids(
+        corpus, n_cells, corpus_id=corpus_id, corpus_vec=corpus_vec
     )
-    assigned = (
-        spread(corpus)
-        .select("*", l2_norm(corpus_vec, dim).alias("__vn"))
-        .crossJoin(F.broadcast(cent))
-        .groupBy(corpus_id)
-        .agg(
-            F.max_by(
-                F.struct(F.col("cid").alias("cell"),
-                         F.col(corpus_vec).alias("vec")),
-                F.struct(sim.alias("s"), (-F.col("cid")).alias("nc")),
-            ).alias("best")
-        )
-        .select(
-            F.col(corpus_id).alias("id"),
-            F.col("best.cell").alias("cell"),
-            F.col("best.vec").alias("vec"),
-            F.lit(0).alias("gen"),
-        )
+    assigned = assign_cells(
+        spread(corpus), cent, dim=dim, id_col=corpus_id, vec_col=corpus_vec,
+        carry=(corpus_vec,),
+    ).select(
+        F.col(corpus_id).alias("id"), "cell",
+        F.col(corpus_vec).alias("vec"), F.lit(0).alias("gen"),
     )
-    # __cn is a plan-side artifact; the stored format stays (cid, cvec).
-    cent.select("cid", "cvec").write.mode("overwrite").parquet(
-        f"{path}/centroids"
-    )
+    # The stored format is (cid, cvec).
+    cent.select(
+        F.col("__cid").alias("cid"), F.col("__cvec").alias("cvec")
+    ).write.mode("overwrite").parquet(f"{path}/centroids")
     assigned.write.mode("overwrite").partitionBy("cell").parquet(
         f"{path}/cells"
     )
@@ -345,34 +319,15 @@ def upsert_ivf_index(
     still leaves the serve deduplicating; compaction clears it. At
     100 TB this is the difference between a nightly full rebuild and a
     streaming-rate index feed."""
-    cent = F.broadcast(
-        spark.read.parquet(f"{path}/centroids")
-        .select("cid", "cvec", l2_norm("cvec", dim).alias("__cn"))
+    cent = spark.read.parquet(f"{path}/centroids").select(
+        F.col("cid").alias("__cid"), F.col("cvec").alias("__cvec")
     )
-    # Norms factored under the cross join (r09) — see build_ivf_index.
-    sim = cosine_from_parts(
-        dot(corpus_vec, "cvec", dim), F.col("__vn"), F.col("__cn")
-    )
-    new_vectors = new_vectors.filter(F.col(corpus_vec).isNotNull())
-    assigned = (
-        new_vectors.select(
-            "*", l2_norm(corpus_vec, dim).alias("__vn")
-        )
-        .crossJoin(cent)
-        .groupBy(corpus_id)
-        .agg(
-            F.max_by(
-                F.struct(F.col("cid").alias("cell"),
-                         F.col(corpus_vec).alias("vec")),
-                F.struct(sim.alias("s"), (-F.col("cid")).alias("nc")),
-            ).alias("best")
-        )
-        .select(
-            F.col(corpus_id).alias("id"),
-            F.col("best.cell").alias("cell"),
-            F.col("best.vec").alias("vec"),
-            F.lit(gen).alias("gen"),
-        )
+    assigned = assign_cells(
+        new_vectors.filter(F.col(corpus_vec).isNotNull()), cent,
+        dim=dim, id_col=corpus_id, vec_col=corpus_vec, carry=(corpus_vec,),
+    ).select(
+        F.col(corpus_id).alias("id"), "cell",
+        F.col(corpus_vec).alias("vec"), F.lit(gen).alias("gen"),
     )
     set_marker(path, "HAS_UPSERTS")
     assigned.write.mode("append").partitionBy("cell").parquet(f"{path}/cells")

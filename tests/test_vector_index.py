@@ -139,6 +139,62 @@ def test_persisted_search_hof_dim_with_other_length_queries(spark, tmp_path):
     assert any("None, None)" in r for r in got)  # NULL sims served
 
 
+def test_quantizer_equals_sql_ivf_cells(spark):
+    """Anti-drift pin for the IVF quantizer: ann.assign_cells (unrolled
+    and HOF forms) and ann.probe_cells return exactly the cells and
+    probe ranks of the oracles' shared _sql_ivf_cells(probes=True) on
+    DuckDB over the same rows. The rows hold a tie (centroids 3 and 12
+    are one vector: the lower cid wins), a zero-norm row, a NaN
+    element and a NULL vector that is both a centroid and a query.
+    DuckDB's list math refuses a NULL element, so that row is checked
+    on the Spark side alone: its sims are all NULL, so it lands in the
+    lowest cid."""
+    import importlib.util
+    import random
+
+    import duckdb
+    import pyarrow as pa
+
+    from cs6300_vectordbs_spark.operators.ann import (
+        assign_cells,
+        ivf_centroids,
+        probe_cells,
+    )
+
+    spec = importlib.util.spec_from_file_location(
+        "entry",
+        os.path.join(os.path.dirname(__file__), "..", "__spark_entry__.py"),
+    )
+    m = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(m)
+    rng = random.Random(5)
+    tie = [0.5, -0.25, 1.0, 0.125]
+    vecs = {i: [round(rng.uniform(-1, 1), 3) for _ in range(4)]
+            for i in range(30)}
+    vecs.update({3: tie, 12: tie, 22: [2 * x for x in tie], 5: None,
+                 20: [0.0] * 4, 21: [float("nan"), 0.5, -1.0, 2.0]})
+    con = duckdb.connect()
+    con.register("embeddings", pa.table(
+        {"vec_id": list(vecs), "embedding": list(vecs.values())}
+    ))
+    ctes = f"WITH {m._sql_ivf_cells(probes=True)} "
+    cells = sorted(con.execute(ctes + "SELECT vec_id, cell FROM cells").fetchall())
+    probes = sorted(con.execute(ctes + "SELECT query_id, cell, rn FROM probes").fetchall())
+    assert (22, 3) in cells and len(probes) == m.N_QUERIES * m._IVF_CELLS
+
+    emb = spark.createDataFrame(
+        [*vecs.items(), (30, [1.0, None, 0.5, 0.25])],
+        "vec_id bigint, embedding array<double>",
+    )
+    cent = ivf_centroids(emb, m._IVF_CELLS)
+    for dim in (4, None):
+        got = assign_cells(emb, cent, dim=dim).collect()
+        assert sorted(map(tuple, got)) == sorted(cells + [(30, 0)])
+    q = _queries(emb, m.N_QUERIES)
+    got = probe_cells(q, cent, dim=4, n_probe=m._IVF_CELLS)
+    assert sorted(map(tuple, got.select("__qid", "cell", "__rn").collect())) == probes
+
+
 def test_ensure_index_is_create_if_absent(spark, emb, tmp_path):
     path = str(tmp_path / "ivf")
     assert not ivf_index_exists(path)
