@@ -5412,10 +5412,15 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_cos(a: str, b: str) -> str:
+    """DuckDB cosine with the zero-norm -> 0.0 guard, bit-identical to
+    functions/vector.cosine_sim in ALL cases: the plain division would
+    match only when the denominator is nonzero (DuckDB yields NULL on
+    0.0/0.0)."""
+    na = f"sqrt(list_dot_product({a}::DOUBLE[], {a}::DOUBLE[]))"
+    nb = f"sqrt(list_dot_product({b}::DOUBLE[], {b}::DOUBLE[]))"
     return (
-        f"list_dot_product({a}::DOUBLE[], {b}::DOUBLE[]) / "
-        f"(sqrt(list_dot_product({a}::DOUBLE[], {a}::DOUBLE[])) * "
-        f"sqrt(list_dot_product({b}::DOUBLE[], {b}::DOUBLE[])))"
+        f"CASE WHEN ({na} * {nb}) = 0.0 THEN 0.0 ELSE "
+        f"list_dot_product({a}::DOUBLE[], {b}::DOUBLE[]) / ({na} * {nb}) END"
     )
 
 
@@ -5480,6 +5485,57 @@ _ORACLE_IVF = _oracle_ivf()
 _TUNE_PROBES = (1, 4, 16)
 
 
+def _recall_sweep(
+    emb: DataFrame,
+    q: DataFrame,
+    label: str,
+    arms: tuple[int, ...],
+    inputs: tuple[Callable[[], DataFrame], ...],
+    candidates: Callable[..., DataFrame],
+) -> DataFrame:
+    """The recall sweep both tuning reports run: one
+    ``(<label>, n_hits, recall_at_k)`` row per arm value.
+
+    The exact top-k and the report's ``inputs`` (builders of eager
+    tables) are mutually independent, so they are materialized from a
+    small thread pool and Spark overlaps the jobs (guide §2.6).
+    ``candidates(arm, *tables)`` gives an arm's candidate pairs in the
+    input contract of the shared exact re-rank (similarity._rerank),
+    whose top-k is then counted against the exact top-k."""
+    from concurrent.futures import ThreadPoolExecutor
+    from functools import reduce
+
+    from cs6300_vectordbs_spark.operators.similarity import _rerank
+
+    def _exact():
+        return similarity_topk(
+            emb, q, TOPK, exclude_self=True, dim=EMB_DIM
+        ).select("query_id", "vec_id").localCheckpoint(eager=True)
+
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        futures = [pool.submit(f) for f in (_exact, *inputs)]
+        exact, *tables = [f.result() for f in futures]
+    n_exact = exact.count()
+
+    parts = []
+    for arm in arms:
+        approx = _rerank(
+            candidates(arm, *tables), TOPK, dim=EMB_DIM,
+            id_col="vec_id", vec_col="embedding",
+        ).select("query_id", "vec_id")
+        hits = exact.join(approx, on=["query_id", "vec_id"], how="inner")
+        parts.append(
+            hits.agg(F.count(F.lit(1)).alias("n_hits")).select(
+                F.lit(arm).cast("bigint").alias(label),
+                F.col("n_hits").cast("bigint"),
+                F.round(
+                    F.col("n_hits") / F.lit(float(n_exact)), 9
+                ).alias("recall_at_k"),
+            )
+        )
+    return reduce(DataFrame.unionByName, parts)
+
+
 def q_ann_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN tuning sweep — the reference harness's core loop (measure
     recall across index configurations, BASELINE.json north star)
@@ -5492,9 +5548,6 @@ def q_ann_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells and slices by probe depth). Scale shape: the exact arm is
     the WindowGroupLimit broadcast plan; each IVF arm scans only its
     probed cells; the recall join is queries x k rows."""
-    from pyspark.sql.window import Window
-
-    from cs6300_vectordbs_spark.functions.vector import cosine_from_parts, dot
     from cs6300_vectordbs_spark.operators.ann import (
         assign_cells,
         ivf_centroids,
@@ -5507,23 +5560,9 @@ def q_ann_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Cell assignment and full probe ranking are computed ONCE and
     # sliced per probe depth — the per-arm work is only the probed-cell
-    # scan + window (the oracle is structured identically). Re-running
+    # scan + re-rank (the oracle is structured identically). Re-running
     # ivf_topk per arm would redo the corpus-side argmax three times.
-    # Both tables carry their per-row norms, so each arm's re-rank is
-    # one dot per pair.
-    #
-    # The three eager inputs (exact arm, cell assignment, probe
-    # ranking) are mutually independent, so they are materialized from
-    # a small thread pool and Spark overlaps the jobs (guide §2.6) —
-    # the exact arm's straggler tail no longer serializes ahead of the
-    # IVF builds. Results and plan shapes are identical.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _exact():
-        return similarity_topk(
-            emb, q, TOPK, exclude_self=True, dim=EMB_DIM
-        ).select("query_id", "vec_id").localCheckpoint(eager=True)
-
+    # Both tables carry their per-row norms for the re-rank.
     def _assigned():
         return assign_cells(
             emb, cent, dim=EMB_DIM, carry=("embedding", "__vn")
@@ -5534,47 +5573,14 @@ def q_ann_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             q, cent, dim=EMB_DIM, n_probe=max(_TUNE_PROBES)
         ).localCheckpoint(eager=True)
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        exact_f = pool.submit(_exact)
-        assigned_f = pool.submit(_assigned)
-        probes_f = pool.submit(_probes)
-        exact = exact_f.result()
-        assigned = assigned_f.result()
-        probes = probes_f.result()
-    n_exact = exact.count()
-
-    parts = []
-    for p in _TUNE_PROBES:
-        cand = assigned.join(
+    def _cand(p, assigned, probes):
+        return assigned.join(
             F.broadcast(probes.filter(F.col("__rn") <= p)), on="cell"
         ).filter(F.col("vec_id") != F.col("__qid"))
-        rw = Window.partitionBy("__qid").orderBy(
-            cosine_from_parts(
-                dot("__qvec", "embedding", EMB_DIM),
-                F.col("__qn"),
-                F.col("__vn"),
-            ).desc(),
-            F.col("vec_id").asc(),
-        )
-        approx = (
-            cand.withColumn("__r", F.row_number().over(rw))
-            .filter(F.col("__r") <= TOPK)
-            .select(F.col("__qid").alias("query_id"), "vec_id")
-        )
-        hits = exact.join(approx, on=["query_id", "vec_id"], how="inner")
-        parts.append(
-            hits.agg(F.count(F.lit(1)).alias("n_hits")).select(
-                F.lit(p).cast("bigint").alias("n_probe"),
-                F.col("n_hits").cast("bigint"),
-                F.round(
-                    F.col("n_hits") / F.lit(float(n_exact)), 9
-                ).alias("recall_at_k"),
-            )
-        )
-    out = parts[0]
-    for x in parts[1:]:
-        out = out.unionByName(x)
-    return out
+
+    return _recall_sweep(
+        emb, q, "n_probe", _TUNE_PROBES, (_assigned, _probes), _cand
+    )
 
 
 def _oracle_ann_tuning() -> str:
@@ -5640,39 +5646,19 @@ def q_lsh_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracled. Scale shape per arm: candidates from an equi-join on
     band keys vs the broadcast query keys, O(collisions) shuffle,
     WindowGroupLimit re-rank, then a queries x k recall join."""
-    from pyspark.sql.window import Window
-
-    from cs6300_vectordbs_spark.functions.vector import (
-        cosine_from_parts,
-        dot,
-        l2_norm,
-    )
+    from cs6300_vectordbs_spark.functions.vector import l2_norm
     from cs6300_vectordbs_spark.operators.ann import srp_bits
 
     emb = _t(spark, sf_dir, "embeddings")
     q = _query_batch(emb)
 
-    # The three eager inputs (exact arm, corpus sign bits, query sign
-    # bits) are mutually independent — materialized from a thread pool
-    # so Spark overlaps the jobs (guide §2.6), same as
-    # ann_tuning_report. Results and plan shapes are identical.
-    # Norms are factored into the checkpointed bit tables (r10, §1.2 —
-    # the last tuning-arm re-rank still paying three unrolled chains
-    # per candidate pair): computed once per corpus row / query row,
-    # so each arm's window orders by one dot + cosine_from_parts,
-    # bit-identical to the inline cosine.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _exact():
-        return similarity_topk(
-            emb, q, TOPK, exclude_self=True, dim=EMB_DIM
-        ).select("query_id", "vec_id").localCheckpoint(eager=True)
-
+    # The corpus and query sign bits are eager inputs of the sweep,
+    # each with its per-row norm for the re-rank.
     def _cbits():
         return emb.select(
             "vec_id",
             "embedding",
-            l2_norm("embedding", EMB_DIM).alias("__cn"),
+            l2_norm("embedding", EMB_DIM).alias("__vn"),
             *[
                 b.alias(f"b{i}")
                 for i, b in enumerate(
@@ -5683,8 +5669,8 @@ def q_lsh_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _qbits():
         return q.select(
-            "query_id",
-            "query_vec",
+            F.col("query_id").alias("__qid"),
+            F.col("query_vec").alias("__qvec"),
             l2_norm("query_vec", EMB_DIM).alias("__qn"),
             *[
                 b.alias(f"b{i}")
@@ -5694,71 +5680,33 @@ def q_lsh_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         ).localCheckpoint(eager=True)
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        exact_f, cbits_f, qbits_f = (
-            pool.submit(_exact), pool.submit(_cbits), pool.submit(_qbits)
-        )
-        exact, cbits, qbits = (
-            exact_f.result(), cbits_f.result(), qbits_f.result()
-        )
-    n_exact = exact.count()
-
-    def keys(bands: int, bit_prefix: str = "b") -> F.Column:
+    def keys(bands: int) -> F.Column:
         rows = _SRP_BITS // bands
         return F.array(
             *[
                 F.concat_ws(
                     ",",
                     F.lit(str(t)),
-                    *[
-                        F.col(f"{bit_prefix}{i}")
-                        for i in range(t * rows, (t + 1) * rows)
-                    ],
+                    *[F.col(f"b{i}") for i in range(t * rows, (t + 1) * rows)],
                 )
                 for t in range(bands)
             ]
         )
 
-    parts = []
-    for bands in _TUNE_BANDS:
+    def _cand(bands, cbits, qbits):
         ck = cbits.select(
-            "vec_id", "embedding", "__cn", F.explode(keys(bands)).alias("bk")
+            "vec_id", "embedding", "__vn", F.explode(keys(bands)).alias("bk")
         )
         qk = qbits.select(
-            "query_id", "query_vec", "__qn", F.explode(keys(bands)).alias("bk")
+            "__qid", "__qvec", "__qn", F.explode(keys(bands)).alias("bk")
         )
-        cand = (
+        return (
             ck.join(F.broadcast(qk), on="bk")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .dropDuplicates(["query_id", "vec_id"])
+            .filter(F.col("vec_id") != F.col("__qid"))
+            .dropDuplicates(["__qid", "vec_id"])
         )
-        rw = Window.partitionBy("query_id").orderBy(
-            cosine_from_parts(
-                dot("query_vec", "embedding", EMB_DIM),
-                F.col("__qn"),
-                F.col("__cn"),
-            ).desc(),
-            F.col("vec_id").asc(),
-        )
-        approx = (
-            cand.withColumn("__r", F.row_number().over(rw))
-            .filter(F.col("__r") <= TOPK)
-            .select("query_id", "vec_id")
-        )
-        hits = exact.join(approx, on=["query_id", "vec_id"], how="inner")
-        parts.append(
-            hits.agg(F.count(F.lit(1)).alias("n_hits")).select(
-                F.lit(bands).cast("bigint").alias("bands"),
-                F.col("n_hits").cast("bigint"),
-                F.round(
-                    F.col("n_hits") / F.lit(float(n_exact)), 9
-                ).alias("recall_at_k"),
-            )
-        )
-    out = parts[0]
-    for x in parts[1:]:
-        out = out.unionByName(x)
-    return out
+
+    return _recall_sweep(emb, q, "bands", _TUNE_BANDS, (_cbits, _qbits), _cand)
 
 
 def _oracle_lsh_tuning() -> str:
@@ -10252,21 +10200,6 @@ _MAT_PREFIX = 16  # Matryoshka coarse pass scores the first 16 of 64 dims
 _MMR_CAND = 20  # MMR candidate pool (exact top-20)
 
 
-def _sql_cos_guarded(a: str, b: str) -> str:
-    """DuckDB cosine with the zero-norm -> 0.0 guard, bit-identical to
-    functions/vector.cosine_sim in ALL cases (the plain-division form
-    matches only when the denominator is nonzero — DuckDB yields NULL
-    on 0.0/0.0). Used by the two-stage/MMR oracles, whose wider
-    candidate windows (top-20) could legitimately reach a zero-norm
-    row in the hostile environment where top-5 never does."""
-    na = f"sqrt(list_dot_product({a}::DOUBLE[], {a}::DOUBLE[]))"
-    nb = f"sqrt(list_dot_product({b}::DOUBLE[], {b}::DOUBLE[]))"
-    return (
-        f"CASE WHEN ({na} * {nb}) = 0.0 THEN 0.0 ELSE "
-        f"list_dot_product({a}::DOUBLE[], {b}::DOUBLE[]) / ({na} * {nb}) END"
-    )
-
-
 def q_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-quantization two-stage search (operators/twostage.py):
     sign bits packed into BIGINT words, whole-corpus Hamming ranking
@@ -10320,7 +10253,7 @@ cand AS (
   ) WHERE hr <= {TOPK * _BQ_REFINE}
 ),
 scored AS (
-  SELECT query_id, vec_id, hamming, {_sql_cos_guarded('qv', 'ev')} AS sim
+  SELECT query_id, vec_id, hamming, {_sql_cos('qv', 'ev')} AS sim
   FROM cand
 ),
 ranked AS (
@@ -10475,7 +10408,7 @@ _ORACLE_MATRYOSHKA_TOPK = f"""
 WITH coarse AS (
   SELECT q.vec_id AS query_id, q.embedding AS qv,
          e.vec_id AS vec_id, e.embedding AS ev,
-         {_sql_cos_guarded(f'(q.embedding[1:{_MAT_PREFIX}])',
+         {_sql_cos(f'(q.embedding[1:{_MAT_PREFIX}])',
                            f'(e.embedding[1:{_MAT_PREFIX}])')} AS sim_coarse
   FROM embeddings q JOIN embeddings e ON e.vec_id != q.vec_id
   WHERE q.vec_id < {N_QUERIES}
@@ -10488,7 +10421,7 @@ cand AS (
   ) WHERE cr <= {TOPK * _BQ_REFINE}
 ),
 scored AS (
-  SELECT query_id, vec_id, sim_coarse, {_sql_cos_guarded('qv', 'ev')} AS sim
+  SELECT query_id, vec_id, sim_coarse, {_sql_cos('qv', 'ev')} AS sim
   FROM cand
 ),
 ranked AS (
@@ -10553,7 +10486,7 @@ WITH emb AS (
 coarse AS (
   SELECT q.vec_id AS query_id, q.embedding AS qv,
          e.vec_id AS vec_id, e.embedding AS ev,
-         {_sql_cos_guarded(f'(q.embedding[1:{_MAT384_PREFIX}])',
+         {_sql_cos(f'(q.embedding[1:{_MAT384_PREFIX}])',
                            f'(e.embedding[1:{_MAT384_PREFIX}])')} AS sim_coarse
   FROM emb q JOIN emb e ON e.vec_id != q.vec_id
   WHERE q.vec_id < {N_QUERIES}
@@ -10566,7 +10499,7 @@ cand AS (
   ) WHERE cr <= {TOPK * _BQ_REFINE}
 ),
 scored AS (
-  SELECT query_id, vec_id, sim_coarse, {_sql_cos_guarded('qv', 'ev')} AS sim
+  SELECT query_id, vec_id, sim_coarse, {_sql_cos('qv', 'ev')} AS sim
   FROM cand
 ),
 ranked AS (
@@ -10642,7 +10575,7 @@ s{j} AS (
     return f"""
 WITH scored0 AS (
   SELECT q.vec_id AS query_id, e.vec_id AS vec_id, e.embedding AS ev,
-         {_sql_cos_guarded('q.embedding', 'e.embedding')} AS sim
+         {_sql_cos('q.embedding', 'e.embedding')} AS sim
   FROM embeddings q JOIN embeddings e ON e.vec_id != q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 ),
@@ -10655,7 +10588,7 @@ cand AS (
 ),
 pair AS (
   SELECT a.query_id, a.vec_id AS va, b.vec_id AS vb,
-         {_sql_cos_guarded('a.ev', 'b.ev')} AS psim
+         {_sql_cos('a.ev', 'b.ev')} AS psim
   FROM cand a JOIN cand b
     ON a.query_id = b.query_id AND a.vec_id != b.vec_id
 ),

@@ -153,6 +153,38 @@ def _hop_tables(
     return q, corpus, sim
 
 
+def _hop_keep(
+    cand: DataFrame,
+    q: DataFrame,
+    corpus: DataFrame,
+    sim: Column,
+    width: int | None,
+    *,
+    exclude_self: bool = False,
+) -> DataFrame:
+    """One hop of the graph beam loops (nsw joins serve, hnsw descent)
+    over the :func:`_hop_tables`: join the candidate ``(query_id,
+    node)`` rows to the corpus, broadcast the queries, score ``sim``
+    and keep each query's ``width`` best by (sim DESC, node ASC) as
+    ``(query_id, node, sim)``. ``width=None`` keeps every scored row;
+    ``exclude_self`` drops a query's own node before the keep."""
+    scored = (
+        cand.join(corpus, "node")
+        .join(F.broadcast(q), "query_id")
+        .select("query_id", "node", sim.alias("sim"))
+    )
+    if exclude_self:
+        scored = scored.filter(F.col("node") != F.col("query_id"))
+    if width is None:
+        return scored
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("node").asc()
+    )
+    return scored.withColumn("__rn", F.row_number().over(w)).filter(
+        F.col("__rn") <= width
+    ).select("query_id", "node", "sim")
+
+
 def _hyperplanes(dim: int, n_bits: int, seed: int) -> list[list[float]]:
     rng = random.Random(seed)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_bits)]
@@ -176,34 +208,34 @@ def srp_lsh_topk(
     """LSH-bucketed approximate top-k cosine search.
 
     Docs sharing ANY of ``bands`` signature bands with the query become
-    candidates; candidates get exact cosine re-rank, top-k per query.
-    More bands / fewer rows-per-band => higher recall, more candidates.
+    candidates; candidates get the exact re-rank of
+    similarity._rerank (which documents the per-row norms), top-k per
+    query. More bands / fewer rows-per-band => higher recall, more
+    candidates.
     Output schema matches similarity_topk: (query_id, rank, <id>, sim, dist).
     """
-    # Norms factored under the candidate join (r09, the
-    # similarity_topk discipline): one L2 chain per signed row instead
-    # of three unrolled chains per colliding pair. Error semantics
-    # unchanged: the sign-bit projection already reads every element
-    # of every row, so a short array raised before this point anyway.
-    from ..functions.vector import cosine_from_parts, l2_norm
+    # The sign-bit projection reads every element of every row, so a
+    # short array raises here, before any norm is evaluated.
+    from ..functions.vector import l2_norm
+    from .similarity import _rerank
 
     csig = spread(corpus).select(
         F.col(corpus_id),
         F.col(corpus_vec),
-        l2_norm(corpus_vec, dim).alias("__cnorm"),
+        l2_norm(corpus_vec, dim).alias("__vn"),
         _band_keys_from_vec(corpus_vec, dim, n_bits, bands, seed).alias("__bands"),
     ).select(
-        corpus_id, corpus_vec, "__cnorm",
+        corpus_id, corpus_vec, "__vn",
         F.explode("__bands").alias("band_key"),
     )
 
     qsig = queries.select(
         F.col(query_id).alias("__qid"),
         F.col(query_vec).alias("__qvec"),
-        l2_norm(query_vec, dim).alias("__qnorm"),
+        l2_norm(query_vec, dim).alias("__qn"),
         _band_keys_from_vec(query_vec, dim, n_bits, bands, seed).alias("__bands"),
     ).select(
-        "__qid", "__qvec", "__qnorm", F.explode("__bands").alias("band_key")
+        "__qid", "__qvec", "__qn", F.explode("__bands").alias("band_key")
     )
 
     cand = (
@@ -212,24 +244,7 @@ def srp_lsh_topk(
     )
     if exclude_self:
         cand = cand.filter(F.col(corpus_id) != F.col("__qid"))
-
-    scored = cand.select(
-        F.col("__qid").alias("query_id"),
-        F.col(corpus_id),
-        cosine_from_parts(
-            dot("__qvec", corpus_vec, dim),
-            F.col("__qnorm"),
-            F.col("__cnorm"),
-        ).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", corpus_id, "sim", (1.0 - F.col("sim")).alias("dist"))
-    )
+    return _rerank(cand, k, dim=dim, id_col=corpus_id, vec_col=corpus_vec)
 
 
 def _band_keys_from_vec(
@@ -740,15 +755,13 @@ def _ivf_from_centroids(
 ) -> DataFrame:
     """Shared IVF plan: :func:`assign_cells` for the corpus ->
     :func:`probe_cells` for the queries, broadcast -> exact re-rank
-    inside the probed cells.
+    inside the probed cells (similarity._rerank).
 
-    Each side's norm is computed once per ROW under the joins and the
-    corpus norm rides through the assignment argmax, so the re-rank is
-    one dot per (query, candidate) pair. Every corpus row was already
-    scored eagerly by the argmax, so error/NULL semantics are those of
-    cosine_sim: a short array raises at assignment, a NULL vector
-    yields NULL sims."""
-    from ..functions.vector import cosine_from_parts
+    The corpus norm rides through the assignment argmax into the
+    re-rank. Every corpus row was already scored eagerly by the argmax,
+    so error/NULL semantics are those of cosine_sim: a short array
+    raises at assignment, a NULL vector yields NULL sims."""
+    from .similarity import _rerank
 
     assigned = assign_cells(
         spread(corpus), cent, dim=dim, id_col=corpus_id, vec_col=corpus_vec,
@@ -764,22 +777,7 @@ def _ivf_from_centroids(
     cand = assigned.join(F.broadcast(probes), on="cell")
     if exclude_self:
         cand = cand.filter(F.col(corpus_id) != F.col("__qid"))
-
-    scored = cand.select(
-        F.col("__qid").alias("query_id"),
-        F.col(corpus_id),
-        cosine_from_parts(
-            dot("__qvec", corpus_vec, dim), F.col("__qn"), F.col("__vn")
-        ).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", corpus_id, "sim", (1.0 - F.col("sim")).alias("dist"))
-    )
+    return _rerank(cand, k, dim=dim, id_col=corpus_id, vec_col=corpus_vec)
 
 
 def ivf_neardup_pairs(
@@ -1078,10 +1076,10 @@ def sq8_topk(
        multiply-adds vectorize wider than double FMAs
     2. rank candidates per query by INTEGER dot product (exact int
        math — identical in every engine, no float-order concerns),
-       keep ``candidates_per_query`` via WindowGroupLimit partial top-n
-    3. exact double-precision cosine re-rank of the survivors only —
-       O(queries x candidates) float work instead of
-       O(queries x corpus)
+       keep ``candidates_per_query`` (similarity._shortlist)
+    3. exact double-precision cosine re-rank of the survivors only
+       (similarity._rerank) — O(queries x candidates) float work
+       instead of O(queries x corpus)
 
     The scale factor is a 1-row aggregate cross-joined onto both sides
     (broadcast of a scalar, never a per-row table). Returns
@@ -1108,7 +1106,8 @@ def sq8_topk(
             + ")"
         )
 
-    from ..functions.vector import cosine_from_parts, l2_norm
+    from ..functions.vector import l2_norm
+    from .similarity import _rerank, _shortlist
 
     c = (
         spread(corpus).crossJoin(scale)
@@ -1116,7 +1115,7 @@ def sq8_topk(
             F.col(corpus_id),
             F.col(corpus_vec),
             q8(corpus_vec).alias("__c8"),
-            l2_norm(corpus_vec, dim).alias("__cnorm"),
+            l2_norm(corpus_vec, dim).alias("__vn"),
         )
     )
     q = (
@@ -1125,7 +1124,7 @@ def sq8_topk(
             F.col(query_id).alias("__qid"),
             F.col(query_vec).alias("__qvec"),
             q8(query_vec).alias("__q8"),
-            l2_norm(query_vec, dim).alias("__qnorm"),
+            l2_norm(query_vec, dim).alias("__qn"),
         )
     )
 
@@ -1139,38 +1138,20 @@ def sq8_topk(
         + " AS BIGINT)"
     )
 
-    wc = Window.partitionBy("__qid").orderBy(
-        F.col("q8_dot").desc(), F.col(corpus_id).asc()
-    )
-    cands = (
+    cands = _shortlist(
         joined.select(
             F.col("__qid"),
             F.col(corpus_id),
             int_dot.alias("q8_dot"),
             F.col(corpus_vec),
-            "__qvec", "__cnorm", "__qnorm",
-        )
-        .withColumn("__crank", F.row_number().over(wc))
-        .filter(F.col("__crank") <= cand_n)
+            "__qvec", "__vn", "__qn",
+        ),
+        cand_n, score="q8_dot", id_col=corpus_id,
     )
-
-    sim = cosine_from_parts(
-        dot("__qvec", corpus_vec, dim), F.col("__qnorm"), F.col("__cnorm")
-    )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        cands.select(
-            F.col("__qid").alias("query_id"),
-            F.col(corpus_id),
-            sim.alias("sim"),
-            "q8_dot",
-        )
-        .withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", corpus_id, "sim", "q8_dot")
-    )
+    return _rerank(
+        cands, k, dim=dim, id_col=corpus_id, vec_col=corpus_vec,
+        carry=("q8_dot",),
+    ).select("query_id", "rank", corpus_id, "sim", "q8_dot")
 
 
 def _pq_d2_slice(a: str, b: str, mi: int, sub: int) -> Column:
@@ -1221,9 +1202,9 @@ def pq_topk(
     vector's approximate score is m table lookups summed in fixed
     subspace order (bit-exact across engines — each partial dot is a
     sequential fold and the final sum is a left-to-right chain).
-    Candidates keep ``candidates_per_query`` per query via the
-    WindowGroupLimit partial top-n, then exact double cosine re-ranks
-    survivors only.
+    Candidates keep ``candidates_per_query`` per query
+    (similarity._shortlist), then the exact re-rank
+    (similarity._rerank) scores the survivors only.
 
     Plan shape at scale: codebooks are tiny -> broadcast to encoding
     and table builds; encoding is one groupBy(vec_id) with map-side
@@ -1265,14 +1246,12 @@ def pq_topk(
     # Encode: per (vector, subspace) argmin of squared L2 to the
     # codebook, ties to the lowest cid — m min_by aggregates in ONE
     # groupBy pass over the ksub-way crossJoin. The corpus-side L2
-    # norm is computed here, ONCE PER ROW after the aggregate, so the
-    # exact re-rank below evaluates one unrolled dot per shortlist
-    # pair instead of three chains (r10, guide §1.2 — the
-    # cosine_from_parts discipline every other two-phase operator
-    # already uses). Short arrays still fail identically: d2_slice
+    # norm the re-rank reads is computed once per row after the
+    # aggregate. Short arrays still fail identically: d2_slice
     # touches every in-dim element, so encoding raises before any
     # norm is evaluated.
-    from ..functions.vector import cosine_from_parts, l2_norm
+    from ..functions.vector import l2_norm
+    from .similarity import _rerank, _shortlist
 
     enc = (
         spread(corpus).crossJoin(F.broadcast(cb))
@@ -1290,7 +1269,7 @@ def pq_topk(
                 for mi in range(m)
             ],
         )
-        .withColumn("__nn", l2_norm(corpus_vec, dim))
+        .withColumn("__vn", l2_norm(corpus_vec, dim))
     )
 
     # Per-query ADC tables: tab{mi}[cid+1] = dot(q_sub, codebook_mi[cid]).
@@ -1338,36 +1317,13 @@ def pq_topk(
     cand = enc.crossJoin(F.broadcast(qtab))
     if exclude_self:
         cand = cand.filter(F.col(corpus_id) != F.col("__qid"))
-    cw = Window.partitionBy("__qid").orderBy(
-        F.col("__adc").desc(), F.col(corpus_id).asc()
+    shortlist = _shortlist(
+        cand.withColumn("adc", adc), cand_n, score="adc", id_col=corpus_id
     )
-    shortlist = (
-        cand.withColumn("__adc", adc)
-        .withColumn("__crn", F.row_number().over(cw))
-        .filter(F.col("__crn") <= cand_n)
-    )
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(corpus_id).asc()
-    )
-    # Exact re-rank from precomputed per-row norms: bit-identical to
-    # cosine_sim (same product, division, zero-guard — see
-    # cosine_from_parts), one dot per shortlist pair.
-    return (
-        shortlist.select(
-            F.col("__qid").alias("query_id"),
-            F.col(corpus_id),
-            cosine_from_parts(
-                dot("__qvec", corpus_vec, dim),
-                F.col("__qn"),
-                F.col("__nn"),
-            ).alias("sim"),
-            F.col("__adc").alias("adc"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", corpus_id, "sim", "adc")
-    )
+    return _rerank(
+        shortlist, k, dim=dim, id_col=corpus_id, vec_col=corpus_vec,
+        carry=("adc",),
+    ).select("query_id", "rank", corpus_id, "sim", "adc")
 
 
 def ivfpq_topk(
@@ -1406,8 +1362,9 @@ def ivfpq_topk(
     PQ-encoding argmin — both map-side-combined groupBys) and the two
     results join co-keyed on the vector id; per-query ADC tables join
     the probed cells BROADCAST, so serving shuffle volume is
-    O(candidates in probed cells), then WindowGroupLimit shortlists
-    cand_n before the exact re-rank touches any raw vector.
+    O(candidates in probed cells), then similarity._shortlist keeps
+    cand_n before the exact re-rank (similarity._rerank) touches any
+    raw vector.
     """
     sub = dim // m
     cand_n = candidates_per_query or 4 * k
@@ -1430,9 +1387,10 @@ def ivfpq_topk(
         return _pq_d2_slice(a, b, mi, sub)
 
     # Index build pass 1: coarse cell assignment (assign_cells). The
-    # row norm computed for it rides through the argmax, so the exact
-    # re-rank below is one dot per shortlist pair.
-    from ..functions.vector import cosine_from_parts, l2_norm
+    # row norm computed for it rides through the argmax into the
+    # exact re-rank.
+    from ..functions.vector import l2_norm
+    from .similarity import _rerank, _shortlist
 
     assigned = assign_cells(
         spread(corpus), cent, dim=dim, id_col=corpus_id, vec_col=corpus_vec,
@@ -1493,10 +1451,8 @@ def ivfpq_topk(
         # Probe sims via the SAME sequential fold the SQL cosine uses —
         # BLAS matvec reassociates, and a reassociation flip at the
         # n_probe boundary would give the engine and its SQL twin
-        # different candidate sets. Zero-norm denominators yield NaN,
-        # which sorts FIRST under the descending probe order (the SQL
-        # NaN-is-greatest convention) — unlike probe_cells, whose
-        # zero guard scores them 0.0; the SQL twin encodes the NaN.
+        # different candidate sets. A zero norm product scores 0.0,
+        # the zero guard of cosine_from_parts that probe_cells applies.
         qn = math.sqrt(_seq_dot_full(qv, qv, dim))
         sims = []
         for ci in range(len(cids)):
@@ -1504,7 +1460,7 @@ def ivfpq_topk(
             sims.append(
                 _seq_dot_full(qv, C[ci], dim) / denom
                 if denom != 0.0
-                else float("nan")
+                else 0.0
             )
         # (sim desc, NaN greatest, cid asc) — same rule as the SQL twin
         order = sorted(
@@ -1565,37 +1521,13 @@ def ivfpq_topk(
     for t in adc_terms[1:]:
         adc = adc + t
 
-    cw = Window.partitionBy("__qid").orderBy(
-        F.col("__adc").desc(), F.col(corpus_id).asc()
+    shortlist = _shortlist(
+        cand.withColumn("adc", adc), cand_n, score="adc", id_col=corpus_id
     )
-    shortlist = (
-        cand.withColumn("__adc", adc)
-        .withColumn("__crn", F.row_number().over(cw))
-        .filter(F.col("__crn") <= cand_n)
-    )
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        shortlist.select(
-            F.col("__qid").alias("query_id"),
-            F.col(corpus_id),
-            # One dot per shortlist pair; norms precomputed per row
-            # (corpus: carried through the assignment argmax; query:
-            # on the broadcast probe table). Bit-identical to
-            # cosine_sim — see cosine_from_parts.
-            cosine_from_parts(
-                dot("__qvec", corpus_vec, dim),
-                F.col("__qn"),
-                F.col("__vn"),
-            ).alias("sim"),
-            F.col("__adc").alias("adc"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", corpus_id, "sim", "adc")
-    )
+    return _rerank(
+        shortlist, k, dim=dim, id_col=corpus_id, vec_col=corpus_vec,
+        carry=("adc",),
+    ).select("query_id", "rank", corpus_id, "sim", "adc")
 
 
 def nsw_beam_search(
@@ -1768,24 +1700,10 @@ def _nsw_joins(
         beam = q.select("query_id").crossJoin(F.broadcast(hubs))
     visited = beam
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("node").asc()
-    )
-
-    def _score(cand: DataFrame) -> DataFrame:
-        scored = (
-            cand.join(corpus, "node")
-            .join(F.broadcast(q), "query_id")
-            .select("query_id", "node", hop_sim.alias("sim"))
+    def _hop(cand: DataFrame, width: int | None = beam_width) -> DataFrame:
+        return _hop_keep(
+            cand, q, corpus, hop_sim, width, exclude_self=exclude_self
         )
-        if exclude_self:
-            scored = scored.filter(F.col("node") != F.col("query_id"))
-        return scored
-
-    def _topb(scored: DataFrame) -> DataFrame:
-        return scored.withColumn("__rn", F.row_number().over(w)).filter(
-            F.col("__rn") <= beam_width
-        ).select("query_id", "node", "sim")
 
     # Eager per-hop checkpoints are deliberate: lazy (eager=False) was
     # measured 1.8x SLOWER end-to-end (24.1 s vs 13.3 s warm on the
@@ -1793,7 +1711,7 @@ def _nsw_joins(
     # per-hop re-plan (runtime partition coalescing over the tiny beam
     # frontier), which costs far more than the per-hop job barrier
     # saves. Measured r09, guide §1.1 empirical loop.
-    beam = _topb(_score(beam)).localCheckpoint(eager=True)
+    beam = _hop(beam).localCheckpoint(eager=True)
     for _ in range(n_iters):
         neigh = beam.join(
             dirs, beam["node"] == dirs["src"]
@@ -1802,21 +1720,19 @@ def _nsw_joins(
         if allowed is not None:
             visited = visited.unionByName(cand).distinct()
             visited = visited.localCheckpoint(eager=True)
-        beam = _topb(_score(cand)).localCheckpoint(eager=True)
+        beam = _hop(cand).localCheckpoint(eager=True)
     if allowed is not None:
-        beam = _score(visited.join(
+        beam = _hop(visited.join(
             allowed.select(F.col(id_col).alias("node")), "node", "left_semi"
-        ))
+        ), None)
 
-    return (
-        beam.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("rank").cast("bigint").alias("rank"),
-            F.col("node").alias("vec_id"),
-            "sim",
-        )
+    from .similarity import _rank_topk
+
+    return _rank_topk(beam, k, id_col="node").select(
+        "query_id",
+        F.col("rank").cast("bigint").alias("rank"),
+        F.col("node").alias("vec_id"),
+        "sim",
     )
 
 

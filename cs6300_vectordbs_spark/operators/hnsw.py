@@ -54,7 +54,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..functions.vector import cosine_sim
 
@@ -222,25 +221,15 @@ def _descend(
     # re-broadcast derivation inside every descent-hop job; norms
     # precomputed per row instead of three unrolled chains per pair —
     # see ann._hop_tables, r09).
-    from .ann import _hop_tables
+    from .ann import _hop_keep, _hop_tables
 
     q, corpus, hop_sim = _hop_tables(
         emb, q, dim, id_col=id_col, vec_col=vec_col
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("node").asc()
-    )
 
     def _score_top(cand: DataFrame) -> DataFrame:
-        scored = (
-            cand.join(corpus, "node")
-            .join(F.broadcast(q), "query_id")
-            .select("query_id", "node", hop_sim.alias("sim"))
-        )
-        return (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= width)
-            .select("query_id", "node")
+        return _hop_keep(cand, q, corpus, hop_sim, width).select(
+            "query_id", "node"
         )
 
     # Highest populated layer's min-id node; one tiny agg, broadcast

@@ -110,12 +110,13 @@ def search_with_latency(
     # One shuffle on query_id serves both the global-top-k rank and the
     # max-shard-time latency (two window functions over the same
     # partitioning — no second exchange, no second kernel pass).
-    wq = Window.partitionBy("query_id")
-    w = wq.orderBy(F.col("sim").desc(), F.col("cid").asc())
-    return (
-        shard_topk
-        .withColumn("latency_ms", F.max("shard_ms").over(wq))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "latency_ms", "rank", F.col("cid").alias(corpus_id), "sim")
+    from .similarity import _rank_topk
+
+    timed = shard_topk.withColumn(
+        "latency_ms", F.max("shard_ms").over(Window.partitionBy("query_id"))
+    )
+    return _rank_topk(
+        timed, k, id_col="cid", carry=("latency_ms",)
+    ).select(
+        "query_id", "latency_ms", "rank", F.col("cid").alias(corpus_id), "sim"
     )

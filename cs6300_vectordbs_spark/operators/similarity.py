@@ -11,13 +11,13 @@ Spark-first design (exact path):
     corpus partitioned in place — the join is a BroadcastNestedLoopJoin
     that streams corpus partitions once, no corpus shuffle.
   - cosine is a pure codegen expression (functions/vector.py).
-  - per-query top-k = rank() window + filter; Spark >= 3.5 rewrites this
-    into WindowGroupLimit, which applies a PARTIAL top-k inside each map
-    task before the shuffle, so only ~k rows per query per partition
-    move — the shuffle is O(queries * k * partitions), independent of
-    corpus size.
-  - ties break by id ascending so results are deterministic and match
-    the SQL oracle.
+  - per-query top-k is :func:`_rank_topk`, the one re-rank rule of
+    every candidate-generating search in the engine: (sim desc, id
+    asc), so results are deterministic and match the SQL oracle, and
+    planned as a WindowGroupLimit, so the shuffle is
+    O(queries * k * partitions), independent of corpus size. The ANN
+    families reach it through :func:`_rerank` (exact cosine of
+    candidate pairs) and, for two-phase searches, :func:`_shortlist`.
 
 Every vectorized kernel shares one scoring core, bit for bit the JVM
 plan's: :func:`_query_side` prepares the side rows are scored against,
@@ -209,8 +209,8 @@ def similarity_topk(
 ) -> DataFrame:
     """Exact brute-force top-k cosine search of ``queries`` against ``corpus``.
 
-    Returns (query_id, rank, <corpus_id>, sim, dist) with 1-based rank,
-    ordered by similarity desc, ties by corpus id asc.
+    Returns (query_id, rank, <corpus_id>, sim, dist), ranked by
+    :func:`_rank_topk`.
 
     ``filter_expr`` is the metadata-filter surface the reference stores
     advertise but never use (SURVEY.md V6); applied pre-join so Catalyst
@@ -221,10 +221,9 @@ def similarity_topk(
 
     ``dim`` (the embedding dimension, when known — it almost always is)
     switches the cosine to the statically-unrolled codegen form AND
-    factors each side's L2 norm below the join, so norms are computed
-    once per corpus row / once per query row instead of once per
-    (query, corpus) pair — at 100 TB that's the difference between
-    O(corpus) and O(corpus x queries) array passes.
+    factors each side's L2 norm below the join (:func:`_rerank`) — at
+    100 TB that's the difference between O(corpus) and
+    O(corpus x queries) array passes.
     """
     from .util import spread
 
@@ -245,46 +244,110 @@ def similarity_topk(
         # Norms computed under the join (Project below Join survives
         # Catalyst — CollapseProject does not cross a Join boundary).
         c = c.select(
-            F.col(corpus_id), l2_norm(corpus_vec, dim).alias("__cnorm"),
+            F.col(corpus_id), l2_norm(corpus_vec, dim).alias("__vn"),
             F.col(corpus_vec),
         )
-        q = q.select("__qid", "__qvec", l2_norm("__qvec", dim).alias("__qnorm"))
+        q = q.select("__qid", "__qvec", l2_norm("__qvec", dim).alias("__qn"))
 
     joined = c.join(F.broadcast(q), how="cross")
     if exclude_self:
         joined = joined.filter(F.col(corpus_id) != F.col("__qid"))
 
-    if dim is not None:
-        sim = cosine_from_parts(
-            dot("__qvec", corpus_vec, dim), F.col("__qnorm"), F.col("__cnorm")
-        )
-    else:
-        sim = cosine_sim("__qvec", corpus_vec)
-    scored = joined.select(
-        F.col("__qid").alias("query_id"),
-        F.col(corpus_id),
-        sim.alias("sim"),
-    )
     # Unscorable rows (NULL vectors -> null sim) never enter the
     # ranking — otherwise they'd fill trailing top-k slots. Zero-NORM
     # vectors are scorable by contract: cosine_sim maps them to 0.0
     # (identically in the SQL twin), so they legitimately outrank
     # negative-sim neighbors.
-    scored = scored.filter(F.col("sim").isNotNull())
+    return _rerank(
+        joined, k, dim=dim, id_col=corpus_id, vec_col=corpus_vec,
+        drop_null=True,
+    )
 
+
+def _rank_topk(
+    scored: DataFrame,
+    k: int,
+    *,
+    id_col: str,
+    carry: tuple[str, ...] = (),
+    drop_null: bool = False,
+) -> DataFrame:
+    """The one exact re-rank rule (SURVEY.md §3): each query's ``k``
+    best ``(query_id, <id_col>, *carry, sim)`` rows by (sim DESC,
+    id ASC), as ``(query_id, rank, <id_col>, *carry, sim, dist)`` with
+    1-based rank and ``dist = 1 - sim``.
+
+    NULL query ids pool into one window partition, as do the rows of
+    a duplicated id. A NULL sim ranks last, and ``drop_null`` drops it before ranking
+    instead (the contract of the callers that never rank an
+    unscorable row). Spark >= 3.5 plans the filtered ``row_number``
+    as a WindowGroupLimit: a partial top-k inside each map task
+    before the shuffle, so only ~k rows per query per partition
+    move."""
+    if drop_null:
+        scored = scored.filter(F.col("sim").isNotNull())
     w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(corpus_id).asc()
+        F.col("sim").desc(), F.col(id_col).asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            "query_id",
-            "rank",
-            corpus_id,
-            F.col("sim"),
+            "query_id", "rank", id_col, *carry, "sim",
             (F.lit(1.0) - F.col("sim")).alias("dist"),
         )
+    )
+
+
+def _rerank(
+    cand: DataFrame,
+    k: int,
+    *,
+    dim: int | None,
+    id_col: str,
+    vec_col: str,
+    carry: tuple[str, ...] = (),
+    drop_null: bool = False,
+) -> DataFrame:
+    """Exact cosine re-rank of candidate pairs: scores each row of
+    ``cand`` and ranks it with :func:`_rank_topk`.
+
+    ``cand`` holds the query side as ``(__qid, __qvec, __qn)`` and the
+    candidate as ``(<id_col>, <vec_col>, __vn)``, the names
+    :func:`.ann.probe_cells` and ``ann.assign_cells(carry=...)`` emit.
+    Both norms are computed once per ROW below the candidate join, so
+    the per-pair work is one unrolled dot; :func:`cosine_from_parts`
+    keeps the sim bit-identical to ``cosine_sim``. With ``dim=None``
+    the pair is scored by the HOF ``cosine_sim`` and the norm columns
+    are not read."""
+    if dim is None:
+        sim = cosine_sim("__qvec", vec_col)
+    else:
+        sim = cosine_from_parts(
+            dot("__qvec", vec_col, dim), F.col("__qn"), F.col("__vn")
+        )
+    scored = cand.select(
+        F.col("__qid").alias("query_id"), F.col(id_col), *carry,
+        sim.alias("sim"),
+    )
+    return _rank_topk(
+        scored, k, id_col=id_col, carry=carry, drop_null=drop_null
+    )
+
+
+def _shortlist(
+    cand: DataFrame, n: int, *, score: str, id_col: str, desc: bool = True
+) -> DataFrame:
+    """The coarse pass of a two-phase search: each ``__qid``'s ``n``
+    best rows by (``score`` DESC, or ASC with ``desc=False``; id ASC).
+    Like :func:`_rank_topk` it plans as a WindowGroupLimit, so only
+    the survivors reach the exact re-rank."""
+    order = F.col(score).desc() if desc else F.col(score).asc()
+    w = Window.partitionBy("__qid").orderBy(order, F.col(id_col).asc())
+    return (
+        cand.withColumn("__sl", F.row_number().over(w))
+        .filter(F.col("__sl") <= n)
+        .drop("__sl")
     )
 
 
@@ -391,7 +454,7 @@ def _topk_batches(ids, vecs, side, k, dim, exclude_self):
     """Each side row's LOCAL top-k over each scored block of ``(ids,
     vecs)``, as (query_id, cid, sim) batches: any global top-k row is
     in its block's local top-k, so one window over these candidates
-    (:func:`_rank_candidates`) is exact."""
+    (:func:`_rank_topk`) is exact."""
     import pyarrow as pa
 
     qids = side[0]
@@ -402,26 +465,6 @@ def _topk_batches(ids, vecs, side, k, dim, exclude_self):
              pa.array(sims[r, col], type=pa.float64())],
             names=["query_id", "cid", "sim"],
         )
-
-
-def _rank_candidates(cand: DataFrame, k: int, corpus_id: str) -> DataFrame:
-    """The one merge window over (query_id, cid, sim) candidates: NULL
-    and duplicate query ids pool exactly as the JVM plan's
-    ``partitionBy("query_id")`` pools them."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("cid").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "rank",
-            F.col("cid").alias(corpus_id),
-            F.col("sim"),
-            (F.lit(1.0) - F.col("sim")).alias("dist"),
-        )
-    )
 
 
 def similarity_topk_blocked(
@@ -490,7 +533,9 @@ def similarity_topk_blocked(
                 batch.column(0), batch.column(1), side, k, dim, exclude_self
             )
 
-    return _rank_candidates(src.mapInArrow(kernel, schema), k, corpus_id)
+    return _rank_topk(
+        src.mapInArrow(kernel, schema), k, id_col="cid"
+    ).withColumnRenamed("cid", corpus_id)
 
 
 def _local_topk(sims, ok, cids, k):
@@ -727,7 +772,7 @@ def similarity_topk_grid(
         corpus, corpus_id, corpus_vec, queries, query_id, query_vec,
         cell, schema,
     )
-    return _rank_candidates(cand, k, corpus_id)
+    return _rank_topk(cand, k, id_col="cid").withColumnRenamed("cid", corpus_id)
 
 
 def _knn_pairs(corpus: DataFrame, k: int, id_col: str, vec_col: str):

@@ -24,24 +24,26 @@ first pass reads a fraction of the bytes:
 Both are EXACT over their candidate set and fully deterministic, so
 unlike the LSH buckets they carry full value-hash DuckDB oracles: the
 coarse score (integer Hamming, or the prefix cosine with the shared
-left-fold accumulation order) is bit-identical across engines, both
-stages break ties by ascending corpus id, and therefore the candidate
-SET — not just the final ranking — is engine-independent.
+left-fold accumulation order) is bit-identical across engines, and
+both stages break ties by ascending corpus id, so the candidate SET —
+not just the final ranking — is engine-independent. The two stages
+are operators/similarity's ``_shortlist`` and ``_rerank``, shared with
+every other candidate-generating search.
 
 Scale shape (both operators): queries broadcast, corpus never
-shuffles; each stage's per-query top-N compiles to WindowGroupLimit
-(partial top-N inside every map task before the exchange), so the
-shuffle carries O(queries x candidates x partitions) rows regardless
-of corpus size, and the exact cosine touches candidates only.
+shuffles; each stage's per-query top-N compiles to WindowGroupLimit,
+so the shuffle carries O(queries x candidates x partitions) rows
+regardless of corpus size, and the exact cosine touches candidates
+only.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..functions.vector import cosine_from_parts, dot, l2_norm
+from .similarity import _rerank, _shortlist
 from .util import spread
 
 #: Sign bits packed per BIGINT word.  32 (not 64) so the left-fold
@@ -135,8 +137,8 @@ def bq_topk(
     candidate set is exact and engine-independent).  Stage 2 re-ranks
     the candidates by exact full-precision cosine.
 
-    Returns (query_id, rank, <corpus_id>, hamming, sim, dist) with
-    1-based rank by (sim desc, id asc).
+    Returns (query_id, rank, <corpus_id>, hamming, sim, dist), ranked
+    by the shared re-rank (similarity._rank_topk).
 
     At 100 TB the packed words are the column you PERSIST (32x smaller
     than the float32 vectors, 64x smaller than double); the first pass
@@ -151,7 +153,7 @@ def bq_topk(
     c = spread(corpus).select(
         F.col(corpus_id),
         F.col(corpus_vec),
-        l2_norm(corpus_vec, dim).alias("__cnorm"),
+        l2_norm(corpus_vec, dim).alias("__vn"),
         *[
             col.alias(f"__cw{i}")
             for i, col in enumerate(bq_pack_words(corpus_vec, dim))
@@ -160,7 +162,7 @@ def bq_topk(
     q = queries.select(
         F.col(query_id).alias("__qid"),
         F.col(query_vec).alias("__qvec"),
-        l2_norm(query_vec, dim).alias("__qnorm"),
+        l2_norm(query_vec, dim).alias("__qn"),
         *[
             col.alias(f"__qw{i}")
             for i, col in enumerate(bq_pack_words(query_vec, dim))
@@ -174,38 +176,12 @@ def bq_topk(
     coarse = joined.withColumn("hamming", bq_hamming(n_words)).filter(
         F.col("hamming").isNotNull()  # NULL vectors never enter the ranking
     )
-
-    wh = Window.partitionBy("__qid").orderBy(
-        F.col("hamming").asc(), F.col(corpus_id).asc()
+    cand = _shortlist(
+        coarse, k * refine, score="hamming", id_col=corpus_id, desc=False
     )
-    cand = coarse.withColumn("__hr", F.row_number().over(wh)).filter(
-        F.col("__hr") <= k * refine
-    )
-
-    sim = cosine_from_parts(
-        dot("__qvec", corpus_vec, dim), F.col("__qnorm"), F.col("__cnorm")
-    )
-    scored = cand.select(
-        F.col("__qid").alias("query_id"),
-        F.col(corpus_id),
-        F.col("hamming"),
-        sim.alias("sim"),
-    ).filter(F.col("sim").isNotNull())
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "rank",
-            corpus_id,
-            "hamming",
-            "sim",
-            (F.lit(1.0) - F.col("sim")).alias("dist"),
-        )
+    return _rerank(
+        cand, k, dim=dim, id_col=corpus_id, vec_col=corpus_vec,
+        carry=("hamming",), drop_null=True,
     )
 
 
@@ -233,9 +209,9 @@ def matryoshka_topk(
     query (ties by id ascending) are re-ranked by the exact full-dim
     cosine.
 
-    Returns (query_id, rank, <corpus_id>, sim_coarse, sim, dist) with
-    1-based rank by (sim desc, id asc); ``sim_coarse`` is the stage-1
-    prefix cosine that selected the row.
+    Returns (query_id, rank, <corpus_id>, sim_coarse, sim, dist),
+    ranked by the shared re-rank (similarity._rank_topk);
+    ``sim_coarse`` is the stage-1 prefix cosine that selected the row.
 
     Both stages use the shared left-fold accumulation order, so the
     prefix cosine is bit-identical to DuckDB's ``list_dot_product`` on
@@ -263,13 +239,13 @@ def matryoshka_topk(
     c = spread(corpus).select(
         F.col(corpus_id),
         F.col(corpus_vec),
-        l2_norm(corpus_vec, dim).alias("__cnorm"),
+        l2_norm(corpus_vec, dim).alias("__vn"),
         _pnorm(corpus_vec).alias("__cnorm_p"),
     )
     q = queries.select(
         F.col(query_id).alias("__qid"),
         F.col(query_vec).alias("__qvec"),
-        l2_norm(query_vec, dim).alias("__qnorm"),
+        l2_norm(query_vec, dim).alias("__qn"),
         _pnorm(query_vec).alias("__qnorm_p"),
     )
 
@@ -292,36 +268,10 @@ def matryoshka_topk(
     coarse = joined.withColumn("sim_coarse", sim_p).filter(
         F.col("sim_coarse").isNotNull()
     )
-
-    wc = Window.partitionBy("__qid").orderBy(
-        F.col("sim_coarse").desc(), F.col(corpus_id).asc()
+    cand = _shortlist(
+        coarse, k * refine, score="sim_coarse", id_col=corpus_id
     )
-    cand = coarse.withColumn("__cr", F.row_number().over(wc)).filter(
-        F.col("__cr") <= k * refine
-    )
-
-    sim = cosine_from_parts(
-        dot("__qvec", corpus_vec, dim), F.col("__qnorm"), F.col("__cnorm")
-    )
-    scored = cand.select(
-        F.col("__qid").alias("query_id"),
-        F.col(corpus_id),
-        F.col("sim_coarse"),
-        sim.alias("sim"),
-    ).filter(F.col("sim").isNotNull())
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "rank",
-            corpus_id,
-            "sim_coarse",
-            "sim",
-            (F.lit(1.0) - F.col("sim")).alias("dist"),
-        )
+    return _rerank(
+        cand, k, dim=dim, id_col=corpus_id, vec_col=corpus_vec,
+        carry=("sim_coarse",), drop_null=True,
     )

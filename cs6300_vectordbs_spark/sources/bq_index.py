@@ -22,9 +22,9 @@ fingerprint committed last):
                     join against the corpus — the row-fetch of a real
                     deployment.
 
-Serving parity: identical candidate rule and tie-breaks as
-operators/twostage.bq_topk (Hamming asc / id asc, then sim desc / id
-asc), so the stored-serving query shares bq_topk's full value-hash
+Serving parity: the same two stages as operators/twostage.bq_topk
+(operators/similarity's ``_shortlist`` by Hamming asc, then
+``_rerank``), so the stored-serving query shares bq_topk's full value-hash
 oracle — the same oracle relationship nsw_persisted_topk and
 ivf_persisted_topk have with their in-memory twins.
 
@@ -40,9 +40,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..functions.vector import cosine_from_parts, dot, l2_norm
+from ..functions.vector import l2_norm
+from ..operators.similarity import _rerank, _shortlist
 from ..operators.twostage import (
     WORD_BITS,
     bq_hamming,
@@ -56,6 +56,7 @@ from .index_common import (
     corpus_fingerprint,
     has_marker,
     invalidate_fingerprint,
+    latest_generation,
     read_fingerprint,
     set_marker,
     write_fingerprint,
@@ -170,13 +171,8 @@ def compact_bq_index(spark: SparkSession, path: str) -> None:
     rename pair, so a mid-write failure leaves the old index serving."""
     import shutil
 
-    words = spark.read.parquet(f"{path}/words")
-    dw = Window.partitionBy("id").orderBy(F.col("gen").desc())
-    latest = (
-        words.withColumn("__rn", F.row_number().over(dw))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .withColumn("gen", F.lit(0).cast("bigint"))
+    latest = latest_generation(spark.read.parquet(f"{path}/words")).withColumn(
+        "gen", F.lit(0).cast("bigint")
     )
     if os.path.exists(f"{_tombstones_path(path)}/_SUCCESS"):
         tombs = spark.read.parquet(_tombstones_path(path)).distinct()
@@ -247,17 +243,18 @@ def search_bq_index(
 
     Pass 1 never touches a float: the words table (longs only) streams
     partition-parallel against the broadcast query words, and the
-    per-query top ``k * refine`` by (hamming asc, id asc) compiles to
-    WindowGroupLimit — O(queries x candidates x partitions) rows move.
-    Pass 2 fetches full vectors for the candidate ids only: the
+    per-query top ``k * refine`` by (hamming asc, id asc)
+    (similarity._shortlist) — O(queries x candidates x partitions) rows
+    move. Pass 2 fetches full vectors for the candidate ids only: the
     distinct candidate ids (queries x k x refine — bounded by the same
     broadcast-sized-query-batch contract as search_ivf_index's probed
     cells) are collected and pushed as a literal IN filter into the
     corpus scan, so parquet row-group pruning confines the float read
-    to candidate rows; norms are computed on the FETCHED rows only.
+    to candidate rows, and the exact re-rank (similarity._rerank)
+    reads a norm computed once per fetched row below the fetch join.
     Past ``MAX_FETCH_IDS`` ids the fetch degrades gracefully to the
-    broadcast hash join (full (id, vector) scan, candidates-only
-    compute).
+    broadcast hash join (full (id, vector) scan, one norm per scanned
+    row, dots for candidates only).
 
     Column names, candidate rule, and every tie rule match
     operators/twostage.bq_topk (the id column comes back under
@@ -276,16 +273,10 @@ def search_bq_index(
     n_words = n_words_for(dim)
     raw = spark.read.parquet(f"{path}/words")
     if has_marker(path, "HAS_UPSERTS"):
-        # Latest-wins per id across upsert generations. Paid ONLY
-        # while generations exist (one shuffle keyed id over the
-        # 16-byte packed rows); compact_bq_index restores the
-        # dedup-free shape and clears the marker.
-        dw = Window.partitionBy("id").orderBy(F.col("gen").desc())
-        raw = (
-            raw.withColumn("__rn", F.row_number().over(dw))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        # Paid ONLY while generations exist (over the 16-byte packed
+        # rows); compact_bq_index restores the dedup-free shape and
+        # clears the marker.
+        raw = latest_generation(raw)
     if os.path.exists(f"{_tombstones_path(path)}/_SUCCESS"):
         tombs = spark.read.parquet(_tombstones_path(path)).distinct()
         raw = raw.join(F.broadcast(tombs), on="id", how="left_anti")
@@ -297,7 +288,7 @@ def search_bq_index(
     q = queries.select(
         F.col(query_id).alias("__qid"),
         F.col(query_vec).alias("__qvec"),
-        l2_norm(query_vec, dim).alias("__qnorm"),
+        l2_norm(query_vec, dim).alias("__qn"),
         *[
             c.alias(f"__qw{i}")
             for i, c in enumerate(bq_pack_words(query_vec, dim))
@@ -308,22 +299,22 @@ def search_bq_index(
     if exclude_self:
         joined = joined.filter(F.col(corpus_id) != F.col("__qid"))
 
-    coarse = joined.withColumn("hamming", bq_hamming(n_words))
-
-    wh = Window.partitionBy("__qid").orderBy(
-        F.col("hamming").asc(), F.col(corpus_id).asc()
-    )
     cand = (
-        coarse.withColumn("__hr", F.row_number().over(wh))
-        .filter(F.col("__hr") <= k * refine)
-        .select("__qid", "__qvec", "__qnorm", corpus_id, "hamming")
+        _shortlist(
+            joined.withColumn("hamming", bq_hamming(n_words)),
+            k * refine, score="hamming", id_col=corpus_id, desc=False,
+        )
+        .select("__qid", "__qvec", "__qn", corpus_id, "hamming")
         # Materialized once: both the candidate-id collect below and
         # the row-fetch join reuse it — the Hamming pass never re-runs.
         .localCheckpoint(eager=True)
     )
 
+    # The norm the re-rank reads, once per fetched row below the fetch
+    # join (the IN filter below is pushed under this projection).
     vecs = corpus.filter(F.col(corpus_vec).isNotNull()).select(
-        F.col(corpus_id), F.col(corpus_vec)
+        F.col(corpus_id), F.col(corpus_vec),
+        l2_norm(corpus_vec, dim).alias("__vn"),
     )
     cand_ids = sorted(
         r[0]
@@ -337,33 +328,7 @@ def search_bq_index(
         vecs = vecs.filter(F.col(corpus_id).isin(cand_ids))
     # Candidates broadcast into the (pruned) corpus scan.
     fetched = vecs.join(F.broadcast(cand), on=corpus_id)
-    # Norms under the join output: computed once per FETCHED row.
-    fetched = fetched.withColumn(
-        "__cnorm", l2_norm(corpus_vec, dim)
-    )
-
-    sim = cosine_from_parts(
-        dot("__qvec", corpus_vec, dim), F.col("__qnorm"), F.col("__cnorm")
-    )
-    scored = fetched.select(
-        F.col("__qid").alias("query_id"),
-        F.col(corpus_id),
-        F.col("hamming"),
-        sim.alias("sim"),
-    ).filter(F.col("sim").isNotNull())
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "rank",
-            corpus_id,
-            "hamming",
-            "sim",
-            (F.lit(1.0) - F.col("sim")).alias("dist"),
-        )
+    return _rerank(
+        fetched, k, dim=dim, id_col=corpus_id, vec_col=corpus_vec,
+        carry=("hamming",), drop_null=True,
     )

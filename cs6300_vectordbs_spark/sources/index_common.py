@@ -40,7 +40,9 @@ serve must honor, e.g. ``HAS_UPSERTS`` while appended generations need
 a latest-wins dedup. A marker is SET before the mutation it announces
 and CLEARED only after the write that resolves it, so a crash between
 the two leaves the marker behind and the serve pays an unneeded dedup,
-never skips a needed one.
+never skips a needed one. The dedup is ``latest_generation``, shared
+by the serves (while ``HAS_UPSERTS`` exists) and the compactions that
+clear the marker.
 """
 
 from __future__ import annotations
@@ -51,6 +53,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 
 @contextmanager
@@ -137,3 +140,15 @@ def clear_marker(path: str, name: str) -> None:
         os.remove(f"{path}/{name}")
     except FileNotFoundError:
         pass
+
+
+def latest_generation(rows: DataFrame) -> DataFrame:
+    """Latest-wins over upsert generations: each ``id``'s row with the
+    highest ``gen`` (ties impossible — generations are caller-ordered).
+    One shuffle keyed ``id``."""
+    w = Window.partitionBy("id").orderBy(F.col("gen").desc())
+    return (
+        rows.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )

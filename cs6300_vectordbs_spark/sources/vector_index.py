@@ -41,11 +41,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..functions.vector import UNROLL_MAX_DIM, cosine_from_parts, dot, l2_norm
+from ..functions.vector import UNROLL_MAX_DIM, l2_norm
 from ..operators.ann import assign_cells, ivf_centroids
-from ..operators.similarity import _col_norms, _dense, _sims_matrix
+from ..operators.similarity import _col_norms, _dense, _rerank, _sims_matrix
 from ..operators.util import spread
 from .index_common import (
     build_lock,
@@ -53,6 +52,7 @@ from .index_common import (
     corpus_fingerprint,
     has_marker,
     invalidate_fingerprint,
+    latest_generation,
     read_fingerprint,
     set_marker,
     write_fingerprint,
@@ -247,9 +247,11 @@ def search_ivf_index(
     rows are broadcast into the candidate join. The probed cell ids
     are applied as a literal IN filter, which prunes cell directories
     at the file listing level: the scan never touches unprobed
-    partitions, and nothing of the cells side is collected.
+    partitions, and nothing of the cells side is collected. The
+    candidates get the exact re-rank of similarity._rerank, with the
+    stored-cell norm computed once per row below the candidate join.
 
-    The latest-wins dedup window over upsert generations runs only
+    The latest-wins dedup (index_common.latest_generation) runs only
     while the ``HAS_UPSERTS`` marker exists (set by upsert_ivf_index,
     cleared by build_ivf_index and compact_ivf_index)."""
     probes, probed_cells = _probe_rows(
@@ -260,42 +262,17 @@ def search_ivf_index(
         F.col("cell").isin(probed_cells)
     )
     if has_marker(path, "HAS_UPSERTS"):
-        # Latest-wins dedup for upserted ids (gen from upsert_ivf_index).
         # Within a cell this resolves re-upserts exactly; a vector whose
         # NEW version moved to a different cell is only shadowed once
         # compact_ivf_index runs — the standard LSM-style contract.
-        dw = Window.partitionBy("id").orderBy(F.col("gen").desc())
-        cells = (
-            cells.withColumn("__rn", F.row_number().over(dw))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    # The stored-cell norm once per candidate ROW below the candidate
-    # join (r09): per-pair work is the dot alone. Bit-identical
-    # (cosine_from_parts); every row of a probed cell was already
-    # scored, so error/NULL semantics are unchanged.
+        cells = latest_generation(cells)
+    # Every row of a probed cell was already scored at assignment, so
+    # error/NULL semantics are unchanged.
     cells = cells.select("*", l2_norm("vec", dim).alias("__vn"))
     cand = cells.join(F.broadcast(probes), on="cell")
     if exclude_self:
         cand = cand.filter(F.col("id") != F.col("__qid"))
-    scored = cand.select(
-        F.col("__qid").alias("query_id"),
-        F.col("id"),
-        cosine_from_parts(
-            dot("__qvec", "vec", dim), F.col("__qn"), F.col("__vn")
-        ).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "rank", "id", "sim",
-            (1.0 - F.col("sim")).alias("dist"),
-        )
-    )
+    return _rerank(cand, k, dim=dim, id_col="id", vec_col="vec")
 
 
 def upsert_ivf_index(
@@ -341,12 +318,8 @@ def compact_ivf_index(spark: SparkSession, path: str) -> None:
     version changed cells, and clears the ``HAS_UPSERTS`` marker after
     the swap, so the serve drops its dedup window. At scale: a periodic
     partition-parallel rewrite, the LSM compaction of the index."""
-    cells = spark.read.parquet(f"{path}/cells")
-    dw = Window.partitionBy("id").orderBy(F.col("gen").desc())
-    latest = (
-        cells.withColumn("__rn", F.row_number().over(dw))
-        .filter(F.col("__rn") == 1)
-        .select("id", F.lit(0).alias("gen"), "vec", "cell")
+    latest = latest_generation(spark.read.parquet(f"{path}/cells")).select(
+        "id", F.lit(0).alias("gen"), "vec", "cell"
     )
     # Write the full compacted generation BESIDE the live one, then
     # swap. The source files stay intact until the replacement is

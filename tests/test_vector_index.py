@@ -144,8 +144,10 @@ def test_quantizer_equals_sql_ivf_cells(spark):
     and HOF forms) and ann.probe_cells return exactly the cells and
     probe ranks of the oracles' shared _sql_ivf_cells(probes=True) on
     DuckDB over the same rows. The rows hold a tie (centroids 3 and 12
-    are one vector: the lower cid wins), a zero-norm row, a NaN
-    element and a NULL vector that is both a centroid and a query.
+    are one vector: the lower cid wins), a zero-norm row, a zero-norm
+    centroid (7: every cosine against it is 0.0 on both sides, so it
+    ranks among the probes' positive and negative sims), a NaN element
+    and a NULL vector that is both a centroid and a query.
     DuckDB's list math refuses a NULL element, so that row is checked
     on the Spark side alone: its sims are all NULL, so it lands in the
     lowest cid."""
@@ -172,7 +174,8 @@ def test_quantizer_equals_sql_ivf_cells(spark):
     vecs = {i: [round(rng.uniform(-1, 1), 3) for _ in range(4)]
             for i in range(30)}
     vecs.update({3: tie, 12: tie, 22: [2 * x for x in tie], 5: None,
-                 20: [0.0] * 4, 21: [float("nan"), 0.5, -1.0, 2.0]})
+                 7: [0.0] * 4, 20: [0.0] * 4,
+                 21: [float("nan"), 0.5, -1.0, 2.0]})
     con = duckdb.connect()
     con.register("embeddings", pa.table(
         {"vec_id": list(vecs), "embedding": list(vecs.values())}
