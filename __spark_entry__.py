@@ -22,6 +22,7 @@ Determinism rules (SURVEY.md §5):
 from __future__ import annotations
 
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -98,7 +99,6 @@ from cs6300_vectordbs_spark.operators.timeseries import (
 from cs6300_vectordbs_spark.operators.text_search import bm25_topk, rrf_fuse
 from cs6300_vectordbs_spark.operators.similarity import (
     label_centroids,
-    similarity_topk_blocked,
     similarity_topk,
 )
 from cs6300_vectordbs_spark.operators.upsert import upsert_latest
@@ -108,6 +108,9 @@ from cs6300_vectordbs_spark.streaming.events import windowed_event_counts
 N_QUERIES = 10  # flagship query-batch size (first N vectors as queries)
 TOPK = 5  # reference top-k (src/chroma.py:99)
 EMB_DIM = 64  # testdata embeddings dimension (all scale factors)
+# Persisted indexes and tables the queries build live under the
+# checkout they run from, so two checkouts never serve each other's.
+WAREHOUSE = str(Path(__file__).resolve().parent / "spark-warehouse")
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -159,11 +162,11 @@ def q_auto_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The one-call search facade with automatic strategy dispatch
     (operators/search.py — SURVEY §4.3 item 2, 'the library does the
     planning' like the reference's collection.query). At every test
-    scale the counts land in the blocked regime (the vectorized Arrow
-    kernel), whose rows are bit-identical to the JVM plan's, so the
-    result — and the oracle — are identical to topk_cosine_exact; the
-    dispatch rule itself (blocked vs grid vs ivf by corpus/query
-    counts) and the bit-equality of the exact strategies are pinned in
+    scale the counts land in the exact regime, the same
+    similarity_topk call as topk_cosine_exact, so the result — and the
+    oracle — are identical to it; the dispatch rule itself (exact vs
+    ivf by corpus/query counts) and the bit-equality of the exact
+    plans with the JVM parity reference are pinned in
     tests/test_plans.py and tests/test_similarity.py."""
     from cs6300_vectordbs_spark.operators.search import search
 
@@ -186,7 +189,7 @@ def q_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     chroma.py:3, Chroma ``where`` / Pinecone ``filter``): corpus rows
     join their document metadata and only ``lang = 'en'`` rows are
     searchable. The filter goes through similarity_topk's filter_expr
-    PRE-join, so Catalyst pushes lang='en' into the documents parquet
+    before scoring, so Catalyst pushes lang='en' into the documents parquet
     scan (asserted in tests/test_plans.py) — at 100 TB the filter
     prunes row groups before a single cosine is computed."""
     emb = _t(spark, sf_dir, "embeddings")
@@ -236,8 +239,8 @@ def q_topk_cosine_384d(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate, not just pytest: at 384-d the unrolled chain would blow
     Janino's method limit, so the auto-switch MUST hold and MUST stay
     bit-identical to DuckDB's list_dot_product left fold. Corpus is
-    documents (embed is scan-fused, no shuffle); plan is the same
-    broadcast + WindowGroupLimit shape as topk_cosine_exact."""
+    documents (embed is scan-fused, no shuffle); the search is the same
+    similarity_topk call as topk_cosine_exact."""
     from cs6300_vectordbs_spark.functions.embed import embed_text
 
     # NULL text has no embedding: dropped before the embed stage on
@@ -447,16 +450,16 @@ GROUP BY label, j
 
 
 def q_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-pairs cosine >= 0.3 via the grid-blocked distributed kernel
-    (operators/similarity.py pairwise_similarity_grid): no driver
-    collect anywhere in the plan — both sides shuffle into hash-block
-    grid cells scored by the Arrow kernel, bit-identical to the oracle."""
+    """All-pairs cosine >= 0.3 via the engine's all-pairs operator
+    (operators/similarity.py pairwise_similarity): no driver collect
+    anywhere in the plan — both sides shuffle into hash-block grid
+    cells scored by the Arrow kernel, bit-identical to the oracle."""
     from cs6300_vectordbs_spark.operators.similarity import (
-        pairwise_similarity_grid,
+        pairwise_similarity,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    return pairwise_similarity_grid(emb, emb, min_sim=0.3).select(
+    return pairwise_similarity(emb, emb, min_sim=0.3).select(
         F.col("id_a").cast("bigint"), F.col("id_b").cast("bigint"), "sim"
     )
 
@@ -769,7 +772,7 @@ def q_dedup_signatures_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/sig_store_{tag}"
+    path = f"{WAREHOUSE}/sig_store_{tag}"
     docs = _t(spark, sf_dir, "documents")
     clear_exact_group_cache()
     ensure_signature_tables(
@@ -863,7 +866,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed = docs.filter(F.col("doc_id") % 10 != 0)
     new = docs.filter(F.col("doc_id") % 10 == 0)
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/dedup_index_{tag}"
+    path = f"{WAREHOUSE}/dedup_index_{tag}"
     ensure_dedup_index(
         spark, indexed, path,
         num_hashes=_MH_HASHES, bands=_MH_BANDS, shingle_n=3,
@@ -904,7 +907,7 @@ def q_incremental_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     indexed = docs.filter(F.col("doc_id") % 10 != 0)
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/dedup_index_{tag}"
+    path = f"{WAREHOUSE}/dedup_index_{tag}"
     ensure_dedup_index(
         spark, indexed, path,
         num_hashes=_MH_HASHES, bands=_MH_BANDS, shingle_n=3,
@@ -1237,11 +1240,11 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle for the MinHash/SimHash/LSH candidate paths, now with no
     driver-side collect in its own plan either."""
     from cs6300_vectordbs_spark.operators.similarity import (
-        pairwise_similarity_grid,
+        pairwise_similarity,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    return pairwise_similarity_grid(emb, emb, min_sim=0.35).select(
+    return pairwise_similarity(emb, emb, min_sim=0.35).select(
         F.col("id_a").cast("bigint"), F.col("id_b").cast("bigint"), "sim"
     )
 
@@ -1259,7 +1262,7 @@ _NEARDUP_IVF_SIM = 0.35
 def q_embedding_neardup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs via IVF-cell blocking — the SCALE path
     for semantic dedup (operators/ann.py ivf_neardup_pairs). The
-    all-pairs grid kernel behind embedding_neardup computes O(N^2)
+    all-pairs operator behind embedding_neardup computes O(N^2)
     cosines; here only same-cell pairs are scored, ~N^2/n_cells for
     balanced cells — the embedding-space analogue of MinHash banding.
     Same threshold as embedding_neardup so the two registrations
@@ -1349,8 +1352,8 @@ def q_knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-node degree and triangle membership counts (a<b<c join —
     each triangle counted once per corner). All outputs are INTEGERS,
     so the oracle needs no float policy at all. Scale shape: the graph
-    build is the similarity_topk plan (corpus broadcast-streamed, no
-    all-pairs materialization beyond the per-query top-k); the triangle
+    build is the exact top-k's grid plan (no all-pairs
+    materialization beyond the per-query top-k); the triangle
     join is three equi-joins on a table of O(N*k) edges."""
     # All-vectors-as-queries: the grid plan (inside _knn_edges) shards
     # BOTH sides (the query side is corpus-sized here, so broadcasting/
@@ -2386,7 +2389,7 @@ def q_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cs6300_vectordbs_spark.sources.ingest import load_corpus_csv
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/csv_corpus_{tag}"
+    path = f"{WAREHOUSE}/csv_corpus_{tag}"
     docs = _t(spark, sf_dir, "documents")
     (
         docs.select(
@@ -2445,7 +2448,7 @@ def q_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cs6300_vectordbs_spark.sources.ingest import load_corpus_jsonl
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/jsonl_corpus_{tag}"
+    path = f"{WAREHOUSE}/jsonl_corpus_{tag}"
     docs = _t(spark, sf_dir, "documents")
     (
         docs.select("doc_id", "text", "lang", "source")
@@ -2495,7 +2498,7 @@ def q_csv_ingest_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cs6300_vectordbs_spark.sources.ingest import split_csv_lines
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/csv_checked_{tag}"
+    path = f"{WAREHOUSE}/csv_checked_{tag}"
     docs = _t(spark, sf_dir, "documents")
     (
         docs.select("doc_id", "lang", "source", "n_chars")
@@ -2552,7 +2555,7 @@ def q_jsonl_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cs6300_vectordbs_spark.streaming.ingest import jsonl_corpus_stream
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/jsonl_corpus_stream_{tag}"
+    path = f"{WAREHOUSE}/jsonl_corpus_stream_{tag}"
     docs = _t(spark, sf_dir, "documents")
     (
         docs.select("doc_id", "text", "lang", "source")
@@ -3014,7 +3017,7 @@ def q_partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cs6300_vectordbs_spark.sources.ingest import write_table
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/events_by_type_{tag}"
+    path = f"{WAREHOUSE}/events_by_type_{tag}"
     ev = read_events(spark, sf_dir)
     # Content-addressed reuse (the persisted-index discipline): a
     # regenerated source under the same path must rebuild the layout,
@@ -3088,7 +3091,7 @@ def q_zordered_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cs6300_vectordbs_spark.sources.layout import write_zordered
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/events_zorder_{tag}"
+    path = f"{WAREHOUSE}/events_zorder_{tag}"
     ev = read_events(spark, sf_dir)
     fp = corpus_fingerprint(
         ev, ["event_id", "ts", "user_id", "value"],
@@ -4256,7 +4259,7 @@ def q_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The two retrieval arms are mutually independent until the fusion
     # union, and EACH serializes driver-synchronized work during
     # construction (bm25_topk: the postings persist + the collection-
-    # constants collect; the blocked kernel: the query-batch collect
+    # constants collect; similarity_topk: the bounded query-batch load
     # that evaluates embed_text over the sample). Built from a thread
     # pool so Spark overlaps those jobs (guide §2.6 — the tuning-report
     # pattern). Results and plan shapes are identical.
@@ -4268,14 +4271,12 @@ def q_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _vec():
         # NULL text embeds to nothing: dropped from the vector corpus
         # on both sides (oracle: WHERE text IS NOT NULL in the corpus
-        # CTE). Arrow-blocked exact kernel: bit-identical to
-        # similarity_topk but ~3x faster on the 5k-query x 50k-doc leg
-        # at sf0.1.
+        # CTE).
         corpus = docs.filter(F.col("text").isNotNull()).select(
             "doc_id", embed_text("text", dim=16).alias("embedding")
         )
         qv = qs.withColumn("query_vec", embed_text("query", dim=16))
-        return similarity_topk_blocked(
+        return similarity_topk(
             corpus, qv, 20, corpus_id="doc_id", exclude_self=False
         ).select("query_id", "doc_id", "rank")
 
@@ -5973,7 +5974,7 @@ def q_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/ivf_index_{tag}"
+    path = f"{WAREHOUSE}/ivf_index_{tag}"
     emb = _t(spark, sf_dir, "embeddings")
     ensure_ivf_index(spark, emb, path, dim=EMB_DIM, n_cells=_IVF_CELLS)
     out = search_ivf_index(
@@ -6948,7 +6949,7 @@ def q_ivf_search_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/ivf_index_{tag}"
+    path = f"{WAREHOUSE}/ivf_index_{tag}"
     emb = _t(spark, sf_dir, "embeddings")
     ensure_ivf_index(spark, emb, path, dim=EMB_DIM, n_cells=_IVF_CELLS)
     qs = read_query_stream(spark, sf_dir, N_QUERIES)
@@ -6982,7 +6983,7 @@ def q_nsw_search_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/nsw_graph_{tag}"
+    path = f"{WAREHOUSE}/nsw_graph_{tag}"
     emb = _t(spark, sf_dir, "embeddings")
     ensure_nsw_graph(spark, emb, path, k=_NSW_K)
     qs = read_query_stream(spark, sf_dir, N_QUERIES)
@@ -7012,7 +7013,7 @@ def q_hnsw_search_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/hnsw_graph_{tag}"
+    path = f"{WAREHOUSE}/hnsw_graph_{tag}"
     emb = _t(spark, sf_dir, "embeddings")
     ensure_hnsw_graph(
         spark, emb, path, k=_NSW_K, branch=_HNSW_BRANCH,
@@ -7042,7 +7043,7 @@ def q_bm25_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/text_index_{tag}"
+    path = f"{WAREHOUSE}/text_index_{tag}"
     docs = _t(spark, sf_dir, "documents")
     ensure_text_index(spark, docs, path)
     qs = hash_sample(docs, "doc_id", pct=10).select(
@@ -7097,8 +7098,8 @@ GROUP BY 1
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
     Routed through the auto-dispatch search() facade — identical rows
-    to q_topk_cosine_exact (the dispatch lands on the blocked kernel
-    at this scale, and the exact strategies are bit-identical), so the
+    to q_topk_cosine_exact (the dispatch lands on the same exact
+    top-k at this scale), so the
     smoke test exercises the engine's one-call entry point end-to-end."""
     return q_auto_search(spark, "/root/testdata/sf0.001")
 
@@ -8501,7 +8502,7 @@ def q_orc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/documents_orc_{tag}"
+    path = f"{WAREHOUSE}/documents_orc_{tag}"
     docs = _t(spark, sf_dir, "documents")
     # fingerprint every roundtrip-relevant column: regenerated testdata
     # that changes text/source/lang while preserving ids and char
@@ -8607,7 +8608,7 @@ def q_nsw_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cs6300_vectordbs_spark.sources.graph_index import ensure_nsw_graph
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/nsw_graph_{tag}"
+    path = f"{WAREHOUSE}/nsw_graph_{tag}"
     emb = _t(spark, sf_dir, "embeddings")
     edges = ensure_nsw_graph(spark, emb, path, k=_NSW_K).localCheckpoint(
         eager=True
@@ -8821,7 +8822,7 @@ def q_nsw_insert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cs6300_vectordbs_spark.sources.graph_index import ensure_nsw_graph
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/nsw_graph_old_{tag}"
+    path = f"{WAREHOUSE}/nsw_graph_old_{tag}"
     emb = _t(spark, sf_dir, "embeddings")
     old = emb.filter(F.col("vec_id") % _INS_MOD != _INS_REM)
     new = emb.filter(
@@ -8856,7 +8857,7 @@ def q_nsw_appended_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cs6300_vectordbs_spark.sources.graph_index import append_nsw_graph
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/nsw_appended_{tag}"
+    path = f"{WAREHOUSE}/nsw_appended_{tag}"
     emb = _t(spark, sf_dir, "embeddings")
     old = emb.filter(F.col("vec_id") % _INS_MOD != _INS_REM)
     new = emb.filter(
@@ -8944,7 +8945,7 @@ def q_nsw_tombstoned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/nsw_tomb_{tag}"
+    path = f"{WAREHOUSE}/nsw_tomb_{tag}"
     emb = _t(spark, sf_dir, "embeddings")
     ensure_nsw_graph(spark, emb, path, k=_NSW_K)
     dels = emb.filter(
@@ -9000,7 +9001,7 @@ def q_nsw_chained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/nsw_chain_{tag}"
+    path = f"{WAREHOUSE}/nsw_chain_{tag}"
     emb = _t(spark, sf_dir, "embeddings")
     rem = F.col("vec_id") % _INS_MOD
     old = emb.filter(~rem.isin(*_CHAIN_REMS))
@@ -9116,7 +9117,7 @@ def q_hnsw_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cs6300_vectordbs_spark.sources.hnsw_index import ensure_hnsw_graph
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/hnsw_graph_{tag}"
+    path = f"{WAREHOUSE}/hnsw_graph_{tag}"
     emb = _t(spark, sf_dir, "embeddings")
     edges0, layer_edges, levels = ensure_hnsw_graph(
         spark, emb, path, k=_NSW_K, branch=_HNSW_BRANCH,
@@ -9257,7 +9258,7 @@ def q_hnsw_tombstoned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/hnsw_tomb_{tag}"
+    path = f"{WAREHOUSE}/hnsw_tomb_{tag}"
     emb = _t(spark, sf_dir, "embeddings")
     ensure_hnsw_graph(
         spark, emb, path, k=_NSW_K, branch=_HNSW_BRANCH,
@@ -9300,7 +9301,7 @@ def q_hnsw_insert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cs6300_vectordbs_spark.sources.hnsw_index import append_hnsw_graph
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/hnsw_ins_{tag}"
+    path = f"{WAREHOUSE}/hnsw_ins_{tag}"
     emb = _t(spark, sf_dir, "embeddings")
     old = emb.filter(F.col("vec_id") % _INS_MOD != _INS_REM)
     new = emb.filter(
@@ -9442,7 +9443,7 @@ def q_dedup_groups_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/dedup_groups_{tag}"
+    path = f"{WAREHOUSE}/dedup_groups_{tag}"
     docs = _t(spark, sf_dir, "documents")
     g = ensure_dedup_groups(spark, docs, path)
     return g.select(
@@ -10361,7 +10362,7 @@ def q_bq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/root/repo/spark-warehouse/bq_index_{tag}"
+    path = f"{WAREHOUSE}/bq_index_{tag}"
     emb = _t(spark, sf_dir, "embeddings")
     ensure_bq_index(spark, emb, path, dim=EMB_DIM)
     out = search_bq_index(

@@ -1,8 +1,4 @@
-from .similarity import (  # noqa: F401
-    similarity_topk,
-    similarity_topk_blocked,
-    pairwise_similarity,
-)
+from .similarity import similarity_topk, pairwise_similarity  # noqa: F401
 # Not the search function: it would shadow its submodule,
 # cs6300_vectordbs_spark.operators.search.
 from .search import choose_strategy  # noqa: F401

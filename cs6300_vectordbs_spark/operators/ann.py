@@ -790,9 +790,9 @@ def ivf_neardup_pairs(
     corpus_vec: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via IVF-cell blocking —
-    the SCALE path for semantic dedup. The all-pairs kernels
-    (operators/similarity.pairwise_similarity[_blocked]) compute
-    O(N^2) cosines; at 100 TB that is the thing that cannot run. Here
+    the SCALE path for semantic dedup. The exact all-pairs operator
+    (operators/similarity.pairwise_similarity) computes O(N^2)
+    cosines; at 100 TB that is the thing that cannot run. Here
     the sampled quantizer (:func:`ivf_centroids`, :func:`assign_cells`)
     blocks the corpus into cells and only SAME-CELL pairs are scored — O(sum_c |cell_c|^2) ~ N^2/n_cells for balanced
     cells, with the n_cells knob trading recall for cost exactly like

@@ -12,12 +12,11 @@ for LLM query generation, and the similarity-threshold judge
 exist on each of those modules; swapping them in changes no plan shape.
 
 Plan shape at scale: one corpus scan (embed is a map), the query side
-is a small sampled batch (broadcast), the search is the blocked
-Arrow kernel (similarity_topk_blocked: per-partition local top-k, one
-merge window), and the
-metric aggregations run over the tiny (queries x k) result table,
-materialized once so the report's aggregate branches don't recompute
-the search.
+is a small sampled batch (broadcast), the search is the exact top-k
+(similarity_topk: one bounded load of the query batch, per-partition
+local top-k, one merge window), and the metric aggregations run over
+the tiny (queries x k) result table, materialized once so the report's
+aggregate branches don't recompute the search.
 The 100-TB cost is exactly one pass over the corpus plus a
 O(queries*k*partitions) shuffle.
 """
@@ -32,7 +31,7 @@ from ..functions.querygen import template_query
 from .judge import sim_judge_score, is_relevant
 from .metrics_ir import recall_at_k, ndcg_at_k
 from .sampling import hash_bucket
-from .similarity import similarity_topk_blocked
+from .similarity import similarity_topk
 
 
 def search_pipeline(
@@ -75,11 +74,7 @@ def search_pipeline(
         )
         .withColumn("query_vec", embed_text("query", dim))
     )
-    # Arrow-blocked search kernel: bit-identical to the JVM broadcast
-    # join (same IEEE order, same tie-break) and 2-4x faster at this
-    # shape (re-measured r03: 1.3-2.5 s vs 5.1-5.5 s at sf0.1, nq=500 —
-    # the per-pair codegen element_at eval dominates the JVM path).
-    hits = similarity_topk_blocked(
+    hits = similarity_topk(
         corpus,
         queries,
         k,

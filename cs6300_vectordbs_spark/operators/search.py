@@ -7,40 +7,24 @@ equivalent "the library does the planning" entry point (SURVEY.md §4.3
 item 2): the caller says WHAT (corpus, queries, k, optional filter);
 the facade picks HOW from corpus/query row counts:
 
-  grid     the query batch is over BROADCAST_MAX_QUERIES rows:
-           similarity_topk_grid, exact, no driver-held query matrix —
-           both sides hash into grid cells, each scored in a grouped
-           applyInArrow by the blocked kernel's own Arrow code.
-  blocked  |corpus| x |queries| <= BLOCKED_MAX_PAIRS: the vectorized
-           Arrow kernel (similarity_topk_blocked) over the broadcast
-           query batch — per-block local top-k, one merge window.
-  ivf      beyond that: approximate cell-probed search
-           (operators/ann.ivf_topk) scanning only n_probe/n_cells of
-           the corpus, exact re-rank inside probed cells.
-
-No size picks the JVM plan (similarity_topk). Its scoring stage — the
-cross join, the pushed ``sim IS NOT NULL`` condition and the
-projection — codegens into one method of ~51k bytecodes that HotSpot
-marks not-compilable at both tiers (C1 "out of virtual registers",
-C2 "too many nodes"), so it runs in the bytecode interpreter at about
-75 us per pair even with -XX:-DontCompileHugeMethods, and its cost
-grows linearly in pairs (2M pairs: 155 s of CPU against 0.12 s for
-the Arrow kernel). It stays as the forced ``strategy="exact"`` and as
-the parity reference the blocked kernel is tested against.
+  exact  |corpus| x |queries| <= BLOCKED_MAX_PAIRS, or a query batch
+         over similarity.BROADCAST_MAX_QUERIES:
+         :func:`.similarity.similarity_topk`, which picks its own plan
+         by batch size (broadcast, or a grid over both sides).
+  ivf    beyond that: approximate cell-probed search
+         (operators/ann.ivf_topk) scanning only n_probe/n_cells of
+         the corpus, exact re-rank inside probed cells.
 
 The query batch is loaded once, bounded: ``limit(BROADCAST_MAX_QUERIES
 + 1)`` through Arrow. Its row count is the query count, and the loaded
-table goes to the blocked kernel, so the batch is collected once; a
-batch over the bound goes to grid and nothing more of it is collected.
-The corpus count comes from the ``corpus_count`` hint or ``.count()``
-(on parquet sources a row-group-metadata scan). A ``query_count`` hint
-skips the load.
+table goes to similarity_topk, so the batch is collected once. The
+corpus count comes from the ``corpus_count`` hint or ``.count()`` (on
+parquet sources a row-group-metadata scan). A ``query_count`` hint
+skips the load here; similarity_topk then makes it.
 
-Every strategy returns the same (query_id, rank, <corpus_id>, sim,
-dist) schema, and the three exact strategies return the same rows
-(same IEEE fold order, same (sim desc, id asc) total order) — asserted
-in tests/test_plans.py and tests/test_similarity.py — so dispatch
-never changes answers, only plans.
+Both strategies return the same (query_id, rank, <corpus_id>, sim,
+dist) schema; the exact rows equal the JVM parity reference's bit for
+bit (tests/test_plans.py, tests/test_similarity.py).
 """
 
 from __future__ import annotations
@@ -48,28 +32,25 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Dispatch thresholds (tests/test_plans.py pins these semantics):
-# BLOCKED_MAX_PAIRS  largest exact pair count worth brute-forcing at
-#                    BLAS speed before switching to an ANN index.
-# BROADCAST_MAX_QUERIES  largest query batch we will collect/broadcast
-#                    (the blocked kernel holds the batch per executor;
-#                    1e5 x 64 doubles ~ 50 MB).
+from . import similarity
+
+# Dispatch threshold (tests/test_plans.py pins its semantics): the
+# largest exact pair count worth brute-forcing at BLAS speed before
+# switching to an ANN index.
 BLOCKED_MAX_PAIRS = 5_000_000_000
-BROADCAST_MAX_QUERIES = 100_000
 
 
 def choose_strategy(corpus_count: int, query_count: int) -> str:
-    """Pure dispatch rule: counts -> 'blocked' | 'grid' | 'ivf'.
+    """Pure dispatch rule: counts -> 'exact' | 'ivf'.
 
-    grid when the query batch is over BROADCAST_MAX_QUERIES, blocked
-    while corpus x queries <= BLOCKED_MAX_PAIRS, ivf beyond that. No
-    size picks 'exact': the JVM plan's scoring method is too large for
-    either JIT tier and runs interpreted (module docstring)."""
-    if query_count > BROADCAST_MAX_QUERIES:
-        # Query side too big to hold per-executor: shard both sides.
-        return "grid"
-    if corpus_count * query_count <= BLOCKED_MAX_PAIRS:
-        return "blocked"
+    exact while corpus x queries <= BLOCKED_MAX_PAIRS, and for any
+    batch over similarity.BROADCAST_MAX_QUERIES, which similarity_topk
+    shards with the corpus on its grid plan; ivf otherwise."""
+    if (
+        query_count > similarity.BROADCAST_MAX_QUERIES
+        or corpus_count * query_count <= BLOCKED_MAX_PAIRS
+    ):
+        return "exact"
     return "ivf"
 
 
@@ -79,7 +60,6 @@ def search(
     k: int = 5,
     *,
     dim: int,
-    strategy: str = "auto",
     corpus_count: int | None = None,
     query_count: int | None = None,
     corpus_id: str = "vec_id",
@@ -96,12 +76,11 @@ def search(
 ) -> DataFrame:
     """Top-k cosine search; the engine picks the physical strategy.
 
-    ``strategy`` forces a specific plan ('exact' | 'blocked' | 'grid' |
-    'ivf'); 'auto' applies :func:`choose_strategy` to the (hinted or
-    measured) row counts. ``filter_expr`` applies to the corpus BEFORE
-    dispatch — pre-join, pushed into the scan, and for 'ivf' before
-    the index build, so every strategy searches the same filtered
-    corpus (the reference stores' `where=` surface, SURVEY V6).
+    :func:`choose_strategy` picks it from the (hinted or measured) row
+    counts. ``filter_expr`` applies to the corpus BEFORE dispatch —
+    pushed into the scan, and for 'ivf' before the index build, so
+    every strategy searches the same filtered corpus (the reference
+    stores' `where=` surface, SURVEY V6).
 
     ``diversify='mmr'`` is the facade's ``search_type='mmr'`` surface:
     the chosen strategy retrieves ``mmr_candidates`` (default ``4*k``)
@@ -112,11 +91,6 @@ def search(
     (query_id, rank, <corpus_id>, sim, mmr).
     """
     from .ann import ivf_topk
-    from .similarity import (
-        similarity_topk,
-        similarity_topk_blocked,
-        similarity_topk_grid,
-    )
 
     # Serving boundary quarantine: a NULL vector can never score (the
     # kernels would NULL-propagate or crash; even DuckDB's
@@ -128,17 +102,12 @@ def search(
     if filter_expr is not None:
         c = c.filter(filter_expr)
     qt = None
-    if strategy == "auto":
-        if query_count is None:
-            # One bounded load: its row count is nq, and the blocked
-            # kernel takes the table instead of collecting again.
-            qt = q_in.select(
-                F.col(query_id).alias("__qid"),
-                F.col(query_vec).alias("__qvec"),
-            ).limit(BROADCAST_MAX_QUERIES + 1).toArrow()
-            query_count = qt.num_rows
-        nc = corpus_count if corpus_count is not None else c.count()
-        strategy = choose_strategy(nc, query_count)
+    if query_count is None:
+        # One bounded load: its row count is nq, and similarity_topk
+        # takes the table instead of loading again.
+        qt = similarity._load_queries(q_in, query_id, query_vec)
+        query_count = qt.num_rows
+    nc = corpus_count if corpus_count is not None else c.count()
 
     if diversify not in (None, "mmr"):
         raise ValueError(f"unknown diversify mode: {diversify!r}")
@@ -156,20 +125,14 @@ def search(
         query_id=query_id, query_vec=query_vec,
         exclude_self=exclude_self,
     )
-    if strategy == "exact":
-        out = similarity_topk(c, q_in, k1, dim=dim, **common)
-    elif strategy == "blocked":
-        out = similarity_topk_blocked(
+    if choose_strategy(nc, query_count) == "exact":
+        out = similarity.similarity_topk(
             c, q_in, k1, dim=dim, query_table=qt, **common
         )
-    elif strategy == "grid":
-        out = similarity_topk_grid(c, q_in, k1, dim=dim, **common)
-    elif strategy == "ivf":
+    else:
         out = ivf_topk(
             c, q_in, k1, dim=dim, n_cells=n_cells, n_probe=n_probe, **common
         )
-    else:
-        raise ValueError(f"unknown search strategy: {strategy!r}")
 
     if diversify == "mmr":
         from .rerank import mmr_rerank

@@ -8,9 +8,10 @@ time over an HNSW index.
 Spark-first design (exact path):
   - the query batch is SMALL (the reference uses ~500 queries); the
     corpus is BIG (100 TB target). So: broadcast the queries, keep the
-    corpus partitioned in place — the join is a BroadcastNestedLoopJoin
-    that streams corpus partitions once, no corpus shuffle.
-  - cosine is a pure codegen expression (functions/vector.py).
+    corpus partitioned in place — corpus partitions stream once through
+    the scoring kernel, no corpus shuffle.
+  - cosine keeps the IEEE addition order of the codegen expressions in
+    functions/vector.py, so every path returns the same doubles.
   - per-query top-k is :func:`_rank_topk`, the one re-rank rule of
     every candidate-generating search in the engine: (sim desc, id
     asc), so results are deterministic and match the SQL oracle, and
@@ -19,21 +20,25 @@ Spark-first design (exact path):
     families reach it through :func:`_rerank` (exact cosine of
     candidate pairs) and, for two-phase searches, :func:`_shortlist`.
 
-Every vectorized kernel shares one scoring core, bit for bit the JVM
-plan's: :func:`_query_side` prepares the side rows are scored against,
-:func:`_scored_blocks` scores blocks of rows against it, and
-:func:`_topk_batches` keeps each block's local top-k for one merge
-window (REPOSE's shape: a partition-local top-k, then a global merge).
-Three plan shapes run that core:
-  - similarity_topk_blocked broadcasts the query batch and streams the
-    corpus through mapInArrow; operators/search.search dispatches to it.
-  - similarity_topk_grid and pairwise_similarity_grid hash both sides
-    into a grid and score each cell in a grouped applyInArrow, with no
-    driver collect: the path for corpus-sized query sides (knn_edges,
-    the kNN-graph builds) and for all-pairs sweeps.
-  - similarity_topk and pairwise_similarity, the JVM plans, are the
-    parity references (the JVM scoring method is too large for
-    HotSpot's compilers and runs interpreted — see operators/search.py).
+The one exact top-k is :func:`similarity_topk`, and the one all-pairs
+operator is :func:`pairwise_similarity`. Both run one vectorized
+scoring core, bit for bit the JVM expression's: :func:`_query_side`
+prepares the side rows are scored against, :func:`_scored_blocks`
+scores blocks of rows against it, and :func:`_topk_batches` keeps each
+block's local top-k for one merge window (REPOSE's shape: a
+partition-local top-k, then a global merge). Two plan shapes run that
+core, and only query-batch size picks between them:
+  - the broadcast plan (:func:`_blocked_topk`) broadcasts the query
+    batch and streams the corpus through mapInArrow;
+  - the grid plan (:func:`_grid`) hashes both sides into grid cells
+    and scores each cell in a grouped applyInArrow, with no driver
+    collect: the exact top-k of a batch over BROADCAST_MAX_QUERIES,
+    every all-pairs sweep, and the kNN-graph builds (knn_edges), whose
+    query side is the corpus.
+The JVM plans (:func:`_jvm_topk`, :func:`_jvm_pairs`) are parity
+references only: tests compare the kernels against them, and no
+engine path runs them (their scoring method is too large for
+HotSpot's compilers and runs interpreted at about 75 us per pair).
 
 The approximate/ANN path (LSH-bucketed) lives in operators/ann.py; this
 exact operator is its correctness oracle, same relationship as
@@ -194,6 +199,21 @@ def label_centroids(
     )
 
 
+# Largest query batch the exact top-k loads and broadcasts: the
+# broadcast plan holds the batch on every executor (1e5 x 64 doubles
+# ~ 50 MB). A larger batch takes the grid plan.
+BROADCAST_MAX_QUERIES = 100_000
+
+
+def _load_queries(queries: DataFrame, query_id: str, query_vec: str):
+    """The query batch as an Arrow ``(__qid, __qvec)`` table, loaded
+    once and bounded: at most BROADCAST_MAX_QUERIES + 1 rows, so its
+    row count says whether the batch fits the broadcast."""
+    return queries.select(
+        F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qvec")
+    ).limit(BROADCAST_MAX_QUERIES + 1).toArrow()
+
+
 def similarity_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -206,61 +226,38 @@ def similarity_topk(
     filter_expr: Column | str | None = None,
     exclude_self: bool = False,
     dim: int | None = None,
+    query_table=None,
 ) -> DataFrame:
-    """Exact brute-force top-k cosine search of ``queries`` against ``corpus``.
+    """Exact top-k cosine search of ``queries`` against ``corpus``, the
+    engine's one exact top-k: (query_id, rank, <corpus_id>, sim, dist),
+    ranked by :func:`_rank_topk`.
 
-    Returns (query_id, rank, <corpus_id>, sim, dist), ranked by
-    :func:`_rank_topk`.
+    ``filter_expr`` (the reference stores' metadata filter, SURVEY.md
+    V6) applies to the corpus before scoring, so Catalyst pushes it
+    into the scan. ``exclude_self`` drops corpus rows whose id equals
+    the query id. ``dim``, when known, selects the unrolled chain's
+    rule (:func:`_scored_blocks`, rule for rule :func:`_jvm_topk`'s).
+    A NaN sim ranks first; NULL corpus ids sort first among ties; NULL
+    and duplicate query ids pool in the final window.
 
-    ``filter_expr`` is the metadata-filter surface the reference stores
-    advertise but never use (SURVEY.md V6); applied pre-join so Catalyst
-    pushes it into the corpus scan.
-
-    ``exclude_self`` drops corpus rows whose id equals the query id
-    (self-match suppression when queries are drawn from the corpus).
-
-    ``dim`` (the embedding dimension, when known — it almost always is)
-    switches the cosine to the statically-unrolled codegen form AND
-    factors each side's L2 norm below the join (:func:`_rerank`) — at
-    100 TB that's the difference between O(corpus) and
-    O(corpus x queries) array passes.
+    Plan, by query-batch size: the batch is loaded once through Arrow,
+    bounded by ``limit(BROADCAST_MAX_QUERIES + 1)``, or taken from
+    ``query_table``, that load already made by the caller
+    (:func:`.search.search`). Within the bound it is broadcast
+    (:func:`_blocked_topk`); over it, both sides go to the grid
+    (:func:`_grid_topk`) and nothing more of the batch is collected.
     """
-    from .util import spread
-
-    c = corpus
-    if filter_expr is not None:
-        c = c.filter(filter_expr)
-    # The scoring loop parallelizes over CORPUS partitions (the query
-    # side is broadcast): a small corpus arriving as 1-2 parquet splits
-    # would serialize O(|corpus| x |queries|) flops on as many cores.
-    # No-op at scale, where the corpus already has >= parallelism splits.
-    c = spread(c)
-
-    q = queries.select(
-        F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qvec")
-    )
-
-    if dim is not None:
-        # Norms computed under the join (Project below Join survives
-        # Catalyst — CollapseProject does not cross a Join boundary).
-        c = c.select(
-            F.col(corpus_id), l2_norm(corpus_vec, dim).alias("__vn"),
-            F.col(corpus_vec),
+    c = corpus if filter_expr is None else corpus.filter(filter_expr)
+    if query_table is None:
+        query_table = _load_queries(queries, query_id, query_vec)
+    if query_table.num_rows > BROADCAST_MAX_QUERIES:
+        return _grid_topk(
+            c, corpus_id, corpus_vec, queries, query_id, query_vec, k,
+            dim, exclude_self,
         )
-        q = q.select("__qid", "__qvec", l2_norm("__qvec", dim).alias("__qn"))
-
-    joined = c.join(F.broadcast(q), how="cross")
-    if exclude_self:
-        joined = joined.filter(F.col(corpus_id) != F.col("__qid"))
-
-    # Unscorable rows (NULL vectors -> null sim) never enter the
-    # ranking — otherwise they'd fill trailing top-k slots. Zero-NORM
-    # vectors are scorable by contract: cosine_sim maps them to 0.0
-    # (identically in the SQL twin), so they legitimately outrank
-    # negative-sim neighbors.
-    return _rerank(
-        joined, k, dim=dim, id_col=corpus_id, vec_col=corpus_vec,
-        drop_null=True,
+    return _blocked_topk(
+        c, corpus_id, corpus_vec, query_table, _col_type(queries, query_id),
+        k, dim, exclude_self,
     )
 
 
@@ -320,12 +317,18 @@ def _rerank(
     keeps the sim bit-identical to ``cosine_sim``. With ``dim=None``
     the pair is scored by the HOF ``cosine_sim`` and the norm columns
     are not read."""
+    from .util import no_pushdown
+
     if dim is None:
         sim = cosine_sim("__qvec", vec_col)
     else:
         sim = cosine_from_parts(
             dot("__qvec", vec_col, dim), F.col("__qn"), F.col("__vn")
         )
+    if drop_null:
+        # Catalyst would push ``sim IS NOT NULL`` into a candidate
+        # join's condition and score every pair twice.
+        sim = no_pushdown(sim)
     scored = cand.select(
         F.col("__qid").alias("query_id"), F.col(id_col), *carry,
         sim.alias("sim"),
@@ -467,61 +470,28 @@ def _topk_batches(ids, vecs, side, k, dim, exclude_self):
         )
 
 
-def similarity_topk_blocked(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    *,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    filter_expr: Column | str | None = None,
-    exclude_self: bool = False,
-    dim: int | None = None,
-    query_table=None,
-) -> DataFrame:
-    """Exact top-k cosine search on one vectorized Arrow kernel: the
-    same rows as :func:`similarity_topk` (the JVM plan), bit for bit.
-
-    Scoring follows :func:`_scored_blocks`' contract. A NaN sim is
-    carried as NaN (Arrow keeps it apart from NULL) and ranks first;
-    -0.0 ties 0.0. Ids of any type pass through from the input Arrow
-    arrays: NULL corpus ids stay NULL and sort first among ties, and
-    NULL and duplicate query ids pool in the final window.
-
-    Plan: the query batch is loaded once through Arrow (or taken from
-    ``query_table``, a ``(query_id, query_vec)`` table the caller has
-    already loaded — :func:`.search.search` passes its bounded load)
-    and broadcast; corpus partitions stream once through mapInArrow
-    (no corpus shuffle), each block of rows emitting every query's
-    LOCAL top-k under the full (NaN first, sim desc, corpus id asc
-    NULLS FIRST) order, and one row_number window ranks the
-    O(blocks x queries x k) candidates.
-    """
+def _blocked_topk(c, cid, cvec, qt, qid_type, k, dim, exclude_self):
+    """The broadcast plan of :func:`similarity_topk`: the loaded batch
+    ``qt`` (ids of Spark type ``qid_type``) is broadcast; corpus
+    partitions stream once through mapInArrow (no corpus shuffle), each
+    block of rows emitting every query's LOCAL top-k under the full
+    (NaN first, sim desc, corpus id asc NULLS FIRST) order, and one
+    row_number window ranks the O(blocks x queries x k) candidates."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     from .util import spread
 
-    q = queries.select(
-        F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qvec")
-    )
-    qt = q.toArrow() if query_table is None else query_table
-    bc = corpus.sparkSession.sparkContext.broadcast(
+    bc = c.sparkSession.sparkContext.broadcast(
         _query_side(qt.column(0), qt.column(1), dim, exclude_self)
     )
-
-    c = corpus
-    if filter_expr is not None:
-        c = c.filter(filter_expr)
-    # spread BEFORE the projection: if corpus_vec is a computed column
-    # (e.g. an embedding expression), projecting first would evaluate it
-    # on the unspread input's few partitions. A NULL vector never scores.
+    # spread BEFORE the projection: if cvec is a computed column (e.g.
+    # an embedding expression), projecting first would evaluate it on
+    # the unspread input's few partitions. A NULL vector never scores.
     src = spread(c).select(
-        F.col(corpus_id).alias("id"), F.col(corpus_vec).alias("v")
+        F.col(cid).alias("id"), F.col(cvec).alias("v")
     ).filter(F.col("v").isNotNull())
     schema = StructType([
-        StructField("query_id", q.schema["__qid"].dataType),
+        StructField("query_id", qid_type),
         StructField("cid", src.schema["id"].dataType),
         StructField("sim", DoubleType()),
     ])
@@ -535,7 +505,7 @@ def similarity_topk_blocked(
 
     return _rank_topk(
         src.mapInArrow(kernel, schema), k, id_col="cid"
-    ).withColumnRenamed("cid", corpus_id)
+    ).withColumnRenamed("cid", cid)
 
 
 def _local_topk(sims, ok, cids, k):
@@ -563,53 +533,6 @@ def _local_topk(sims, ok, cids, k):
     cs = c[o]
     o = o[np.arange(len(o)) - np.searchsorted(cs, cs) < k]
     return r[o], c[o]
-
-
-def pairwise_similarity(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    left_id: str = "vec_id",
-    right_id: str = "vec_id",
-    vec_col: str = "embedding",
-    min_sim: float | None = None,
-    upper_triangle: bool = True,
-    dim: int | None = None,
-) -> DataFrame:
-    """All-pairs cosine similarity (optionally thresholded).
-
-    ``upper_triangle=True`` keeps only left_id < right_id — the standard
-    near-duplicate-pair shape. The threshold filter sits directly on the
-    join output so AQE can size the shuffle; for genuinely huge inputs
-    use the LSH path in operators/ann.py instead of all-pairs.
-
-    With ``dim`` set, each side's norm is computed once per row below
-    the join (not once per pair) and the dot is statically unrolled —
-    bit-identical results, ~3x less array math on the O(n^2) side.
-    """
-    l = left.select(F.col(left_id).alias("id_a"), F.col(vec_col).alias("vec_a"))
-    r = right.select(F.col(right_id).alias("id_b"), F.col(vec_col).alias("vec_b"))
-    if dim is not None:
-        l = l.select("id_a", "vec_a", l2_norm("vec_a", dim).alias("norm_a"))
-        r = r.select("id_b", "vec_b", l2_norm("vec_b", dim).alias("norm_b"))
-        sim = cosine_from_parts(
-            dot("vec_a", "vec_b", dim), F.col("norm_a"), F.col("norm_b")
-        )
-    else:
-        sim = cosine_sim("vec_a", "vec_b")
-    cond = F.col("id_a") < F.col("id_b") if upper_triangle else F.lit(True)
-    # no_pushdown keeps the threshold out of the join condition, where
-    # the whole cosine would be evaluated per pair on the interpreted
-    # predicate path and re-evaluated for survivors (r09; measured on
-    # the IVF self-join: 4.5 s -> 0.17 s). Value bit-identical.
-    from .util import no_pushdown
-
-    out = l.join(r, on=cond, how="inner").select(
-        "id_a", "id_b", no_pushdown(sim).alias("sim")
-    )
-    if min_sim is not None:
-        out = out.filter(F.col("sim") >= min_sim)
-    return out
 
 
 def _grid(left, lid, lvec, right, rid, rvec, cell, schema) -> DataFrame:
@@ -676,7 +599,7 @@ def _col_type(df: DataFrame, col: str):
     return df.select(F.col(col)).schema[0].dataType
 
 
-def pairwise_similarity_grid(
+def pairwise_similarity(
     left: DataFrame,
     right: DataFrame,
     *,
@@ -686,22 +609,21 @@ def pairwise_similarity_grid(
     min_sim: float | None = None,
     upper_triangle: bool = True,
 ) -> DataFrame:
-    """All-pairs cosine on a hash grid — fully distributed, neither
-    side is ever collected to the driver. Every (left, right) cell of
-    the grid scores its left rows against its right rows with the
-    shared Arrow kernel (:func:`_scored_blocks`, whole arrays), so the
-    rows equal :func:`pairwise_similarity`'s without ``dim`` (the JVM
-    plan) bit for bit, except that an unscorable pair (a NULL vector
-    or element, or vectors of different lengths) emits no row instead
-    of a NULL sim, which no ``min_sim`` threshold passes anyway. A NaN
-    sim passes every threshold, as in Spark's ordering; ids of any
-    type pass through.
+    """All-pairs cosine similarity (optionally thresholded) as (id_a,
+    id_b, sim), the engine's one all-pairs operator, over whole arrays.
+    ``upper_triangle=True`` keeps only id_a < id_b, the near-duplicate
+    pair shape. For huge inputs use the LSH/IVF candidate paths in
+    operators/ann.py instead.
 
-    Communication: each side is replicated GRID_BLOCKS times (O(n * B)
-    shuffle for B^2-way parallelism), the classic distributed all-pairs
-    trade. At 100 TB all-pairs is the wrong algorithm regardless — use
-    the LSH/IVF candidate paths — but when an exact O(n^2) sweep is
-    the job, this shape runs with the driver holding nothing.
+    Plan: the hash grid (:func:`_grid`); neither side is ever collected
+    to the driver. Each cell scores its rows with the shared kernel
+    (:func:`_scored_blocks`), so the rows equal :func:`_jvm_pairs`' bit
+    for bit, except that an unscorable pair (a NULL vector or element,
+    or vectors of different lengths) emits no row instead of a NULL
+    sim, which no ``min_sim`` passes anyway. A NaN sim passes every
+    threshold, as in Spark's ordering; ids of any type pass through.
+    Each side is replicated GRID_BLOCKS times (O(n * B) shuffle for
+    B^2-way parallelism), the classic distributed all-pairs trade.
     """
     import numpy as np
     import pyarrow as pa
@@ -732,35 +654,20 @@ def pairwise_similarity_grid(
     )
 
 
-def similarity_topk_grid(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    *,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    exclude_self: bool = False,
-    dim: int | None = None,
-) -> DataFrame:
-    """Exact top-k cosine when the QUERY side is itself corpus-sized
-    (kNN-graph builds: every vector is a query) — fully distributed,
-    no driver collect. The same rows as :func:`similarity_topk_blocked`
-    and the JVM plan, bit for bit: each cell of the hash grid emits
-    its queries' local top-k over its corpus rows with the blocked
-    kernel's code (:func:`_topk_batches`), and the same window ranks
-    the O(GRID_BLOCKS * k) candidates per query.
-
-    Shuffle: corpus and queries are each replicated GRID_BLOCKS times,
-    O((n_c + n_q) * B) instead of a driver-held query matrix; the
-    candidate shuffle into the final window is O(n_q * B * k).
-    """
+def _grid_topk(c, cid, cvec, queries, qid, qvec, k, dim, exclude_self):
+    """The grid plan of :func:`similarity_topk`, for a query side too
+    big to broadcast (a batch over BROADCAST_MAX_QUERIES, or a
+    kNN-graph build, where every vector is a query): each grid cell
+    emits its queries' local top-k over its corpus rows with the
+    broadcast plan's code (:func:`_topk_batches`), and the same window
+    ranks the O(GRID_BLOCKS * k) candidates per query. Shuffle:
+    O((n_c + n_q) * B) for the replicated sides, O(n_q * B * k) into
+    the window, and no driver-held query matrix."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     schema = StructType([
-        StructField("query_id", _col_type(queries, query_id)),
-        StructField("cid", _col_type(corpus, corpus_id)),
+        StructField("query_id", _col_type(queries, qid)),
+        StructField("cid", _col_type(c, cid)),
         StructField("sim", DoubleType()),
     ])
 
@@ -768,11 +675,76 @@ def similarity_topk_grid(
         side = _query_side(qids, qvecs, dim, exclude_self)
         return _topk_batches(cids, cvecs, side, k, dim, exclude_self)
 
-    cand = _grid(
-        corpus, corpus_id, corpus_vec, queries, query_id, query_vec,
-        cell, schema,
+    cand = _grid(c, cid, cvec, queries, qid, qvec, cell, schema)
+    return _rank_topk(cand, k, id_col="cid").withColumnRenamed("cid", cid)
+
+
+# ---------------------------------------------------------------------------
+# Parity references: the JVM plans of the two operators above. Tests
+# compare the kernels against them; no engine path runs them.
+# ---------------------------------------------------------------------------
+
+def _jvm_topk(
+    corpus, queries, k=5, *, corpus_id="vec_id", corpus_vec="embedding",
+    query_id="query_id", query_vec="query_vec", filter_expr=None,
+    exclude_self=False, dim=None,
+) -> DataFrame:
+    """The JVM plan of :func:`similarity_topk`: the corpus crossed with
+    the broadcast query batch (a BroadcastNestedLoopJoin), scored by
+    the codegen cosine and ranked by :func:`_rerank`. With ``dim`` each
+    side's norm is computed once per row below the join."""
+    from .util import spread
+
+    c = corpus if filter_expr is None else corpus.filter(filter_expr)
+    # The scoring loop parallelizes over corpus partitions.
+    c = spread(c)
+    q = queries.select(
+        F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qvec")
     )
-    return _rank_topk(cand, k, id_col="cid").withColumnRenamed("cid", corpus_id)
+    if dim is not None:
+        c = c.select(
+            F.col(corpus_id), l2_norm(corpus_vec, dim).alias("__vn"),
+            F.col(corpus_vec),
+        )
+        q = q.select("__qid", "__qvec", l2_norm("__qvec", dim).alias("__qn"))
+    joined = c.join(F.broadcast(q), how="cross")
+    if exclude_self:
+        joined = joined.filter(F.col(corpus_id) != F.col("__qid"))
+    # A NULL sim (a NULL vector) is never ranked; a zero norm scores 0.0.
+    return _rerank(
+        joined, k, dim=dim, id_col=corpus_id, vec_col=corpus_vec,
+        drop_null=True,
+    )
+
+
+def _jvm_pairs(
+    left, right, *, left_id="vec_id", right_id="vec_id",
+    vec_col="embedding", min_sim=None, upper_triangle=True, dim=None,
+) -> DataFrame:
+    """The JVM plan of :func:`pairwise_similarity`: a join of the two
+    sides scored by the codegen cosine; an unscorable pair carries a
+    NULL sim."""
+    from .util import no_pushdown
+
+    l = left.select(F.col(left_id).alias("id_a"), F.col(vec_col).alias("vec_a"))
+    r = right.select(F.col(right_id).alias("id_b"), F.col(vec_col).alias("vec_b"))
+    if dim is not None:
+        l = l.select("id_a", "vec_a", l2_norm("vec_a", dim).alias("norm_a"))
+        r = r.select("id_b", "vec_b", l2_norm("vec_b", dim).alias("norm_b"))
+        sim = cosine_from_parts(
+            dot("vec_a", "vec_b", dim), F.col("norm_a"), F.col("norm_b")
+        )
+    else:
+        sim = cosine_sim("vec_a", "vec_b")
+    cond = F.col("id_a") < F.col("id_b") if upper_triangle else F.lit(True)
+    # no_pushdown keeps the threshold out of the join condition, where
+    # the whole cosine would be evaluated twice per pair.
+    out = l.join(r, on=cond, how="inner").select(
+        "id_a", "id_b", no_pushdown(sim).alias("sim")
+    )
+    if min_sim is not None:
+        out = out.filter(F.col("sim") >= min_sim)
+    return out
 
 
 def _knn_pairs(corpus: DataFrame, k: int, id_col: str, vec_col: str):
@@ -781,9 +753,8 @@ def _knn_pairs(corpus: DataFrame, k: int, id_col: str, vec_col: str):
     allq = corpus.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
     )
-    knn = similarity_topk_grid(
-        corpus, allq, k, exclude_self=True,
-        corpus_id=id_col, corpus_vec=vec_col,
+    knn = _grid_topk(
+        corpus, id_col, vec_col, allq, "query_id", "query_vec", k, None, True
     )
     return knn.select(
         F.least("query_id", F.col(id_col)).alias("a"),
@@ -899,8 +870,8 @@ def knn_label_vote(
     — a total order, so the answer (and its SQL twin) is
     deterministic.
 
-    Scale shape: one top-k search (whatever strategy fits the corpus
-    size — exact here; callers can feed any (query_id, rank, id, sim)
+    Scale shape: one top-k search (:func:`similarity_topk` here;
+    callers can feed any (query_id, rank, id, sim)
     frame from the ANN paths instead), one equi-join on the corpus id
     for labels (k rows per query), one k-row-per-query aggregate, one
     per-query window. Nothing beyond the search touches the corpus.

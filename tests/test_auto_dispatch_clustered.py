@@ -9,11 +9,12 @@ and the dispatched result is byte-identical to the pure NSW path.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import cs6300_vectordbs_spark.operators.search as search_mod
 from cs6300_vectordbs_spark.operators.search import (

@@ -20,7 +20,7 @@ from cs6300_vectordbs_spark.operators.hnsw import (
     hnsw_levels,
     hnsw_search,
 )
-from cs6300_vectordbs_spark.operators.similarity import similarity_topk_blocked
+from cs6300_vectordbs_spark.operators.similarity import similarity_topk
 
 
 def _corpus(spark, n=80, dim=8, seed=3):
@@ -176,7 +176,7 @@ def test_recall_vs_exact(spark):
         levels=levels, beam_width=24, n_iters=4, descent_beam=4,
         descent_iters=2, dim=8, exclude_self=True,
     ).collect()
-    exact = similarity_topk_blocked(corpus, q, 5, exclude_self=True).collect()
+    exact = similarity_topk(corpus, q, 5, exclude_self=True).collect()
     a = {(r["query_id"], r["vec_id"]) for r in got}
     b = {(r["query_id"], r["vec_id"]) for r in exact}
     assert len(a & b) / len(b) >= 0.8
@@ -375,7 +375,7 @@ def test_layered_insert_served_recall(spark):
         levels=mlv.localCheckpoint(eager=True), beam_width=16, n_iters=4,
         descent_beam=2, descent_iters=1, dim=8, exclude_self=True,
     ).collect()
-    exact = similarity_topk_blocked(corpus, q, 4, exclude_self=True).collect()
+    exact = similarity_topk(corpus, q, 4, exclude_self=True).collect()
     a = {(r["query_id"], r["vec_id"]) for r in got}
     b = {(r["query_id"], r["vec_id"]) for r in exact}
     assert len(a & b) / len(b) >= 0.8

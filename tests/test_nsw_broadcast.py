@@ -10,6 +10,7 @@ arrays, 64-bit ids, edges pointing at absent ids)."""
 from __future__ import annotations
 
 import random
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -314,7 +315,7 @@ def test_insert_oracle_degenerates_to_beam_oracle():
     import duckdb
 
     spec = importlib.util.spec_from_file_location(
-        "entry", "/root/repo/__spark_entry__.py"
+        "entry", Path(__file__).resolve().parent.parent / "__spark_entry__.py"
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)

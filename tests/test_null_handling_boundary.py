@@ -38,11 +38,25 @@ def qbatch(spark):
 
 @pytest.mark.parametrize("strategy", ["exact", "blocked", "grid", "ivf"])
 def test_search_boundary_drops_null_vectors_every_strategy(
-    dirty_emb, qbatch, strategy
+    dirty_emb, qbatch, strategy, monkeypatch
 ):
-    got = search(
-        dirty_emb, qbatch, 3, dim=4, strategy=strategy, n_cells=2, n_probe=2
-    ).collect()
+    """Each arm is reached the way the engine reaches it: the broadcast
+    and grid plans of the exact top-k by the query-batch bound, ivf by
+    the corpus count, and 'exact' is the JVM parity reference."""
+    import cs6300_vectordbs_spark.operators.similarity as sim_mod
+    from cs6300_vectordbs_spark.operators.search import BLOCKED_MAX_PAIRS
+
+    if strategy == "grid":
+        monkeypatch.setattr(sim_mod, "BROADCAST_MAX_QUERIES", 0)
+    nc = BLOCKED_MAX_PAIRS + 1 if strategy == "ivf" else None
+    if strategy == "exact":
+        out = sim_mod._jvm_topk(dirty_emb, qbatch, 3, dim=4)
+    else:
+        out = search(
+            dirty_emb, qbatch, 3, dim=4, corpus_count=nc, n_cells=2,
+            n_probe=2,
+        )
+    got = out.collect()
     assert {r.query_id for r in got} == {0}          # null query dropped
     assert all(r.vec_id < 100 for r in got)          # null corpus rows dropped
     assert len(got) == 3

@@ -22,7 +22,10 @@ from cs6300_vectordbs_spark.operators.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
 )
-from cs6300_vectordbs_spark.operators.similarity import similarity_topk
+from cs6300_vectordbs_spark.operators.similarity import (
+    _jvm_topk,
+    similarity_topk,
+)
 from cs6300_vectordbs_spark.operators.sketch import kmv_distinct
 
 
@@ -40,12 +43,19 @@ def _queries(emb, n=5):
 
 
 def test_topk_partial_topk_and_broadcast_queries(spark, emb):
-    plan = plan_of(similarity_topk(emb, _queries(emb), 5, dim=64))
+    """The JVM parity reference keeps the scale shape, and scores each
+    pair once: the ``sim IS NOT NULL`` filter must not reach the join
+    condition, where the whole dot would run a second time."""
+    plan = plan_of(
+        _jvm_topk(emb, _queries(emb), 5, dim=64, exclude_self=True)
+    )
     # Partial top-k inside map tasks: only ~k rows/query/partition shuffle.
     assert "WindowGroupLimit" in plan
     # The small query batch is broadcast; the corpus never shuffles
     # before scoring.
     assert "BroadcastNestedLoopJoin" in plan
+    cond = [ln for ln in plan.splitlines() if "Join condition" in ln]
+    assert cond and not any("isnotnull(" in ln for ln in cond), cond
 
 
 def test_topk_metadata_filter_reaches_parquet_scan(spark, emb):
@@ -565,39 +575,48 @@ def test_ensure_bucketed_table_reuses_then_invalidates(spark, tmp_path):
 
 
 def test_search_dispatch_thresholds():
-    """The auto-strategy rule (operators/search.py): blocked while the
-    pair count fits the BLAS budget, ivf beyond it, grid whenever the
-    query side outgrows a broadcast; no size picks the JVM plan —
-    these THRESHOLD SEMANTICS are the contract."""
+    """The auto-strategy rule (operators/search.py): exact while the
+    pair count fits the BLAS budget, ivf beyond it, exact whenever the
+    query side outgrows a broadcast (similarity_topk then takes its
+    grid plan) — these THRESHOLD SEMANTICS are the contract."""
     import cs6300_vectordbs_spark.operators.search as search_mod
     from cs6300_vectordbs_spark.operators.search import (
         BLOCKED_MAX_PAIRS,
-        BROADCAST_MAX_QUERIES,
         choose_strategy,
+    )
+    from cs6300_vectordbs_spark.operators.similarity import (
+        BROADCAST_MAX_QUERIES,
     )
 
     # The package does not shadow its submodule with the function.
     assert inspect.ismodule(search_mod)
     assert not hasattr(search_mod, "EXACT_MAX_PAIRS")
-    assert choose_strategy(0, 0) == "blocked"
-    assert choose_strategy(4_000, 10) == "blocked"
-    assert choose_strategy(BLOCKED_MAX_PAIRS // 100, 100) == "blocked"
+    assert not hasattr(search_mod, "BROADCAST_MAX_QUERIES")
+    assert choose_strategy(0, 0) == "exact"
+    assert choose_strategy(4_000, 10) == "exact"
+    assert choose_strategy(BLOCKED_MAX_PAIRS // 100, 100) == "exact"
     assert choose_strategy(BLOCKED_MAX_PAIRS // 100 + 1, 100) == "ivf"
     n = BLOCKED_MAX_PAIRS // BROADCAST_MAX_QUERIES
-    assert choose_strategy(n, BROADCAST_MAX_QUERIES) == "blocked"
+    assert choose_strategy(n, BROADCAST_MAX_QUERIES) == "exact"
     assert choose_strategy(n + 1, BROADCAST_MAX_QUERIES) == "ivf"
-    # Query side too big to broadcast -> both-sides-sharded grid,
-    # regardless of corpus size.
-    assert choose_strategy(50, BROADCAST_MAX_QUERIES + 1) == "grid"
-    assert choose_strategy(10_000_000, 5_000_000) == "grid"
+    # Query side too big to broadcast -> exact on the both-sides-
+    # sharded grid, regardless of corpus size.
+    assert choose_strategy(50, BROADCAST_MAX_QUERIES + 1) == "exact"
+    assert choose_strategy(10_000_000, 5_000_000) == "exact"
 
 
-def test_search_auto_picks_exact_plan_and_matches_brute_force(spark, emb):
-    """At test scale auto dispatch must land on the blocked Arrow
-    kernel (MapInArrow over the corpus, no BroadcastNestedLoopJoin),
-    and every forced exact strategy — the JVM plan included — must
-    return BIT-identical rows."""
-    from cs6300_vectordbs_spark.operators.search import search
+def test_search_auto_picks_exact_plan_and_matches_brute_force(
+    spark, emb, monkeypatch
+):
+    """At test scale auto dispatch must land on the broadcast Arrow
+    plan (MapInArrow over the corpus, no BroadcastNestedLoopJoin), and
+    the grid plan and the JVM parity reference must return
+    BIT-identical rows."""
+    import cs6300_vectordbs_spark.operators.similarity as sim_mod
+    from cs6300_vectordbs_spark.operators.search import (
+        BLOCKED_MAX_PAIRS,
+        search,
+    )
 
     q = _queries(emb)
     auto = search(emb, q, 5, dim=64, exclude_self=True)
@@ -605,24 +624,27 @@ def test_search_auto_picks_exact_plan_and_matches_brute_force(spark, emb):
     assert "MapInArrow" in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
-    base = sorted(
-        (r.query_id, r.rank, r.vec_id, r.sim) for r in auto.collect()
-    )
-    for strat in ("exact", "blocked", "grid"):
-        rows = search(
-            emb, q, 5, dim=64, exclude_self=True, strategy=strat
-        ).collect()
-        got = sorted((r.query_id, r.rank, r.vec_id, r.sim) for r in rows)
-        assert got == base, f"strategy {strat} diverged from auto"
+    def rows(df):
+        return sorted(
+            (r.query_id, r.rank, r.vec_id, r.sim) for r in df.collect()
+        )
+
+    base = rows(auto)
+    assert rows(_jvm_topk(emb, q, 5, dim=64, exclude_self=True)) == base
+    with monkeypatch.context() as m:
+        m.setattr(sim_mod, "BROADCAST_MAX_QUERIES", 0)
+        grid = search(emb, q, 5, dim=64, exclude_self=True)
+        assert "FlatMapGroupsInArrow" in plan_of(grid)
+        assert rows(grid) == base
     # ivf is approximate: its hits are a subset-quality check, not
     # bit-equality — every reported sim must still be the exact cosine.
     ivf_rows = search(
-        emb, q, 5, dim=64, exclude_self=True, strategy="ivf"
+        emb, q, 5, dim=64, exclude_self=True, corpus_count=BLOCKED_MAX_PAIRS
     ).collect()
     exact_sims = {
         (r.query_id, r.vec_id): r.sim
-        for r in search(
-            emb, q, 500, dim=64, exclude_self=True, strategy="exact"
+        for r in similarity_topk(
+            emb, q, 500, dim=64, exclude_self=True
         ).collect()
     }
     for r in ivf_rows:
@@ -632,30 +654,35 @@ def test_search_auto_picks_exact_plan_and_matches_brute_force(spark, emb):
 def test_search_over_broadcast_bound_takes_grid_after_bounded_load(
     spark, emb, monkeypatch
 ):
-    """A query batch over BROADCAST_MAX_QUERIES goes to grid: auto
-    loads at most BROADCAST_MAX_QUERIES + 1 rows to count it, and
-    nothing more of the batch is collected."""
+    """A query batch over BROADCAST_MAX_QUERIES goes to the grid plan,
+    through search() and through similarity_topk itself (the call
+    search_pipeline makes): each loads at most BROADCAST_MAX_QUERIES
+    + 1 rows to count the batch, and nothing more of it is
+    collected."""
     import cs6300_vectordbs_spark.operators.search as search_mod
+    import cs6300_vectordbs_spark.operators.similarity as sim_mod
 
-    monkeypatch.setattr(search_mod, "BROADCAST_MAX_QUERIES", 3)
-    cls, loads = type(emb), []
-    for name in ("collect", "toArrow", "toPandas"):
-        def spy(self, *a, _orig=getattr(cls, name), **kw):
-            out = _orig(self, *a, **kw)
-            loads.append(len(out))  # rows, for a list or a table
-            return out
-
-        monkeypatch.setattr(cls, name, spy)
     q = _queries(emb, 10)
-    out = search_mod.search(emb, q, 5, dim=64, corpus_count=500)
-    assert loads == [4]
-    plan = plan_of(out)
-    assert "FlatMapGroupsInArrow" in plan and "MapInArrow" not in plan
-    monkeypatch.undo()
-    want = search_mod.search(emb, q, 5, dim=64, strategy="exact")
-    assert sorted(map(repr, out.collect())) == sorted(
-        map(repr, want.collect())
-    )
+    want = sorted(map(repr, _jvm_topk(emb, q, 5, dim=64).collect()))
+    for call in (
+        lambda: search_mod.search(emb, q, 5, dim=64, corpus_count=500),
+        lambda: similarity_topk(emb, q, 5, dim=64),
+    ):
+        monkeypatch.setattr(sim_mod, "BROADCAST_MAX_QUERIES", 3)
+        cls, loads = type(emb), []
+        for name in ("collect", "toArrow", "toPandas"):
+            def spy(self, *a, _orig=getattr(cls, name), **kw):
+                out = _orig(self, *a, **kw)
+                loads.append(len(out))  # rows, for a list or a table
+                return out
+
+            monkeypatch.setattr(cls, name, spy)
+        out = call()
+        assert loads == [4]
+        plan = plan_of(out)
+        assert "FlatMapGroupsInArrow" in plan and "MapInArrow" not in plan
+        monkeypatch.undo()
+        assert sorted(map(repr, out.collect())) == want
 
 
 def test_search_filter_applies_to_every_strategy(spark, emb):
@@ -663,12 +690,17 @@ def test_search_filter_applies_to_every_strategy(spark, emb):
     under each strategy (pre-join / pre-index-build)."""
     from cs6300_vectordbs_spark.operators.search import search
 
-    q = _queries(emb)
-    for strat in ("exact", "blocked", "ivf"):
-        rows = search(
-            emb, q, 5, dim=64, strategy=strat,
-            filter_expr="vec_id % 2 = 0",
-        ).collect()
+    from cs6300_vectordbs_spark.operators.search import BLOCKED_MAX_PAIRS
+
+    q, f = _queries(emb), "vec_id % 2 = 0"
+    for out in (
+        _jvm_topk(emb, q, 5, dim=64, filter_expr=f),
+        search(emb, q, 5, dim=64, filter_expr=f),
+        search(
+            emb, q, 5, dim=64, filter_expr=f, corpus_count=BLOCKED_MAX_PAIRS
+        ),
+    ):
+        rows = out.collect()
         assert rows and all(r.vec_id % 2 == 0 for r in rows)
 
 

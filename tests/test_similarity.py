@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 from cs6300_vectordbs_spark.functions.vector import cosine_sim, l2_norm
 from cs6300_vectordbs_spark.operators.ann import brp_lsh_pairs, srp_lsh_topk
 from cs6300_vectordbs_spark.operators.similarity import (
+    _jvm_pairs,
+    _jvm_topk,
     pairwise_similarity,
     similarity_topk,
 )
@@ -132,21 +134,17 @@ def test_brp_lsh_sims_match_exact_cosine(spark, emb):
 
 
 def test_grid_pairwise_bit_identical_to_jvm(emb):
-    from cs6300_vectordbs_spark.operators.similarity import (
-        pairwise_similarity_grid,
-    )
-
     dim = len(emb.first().embedding)
     grid = sorted(
         repr(tuple(r))
-        for r in pairwise_similarity_grid(emb, emb, min_sim=0.3).collect()
+        for r in pairwise_similarity(emb, emb, min_sim=0.3).collect()
     )
     # not approx-equal: the kernel reproduces the JVM expression's exact
     # IEEE addition order, so the doubles must be IDENTICAL, to the HOF
     # form and (above the threshold, where no -0.0 dot shows) to the
     # unrolled one
     for d in (None, dim):
-        jvm = pairwise_similarity(emb, emb, min_sim=0.3, dim=d).collect()
+        jvm = _jvm_pairs(emb, emb, min_sim=0.3, dim=d).collect()
         assert sorted(repr(tuple(r)) for r in jvm) == grid
     assert grid
 
@@ -274,7 +272,7 @@ def test_ivf_neardup_subset_and_recall(spark, emb):
     dim = len(emb.first().embedding)
     exact = {
         (r.id_a, r.id_b): r.sim
-        for r in pairwise_similarity(emb, emb, min_sim=0.35, dim=dim).collect()
+        for r in pairwise_similarity(emb, emb, min_sim=0.35).collect()
     }
     blocked = ivf_neardup_pairs(
         emb, dim=dim, n_cells=16, min_sim=0.35
@@ -314,19 +312,15 @@ def test_label_centroids_golden(spark):
     }
 
 
-def test_kernel_paths_quarantine_null_and_zero_vectors(spark):
+def test_kernel_paths_quarantine_null_and_zero_vectors(spark, monkeypatch):
     """r08 kernel review: NULL vectors used to TypeError the numpy
     kernels (object array) while the JVM path filtered them; zero-NORM
     vectors score 0.0 on every path (they are scorable by contract).
-    All three top-k paths, and the pairwise grid against the JVM
-    pairwise plan, must agree on a corpus containing NULL, zero,
-    negative-sim and NULL-element vectors, string ids and a NULL id."""
-    from cs6300_vectordbs_spark.operators.similarity import (
-        pairwise_similarity_grid,
-        similarity_topk,
-        similarity_topk_blocked,
-        similarity_topk_grid,
-    )
+    The broadcast and grid plans of the exact top-k and the JVM
+    reference, and the pairwise grid against the JVM pairwise plan,
+    must agree on a corpus containing NULL, zero, negative-sim and
+    NULL-element vectors, string ids and a NULL id."""
+    import cs6300_vectordbs_spark.operators.similarity as sim_mod
 
     corpus = spark.createDataFrame(
         [(1, [1.0, 0.0]), (3, [0.9, 0.1]), (4, None), (5, [0.0, 0.0]),
@@ -337,25 +331,20 @@ def test_kernel_paths_quarantine_null_and_zero_vectors(spark):
         [(10, [1.0, 0.0]), (11, None)],
         "query_id long, query_vec array<double>",
     )
-    a = sorted(map(tuple, similarity_topk(corpus, qs, 5).collect()))
-    b = sorted(map(tuple, similarity_topk_blocked(corpus, qs, 5).collect()))
-    g = sorted(
-        map(
-            tuple,
-            similarity_topk_grid(
-                corpus, qs.filter("query_vec is not null"), 5
-            ).collect(),
-        )
-    )
+    a = sorted(map(tuple, _jvm_topk(corpus, qs, 5).collect()))
+    b = sorted(map(tuple, similarity_topk(corpus, qs, 5).collect()))
+    with monkeypatch.context() as m:
+        m.setattr(sim_mod, "BROADCAST_MAX_QUERIES", 0)
+        g = sorted(map(tuple, similarity_topk(corpus, qs, 5).collect()))
     assert a == b == g
     # the NULL query contributed no rows; zero vector ranks with 0.0
     assert {r[0] for r in a} == {10}
     assert any(r[2] == 5 and r[3] == 0.0 for r in a)
     p1 = sorted(
-        map(tuple, pairwise_similarity(corpus, corpus, min_sim=-1.0).collect())
+        map(tuple, _jvm_pairs(corpus, corpus, min_sim=-1.0).collect())
     )
     p2 = sorted(
-        map(tuple, pairwise_similarity_grid(corpus, corpus, min_sim=-1.0).collect())
+        map(tuple, pairwise_similarity(corpus, corpus, min_sim=-1.0).collect())
     )
     assert p1 == p2
     # 4 scorable vectors -> C(4,2) upper-triangle pairs
@@ -372,7 +361,7 @@ def test_kernel_paths_quarantine_null_and_zero_vectors(spark):
             sorted(map(repr, f(
                 hostile, hostile, min_sim=-1.0, upper_triangle=upper
             ).collect()))
-            for f in (pairwise_similarity, pairwise_similarity_grid)
+            for f in (_jvm_pairs, pairwise_similarity)
         )
         assert p1 == p2 and len(p1) == (3 if upper else 16)
 
@@ -479,23 +468,34 @@ def _search_case(spark, emb, case):
      "query_ids", "null_corpus_ids", "id_ties", "string_ids", "empty",
      "hof_zero_sign", "hof_other_length"],
 )
-def test_search_strategies_return_identical_rows(spark, emb, case, exclude_self):
-    """auto (the blocked kernel), a forced 'blocked', the grid and the
-    JVM plan ('exact') return repr-identical rows — sims and dists bit
-    for bit — on the NULL, NaN, zero-norm, length, id and empty cases."""
+def test_search_strategies_return_identical_rows(
+    spark, emb, monkeypatch, case, exclude_self
+):
+    """search() (auto), similarity_topk's broadcast ('blocked') and
+    grid plans and the JVM parity reference ('exact') return
+    repr-identical rows — sims and dists bit for bit — on the NULL,
+    NaN, zero-norm, length, id and empty cases."""
+    import cs6300_vectordbs_spark.operators.similarity as sim_mod
     from cs6300_vectordbs_spark.operators.search import search
 
     corpus, queries, dim = _search_case(spark, emb, case)
-    got = {
-        strat: sorted(
+    kw = dict(dim=dim, exclude_self=exclude_self)
+
+    def rows(df):
+        return sorted(
             repr((r.query_id, r.rank, r.vec_id, r.sim, r.dist))
-            for r in search(
-                corpus, queries, 5, dim=dim, strategy=strat,
-                exclude_self=exclude_self,
-            ).collect()
+            for r in df.collect()
         )
-        for strat in ("auto", "blocked", "grid", "exact")
+
+    got = {
+        "auto": rows(search(corpus, queries, 5, **kw)),
+        "blocked": rows(similarity_topk(corpus, queries, 5, **kw)),
+        "exact": rows(_jvm_topk(corpus, queries, 5, **kw)),
     }
+    with monkeypatch.context() as m:
+        # Every batch, the empty one too, is over the bound.
+        m.setattr(sim_mod, "BROADCAST_MAX_QUERIES", -1)
+        got["grid"] = rows(similarity_topk(corpus, queries, 5, **kw))
     assert got["auto"] == got["exact"]
     assert got["blocked"] == got["exact"]
     assert got["grid"] == got["exact"]
@@ -505,7 +505,7 @@ def test_search_strategies_return_identical_rows(spark, emb, case, exclude_self)
 def test_knn_and_nsw_edges_match_the_recipe(spark, emb):
     """knn_edges and nsw_edges return the edges of the hand-built
     recipe they replace: each vector's exact top-k with exclude_self
-    (here from the JVM plan), folded to (least, greatest), plus the
+    (here from the JVM parity reference), folded to (least, greatest), plus the
     hash shortcuts for NSW, deduplicated — on a corpus of 49 tied
     vectors and a duplicate id."""
     from cs6300_vectordbs_spark.operators.ann import (
@@ -518,7 +518,7 @@ def test_knn_and_nsw_edges_match_the_recipe(spark, emb):
     allq = corpus.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    knn = similarity_topk(corpus, allq, 6, exclude_self=True, dim=64).select(
+    knn = _jvm_topk(corpus, allq, 6, exclude_self=True, dim=64).select(
         F.least("query_id", "vec_id").alias("a"),
         F.greatest("query_id", "vec_id").alias("b"),
     )
@@ -532,8 +532,8 @@ def test_knn_and_nsw_edges_match_the_recipe(spark, emb):
 
 def test_search_short_vector_raises_on_both_paths(spark, emb):
     """A vector shorter than dim (<= UNROLL_MAX_DIM) raises the ANSI
-    INVALID_ARRAY_INDEX on the JVM plan and on the blocked kernel, as
-    a query and as a corpus row."""
+    INVALID_ARRAY_INDEX through search() and on the JVM parity
+    reference, as a query and as a corpus row."""
     from cs6300_vectordbs_spark.operators.search import search
 
     corpus = emb.select("vec_id", "embedding")
@@ -545,6 +545,6 @@ def test_search_short_vector_raises_on_both_paths(spark, emb):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     for c, qs in ((corpus, short_q), (short_c, q)):
-        for strat in ("blocked", "exact"):
+        for topk in (search, _jvm_topk):
             with pytest.raises(Exception, match="INVALID_ARRAY_INDEX"):
-                search(c, qs, 5, dim=64, strategy=strat).collect()
+                topk(c, qs, 5, dim=64).collect()

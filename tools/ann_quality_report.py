@@ -26,15 +26,17 @@ from __future__ import annotations
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
 K = 5
 N_QUERIES = 50
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT_MD = "/root/repo/docs/ANN_QUALITY.md"
+OUT_MD = ROOT / "docs" / "ANN_QUALITY.md"
 
 
 def fake_minilm_encode(texts: list[str]) -> list[list[float]]:

@@ -6,7 +6,7 @@ ReadSchema), with a commentary block stating which plan property the
 100-TB design DEPENDS on. tests/test_plans.py asserts the load-bearing
 properties mechanically; this file is the human-readable audit trail.
 
-Usage: python tools/plan_audit.py   (rewrites /root/repo/PLANS.md)
+Usage: python tools/plan_audit.py   (rewrites PLANS.md at the repository root)
 
 WARNING: PLANS.md also contains HAND-ADDED sections (the r05
 curation/BPE/dedup-science plans) that are NOT in OPERATORS below — a
@@ -20,19 +20,21 @@ import contextlib
 import io
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 SF = "/root/testdata/sf0.001"
 
 AUDIT = {
     "topk_cosine_exact": """\
-Load-bearing properties: the query batch is BROADCAST (corpus never
-shuffles before scoring — BroadcastNestedLoopJoin streams corpus
-partitions once); the rank<=k filter compiles to WindowGroupLimit, so
-each map task emits only ~k rows per query BEFORE the exchange; the
-final shuffle is O(queries x k x partitions), independent of corpus
-size. Norms are projected UNDER the join (once per row, not per pair).""",
+Load-bearing properties: the query batch is loaded once, bounded,
+and BROADCAST (corpus never shuffles before scoring — MapInArrow
+streams corpus partitions once); each kernel block emits only ~k
+rows per query BEFORE the exchange; the final shuffle is
+O(queries x k x blocks), independent of corpus size. Query norms are
+computed once on the driver, corpus norms once per row.""",
     "ngram_jaccard_pairs": """\
 Load-bearing properties: candidates come from an EQUI-join on the
 shingle (inverted index) — no cartesian anywhere; the shingle pipeline
@@ -291,20 +293,19 @@ the whole index reproducible by the SQL twin.""",
     "auto_search": """\
 Load-bearing properties (strategy dispatch, SURVEY §4.3): search()
 resolved counts -> 'exact' at this scale, so the plan IS
-topk_cosine_exact's (broadcast queries, WindowGroupLimit partial
-top-k) — dispatch changes plans, never answers (the exact strategies
-are bit-identical, tests/test_plans.py). At larger counts the same
-call routes to the Arrow blocked kernel, the both-sides-sharded grid,
-or IVF.""",
+topk_cosine_exact's (one similarity_topk call: broadcast queries,
+per-block local top-k) — dispatch changes plans, never answers
+(tests/test_plans.py). At larger counts the same call routes to
+similarity_topk's both-sides-sharded grid, or IVF.""",
     "topk_cosine_384d": """\
 Load-bearing properties (reference-dim search, r05): the 384-d embed
 is ONE transform(sequence(0,383), ...) higher-order expression fused
 into the scan projection (no 384-wide array constructor — above
 UNROLL_MAX_DIM the unrolled tree blows Janino's 64 KB method limit),
-and every cosine takes the HOF aggregate/zip_with fold for the same
-reason. The serve plan is topk_cosine_exact's shape: broadcast query
-batch, corpus streams once, WindowGroupLimit caps pre-exchange rows
-at ~k per query. Proves a user's real 384-d model embeddings get a
+and the search kernel scores whole arrays by the HOF fold's rule.
+The serve plan is topk_cosine_exact's shape: broadcast query batch,
+corpus streams once, each kernel block emits ~k rows per query before
+the exchange. Proves a user's real 384-d model embeddings get a
 bounded-codegen plan automatically.""",
     "zordered_events": """\
 Load-bearing properties (Z-order layout, r05): the serve is a plain
@@ -373,7 +374,7 @@ def main() -> None:
         parts.append(commentary + "\n")
         parts.append("```\n" + condense(plan_text(df)) + "\n```")
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(parts) + "\n")
     print("wrote PLANS.md")
 

@@ -13,8 +13,10 @@ from __future__ import annotations
 import contextlib
 import io
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 SF = "/root/testdata/sf0.001"
 SKIP = {"ivf_search_stream"}  # drains a stream on construction
