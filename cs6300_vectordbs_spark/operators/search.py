@@ -8,19 +8,19 @@ item 2): the caller says WHAT (corpus, queries, k, optional filter);
 the facade picks HOW from corpus/query row counts:
 
   exact  |corpus| x |queries| <= BLOCKED_MAX_PAIRS, or a query batch
-         over similarity.BROADCAST_MAX_QUERIES:
-         :func:`.similarity.similarity_topk`, which picks its own plan
-         by batch size (broadcast, or a grid over both sides).
+         too big for ivf to broadcast: the plan of
+         :func:`.similarity.similarity_topk`, which picks it by batch
+         size (broadcast, or a grid over both sides).
   ivf    beyond that: approximate cell-probed search
          (operators/ann.ivf_topk) scanning only n_probe/n_cells of
          the corpus, exact re-rank inside probed cells.
 
 The query batch is loaded once, bounded: ``limit(BROADCAST_MAX_QUERIES
-+ 1)`` through Arrow. Its row count is the query count, and the loaded
-table goes to similarity_topk, so the batch is collected once. The
++ 1)`` through Arrow. Its row count is the query count, and the exact
+arm plans from the loaded table, so the batch is collected once. The
 corpus count comes from the ``corpus_count`` hint or ``.count()`` (on
 parquet sources a row-group-metadata scan). A ``query_count`` hint
-skips the load here; similarity_topk then makes it.
+skips the load unless the exact arm needs it.
 
 Both strategies return the same (query_id, rank, <corpus_id>, sim,
 dist) schema; the exact rows equal the JVM parity reference's bit for
@@ -43,9 +43,12 @@ BLOCKED_MAX_PAIRS = 5_000_000_000
 def choose_strategy(corpus_count: int, query_count: int) -> str:
     """Pure dispatch rule: counts -> 'exact' | 'ivf'.
 
-    exact while corpus x queries <= BLOCKED_MAX_PAIRS, and for any
-    batch over similarity.BROADCAST_MAX_QUERIES, which similarity_topk
-    shards with the corpus on its grid plan; ivf otherwise."""
+    exact while corpus x queries <= BLOCKED_MAX_PAIRS, ivf otherwise
+    — except that ivf cannot take a batch over
+    similarity.BROADCAST_MAX_QUERIES: ivf_topk broadcasts the query
+    probes (n_probe rows per query, each with its vector), so such a
+    batch stays exact, where similarity_topk shards it with the
+    corpus on its grid plan."""
     if (
         query_count > similarity.BROADCAST_MAX_QUERIES
         or corpus_count * query_count <= BLOCKED_MAX_PAIRS
@@ -103,8 +106,8 @@ def search(
         c = c.filter(filter_expr)
     qt = None
     if query_count is None:
-        # One bounded load: its row count is nq, and similarity_topk
-        # takes the table instead of loading again.
+        # One bounded load: its row count is nq, and the exact arm
+        # plans from the table instead of loading again.
         qt = similarity._load_queries(q_in, query_id, query_vec)
         query_count = qt.num_rows
     nc = corpus_count if corpus_count is not None else c.count()
@@ -120,18 +123,19 @@ def search(
         4 * k if mmr_candidates is None else mmr_candidates
     )
 
-    common = dict(
-        corpus_id=corpus_id, corpus_vec=corpus_vec,
-        query_id=query_id, query_vec=query_vec,
-        exclude_self=exclude_self,
-    )
     if choose_strategy(nc, query_count) == "exact":
-        out = similarity.similarity_topk(
-            c, q_in, k1, dim=dim, query_table=qt, **common
+        if qt is None:
+            qt = similarity._load_queries(q_in, query_id, query_vec)
+        out = similarity._exact_topk(
+            c, corpus_id, corpus_vec, q_in, query_id, query_vec, qt, k1,
+            dim, exclude_self,
         )
     else:
         out = ivf_topk(
-            c, q_in, k1, dim=dim, n_cells=n_cells, n_probe=n_probe, **common
+            c, q_in, k1, dim=dim, n_cells=n_cells, n_probe=n_probe,
+            corpus_id=corpus_id, corpus_vec=corpus_vec,
+            query_id=query_id, query_vec=query_vec,
+            exclude_self=exclude_self,
         )
 
     if diversify == "mmr":

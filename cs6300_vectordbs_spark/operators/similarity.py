@@ -226,7 +226,6 @@ def similarity_topk(
     filter_expr: Column | str | None = None,
     exclude_self: bool = False,
     dim: int | None = None,
-    query_table=None,
 ) -> DataFrame:
     """Exact top-k cosine search of ``queries`` against ``corpus``, the
     engine's one exact top-k: (query_id, rank, <corpus_id>, sim, dist),
@@ -241,23 +240,29 @@ def similarity_topk(
     and duplicate query ids pool in the final window.
 
     Plan, by query-batch size: the batch is loaded once through Arrow,
-    bounded by ``limit(BROADCAST_MAX_QUERIES + 1)``, or taken from
-    ``query_table``, that load already made by the caller
-    (:func:`.search.search`). Within the bound it is broadcast
-    (:func:`_blocked_topk`); over it, both sides go to the grid
-    (:func:`_grid_topk`) and nothing more of the batch is collected.
+    bounded by ``limit(BROADCAST_MAX_QUERIES + 1)``
+    (:func:`_load_queries`), and :func:`_exact_topk` picks the plan.
     """
     c = corpus if filter_expr is None else corpus.filter(filter_expr)
-    if query_table is None:
-        query_table = _load_queries(queries, query_id, query_vec)
-    if query_table.num_rows > BROADCAST_MAX_QUERIES:
+    return _exact_topk(
+        c, corpus_id, corpus_vec, queries, query_id, query_vec,
+        _load_queries(queries, query_id, query_vec), k, dim, exclude_self,
+    )
+
+
+def _exact_topk(c, cid, cvec, queries, qid, qvec, qt, k, dim, exclude_self):
+    """The plan of :func:`similarity_topk` for a batch whose bounded
+    load ``qt`` is already made (:func:`.search.search` makes it to
+    count the batch). Within BROADCAST_MAX_QUERIES the batch is
+    broadcast (:func:`_blocked_topk`); over it, both sides go to the
+    grid (:func:`_grid_topk`) and nothing more of the batch is
+    collected."""
+    if qt.num_rows > BROADCAST_MAX_QUERIES:
         return _grid_topk(
-            c, corpus_id, corpus_vec, queries, query_id, query_vec, k,
-            dim, exclude_self,
+            c, cid, cvec, queries, qid, qvec, k, dim, exclude_self
         )
     return _blocked_topk(
-        c, corpus_id, corpus_vec, query_table, _col_type(queries, query_id),
-        k, dim, exclude_self,
+        c, cid, cvec, qt, _col_type(queries, qid), k, dim, exclude_self
     )
 
 

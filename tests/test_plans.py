@@ -599,9 +599,12 @@ def test_search_dispatch_thresholds():
     n = BLOCKED_MAX_PAIRS // BROADCAST_MAX_QUERIES
     assert choose_strategy(n, BROADCAST_MAX_QUERIES) == "exact"
     assert choose_strategy(n + 1, BROADCAST_MAX_QUERIES) == "ivf"
-    # Query side too big to broadcast -> exact on the both-sides-
-    # sharded grid, regardless of corpus size.
+    # Query side too big for ivf to broadcast -> exact (similarity_topk
+    # then takes its both-sides-sharded grid), regardless of corpus
+    # size; at the bound itself ivf still takes it.
     assert choose_strategy(50, BROADCAST_MAX_QUERIES + 1) == "exact"
+    assert choose_strategy(10**9, BROADCAST_MAX_QUERIES) == "ivf"
+    assert choose_strategy(10**9, BROADCAST_MAX_QUERIES + 1) == "exact"
     assert choose_strategy(10_000_000, 5_000_000) == "exact"
 
 
@@ -655,34 +658,45 @@ def test_search_over_broadcast_bound_takes_grid_after_bounded_load(
     spark, emb, monkeypatch
 ):
     """A query batch over BROADCAST_MAX_QUERIES goes to the grid plan,
-    through search() and through similarity_topk itself (the call
-    search_pipeline makes): each loads at most BROADCAST_MAX_QUERIES
-    + 1 rows to count the batch, and nothing more of it is
-    collected."""
+    through search() (with or without a query_count hint) and through
+    similarity_topk itself (the call search_pipeline makes): each loads at most BROADCAST_MAX_QUERIES
+    + 1 rows to count the batch, and nothing more of it is collected.
+    A batch of exactly BROADCAST_MAX_QUERIES is loaded whole and
+    broadcast."""
     import cs6300_vectordbs_spark.operators.search as search_mod
     import cs6300_vectordbs_spark.operators.similarity as sim_mod
 
     q = _queries(emb, 10)
     want = sorted(map(repr, _jvm_topk(emb, q, 5, dim=64).collect()))
-    for call in (
+    calls = (
         lambda: search_mod.search(emb, q, 5, dim=64, corpus_count=500),
+        lambda: search_mod.search(
+            emb, q, 5, dim=64, corpus_count=500, query_count=10
+        ),
         lambda: similarity_topk(emb, q, 5, dim=64),
-    ):
-        monkeypatch.setattr(sim_mod, "BROADCAST_MAX_QUERIES", 3)
-        cls, loads = type(emb), []
-        for name in ("collect", "toArrow", "toPandas"):
-            def spy(self, *a, _orig=getattr(cls, name), **kw):
-                out = _orig(self, *a, **kw)
-                loads.append(len(out))  # rows, for a list or a table
-                return out
+    )
+    # (bound, rows loaded, plan node present, plan node absent)
+    cases = (
+        (10, 10, "MapInArrow", "FlatMapGroupsInArrow"),
+        (3, 4, "FlatMapGroupsInArrow", "MapInArrow"),
+    )
+    for bound, load, present, absent in cases:
+        for call in calls:
+            monkeypatch.setattr(sim_mod, "BROADCAST_MAX_QUERIES", bound)
+            cls, loads = type(emb), []
+            for name in ("collect", "toArrow", "toPandas"):
+                def spy(self, *a, _orig=getattr(cls, name), **kw):
+                    out = _orig(self, *a, **kw)
+                    loads.append(len(out))  # rows, for a list or a table
+                    return out
 
-            monkeypatch.setattr(cls, name, spy)
-        out = call()
-        assert loads == [4]
-        plan = plan_of(out)
-        assert "FlatMapGroupsInArrow" in plan and "MapInArrow" not in plan
-        monkeypatch.undo()
-        assert sorted(map(repr, out.collect())) == want
+                monkeypatch.setattr(cls, name, spy)
+            out = call()
+            assert loads == [load], bound
+            plan = plan_of(out)
+            assert present in plan and absent not in plan, bound
+            monkeypatch.undo()
+            assert sorted(map(repr, out.collect())) == want
 
 
 def test_search_filter_applies_to_every_strategy(spark, emb):
